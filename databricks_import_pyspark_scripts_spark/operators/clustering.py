@@ -162,40 +162,6 @@ def cluster_balanced_sample(assignment: DataFrame, id_col: str,
             .select(id_col, "cluster_id", "rk"))
 
 
-def assign_clusters_np(q: DataFrame, cents_rows: list, id_col: str) -> DataFrame:
-    """Arrow twin of ``assign_clusters`` for the materialized production
-    path: centroids arrive as COLLECTED rows (k rows — driver-bounded, the
-    same legitimacy class as the CMS probe) and each Arrow batch computes
-    all squared distances as one int64 matmul, ``|q|^2 - 2 qC^T + |c|^2``.
-
-    Bit-identity with the expression form: every operand is an exact int64
-    (dots bounded far below 2^63 for round(x*1000)-quantized embeddings),
-    and ``argmin`` returns the FIRST minimum — centroids are sorted by cid,
-    so ties break to the smallest cid exactly like ``min(struct(d, cid))``.
-    Asserted on real data by tests/test_clustering.py.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rows = sorted(cents_rows, key=lambda r: r.cid)
-    c_mat = np.array([list(r.cq) for r in rows], dtype=np.int64)
-    cids = np.array([r.cid for r in rows], dtype=np.int64)
-    cn2 = (c_mat * c_mat).sum(axis=1)
-    id_type = q.schema[id_col].dataType.simpleString()
-
-    def _assign(it):
-        for pdf in it:
-            qm = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            d = ((qm * qm).sum(axis=1)[:, None]
-                 - 2 * (qm @ c_mat.T) + cn2[None, :])
-            idx = d.argmin(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "qv": pdf["qv"],
-                                "cid": cids[idx]})
-
-    return q.mapInPandas(
-        _assign, schema=f"{id_col} {id_type}, qv array<long>, cid long")
-
-
 def quantize_np(mat, scale: int = KMEANS_SCALE):
     """NumPy twin of ``quantize_vec``: exact HALF_UP (round half AWAY from
     zero — Spark's ``round()`` on doubles), NOT ``np.round`` (half-to-even:

@@ -996,15 +996,3 @@ def encode_jpeg_gray_progressive(
         out += payload
     out += b"\xff\xd9"
     return bytes(out)
-
-
-def jpeg_block_decoder(grid: tuple[int, int] = (4, 4)):
-    """Real-bytes JPEG decoder for ``operators.multimodal``'s decode
-    seam: pd.Series[bytes] -> pd.Series[list[float]] of grid block
-    means — the PNG codec's twin."""
-    from .png_codec import block_mean_features
-
-    def decode(contents):
-        return contents.map(
-            lambda b: block_mean_features(decode_jpeg(bytes(b)), grid))
-    return decode

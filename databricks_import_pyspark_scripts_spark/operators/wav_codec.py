@@ -139,15 +139,6 @@ def segment_rms_features(samples: np.ndarray,
     return [float(v) for v in np.sqrt((segs ** 2).mean(axis=1))]
 
 
-def wav_rms_decoder(n_segments: int = 16):
-    """Real-bytes audio decoder for the multimodal decode seam:
-    pd.Series[bytes] -> pd.Series[list[float]] of per-segment RMS."""
-    def decode(contents):
-        return contents.map(lambda b: segment_rms_features(
-            decode_wav(bytes(b))[0], n_segments))
-    return decode
-
-
 def dominant_freq_features(samples: np.ndarray, sample_rate: int,
                            n_segments: int = 16) -> list[float]:
     """Per-segment DOMINANT FREQUENCY in Hz: the argmax magnitude bin of

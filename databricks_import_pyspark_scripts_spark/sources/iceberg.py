@@ -56,6 +56,7 @@ import json
 import os
 import re
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -1728,6 +1729,26 @@ def _part_avro_fields(schema_fields: list[dict],
         for name, transform, src in partition_transforms]
 
 
+def _default_spec_part_fields(meta: dict, schema_fields: list[dict],
+                              spec_id: int | None = None):
+    """(spec-id, partition avro fields) of partition spec ``spec_id``
+    (default: the table's default spec) — the staging machinery every
+    writer shares. An unknown spec id reads as unpartitioned."""
+    sid = meta.get("default-spec-id", 0) if spec_id is None else spec_id
+    spec = next((sp for sp in (meta.get("partition-specs") or [])
+                 if sp.get("spec-id", 0) == sid), {"fields": []})
+    src_by_id = {int(f["id"]): f for f in schema_fields}
+    part_by, transforms = [], []
+    for f in spec.get("fields") or []:
+        src_name = src_by_id[int(f["source-id"])]["name"]
+        tr = f.get("transform") or "identity"
+        if tr == "identity":
+            part_by.append(src_name)
+        else:
+            transforms.append((f["name"], tr, src_name))
+    return sid, _part_avro_fields(schema_fields, part_by, transforms)
+
+
 def _stage_commit(spark: SparkSession, df: DataFrame, root: str,
                   schema_fields: list[dict],
                   part_avro_fields: list[dict], snap_id: int,
@@ -1933,10 +1954,75 @@ def write_iceberg_table(spark: SparkSession, commits: list[DataFrame],
 
 
 class IcebergCommitConflict(RuntimeError):
-    """Another writer committed between this append's metadata read and
-    its commit attempt, and the table's schema or partition spec changed
-    under it. The append wrote NO metadata; staged data files may remain
-    as garbage under ``data/``. Retry the whole append to restage."""
+    """A commit could not publish its metadata: another writer claimed
+    ``v<N+1>.metadata.json`` first (a lost compare-and-swap), or the head
+    moved in a way the verb cannot rebase over — a concurrent schema or
+    partition-spec change under staged files, or a new head under
+    position deletes derived from an older one. No metadata was written;
+    staged data/manifest files may remain as unreferenced garbage.
+    Rerun the verb to re-derive against the new head."""
+
+
+def _writable_root(table_path: str, verb: str) -> str:
+    """The guard every committing verb runs at entry: commits go through
+    the HadoopCatalog file layout on a local filesystem. Returns the
+    scheme-less table root."""
+    if _is_metadata_handle(table_path):
+        raise NotImplementedError(
+            "catalog-managed (*.metadata.json) handles are READ-ONLY "
+            "here: commits must go through the owning catalog, not "
+            "the file layout")
+    if not _is_local(table_path):
+        raise NotImplementedError(f"{verb} commits via local atomic create")
+    return _strip_scheme(table_path)
+
+
+def _head(spark: SparkSession | None, mdir: str) -> tuple[int, dict]:
+    """(N, metadata) of the highest ``v<N>.metadata.json`` under ``mdir``
+    — the commit base. Unlike ``read_table_metadata`` the hint is not
+    consulted: a writer must build on the newest file that exists, since
+    that is the one its CAS at N+1 races against."""
+    versions = [int(m.group(1)) for n in _list_names(spark, mdir)
+                if (m := _VMETA_RE.match(n))]
+    if not versions:
+        raise FileNotFoundError(f"no Iceberg metadata under {mdir}")
+    v = max(versions)
+    return v, _check_meta(json.loads(_read_bytes(
+        spark, os.path.join(mdir, f"v{v}.metadata.json"))))
+
+
+def _commit_metadata(spark: SparkSession | None, table_path: str,
+                     verb: str, build, retries: int = 0):
+    """The one metadata commit path of every verb that commits to an
+    existing table: guard the handle, read the head ``(N, meta)`` once,
+    call ``build(meta)`` for ``(new_meta, result)``, publish
+    ``v<N+1>.metadata.json`` by atomic no-overwrite create, then update
+    the advisory hint. Returns
+    ``(version, result)``; ``new_meta=None`` means nothing to commit and
+    returns the head version unchanged.
+
+    A lost CAS re-reads the head and calls ``build`` again, at most
+    ``retries`` times, so ``build`` must derive everything head-dependent
+    (snapshot id, sequence number, manifest list) from the ``meta`` it is
+    given and raise ``IcebergCommitConflict`` when it cannot rebase. Only
+    the append passes ``retries``; every other verb raises on the first
+    lost race and leaves re-derivation to its caller."""
+    from ..sinks import delta_writer
+
+    mdir = os.path.join(_writable_root(table_path, verb), METADATA_DIR)
+    for _ in range(retries + 1):
+        v, meta = _head(spark, mdir)
+        new_meta, result = build(meta)
+        if new_meta is None:
+            return v, result
+        if delta_writer._atomic_create(
+                spark, os.path.join(mdir, f"v{v + 1}.metadata.json"),
+                json.dumps(new_meta).encode("utf-8")):
+            _write_hint(mdir, v + 1)
+            return v + 1, result
+    raise IcebergCommitConflict(
+        f"{verb} on {table_path} lost {retries + 1} metadata commit "
+        f"race(s), the last at v{v + 1}; rerun to rebase")
 
 
 def _txn_watermark(meta: dict, app_id: str) -> int:
@@ -1955,29 +2041,41 @@ def _txn_watermark(meta: dict, app_id: str) -> int:
     return mark
 
 
+def _next_snapshot_id(meta: dict) -> int:
+    return max((int(sn["snapshot-id"])
+                for sn in meta.get("snapshots") or []), default=999) + 1
+
+
+def _stamp_ts(meta: dict, ts_ms: int | None) -> int:
+    """Commit timestamp: the caller's, else one past the head's."""
+    return meta.get("last-updated-ms", 0) + 1 if ts_ms is None \
+        else int(ts_ms)
+
+
 def append_iceberg(spark: SparkSession, df: DataFrame, table_path: str,
                    ts_ms: int | None = None, max_retries: int = 10,
                    txn_app_id: str | None = None,
                    txn_version: int | None = None,
                    branch: str | None = None) -> int:
     """TRANSACTIONAL append to an existing Iceberg table — the CAS commit
-    the HadoopCatalog convention defines: stage data files + a new
-    manifest once (uuid-named, racer-collision-free), then race for
-    ``v<N+1>.metadata.json`` with an atomic no-overwrite create. Losing
-    the race re-reads the head, re-verifies the schema and partition
-    spec are unchanged (else ``IcebergCommitConflict`` — the staged
-    files' layout is spec-derived), rebuilds the manifest LIST on the
-    new head (prior manifests changed; the staged manifest has not), and
-    retries at N+2. ``version-hint.text`` is updated last as the
-    advisory pointer it is — readers fall back to the highest metadata
-    file, so a crash between commit and hint write loses nothing.
+    the HadoopCatalog convention defines: stage data files once
+    (uuid-named, racer-collision-free), then commit through
+    ``_commit_metadata``. Each attempt re-verifies the head's schema and
+    partition spec still match the staged layout (else
+    ``IcebergCommitConflict`` — the staged files' layout is
+    spec-derived), restamps snapshot id, sequence number and timestamp
+    from that head, and rebuilds the manifest LIST on it; a lost race
+    rebases the same way, up to ``max_retries`` times.
+    ``version-hint.text`` is updated last as the advisory pointer it is
+    — readers fall back to the highest metadata file, so a crash between
+    commit and hint write loses nothing.
 
     ``txn_app_id``/``txn_version`` make the append IDEMPOTENT, the same
     exactly-once handshake the Delta writer's txn actions provide: the
     batch id is recorded in the snapshot SUMMARY, and an append whose
     (app, id) is at or below the app's committed watermark is a NO-OP —
-    checked before staging AND on every lost-race rebase (the racer may
-    BE the duplicate writer).
+    checked before staging AND on every commit attempt (a racer may BE
+    the duplicate writer).
 
     Returns the new snapshot id (or the current one for a deduped
     no-op). The spec-slicing loop is the staging writer's (gate-scale);
@@ -1990,58 +2088,28 @@ def append_iceberg(spark: SparkSession, df: DataFrame, table_path: str,
     the WAP (write-audit-publish) workflow: stage to an audit branch,
     validate by reading ``ref=branch``, publish by fast-forwarding
     main. The branch must exist (``set_iceberg_ref(..., 'branch')``)."""
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    import uuid as _uuid
+    from pyspark.sql import functions as F
 
-    from ..sinks.delta_writer import _atomic_create
-
+    root = _writable_root(table_path, "append_iceberg")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version go together")
-    if not _is_local(table_path):
-        raise NotImplementedError("append_iceberg commits via local "
-                                  "atomic create")
-    root = _strip_scheme(table_path)
     mdir = os.path.join(root, METADATA_DIR)
 
-    def _head() -> tuple[int, dict]:
-        versions = sorted(int(m.group(1)) for n in _list_names(spark, mdir)
-                          if (m := _VMETA_RE.match(n)))
-        if not versions:
-            raise FileNotFoundError(f"no Iceberg metadata under {mdir}")
-        v = versions[-1]
-        return v, json.loads(_read_bytes(
-            spark, os.path.join(mdir, f"v{v}.metadata.json")))
+    def _replayed(meta: dict) -> bool:
+        return txn_app_id is not None and \
+            _txn_watermark(meta, txn_app_id) >= txn_version
 
-    v, meta = _head()
-    if txn_app_id is not None and             _txn_watermark(meta, txn_app_id) >= txn_version:
+    _, meta = _head(spark, mdir)
+    if _replayed(meta):
         return int(meta["current-snapshot-id"])  # idempotent replay
-    schema = _current_schema(meta)
-    schema_fields = schema["fields"]
+    schema_fields = _current_schema(meta)["fields"]
     for f in schema_fields:
         if not isinstance(f["type"], str):
             raise IcebergProtocolError(
                 "append_iceberg supports flat primitive schemas")
-    sid = meta.get("default-spec-id", 0)
-    spec = next((sp for sp in (meta.get("partition-specs") or [])
-                 if sp.get("spec-id", 0) == sid), {"fields": []})
-    src_by_id = {int(f["id"]): f for f in schema_fields}
-    part_by, transforms = [], []
-    for f in spec.get("fields") or []:
-        src = src_by_id[int(f["source-id"])]["name"]
-        t = f.get("transform") or "identity"
-        if t == "identity":
-            part_by.append(src)
-        else:
-            transforms.append((f["name"], t, src))
-    part_fields = _part_avro_fields(schema_fields, part_by, transforms)
+    sid, part_fields = _default_spec_part_fields(meta, schema_fields)
 
     # order/cast df to the table schema (names must match exactly)
-    from pyspark.sql import functions as F
-
     missing = [f["name"] for f in schema_fields if f["name"]
                not in df.columns]
     # v3 write-default: a column the writer does not supply is filled
@@ -2063,23 +2131,23 @@ def append_iceberg(spark: SparkSession, df: DataFrame, table_path: str,
         F.col(f["name"]).cast(_spark_type(f["type"])).alias(f["name"])
         for f in schema_fields])
 
-    ts = meta.get("last-updated-ms", 0) + 1 if ts_ms is None else int(ts_ms)
-    snap_id = max((int(sn["snapshot-id"])
-                   for sn in meta.get("snapshots") or []), default=999) + 1
-    seq = int(meta.get("last-sequence-number") or 0) + 1
-    tag = f"a{_uuid.uuid4().hex[:12]}"
+    tag = f"a{uuid.uuid4().hex[:12]}"
     entries = _stage_commit(spark, ordered, root, schema_fields,
-                            part_fields, snap_id, tag)
-    blob = write_container(_manifest_entry_schema(part_fields), entries)
+                            part_fields, _next_snapshot_id(meta), tag)
     mpath = os.path.join(mdir, f"manifest-{tag}.avro")
-    with open(mpath, "wb") as f:
-        f.write(blob)
-    new_manifest = {"manifest_path": mpath, "manifest_length": len(blob),
-                    "partition_spec_id": sid, "content": 0,
-                    "added_snapshot_id": snap_id,
-                    "sequence_number": seq, "min_sequence_number": seq}
 
-    for _ in range(max_retries + 1):
+    def build(meta: dict):
+        if _replayed(meta):
+            return None, int(meta["current-snapshot-id"])  # racer WAS us
+        if _current_schema(meta)["fields"] != schema_fields:
+            raise IcebergCommitConflict(
+                f"schema of {table_path} changed concurrently; staged "
+                f"files carry the old field ids — rerun to restage")
+        if _default_spec_part_fields(meta, schema_fields) != \
+                (sid, part_fields):
+            raise IcebergCommitConflict(
+                f"partition spec of {table_path} changed concurrently; "
+                f"staged files carry the old layout — rerun to restage")
         if branch is not None:
             refs = meta.get("refs") or {}
             if branch not in refs:
@@ -2092,111 +2160,59 @@ def append_iceberg(spark: SparkSession, df: DataFrame, table_path: str,
             base_snap = int(refs[branch]["snapshot-id"])
         else:
             base_snap = meta.get("current-snapshot-id")
+        # a stale default ts would order this snapshot BELOW a racer's
+        # in the history (r9 review finding #4): always from this head
+        ts = _stamp_ts(meta, ts_ms)
+        snap_id = _next_snapshot_id(meta)
+        seq = int(meta.get("last-sequence-number") or 0) + 1
+        new_meta = dict(meta)
+        for e in entries:
+            e["snapshot_id"] = snap_id
+        if meta.get("next-row-id") is not None:
+            # v3 row lineage: claim fresh first_row_id ranges from THIS
+            # head's counter and advance next-row-id in the same commit
+            nri = int(meta["next-row-id"])
+            for e in sorted(entries,
+                            key=lambda e: e["data_file"]["file_path"]):
+                e["data_file"]["first_row_id"] = nri
+                nri += int(e["data_file"].get("record_count") or 0)
+            new_meta["next-row-id"] = nri
+        blob = write_container(_manifest_entry_schema(part_fields), entries)
+        with open(mpath, "wb") as f:
+            f.write(blob)
         prior: list[dict] = []
         if base_snap is not None and (meta.get("snapshots") or []):
             cur = _snapshot(meta, base_snap)
             _, prior = read_container(_read_bytes(
                 spark, _resolve_path(table_path, cur["manifest-list"])))
-        _nri = None
-        if meta.get("next-row-id") is not None:
-            # v3 row lineage: claim fresh first_row_id ranges (re-stamped
-            # from the NEW head's counter on every lost-race rebase) and
-            # advance next-row-id in the same commit
-            _nri = int(meta["next-row-id"])
-            for e in sorted(entries,
-                            key=lambda e: e["data_file"]["file_path"]):
-                e["data_file"]["first_row_id"] = _nri
-                _nri += int(e["data_file"].get("record_count") or 0)
-            blob = write_container(_manifest_entry_schema(part_fields),
-                                   entries)
-            with open(mpath, "wb") as f:
-                f.write(blob)
-            new_manifest["manifest_length"] = len(blob)
         mlpath = os.path.join(mdir, f"snap-{snap_id}-{tag}.avro")
         with open(mlpath, "wb") as f:
-            f.write(write_container(_MANIFEST_FILE_SCHEMA,
-                                    list(prior) + [new_manifest]))
+            f.write(write_container(_MANIFEST_FILE_SCHEMA, list(prior) + [{
+                "manifest_path": mpath, "manifest_length": len(blob),
+                "partition_spec_id": sid, "content": 0,
+                "added_snapshot_id": snap_id,
+                "sequence_number": seq, "min_sequence_number": seq}]))
         summary = {"operation": "append"}
         if txn_app_id is not None:
             summary["spark-graft-app-id"] = txn_app_id
             summary["spark-graft-batch-id"] = str(int(txn_version))
-        new_meta = dict(meta)
-        if _nri is not None:
-            new_meta["next-row-id"] = _nri
         new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
             "snapshot-id": snap_id, "timestamp-ms": ts,
             "sequence-number": seq,
             "manifest-list": mlpath, "summary": summary}]
         if branch is not None:
             # branch commit: only the branch ref moves; main stays put
-            new_meta["refs"] = {**(meta.get("refs") or {}),
-                                branch: {**(meta["refs"][branch]),
+            new_meta["refs"] = {**meta["refs"],
+                                branch: {**meta["refs"][branch],
                                          "snapshot-id": snap_id}}
         else:
             _advance_head(new_meta, snap_id)
         new_meta["last-updated-ms"] = ts
         new_meta["last-sequence-number"] = seq
-        target = os.path.join(mdir, f"v{v + 1}.metadata.json")
-        if _atomic_create(spark, target,
-                          json.dumps(new_meta).encode("utf-8")):
-            _write_hint(mdir, v + 1)
-            return snap_id
-        # lost the race: rebase on the new head iff schema+spec unchanged
-        v, meta = _head()
-        if txn_app_id is not None and                 _txn_watermark(meta, txn_app_id) >= txn_version:
-            return int(meta["current-snapshot-id"])  # racer WAS this txn
-        if ts_ms is None:
-            # stale default ts would order this snapshot BELOW the
-            # racer's in the history (r9 review finding #4)
-            ts = meta.get("last-updated-ms", 0) + 1
-        if _current_schema(meta)["fields"] != schema_fields:
-            raise IcebergCommitConflict(
-                f"schema of {table_path} changed concurrently; staged "
-                f"files carry the old field ids — rerun to restage")
-        nsid = meta.get("default-spec-id", 0)
-        nspec = next((sp for sp in (meta.get("partition-specs") or [])
-                      if sp.get("spec-id", 0) == nsid), {"fields": []})
-        if nspec.get("fields") != spec.get("fields"):
-            raise IcebergCommitConflict(
-                f"partition spec of {table_path} changed concurrently; "
-                f"staged files carry the old layout — rerun to restage")
-        snap_id = max((int(sn["snapshot-id"])
-                       for sn in meta.get("snapshots") or []),
-                      default=999) + 1
-        seq = int(meta.get("last-sequence-number") or 0) + 1
-        new_manifest["sequence_number"] = seq
-        new_manifest["min_sequence_number"] = seq
-        for e in entries:
-            e["snapshot_id"] = snap_id
-        blob = write_container(_manifest_entry_schema(part_fields),
-                               entries)
-        with open(mpath, "wb") as f:
-            f.write(blob)
-        new_manifest["manifest_length"] = len(blob)
-        new_manifest["added_snapshot_id"] = snap_id
-    raise IcebergCommitConflict(
-        f"append to {table_path} lost {max_retries + 1} commit races")
+        return new_meta, snap_id
 
-
-def _ref_commit_head(spark: SparkSession, table_path: str,
-                     verb: str) -> tuple[str, int, dict]:
-    """Shared preamble of the ref verbs: local-FS HadoopCatalog handle
-    only, returns (metadata dir, head version, head metadata)."""
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: ref changes must go through the owning catalog")
-    if not _is_local(table_path):
-        raise NotImplementedError(f"{verb} commits via local atomic create")
-    mdir = os.path.join(_strip_scheme(table_path), METADATA_DIR)
-    versions = sorted(int(m.group(1)) for n in _list_names(spark, mdir)
-                      if (m := _VMETA_RE.match(n)))
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {mdir}")
-    v = versions[-1]
-    meta = _check_meta(json.loads(_read_bytes(
-        spark, os.path.join(mdir, f"v{v}.metadata.json"))))
-    return mdir, v, meta
+    return _commit_metadata(spark, table_path, "append_iceberg", build,
+                            retries=max_retries)[1]
 
 
 def set_iceberg_ref(spark: SparkSession, table_path: str, name: str,
@@ -2212,34 +2228,28 @@ def set_iceberg_ref(spark: SparkSession, table_path: str, name: str,
     callers get the loud main-only behavior). ``snapshot_id`` defaults
     to the current snapshot. Metadata-only CAS commit at head+1; no
     snapshot is added. Returns the new metadata version."""
-    from ..sinks.delta_writer import _atomic_create
-
     if ref_type not in ("tag", "branch"):
         raise ValueError(f"ref_type must be tag|branch, got {ref_type!r}")
     if name == "main" and ref_type != "branch":
         raise ValueError("'main' is the default BRANCH; it cannot be a tag")
-    mdir, v, meta = _ref_commit_head(spark, table_path, "set_iceberg_ref")
-    sid = (int(meta["current-snapshot-id"]) if snapshot_id is None
-           else int(snapshot_id))
-    _snapshot(meta, sid)  # must name a live snapshot — raises otherwise
-    new_meta = dict(meta)
-    new_meta["refs"] = {**(meta.get("refs") or {}),
-                        name: {"snapshot-id": sid, "type": ref_type}}
-    if name == "main":
-        # main and current-snapshot-id stay in lockstep (spec): this is
-        # the WAP publish step — fast-forwarding main to an audited
-        # branch head makes it THE table state for ref-less readers too
-        new_meta["current-snapshot-id"] = sid
-    new_meta["last-updated-ms"] = (meta.get("last-updated-ms", 0) + 1
-                                   if ts_ms is None else int(ts_ms))
-    if not _atomic_create(spark, os.path.join(mdir,
-                                              f"v{v + 1}.metadata.json"),
-                          json.dumps(new_meta).encode("utf-8")):
-        raise IcebergCommitConflict(
-            f"set_iceberg_ref({name}) on {table_path} lost a metadata "
-            f"commit race at v{v + 1}; rerun to rebase")
-    _write_hint(mdir, v + 1)
-    return v + 1
+
+    def build(meta: dict):
+        sid = (int(meta["current-snapshot-id"]) if snapshot_id is None
+               else int(snapshot_id))
+        _snapshot(meta, sid)  # must name a live snapshot — raises otherwise
+        new_meta = dict(meta)
+        new_meta["refs"] = {**(meta.get("refs") or {}),
+                            name: {"snapshot-id": sid, "type": ref_type}}
+        if name == "main":
+            # main and current-snapshot-id stay in lockstep (spec): this
+            # is the WAP publish step — fast-forwarding main to an
+            # audited branch head makes it THE table state for ref-less
+            # readers too
+            new_meta["current-snapshot-id"] = sid
+        new_meta["last-updated-ms"] = _stamp_ts(meta, ts_ms)
+        return new_meta, None
+
+    return _commit_metadata(spark, table_path, "set_iceberg_ref", build)[0]
 
 
 def evolve_iceberg_partition_spec(spark: SparkSession, table_path: str,
@@ -2263,52 +2273,45 @@ def evolve_iceberg_partition_spec(spark: SparkSession, table_path: str,
     unpartitioned going forward. Partition field ids continue from the
     highest id any spec has used (spec rule: unique across specs).
     Metadata-only CAS commit at head+1; returns the new spec id."""
-    from ..sinks.delta_writer import _atomic_create
-
     if partition_by and partition_transforms:
         raise ValueError("pass partition_by or partition_transforms, "
                          "not both")
-    mdir, v, meta = _ref_commit_head(spark, table_path,
-                                     "evolve_iceberg_partition_spec")
-    schema_fields = _current_schema(meta)["fields"]
-    by_name = {f["name"]: f for f in schema_fields
-               if isinstance(f["type"], str)}
-    specs = list(meta.get("partition-specs") or [])
-    new_sid = max((int(s.get("spec-id", 0)) for s in specs), default=-1) + 1
-    next_fid = max((int(f.get("field-id", 999)) for s in specs
-                    for f in (s.get("fields") or [])), default=999) + 1
     triples = ([(c, "identity", c) for c in partition_by]
                + [tuple(t) for t in partition_transforms])
-    fields = []
-    for name, transform, src in triples:
-        if src not in by_name:
-            raise ValueError(f"partition source column {src!r} is not a "
-                             f"(primitive) table column")
-        if transform != "identity" and transform != "void" and not (
-                re.match(r"^(truncate|bucket)\[\d+\]$", transform)
-                or transform in ("year", "years", "month", "months",
-                                 "day", "days", "hour", "hours")):
-            # validate the transform name eagerly, not at first append
-            raise IcebergProtocolError(
-                f"unknown partition transform {transform!r}")
-        fields.append({"name": name, "transform": transform,
-                       "source-id": int(by_name[src]["id"]),
-                       "field-id": next_fid})
-        next_fid += 1
-    new_meta = dict(meta)
-    new_meta["partition-specs"] = specs + [{"spec-id": new_sid,
-                                            "fields": fields}]
-    new_meta["default-spec-id"] = new_sid
-    new_meta["last-updated-ms"] = (meta.get("last-updated-ms", 0) + 1
-                                   if ts_ms is None else int(ts_ms))
-    if not _atomic_create(spark, os.path.join(mdir,
-                                              f"v{v + 1}.metadata.json"),
-                          json.dumps(new_meta).encode("utf-8")):
-        raise IcebergCommitConflict(
-            f"spec evolution of {table_path} lost a metadata commit race "
-            f"at v{v + 1}; rerun to rebase")
-    _write_hint(mdir, v + 1)
-    return new_sid
+
+    def build(meta: dict):
+        by_name = {f["name"]: f for f in _current_schema(meta)["fields"]
+                   if isinstance(f["type"], str)}
+        specs = list(meta.get("partition-specs") or [])
+        new_sid = max((int(s.get("spec-id", 0)) for s in specs),
+                      default=-1) + 1
+        next_fid = max((int(f.get("field-id", 999)) for s in specs
+                        for f in (s.get("fields") or [])), default=999) + 1
+        fields = []
+        for name, transform, src in triples:
+            if src not in by_name:
+                raise ValueError(f"partition source column {src!r} is not "
+                                 f"a (primitive) table column")
+            if transform != "identity" and transform != "void" and not (
+                    re.match(r"^(truncate|bucket)\[\d+\]$", transform)
+                    or transform in ("year", "years", "month", "months",
+                                     "day", "days", "hour", "hours")):
+                # validate the transform name eagerly, not at first append
+                raise IcebergProtocolError(
+                    f"unknown partition transform {transform!r}")
+            fields.append({"name": name, "transform": transform,
+                           "source-id": int(by_name[src]["id"]),
+                           "field-id": next_fid})
+            next_fid += 1
+        new_meta = dict(meta)
+        new_meta["partition-specs"] = specs + [{"spec-id": new_sid,
+                                                "fields": fields}]
+        new_meta["default-spec-id"] = new_sid
+        new_meta["last-updated-ms"] = _stamp_ts(meta, ts_ms)
+        return new_meta, new_sid
+
+    return _commit_metadata(spark, table_path,
+                            "evolve_iceberg_partition_spec", build)[1]
 
 
 def drop_iceberg_ref(spark: SparkSession, table_path: str, name: str,
@@ -2316,28 +2319,19 @@ def drop_iceberg_ref(spark: SparkSession, table_path: str, name: str,
     """Remove a named ref (``DROP TAG`` / ``DROP BRANCH``). The snapshot
     it pinned becomes expirable again. ``main`` refuses — dropping the
     default branch would orphan the head. Returns the new version."""
-    from ..sinks.delta_writer import _atomic_create
-
     if name == "main":
         raise ValueError("cannot drop the default branch 'main'")
-    mdir, v, meta = _ref_commit_head(spark, table_path, "drop_iceberg_ref")
-    refs = dict(meta.get("refs") or {})
-    if name not in refs:
-        raise FileNotFoundError(f"ref {name!r} not found "
-                                f"(have {sorted(refs)})")
-    del refs[name]
-    new_meta = dict(meta)
-    new_meta["refs"] = refs
-    new_meta["last-updated-ms"] = (meta.get("last-updated-ms", 0) + 1
-                                   if ts_ms is None else int(ts_ms))
-    if not _atomic_create(spark, os.path.join(mdir,
-                                              f"v{v + 1}.metadata.json"),
-                          json.dumps(new_meta).encode("utf-8")):
-        raise IcebergCommitConflict(
-            f"drop_iceberg_ref({name}) on {table_path} lost a metadata "
-            f"commit race at v{v + 1}; rerun to rebase")
-    _write_hint(mdir, v + 1)
-    return v + 1
+
+    def build(meta: dict):
+        refs = dict(meta.get("refs") or {})
+        if name not in refs:
+            raise FileNotFoundError(f"ref {name!r} not found "
+                                    f"(have {sorted(refs)})")
+        del refs[name]
+        return {**meta, "refs": refs,
+                "last-updated-ms": _stamp_ts(meta, ts_ms)}, None
+
+    return _commit_metadata(spark, table_path, "drop_iceberg_ref", build)[0]
 
 
 def rewrite_iceberg_manifests(spark: SparkSession, table_path: str,
@@ -2357,121 +2351,99 @@ def rewrite_iceberg_manifests(spark: SparkSession, table_path: str,
     afterwards. Returns the new snapshot id, or None when there is
     nothing to consolidate (<= 1 data manifest). Single-writer local-FS
     maintenance verb, CAS at head+1."""
-    import uuid as _uuid
+    mdir = os.path.join(_strip_scheme(table_path), METADATA_DIR)
 
-    from ..sinks.delta_writer import _atomic_create
+    def build(meta: dict):
+        snap = _snapshot(meta, None)
+        _, manifests = read_container(_read_bytes(
+            spark, _resolve_path(table_path, snap["manifest-list"])))
+        data_mfs = [m for m in manifests
+                    if int(m.get("content") or 0) == 0]
+        del_mfs = [m for m in manifests if int(m.get("content") or 0) == 1]
+        if len(data_mfs) <= 1 and not assign_row_lineage:
+            return None, None
 
-    mdir, v, meta = _ref_commit_head(spark, table_path,
-                                     "rewrite_iceberg_manifests")
-    root = _strip_scheme(table_path)
-    snap = _snapshot(meta, None)
-    _, manifests = read_container(_read_bytes(
-        spark, _resolve_path(table_path, snap["manifest-list"])))
-    data_mfs = [m for m in manifests if int(m.get("content") or 0) == 0]
-    del_mfs = [m for m in manifests if int(m.get("content") or 0) == 1]
-    if len(data_mfs) <= 1 and not assign_row_lineage:
-        return None
+        schema_fields = _current_schema(meta)["fields"]
+        fv = int(meta.get("format-version", 1))
+        by_spec: dict[int, list[dict]] = {}
+        for m in data_mfs:
+            mf_seq = int(m.get("sequence_number") or 0)
+            _, entries = read_container(_read_bytes(
+                spark, _resolve_path(table_path, m["manifest_path"])))
+            for e in entries:
+                if int(e.get("status") or 0) == STATUS_DELETED:
+                    continue
+                own = e.get("sequence_number")
+                if own is None and fv >= 2 and (
+                        int(e.get("status") or 0) != STATUS_ADDED):
+                    raise IcebergProtocolError(
+                        "manifest entry status=EXISTING with null "
+                        "sequence_number (inheritance is ADDED-only)")
+                by_spec.setdefault(int(m.get("partition_spec_id") or 0),
+                                   []).append({
+                    "status": STATUS_EXISTING,
+                    "snapshot_id": e.get("snapshot_id"),
+                    "sequence_number": int(own) if own is not None
+                    else mf_seq,
+                    "data_file": dict(e["data_file"])})
 
-    schema_fields = _current_schema(meta)["fields"]
-    src_by_id = {int(f["id"]): f for f in schema_fields
-                 if isinstance(f["type"], str)}
-    fv = int(meta.get("format-version", 1))
-    by_spec: dict[int, list[dict]] = {}
-    for m in data_mfs:
-        mf_seq = int(m.get("sequence_number") or 0)
-        _, entries = read_container(_read_bytes(
-            spark, _resolve_path(table_path, m["manifest_path"])))
-        for e in entries:
-            if int(e.get("status") or 0) == STATUS_DELETED:
-                continue
-            own = e.get("sequence_number")
-            if own is None and fv >= 2 and (
-                    int(e.get("status") or 0) != STATUS_ADDED):
-                raise IcebergProtocolError(
-                    "manifest entry status=EXISTING with null "
-                    "sequence_number (inheritance is ADDED-only)")
-            by_spec.setdefault(int(m.get("partition_spec_id") or 0),
-                               []).append({
-                "status": STATUS_EXISTING,
-                "snapshot_id": e.get("snapshot_id"),
-                "sequence_number": int(own) if own is not None
-                else mf_seq,
-                "data_file": dict(e["data_file"])})
+        new_seq = int(meta.get("last-sequence-number") or 0) + 1
+        snap_id = _next_snapshot_id(meta)
+        ts = _stamp_ts(meta, ts_ms)
+        tag = f"m{uuid.uuid4().hex[:12]}"
+        next_row_id = int(meta.get("next-row-id") or 0)
+        if assign_row_lineage:
+            # v3 ROW LINEAGE backfill: every live file lacking a
+            # first_row_id claims a range here, deterministic by file path
+            for sid_k in sorted(by_spec):
+                for e in sorted(by_spec[sid_k],
+                                key=lambda e: e["data_file"]["file_path"]):
+                    df_rec = e["data_file"]
+                    if df_rec.get("first_row_id") is None:
+                        df_rec["first_row_id"] = next_row_id
+                        next_row_id += int(df_rec.get("record_count") or 0)
+                    else:
+                        next_row_id = max(
+                            next_row_id,
+                            int(df_rec["first_row_id"])
+                            + int(df_rec.get("record_count") or 0))
+        new_manifests: list[dict] = []
+        for sid in sorted(by_spec):
+            _, part_fields = _default_spec_part_fields(meta, schema_fields,
+                                                       sid)
+            entries = sorted(by_spec[sid],
+                             key=lambda e: e["data_file"]["file_path"])
+            blob = write_container(_manifest_entry_schema(part_fields),
+                                   entries)
+            mpath = os.path.join(mdir, f"manifest-{tag}-s{sid}.avro")
+            with open(mpath, "wb") as fh:
+                fh.write(blob)
+            new_manifests.append({
+                "manifest_path": mpath, "manifest_length": len(blob),
+                "partition_spec_id": sid, "content": 0,
+                "added_snapshot_id": snap_id,
+                "sequence_number": new_seq,
+                "min_sequence_number": min(e["sequence_number"]
+                                           for e in entries)})
+        mlpath = os.path.join(mdir, f"snap-{snap_id}-{tag}.avro")
+        with open(mlpath, "wb") as fh:
+            fh.write(write_container(_MANIFEST_FILE_SCHEMA,
+                                     new_manifests + list(del_mfs)))
+        new_meta = dict(meta)
+        if assign_row_lineage:
+            new_meta["format-version"] = max(fv, 3)
+            new_meta["next-row-id"] = next_row_id
+        new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
+            "snapshot-id": snap_id, "timestamp-ms": ts,
+            "sequence-number": new_seq, "manifest-list": mlpath,
+            "summary": {"operation": "replace"}}]
+        _advance_head(new_meta, snap_id)
+        new_meta["last-updated-ms"] = ts
+        new_meta["last-sequence-number"] = new_seq
+        return new_meta, snap_id
 
-    new_seq = int(meta.get("last-sequence-number") or 0) + 1
-    snap_id = max((int(sn["snapshot-id"])
-                   for sn in meta.get("snapshots") or []), default=999) + 1
-    ts = (meta.get("last-updated-ms", 0) + 1 if ts_ms is None
-          else int(ts_ms))
-    tag = f"m{_uuid.uuid4().hex[:12]}"
-    next_row_id = int(meta.get("next-row-id") or 0)
-    if assign_row_lineage:
-        # v3 ROW LINEAGE backfill: every live file lacking a
-        # first_row_id claims a range here, deterministic by file path
-        for sid_k in sorted(by_spec):
-            for e in sorted(by_spec[sid_k],
-                            key=lambda e: e["data_file"]["file_path"]):
-                df_rec = e["data_file"]
-                if df_rec.get("first_row_id") is None:
-                    df_rec["first_row_id"] = next_row_id
-                    next_row_id += int(df_rec.get("record_count") or 0)
-                else:
-                    next_row_id = max(
-                        next_row_id,
-                        int(df_rec["first_row_id"])
-                        + int(df_rec.get("record_count") or 0))
-    new_manifests: list[dict] = []
-    for sid in sorted(by_spec):
-        spec = next((sp for sp in (meta.get("partition-specs") or [])
-                     if sp.get("spec-id", 0) == sid), {"fields": []})
-        part_by, transforms = [], []
-        for f in spec.get("fields") or []:
-            src = src_by_id[int(f["source-id"])]["name"]
-            t = f.get("transform") or "identity"
-            if t == "identity":
-                part_by.append(src)
-            else:
-                transforms.append((f["name"], t, src))
-        part_fields = _part_avro_fields(schema_fields, part_by,
-                                        transforms)
-        entries = sorted(by_spec[sid],
-                         key=lambda e: e["data_file"]["file_path"])
-        blob = write_container(_manifest_entry_schema(part_fields),
-                               entries)
-        mpath = os.path.join(mdir, f"manifest-{tag}-s{sid}.avro")
-        with open(mpath, "wb") as fh:
-            fh.write(blob)
-        new_manifests.append({
-            "manifest_path": mpath, "manifest_length": len(blob),
-            "partition_spec_id": sid, "content": 0,
-            "added_snapshot_id": snap_id,
-            "sequence_number": new_seq,
-            "min_sequence_number": min(e["sequence_number"]
-                                       for e in entries)})
-    mlpath = os.path.join(mdir, f"snap-{snap_id}-{tag}.avro")
-    with open(mlpath, "wb") as fh:
-        fh.write(write_container(_MANIFEST_FILE_SCHEMA,
-                                 new_manifests + list(del_mfs)))
-    new_meta = dict(meta)
-    if assign_row_lineage:
-        new_meta["format-version"] = max(
-            int(meta.get("format-version", 1)), 3)
-        new_meta["next-row-id"] = next_row_id
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
-        "snapshot-id": snap_id, "timestamp-ms": ts,
-        "sequence-number": new_seq, "manifest-list": mlpath,
-        "summary": {"operation": "replace"}}]
-    _advance_head(new_meta, snap_id)
-    new_meta["last-updated-ms"] = ts
-    new_meta["last-sequence-number"] = new_seq
-    if not _atomic_create(spark, os.path.join(mdir,
-                                              f"v{v + 1}.metadata.json"),
-                          json.dumps(new_meta).encode("utf-8")):
-        raise IcebergCommitConflict(
-            f"manifest rewrite of {table_path} lost a metadata commit "
-            f"race at v{v + 1}; rerun to replan")
-    _write_hint(mdir, v + 1)
-    return snap_id
+    return _commit_metadata(spark, table_path, "rewrite_iceberg_manifests",
+                            build)[1]
 
 
 def enable_iceberg_row_lineage(spark: SparkSession,
@@ -2559,50 +2531,8 @@ def expire_iceberg_snapshots(spark: SparkSession, table_path: str,
     Returns {"expired": [ids], "deleted_files": [paths], "version": N}.
     ``dry_run`` computes both lists and commits nothing. Single-writer
     local-FS maintenance verb; CAS at head+1 like compaction."""
-    from ..sinks.delta_writer import _atomic_create
-
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            "expire_iceberg_snapshots commits via local atomic create")
     if keep_last is None and older_than_ms is None:
         raise ValueError("pass keep_last and/or older_than_ms")
-    root = _strip_scheme(table_path)
-    mdir = os.path.join(root, METADATA_DIR)
-    versions = sorted(int(m.group(1)) for n in _list_names(spark, mdir)
-                      if (m := _VMETA_RE.match(n)))
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {mdir}")
-    v = versions[-1]
-    meta = _check_meta(json.loads(_read_bytes(
-        spark, os.path.join(mdir, f"v{v}.metadata.json"))))
-    snaps = sorted(meta.get("snapshots") or [],
-                   key=lambda s: s.get("timestamp-ms") or 0)
-    cur_id = meta.get("current-snapshot-id")
-    # spec: snapshots referenced by a branch/tag ref are retained — a
-    # tag is exactly a promise that its snapshot outlives expiration
-    ref_pinned = {int(r["snapshot-id"])
-                  for r in (meta.get("refs") or {}).values()}
-
-    survivors = []
-    for i, sn in enumerate(snaps):
-        keep = sn.get("snapshot-id") == cur_id
-        if int(sn.get("snapshot-id")) in ref_pinned:
-            keep = True
-        if keep_last is not None and i >= len(snaps) - keep_last:
-            keep = True
-        if older_than_ms is not None and \
-                int(sn.get("timestamp-ms") or 0) >= older_than_ms:
-            keep = True
-        if keep:
-            survivors.append(sn)
-    expired = [sn for sn in snaps if sn not in survivors]
-    if not expired:
-        return {"expired": [], "deleted_files": [], "version": v}
 
     def _referenced(snapshots: list[dict]) -> set[str]:
         """manifest-list + manifest + data/delete file paths reachable
@@ -2630,31 +2560,46 @@ def expire_iceberg_snapshots(spark: SparkSession, table_path: str,
                         table_path, e["data_file"]["file_path"]))
         return refs
 
-    live = _referenced(survivors)
-    doomed_files = sorted(_referenced(expired) - live)
+    def build(meta: dict):
+        snaps = sorted(meta.get("snapshots") or [],
+                       key=lambda s: s.get("timestamp-ms") or 0)
+        cur_id = meta.get("current-snapshot-id")
+        # spec: snapshots referenced by a branch/tag ref are retained — a
+        # tag is exactly a promise that its snapshot outlives expiration
+        ref_pinned = {int(r["snapshot-id"])
+                      for r in (meta.get("refs") or {}).values()}
+        survivors = []
+        for i, sn in enumerate(snaps):
+            keep = sn.get("snapshot-id") == cur_id
+            if int(sn.get("snapshot-id")) in ref_pinned:
+                keep = True
+            if keep_last is not None and i >= len(snaps) - keep_last:
+                keep = True
+            if older_than_ms is not None and \
+                    int(sn.get("timestamp-ms") or 0) >= older_than_ms:
+                keep = True
+            if keep:
+                survivors.append(sn)
+        expired = [sn for sn in snaps if sn not in survivors]
+        if not expired:
+            return None, {"expired": [], "deleted_files": []}
+        report = {"expired": [int(sn["snapshot-id"]) for sn in expired],
+                  "deleted_files": sorted(_referenced(expired)
+                                          - _referenced(survivors))}
+        if dry_run:
+            return None, report
+        return {**meta, "snapshots": survivors,
+                "last-updated-ms": _stamp_ts(meta, ts_ms)}, report
 
-    report = {"expired": [int(sn["snapshot-id"]) for sn in expired],
-              "deleted_files": doomed_files, "version": v}
-    if dry_run:
-        return report
-    new_meta = dict(meta)
-    new_meta["snapshots"] = [sn for sn in snaps if sn in survivors]
-    new_meta["last-updated-ms"] = (
-        meta.get("last-updated-ms", 0) + 1 if ts_ms is None
-        else int(ts_ms))
-    if not _atomic_create(spark, os.path.join(mdir,
-                                              f"v{v + 1}.metadata.json"),
-                          json.dumps(new_meta).encode("utf-8")):
-        raise IcebergCommitConflict(
-            f"expire of {table_path} lost a metadata commit race at "
-            f"v{v + 1}; rerun to replan")
-    _write_hint(mdir, v + 1)
-    # delete AFTER the commit: a crash mid-delete leaves only orphans
-    # (retryable), never a committed metadata referencing deleted files
-    for p in doomed_files:
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(p)
-    report["version"] = v + 1
+    version, report = _commit_metadata(
+        spark, table_path, "expire_iceberg_snapshots", build)
+    report["version"] = version
+    if report["expired"] and not dry_run:
+        # delete AFTER the commit: a crash mid-delete leaves only orphans
+        # (retryable), never a committed metadata referencing deleted files
+        for p in report["deleted_files"]:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(p)
     return report
 
 
@@ -2698,29 +2643,22 @@ def compact_iceberg_table(spark: SparkSession, table_path: str,
     at head+1 with no rebase — concurrent commits raise
     ``IcebergCommitConflict``). ORC data files reject (the rewrite
     would silently change their format)."""
-    import uuid as _uuid
+    return _commit_metadata(
+        spark, table_path, "compact_iceberg_table",
+        lambda meta: _compact(spark, table_path, meta, small_file_bytes,
+                              ts_ms))[1]
 
+
+def _compact(spark: SparkSession, table_path: str, meta: dict,
+             small_file_bytes: int, ts_ms: int | None):
+    """``compact_iceberg_table``'s build step on head ``meta``: stage the
+    rewritten data/delete files and the manifests, return
+    ``(new_meta, snapshot id)`` or ``(None, None)`` when nothing
+    qualifies."""
     from pyspark.sql import functions as F
 
-    from ..sinks.delta_writer import _atomic_create
-
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            "compact_iceberg_table commits via local atomic create")
     root = _strip_scheme(table_path)
     mdir = os.path.join(root, METADATA_DIR)
-    versions = sorted(int(m.group(1)) for n in _list_names(spark, mdir)
-                      if (m := _VMETA_RE.match(n)))
-    if not versions:
-        raise FileNotFoundError(f"no Iceberg metadata under {mdir}")
-    v = versions[-1]
-    meta = _check_meta(json.loads(_read_bytes(
-        spark, os.path.join(mdir, f"v{v}.metadata.json"))))
     deletes: list[dict] = []
     files = live_data_files(spark, table_path, meta, None,
                             deletes_out=deletes)
@@ -2741,7 +2679,7 @@ def compact_iceberg_table(spark: SparkSession, table_path: str,
             groups.setdefault(_pkey(f), []).append(f)
     groups = {k: fs for k, fs in groups.items() if len(fs) >= 2}
     if not groups:
-        return None
+        return None, None
     doomed_paths = {f["file_path"] for fs in groups.values() for f in fs}
 
     schema_fields = _current_schema(meta)["fields"]
@@ -2751,27 +2689,13 @@ def compact_iceberg_table(spark: SparkSession, table_path: str,
                 "compaction supports flat primitive schemas")
     name_to_field = {f["name"]: (f["id"], f["type"])
                      for f in schema_fields}
-    sid = meta.get("default-spec-id", 0)
-    spec = next((sp for sp in (meta.get("partition-specs") or [])
-                 if sp.get("spec-id", 0) == sid), {"fields": []})
-    src_by_id = {int(f["id"]): f for f in schema_fields}
-    part_by, transforms = [], []
-    for f in spec.get("fields") or []:
-        src_name = src_by_id[int(f["source-id"])]["name"]
-        t = f.get("transform") or "identity"
-        if t == "identity":
-            part_by.append(src_name)
-        else:
-            transforms.append((f["name"], t, src_name))
-    part_fields = _part_avro_fields(schema_fields, part_by, transforms)
+    sid, part_fields = _default_spec_part_fields(meta, schema_fields)
 
     starting_seq = int(meta.get("last-sequence-number") or 0)
-    snap_id = max((int(sn["snapshot-id"])
-                   for sn in meta.get("snapshots") or []), default=999) + 1
+    snap_id = _next_snapshot_id(meta)
     new_seq = starting_seq + 1
-    ts = (meta.get("last-updated-ms", 0) + 1 if ts_ms is None
-          else int(ts_ms))
-    tag = f"c{_uuid.uuid4().hex[:12]}"
+    ts = _stamp_ts(meta, ts_ms)
+    tag = f"c{uuid.uuid4().hex[:12]}"
     ddir = os.path.join(root, "data")
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     read_schema = iceberg_spark_schema(meta)
@@ -2930,15 +2854,7 @@ def compact_iceberg_table(spark: SparkSession, table_path: str,
     _advance_head(new_meta, snap_id)
     new_meta["last-updated-ms"] = ts
     new_meta["last-sequence-number"] = new_seq
-    if not _atomic_create(spark, os.path.join(mdir,
-                                              f"v{v + 1}.metadata.json"),
-                          json.dumps(new_meta).encode("utf-8")):
-        raise IcebergCommitConflict(
-            f"compaction of {table_path} lost a metadata commit race at "
-            f"v{v + 1}; rerun to replan")
-    _write_hint(mdir, v + 1)
-    return snap_id
-
+    return new_meta, snap_id
 
 
 def _provenance_scan(spark: SparkSession, table_path: str, meta: dict,
@@ -3196,19 +3112,9 @@ def write_iceberg_position_deletes(spark: SparkSession, table_path: str,
     single-writer, local-FS staging utility so the MoR read path can be
     exercised against a REAL v2 layout — the delete-row collect is
     gate-scale by design."""
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            "write_iceberg_position_deletes is a local staging utility")
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
-    root = _strip_scheme(table_path)
+    root = _writable_root(table_path, "write_iceberg_position_deletes")
     meta = read_table_metadata(spark, table_path)
     if int(meta.get("format-version", 1)) >= 3:
         raise IcebergProtocolError(
@@ -3223,7 +3129,7 @@ def write_iceberg_position_deletes(spark: SparkSession, table_path: str,
     # executor-side staging (VERDICT r12 #2): doomed (file, pos) pairs
     # sort + write inside tasks; the driver sees one row per delete file
     entries = _position_delete_entries_distributed(
-        spark, root, pos_df, f"d{_uuid.uuid4().hex[:12]}")
+        spark, root, pos_df, f"d{uuid.uuid4().hex[:12]}")
     if not entries:
         # DML semantics: nothing matched -> no commit (a 0-row delete
         # snapshot would churn history and the change feed for nothing)
@@ -3246,19 +3152,9 @@ def write_iceberg_dv_deletes(spark: SparkSession, table_path: str,
     position-delete writer (single-writer, local FS, driver-side
     position collect — gate-scale by design); the READ path
     (_apply_position_deletes) is the production surface."""
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            "write_iceberg_dv_deletes is a local staging utility")
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
-    root = _strip_scheme(table_path)
+    root = _writable_root(table_path, "write_iceberg_dv_deletes")
     meta = read_table_metadata(spark, table_path)
     cur, _, deletes = _provenance_scan(spark, table_path, meta,
                                        "deletion vectors")
@@ -3267,7 +3163,7 @@ def write_iceberg_dv_deletes(spark: SparkSession, table_path: str,
     # only one (path, blob, cardinality) per affected file
     entries, superseded = _dv_delete_entries_distributed(
         spark, table_path, root, meta, pos_df,
-        deletes, f"v{_uuid.uuid4().hex[:12]}")
+        deletes, f"v{uuid.uuid4().hex[:12]}")
     if not entries:
         return int(meta["current-snapshot-id"])  # nothing matched
     return _commit_delete_snapshot(
@@ -3325,8 +3221,10 @@ def _retire_superseded_dvs(spark: SparkSession, table_path: str,
         if not survivors:
             continue
         blob = write_container(_manifest_entry_schema(), survivors)
-        rpath = os.path.join(
-            mdir, f"manifest-del-{new_snap}-r{len(out):03d}.avro")
+        # uuid-named: a racer building the same snapshot id must not
+        # overwrite a manifest the winner's commit references
+        rpath = os.path.join(mdir, f"manifest-del-{new_snap}-r"
+                                   f"{len(out):03d}-{uuid.uuid4().hex}.avro")
         with open(rpath, "wb") as f:
             f.write(blob)
         out.append({
@@ -3349,10 +3247,11 @@ def _commit_delete_snapshot(spark: SparkSession, table_path: str,
                             scanned_snapshot_id: int | None = None) -> int:
     """Shared staging commit for row-delete snapshots: content=1
     manifest with ``entry``, new manifest list (prior manifests +
-    this one, sequence-stamped), new metadata version claimed by
-    ATOMIC no-overwrite create at the SCANNED head + 1 (never
-    hint + 1 — the hint is advisory and can lag a crashed or racing
-    committer; r9 review finding #1), hint updated last.
+    this one, sequence-stamped), committed through
+    ``_commit_metadata`` — built on the head it reads and published at
+    that head + 1, so a commit landing anywhere between that read and
+    the create makes this one lose the CAS and raise
+    ``IcebergCommitConflict`` instead of overwriting it.
 
     ``supersede_dv_keys``: referenced-data-file keys (last two path
     segments) whose prior deletion vectors this commit REPLACES — any
@@ -3371,98 +3270,91 @@ def _commit_delete_snapshot(spark: SparkSession, table_path: str,
     ``scanned_snapshot_id``: the head the CALLER derived its positions
     against. Position deletes reference (file, pos) pairs of a specific
     snapshot — if another commit (compaction, delete, update) lands
-    between the caller's scan and this commit, those pairs point at
-    retired files and pre-image rows silently survive. The metadata CAS
-    below only covers THIS function's read-to-create window, so the
-    caller's scan head must be re-checked here and a drift raised as
-    ``IcebergCommitConflict`` for the caller's rebase loop (ADVICE r12;
-    the catalog path's assert-ref-snapshot-id guard is the template)."""
-    from ..sinks.delta_writer import _atomic_create
+    between the caller's scan and this commit's head read, those pairs
+    point at retired files and pre-image rows silently survive. The CAS
+    covers only the window from this commit's head read to its create,
+    so the caller's scan head is re-checked against that head and a
+    drift raised as ``IcebergCommitConflict`` for the caller's rebase
+    loop (ADVICE r12; the catalog path's assert-ref-snapshot-id guard
+    is the template)."""
+    mdir = os.path.join(_strip_scheme(table_path), METADATA_DIR)
+    tag = uuid.uuid4().hex[:12]
 
-    root = _strip_scheme(table_path)
-    mdir = os.path.join(root, METADATA_DIR)
-    meta = read_table_metadata(spark, table_path)
-    if scanned_snapshot_id is not None and \
-            int(meta.get("current-snapshot-id") or -1) != \
-            int(scanned_snapshot_id):
-        raise IcebergCommitConflict(
-            f"head of {table_path} moved from snapshot "
-            f"{scanned_snapshot_id} to {meta.get('current-snapshot-id')} "
-            f"between position scan and commit; re-derive and retry")
-    snap = _snapshot(meta, None)
-    _, manifests = read_container(_read_bytes(
-        spark, _resolve_path(table_path, snap["manifest-list"])))
-    new_snap = max(int(sn["snapshot-id"]) for sn in meta["snapshots"]) + 1
-    new_seq = int(meta.get("last-sequence-number") or 0) + 1
-    ts = (snap.get("timestamp-ms") or 0) + 1000
-    if supersede_dv_keys:
-        manifests = _retire_superseded_dvs(
-            spark, table_path, mdir, manifests, supersede_dv_keys,
-            new_snap)
-    entries = [entry] if isinstance(entry, dict) else list(entry)
-    entries = [{**e, "snapshot_id": new_snap} for e in entries]
-    all_manifests = list(manifests)
-    if entries:    # a pure-insert MERGE commits no delete manifest
-        mpath = os.path.join(mdir, f"manifest-del-{new_snap}.avro")
-        blob = write_container(_manifest_entry_schema(), entries)
-        with open(mpath, "wb") as f:
-            f.write(blob)
-        all_manifests.append({
-            "manifest_path": mpath, "manifest_length": len(blob),
-            "partition_spec_id": 0, "content": 1,
-            "added_snapshot_id": new_snap,
-            "sequence_number": new_seq, "min_sequence_number": new_seq})
-    mlpath = os.path.join(mdir, f"snap-{new_snap}.avro")
-    if data_entries:
-        d_entries = [{**e, "snapshot_id": new_snap}
-                     for e in data_entries]
-        if meta.get("next-row-id") is not None:
-            # v3 row lineage: DML-added post-image/insert files claim
-            # FRESH first_row_id ranges and advance next-row-id in the
-            # same commit — updated rows get NEW row ids (this engine
-            # does not materialize preserved ids through MoR updates;
-            # readers that need stable pre/post linkage join on business
-            # keys, and _with_row_ids reads stay well-defined instead of
-            # raising on id-less files)
-            nri = int(meta["next-row-id"])
-            for e in sorted(d_entries,
-                            key=lambda e: e["data_file"]["file_path"]):
-                e["data_file"]["first_row_id"] = nri
-                nri += int(e["data_file"].get("record_count") or 0)
-            meta = {**meta, "next-row-id": nri}
-        d_path = os.path.join(mdir, f"manifest-upd-{new_snap}.avro")
-        d_blob = write_container(
-            _manifest_entry_schema(data_part_fields or []), d_entries)
-        with open(d_path, "wb") as f:
-            f.write(d_blob)
-        all_manifests.append({
-            "manifest_path": d_path, "manifest_length": len(d_blob),
-            "partition_spec_id": int(data_spec_id), "content": 0,
-            "added_snapshot_id": new_snap,
-            "sequence_number": new_seq, "min_sequence_number": new_seq})
-    with open(mlpath, "wb") as f:
-        f.write(write_container(_MANIFEST_FILE_SCHEMA, all_manifests))
-    meta = dict(meta)
-    if format_version is not None:
-        meta["format-version"] = max(
-            int(meta.get("format-version", 1)), int(format_version))
-    meta["snapshots"] = list(meta["snapshots"]) + [{
-        "snapshot-id": new_snap, "timestamp-ms": ts,
-        "sequence-number": new_seq,
-        "manifest-list": mlpath, "summary": {"operation": op_summary}}]
-    _advance_head(meta, new_snap)
-    meta["last-updated-ms"] = ts
-    meta["last-sequence-number"] = new_seq
-    v = max(int(m.group(1)) for n in _list_names(spark, mdir)
-            if (m := _VMETA_RE.match(n))) + 1
-    if not _atomic_create(spark, os.path.join(mdir,
-                                              f"v{v}.metadata.json"),
-                          json.dumps(meta).encode("utf-8")):
-        raise IcebergCommitConflict(
-            f"delete snapshot of {table_path} lost a metadata commit "
-            f"race at v{v}; rerun to rebase")
-    _write_hint(mdir, v)
-    return new_snap
+    def build(meta: dict):
+        if scanned_snapshot_id is not None and \
+                int(meta.get("current-snapshot-id") or -1) != \
+                int(scanned_snapshot_id):
+            raise IcebergCommitConflict(
+                f"head of {table_path} moved from snapshot "
+                f"{scanned_snapshot_id} to "
+                f"{meta.get('current-snapshot-id')} between position scan "
+                f"and commit; re-derive and retry")
+        snap = _snapshot(meta, None)
+        _, manifests = read_container(_read_bytes(
+            spark, _resolve_path(table_path, snap["manifest-list"])))
+        new_snap = _next_snapshot_id(meta)
+        new_seq = int(meta.get("last-sequence-number") or 0) + 1
+        ts = (snap.get("timestamp-ms") or 0) + 1000
+        if supersede_dv_keys:
+            manifests = _retire_superseded_dvs(
+                spark, table_path, mdir, manifests, supersede_dv_keys,
+                new_snap)
+        new_meta = dict(meta)
+        all_manifests = list(manifests)
+
+        def _add_manifest(kind: str, content: int, spec_id: int,
+                          part_fields: list | None, ents: list[dict]):
+            mpath = os.path.join(mdir,
+                                 f"manifest-{kind}-{new_snap}-{tag}.avro")
+            blob = write_container(
+                _manifest_entry_schema(part_fields),
+                [{**e, "snapshot_id": new_snap} for e in ents])
+            with open(mpath, "wb") as f:
+                f.write(blob)
+            all_manifests.append({
+                "manifest_path": mpath, "manifest_length": len(blob),
+                "partition_spec_id": spec_id, "content": content,
+                "added_snapshot_id": new_snap,
+                "sequence_number": new_seq,
+                "min_sequence_number": new_seq})
+
+        entries = [entry] if isinstance(entry, dict) else list(entry)
+        if entries:    # a pure-insert MERGE commits no delete manifest
+            _add_manifest("del", 1, 0, None, entries)
+        if data_entries:
+            if meta.get("next-row-id") is not None:
+                # v3 row lineage: DML-added post-image/insert files claim
+                # FRESH first_row_id ranges and advance next-row-id in
+                # the same commit — updated rows get NEW row ids (this
+                # engine does not materialize preserved ids through MoR
+                # updates; readers that need stable pre/post linkage
+                # join on business keys, and _with_row_ids reads stay
+                # well-defined instead of raising on id-less files)
+                nri = int(meta["next-row-id"])
+                for e in sorted(data_entries,
+                                key=lambda e: e["data_file"]["file_path"]):
+                    e["data_file"]["first_row_id"] = nri
+                    nri += int(e["data_file"].get("record_count") or 0)
+                new_meta["next-row-id"] = nri
+            _add_manifest("upd", 0, int(data_spec_id),
+                          data_part_fields or [], data_entries)
+        mlpath = os.path.join(mdir, f"snap-{new_snap}-{tag}.avro")
+        with open(mlpath, "wb") as f:
+            f.write(write_container(_MANIFEST_FILE_SCHEMA, all_manifests))
+        if format_version is not None:
+            new_meta["format-version"] = max(
+                int(meta.get("format-version", 1)), int(format_version))
+        new_meta["snapshots"] = list(meta["snapshots"]) + [{
+            "snapshot-id": new_snap, "timestamp-ms": ts,
+            "sequence-number": new_seq,
+            "manifest-list": mlpath, "summary": {"operation": op_summary}}]
+        _advance_head(new_meta, new_snap)
+        new_meta["last-updated-ms"] = ts
+        new_meta["last-sequence-number"] = new_seq
+        return new_meta, new_snap
+
+    return _commit_metadata(spark, table_path, "delete snapshot",
+                            build)[1]
 
 
 def write_iceberg_equality_deletes(spark: SparkSession, table_path: str,
@@ -3477,17 +3369,9 @@ def write_iceberg_equality_deletes(spark: SparkSession, table_path: str,
     Same staging scope as ``write_iceberg_position_deletes``; the delete
     keys stream executor-side through one task's ParquetWriter — the
     driver never receives them (VERDICT r12 #2)."""
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            "write_iceberg_equality_deletes is a local staging utility")
     import pyarrow as pa
 
-    root = _strip_scheme(table_path)
+    root = _writable_root(table_path, "write_iceberg_equality_deletes")
     meta = read_table_metadata(spark, table_path)
     if any((f.get("file_format") or "PARQUET").upper() == "ORC"
            for f in live_data_files(spark, table_path, meta, None,
@@ -3506,9 +3390,8 @@ def write_iceberg_equality_deletes(spark: SparkSession, table_path: str,
         raise ValueError("delete_rows columns must be exactly "
                          "equality_cols")
     eq_ids = [int(fields[c]["id"]) for c in equality_cols]
-    new_snap = max(int(sn["snapshot-id"])
-                   for sn in meta["snapshots"]) + 1
-    dpath = os.path.join(root, "data", f"eq-delete-{new_snap}.parquet")
+    dpath = os.path.join(root, "data",
+                         f"eq-delete-{_next_snapshot_id(meta)}.parquet")
     # arrow types from the TABLE schema, never pandas inference (an
     # all-NULL key column would otherwise infer float64 and the read
     # fail on parquet type mismatch)
@@ -3678,18 +3561,9 @@ def iceberg_update_where(spark: SparkSession, table_path: str,
     Scale shape: matched positions collect driver-side (gate-scale by
     contract, same as the delete writers); the post-image write and the
     MoR read path are distributed."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            "iceberg_update_where commits via local atomic create")
+    root = _writable_root(table_path, "iceberg_update_where")
     if mode not in ("position", "dv"):
         raise ValueError(f"mode must be position|dv, got {mode!r}")
 
@@ -3707,7 +3581,6 @@ def iceberg_update_where(spark: SparkSession, table_path: str,
             raise ValueError(f"SET columns {bad} absent from the table "
                              f"schema")
         use_dv = mode == "dv" or int(meta.get("format-version", 1)) >= 3
-        root = _strip_scheme(table_path)
 
         cur, _, deletes = _provenance_scan(spark, table_path, meta,
                                            "UPDATE")
@@ -3722,26 +3595,12 @@ def iceberg_update_where(spark: SparkSession, table_path: str,
             return int(meta["current-snapshot-id"])
 
         # partition machinery, identical to the append writers
-        sid = meta.get("default-spec-id", 0)
-        spec = next((sp for sp in (meta.get("partition-specs") or [])
-                     if sp.get("spec-id", 0) == sid), {"fields": []})
-        src_by_id = {int(f["id"]): f for f in schema_fields}
-        part_by, transforms = [], []
-        for f in spec.get("fields") or []:
-            src_name = src_by_id[int(f["source-id"])]["name"]
-            t = f.get("transform") or "identity"
-            if t == "identity":
-                part_by.append(src_name)
-            else:
-                transforms.append((f["name"], t, src_name))
-        part_fields = _part_avro_fields(schema_fields, part_by,
-                                        transforms)
+        sid, part_fields = _default_spec_part_fields(meta, schema_fields)
 
-        tag = f"u{_uuid.uuid4().hex[:12]}"
-        snap_guess = max(int(sn["snapshot-id"])
-                         for sn in meta["snapshots"]) + 1
+        tag = f"u{uuid.uuid4().hex[:12]}"
         data_entries = _stage_commit(spark, post, root, schema_fields,
-                                     part_fields, snap_guess, tag)
+                                     part_fields, _next_snapshot_id(meta),
+                                     tag)
 
         if use_dv:
             del_entries, superseded = _dv_delete_entries_distributed(
@@ -3764,24 +3623,6 @@ def iceberg_update_where(spark: SparkSession, table_path: str,
     raise IcebergCommitConflict(
         f"UPDATE WHERE on {table_path} lost {max_retries + 1} commit "
         f"races") from last
-
-
-def _default_spec_part_fields(meta: dict, schema_fields: list[dict]):
-    """(spec-id, partition avro fields) of the table's default partition
-    spec — the staging machinery every DML writer shares."""
-    sid = meta.get("default-spec-id", 0)
-    spec = next((sp for sp in (meta.get("partition-specs") or [])
-                 if sp.get("spec-id", 0) == sid), {"fields": []})
-    src_by_id = {int(f["id"]): f for f in schema_fields}
-    part_by, transforms = [], []
-    for f in spec.get("fields") or []:
-        src_name = src_by_id[int(f["source-id"])]["name"]
-        tr = f.get("transform") or "identity"
-        if tr == "identity":
-            part_by.append(src_name)
-        else:
-            transforms.append((f["name"], tr, src_name))
-    return sid, _part_avro_fields(schema_fields, part_by, transforms)
 
 
 def _derive_merge(source: DataFrame, on: list[str],
@@ -3899,18 +3740,9 @@ def iceberg_merge_into(spark: SparkSession, table_path: str,
     |matched-positions| aggregate probed with limit(1), never a
     collect). Nothing matched AND nothing to insert -> no commit. A lost
     metadata CAS re-derives against the new head and retries."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
 
-    if _is_metadata_handle(table_path):
-        raise NotImplementedError(
-            "catalog-managed (*.metadata.json) handles are READ-ONLY "
-            "here: commits must go through the owning catalog, not "
-            "the file layout")
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            "iceberg_merge_into commits via local atomic create")
+    root = _writable_root(table_path, "iceberg_merge_into")
     if mode not in ("position", "dv"):
         raise ValueError(f"mode must be position|dv, got {mode!r}")
 
@@ -3923,7 +3755,6 @@ def iceberg_merge_into(spark: SparkSession, table_path: str,
                 raise IcebergProtocolError(
                     "merge supports flat primitive schemas")
         use_dv = mode == "dv" or int(meta.get("format-version", 1)) >= 3
-        root = _strip_scheme(table_path)
 
         cur, _, deletes = _provenance_scan(spark, table_path, meta,
                                            "MERGE")
@@ -3936,14 +3767,12 @@ def iceberg_merge_into(spark: SparkSession, table_path: str,
         # partition machinery, identical to the append writers
         sid, part_fields = _default_spec_part_fields(meta, schema_fields)
 
-        tag = f"m{_uuid.uuid4().hex[:12]}"
-        snap_guess = max(int(sn["snapshot-id"])
-                         for sn in meta["snapshots"]) + 1
+        tag = f"m{uuid.uuid4().hex[:12]}"
         data_entries = []
         if has_new:
             data_entries = _stage_commit(spark, new_rows, root,
                                          schema_fields, part_fields,
-                                         snap_guess, tag)
+                                         _next_snapshot_id(meta), tag)
 
         del_entries: list[dict] = []
         fv = keys = None

@@ -30,20 +30,21 @@ import os
 import uuid
 
 from .iceberg import (
-    _VMETA_RE,
     METADATA_DIR,
     IcebergCommitConflict,
     IcebergProtocolError,
     _advance_head,
+    _commit_metadata,
     _current_schema,
+    _default_spec_part_fields,
+    _head,
     _manifest_entry_schema,
     _MANIFEST_FILE_SCHEMA,
-    _part_avro_fields,
+    _next_snapshot_id,
     _resolve_path,
     _snapshot,
     _spark_type,
     _stage_commit,
-    _write_hint,
 )
 from .avro_codec import read_container, write_container
 
@@ -64,10 +65,12 @@ class FileRestCatalog:
     HadoopCatalog layout, so every reader in this repo (and the
     version-hint fallback) keeps working on catalog-managed tables.
 
-    The CAS: a commit re-reads the head, validates ``requirements``,
-    builds the new metadata, and claims ``v<head+1>.metadata.json`` with
-    an atomic no-overwrite create — exactly the conditional-write real
-    REST services back with a database row. A lost race surfaces as
+    The CAS: a commit goes through ``iceberg._commit_metadata`` like
+    every local writer — read the head, validate ``requirements``, build
+    the new metadata, and publish ``v<head+1>.metadata.json`` complete
+    (temp file, fsync, no-overwrite link), so a concurrent ``load_table``
+    never sees a half-written version — exactly the conditional-write
+    real REST services back with a database row. A lost race surfaces as
     ``RestCommitConflict`` for the client to rebase on, matching the
     409 + reload loop of the wire protocol."""
 
@@ -85,13 +88,13 @@ class FileRestCatalog:
     def register_table(self, ns: str, name: str, table_root: str) -> None:
         """CREATE-equivalent for an existing HadoopCatalog-layout table
         directory (stageCreate/register endpoint stand-in)."""
+        from ..sinks import delta_writer
+
         ptr = self._ptr(ns, name)
-        payload = json.dumps({"table-root": table_root})
-        fd = os.open(ptr, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        try:
-            os.write(fd, payload.encode())
-        finally:
-            os.close(fd)
+        if not delta_writer._atomic_create(
+                None, ptr, json.dumps({"table-root": table_root}).encode()):
+            raise FileExistsError(f"table {ns}.{name} is already "
+                                  f"registered")
 
     def _root(self, ns: str, name: str) -> str:
         ptr = self._ptr(ns, name)
@@ -100,25 +103,14 @@ class FileRestCatalog:
                                     f"registered in this catalog")
         return json.load(open(ptr))["table-root"]
 
-    def _head(self, root: str) -> tuple[int, dict]:
-        mdir = os.path.join(root, METADATA_DIR)
-        versions = sorted(int(m.group(1)) for n in os.listdir(mdir)
-                          if (m := _VMETA_RE.match(n)))
-        if not versions:
-            raise FileNotFoundError(f"no Iceberg metadata under {mdir}")
-        v = versions[-1]
-        return v, json.load(open(os.path.join(
-            mdir, f"v{v}.metadata.json")))
-
     # -- the wire surface ---------------------------------------------
     def load_table(self, ns: str, name: str) -> dict:
         """``GET ../tables/{t}`` -> LoadTableResult (metadata-location
         + metadata)."""
-        root = self._root(ns, name)
-        v, meta = self._head(root)
+        mdir = os.path.join(self._root(ns, name), METADATA_DIR)
+        v, meta = _head(None, mdir)
         return {"metadata-location": os.path.join(
-            root, METADATA_DIR, f"v{v}.metadata.json"),
-            "metadata": meta}
+            mdir, f"v{v}.metadata.json"), "metadata": meta}
 
     def commit_table(self, ns: str, name: str,
                      requirements: list[dict],
@@ -127,23 +119,22 @@ class FileRestCatalog:
         LoadTableResult, or RestCommitConflict (409) when a requirement
         fails / the metadata CAS loses."""
         root = self._root(ns, name)
-        v, meta = self._head(root)
-        self._check_requirements(meta, requirements)
-        new_meta = self._apply_updates(dict(meta), updates)
-        mdir = os.path.join(root, METADATA_DIR)
-        target = os.path.join(mdir, f"v{v + 1}.metadata.json")
+
+        def build(meta: dict):
+            self._check_requirements(meta, requirements)
+            new_meta = self._apply_updates(dict(meta), updates)
+            return new_meta, new_meta
+
         try:
-            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise RestCommitConflict(
-                f"{ns}.{name}: metadata v{v + 1} was claimed "
-                f"concurrently; reload and rebase") from None
-        try:
-            os.write(fd, json.dumps(new_meta).encode())
-        finally:
-            os.close(fd)
-        _write_hint(mdir, v + 1)
-        return {"metadata-location": target, "metadata": new_meta}
+            v, new_meta = _commit_metadata(None, root, f"{ns}.{name} commit",
+                                           build)
+        except RestCommitConflict:
+            raise
+        except IcebergCommitConflict as exc:
+            raise RestCommitConflict(f"{exc}; reload and rebase") from None
+        return {"metadata-location": os.path.join(
+            root, METADATA_DIR, f"v{v}.metadata.json"),
+            "metadata": new_meta}
 
     # -- requirement validation (TableRequirement) --------------------
     def _check_requirements(self, meta: dict,
@@ -333,19 +324,7 @@ def append_iceberg_via_catalog(spark, df, catalog: FileRestCatalog,
         if not isinstance(f["type"], str):
             raise IcebergProtocolError(
                 "append supports flat primitive schemas")
-    sid = meta.get("default-spec-id", 0)
-    spec = next((sp for sp in (meta.get("partition-specs") or [])
-                 if sp.get("spec-id", 0) == sid), {"fields": []})
-    src_by_id = {int(f["id"]): f for f in schema_fields}
-    part_by, transforms = [], []
-    for f in spec.get("fields") or []:
-        src = src_by_id[int(f["source-id"])]["name"]
-        t = f.get("transform") or "identity"
-        if t == "identity":
-            part_by.append(src)
-        else:
-            transforms.append((f["name"], t, src))
-    part_fields = _part_avro_fields(schema_fields, part_by, transforms)
+    sid, part_fields = _default_spec_part_fields(meta, schema_fields)
 
     missing = [f["name"] for f in schema_fields
                if f["name"] not in df.columns]
@@ -359,8 +338,7 @@ def append_iceberg_via_catalog(spark, df, catalog: FileRestCatalog,
         for f in schema_fields])
 
     tag = f"rc{uuid.uuid4().hex[:12]}"
-    snap_id = max((int(sn["snapshot-id"])
-                   for sn in meta.get("snapshots") or []), default=999) + 1
+    snap_id = _next_snapshot_id(meta)
     entries = _stage_commit(spark, ordered, root, schema_fields,
                             part_fields, snap_id, tag)
     mpath = os.path.join(mdir, f"manifest-{tag}.avro")
@@ -415,19 +393,13 @@ def append_iceberg_via_catalog(spark, df, catalog: FileRestCatalog,
                 raise IcebergCommitConflict(
                     f"schema of {ns}.{name} changed concurrently; "
                     f"staged files carry the old field ids") from None
-            nsid = meta.get("default-spec-id", 0)
-            nspec = next((sp for sp in (meta.get("partition-specs")
-                                        or [])
-                          if sp.get("spec-id", 0) == nsid),
-                         {"fields": []})
-            if nspec.get("fields") != spec.get("fields"):
+            if _default_spec_part_fields(meta, schema_fields) != \
+                    (sid, part_fields):
                 raise IcebergCommitConflict(
                     f"partition spec of {ns}.{name} changed "
                     f"concurrently; staged files carry the old "
                     f"layout") from None
-            snap_id = max((int(sn["snapshot-id"])
-                           for sn in meta.get("snapshots") or []),
-                          default=999) + 1
+            snap_id = _next_snapshot_id(meta)
     raise IcebergCommitConflict(
         f"append to {ns}.{name} lost {max_retries + 1} commit races")
 
@@ -521,9 +493,7 @@ def _commit_row_ops_via_catalog(spark, catalog: FileRestCatalog,
     from .iceberg import _retire_superseded_dvs
 
     base_snap = meta.get("current-snapshot-id")
-    snap_id = max((int(sn["snapshot-id"])
-                   for sn in meta.get("snapshots") or []),
-                  default=999) + 1
+    snap_id = _next_snapshot_id(meta)
     new_seq = int(meta.get("last-sequence-number") or 0) + 1
     ts = int(meta.get("last-updated-ms") or 0) + 1
 
@@ -661,27 +631,11 @@ def update_where_via_catalog(spark, catalog: FileRestCatalog, ns: str,
         if not dead_df.take(1):
             return int(meta["current-snapshot-id"])
 
-        sid = meta.get("default-spec-id", 0)
-        spec = next((sp for sp in (meta.get("partition-specs") or [])
-                     if sp.get("spec-id", 0) == sid), {"fields": []})
-        src_by_id = {int(f["id"]): f for f in schema_fields}
-        part_by, transforms = [], []
-        for f in spec.get("fields") or []:
-            src_name = src_by_id[int(f["source-id"])]["name"]
-            tr = f.get("transform") or "identity"
-            if tr == "identity":
-                part_by.append(src_name)
-            else:
-                transforms.append((f["name"], tr, src_name))
-        part_fields = _part_avro_fields(schema_fields, part_by,
-                                        transforms)
-
+        sid, part_fields = _default_spec_part_fields(meta, schema_fields)
         tag = f"cu{uuid.uuid4().hex[:12]}"
-        snap_guess = max((int(sn["snapshot-id"])
-                          for sn in meta.get("snapshots") or []),
-                         default=999) + 1
         data_entries = _stage_commit(spark, post, root, schema_fields,
-                                     part_fields, snap_guess, tag)
+                                     part_fields, _next_snapshot_id(meta),
+                                     tag)
 
         keys: set[str] | None = None
         if use_dv:
@@ -725,7 +679,6 @@ def merge_into_via_catalog(spark, catalog: FileRestCatalog, ns: str,
     loop as the catalog DELETE/UPDATE. Pure-insert merges commit no
     delete manifest; nothing matched and nothing to insert -> no commit."""
     from .iceberg import (
-        _default_spec_part_fields,
         _derive_merge,
         _dv_delete_entries_distributed,
         _position_delete_entries_distributed,
@@ -759,14 +712,11 @@ def merge_into_via_catalog(spark, catalog: FileRestCatalog, ns: str,
 
         sid, part_fields = _default_spec_part_fields(meta, schema_fields)
         tag = f"cm{uuid.uuid4().hex[:12]}"
-        snap_guess = max((int(sn["snapshot-id"])
-                          for sn in meta.get("snapshots") or []),
-                         default=999) + 1
         data_entries = None
         if has_new:
             data_entries = _stage_commit(spark, new_rows, root,
                                          schema_fields, part_fields,
-                                         snap_guess, tag)
+                                         _next_snapshot_id(meta), tag)
 
         del_entries: list[dict] = []
         keys: set[str] | None = None

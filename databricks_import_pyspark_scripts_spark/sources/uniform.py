@@ -140,10 +140,6 @@ def _ice_type_mapping(dt: T.DataType, ids: "_IdGen", mapped: bool):
         f"here (variant/interval out of scope)")
 
 
-def _ice_type(dt: T.DataType, ids: "_IdGen"):
-    return _ice_type_mapping(dt, ids, mapped=False)[0]
-
-
 def uniform_sync_iceberg(spark: SparkSession, table_path: str,
                          ts_ms: int | None = None) -> int:
     """Publish the Delta table's current snapshot as Iceberg metadata in

@@ -1571,8 +1571,19 @@ def test_direct_metadata_json_handle(spark, tmp_path):
     reject it loudly (commits belong to the owning catalog)."""
     from databricks_import_pyspark_scripts_spark.sources.iceberg import (
         append_iceberg,
+        compact_iceberg_table,
+        drop_iceberg_ref,
+        evolve_iceberg_partition_spec,
+        expire_iceberg_snapshots,
+        iceberg_delete_where,
+        iceberg_merge_into,
+        iceberg_update_where,
         is_iceberg_table,
         read_iceberg_changes,
+        rewrite_iceberg_manifests,
+        set_iceberg_ref,
+        write_iceberg_dv_deletes,
+        write_iceberg_equality_deletes,
         write_iceberg_position_deletes,
     )
 
@@ -1586,6 +1597,7 @@ def test_direct_metadata_json_handle(spark, tmp_path):
     handle = os.path.join(mdir, sorted(
         n for n in os.listdir(mdir) if n.endswith(".metadata.json"))[-1])
     os.unlink(os.path.join(mdir, "version-hint.text"))  # no hint at all
+    before = sorted(os.listdir(mdir))
     assert is_iceberg_table(spark, handle)
     assert _ks(read_iceberg_snapshot(spark, handle)) == \
         [k for k in range(50) if k % 10 != 0]
@@ -1594,10 +1606,25 @@ def test_direct_metadata_json_handle(spark, tmp_path):
         list(range(30))
     ch = read_iceberg_changes(spark, handle, 0, 1)
     assert {r.k for r in ch.collect()} == set(range(30, 50))
+    keys = spark.createDataFrame([(1,)], "k long")
     for w in (lambda: append_iceberg(spark, a, handle),
-              lambda: write_iceberg_position_deletes(spark, handle, "k=1")):
+              lambda: write_iceberg_position_deletes(spark, handle, "k=1"),
+              lambda: set_iceberg_ref(spark, handle, "t1"),
+              lambda: drop_iceberg_ref(spark, handle, "t1"),
+              lambda: evolve_iceberg_partition_spec(spark, handle, ["k"]),
+              lambda: rewrite_iceberg_manifests(spark, handle),
+              lambda: expire_iceberg_snapshots(spark, handle, keep_last=1),
+              lambda: compact_iceberg_table(spark, handle),
+              lambda: write_iceberg_dv_deletes(spark, handle, "k=1"),
+              lambda: write_iceberg_equality_deletes(spark, handle, keys,
+                                                     ["k"]),
+              lambda: iceberg_delete_where(spark, handle, "k=1"),
+              lambda: iceberg_update_where(spark, handle, "k=1",
+                                           {"v": "v + 1"}),
+              lambda: iceberg_merge_into(spark, handle, a, ["k"])):
         with pytest.raises(NotImplementedError, match="READ-ONLY"):
             w()
+    assert sorted(os.listdir(mdir)) == before    # nothing was written
 
 
 def test_orc_data_files_snapshot_and_changes(spark, tmp_path):
@@ -1942,6 +1969,50 @@ def test_refs_validation_and_drop(spark, ice):
     drop_iceberg_ref(spark, ice, "keep")
     with pytest.raises(FileNotFoundError):
         read_iceberg_snapshot(spark, ice, ref="keep")
+
+
+def test_concurrent_metadata_commits_lose_no_update(spark, ice):
+    """Stress the shared commit path: more threads than cores each add
+    their own tags through ``set_iceberg_ref``, retrying on
+    ``IcebergCommitConflict``. Every tag must survive (a commit built on
+    a stale head would drop a racer's tag) and the metadata versions
+    must be contiguous."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        IcebergCommitConflict,
+        set_iceberg_ref,
+    )
+
+    def tagger(w: int) -> int:
+        lost = 0
+        for i in range(4):
+            while True:
+                try:
+                    set_iceberg_ref(spark, ice, f"w{w}-{i}",
+                                    snapshot_id=1000)
+                    break
+                except IcebergCommitConflict:
+                    lost += 1
+        return lost
+
+    mdir = os.path.join(ice, "metadata")
+    v0 = len([n for n in os.listdir(mdir) if n.endswith(".metadata.json")])
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            futs = [ex.submit(tagger, w) for w in range(8)]
+            for f in futs:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    refs = read_table_metadata(spark, ice)["refs"]
+    assert {f"w{w}-{i}" for w in range(8) for i in range(4)} <= set(refs)
+    versions = sorted(int(n[1:].split(".")[0]) for n in os.listdir(mdir)
+                      if n.endswith(".metadata.json"))
+    assert versions == list(range(1, v0 + 33))
 
 
 def test_expire_retains_ref_pinned_snapshots(spark, tmp_path):
@@ -2591,6 +2662,102 @@ def test_delete_where_detects_scan_to_commit_head_drift(spark, tmp_path,
         [k for k in list(range(30)) + list(range(100, 105)) if k % 3 != 0]
 
 
+def test_delete_commit_keeps_append_landing_after_its_head_read(
+        spark, tmp_path, monkeypatch):
+    """Lost-update regression: an append that commits right after the
+    delete commit has read its head must survive. The delete either
+    lands on top of it or raises IcebergCommitConflict; it never
+    publishes a version built from the older head, which would drop the
+    racer's rows and reuse its snapshot id."""
+    from databricks_import_pyspark_scripts_spark.sources import iceberg
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        IcebergCommitConflict,
+        append_iceberg,
+        write_iceberg_position_deletes,
+    )
+
+    t = str(tmp_path / "lostupd")
+    df = spark.range(0, 30).selectExpr("id AS k", "CAST(id AS double) AS v")
+    write_iceberg_table(spark, [df], t)
+    racer = spark.range(100, 105).selectExpr("id AS k",
+                                             "CAST(id AS double) AS v")
+    state = {"in_commit": False, "raced": False}
+    real_commit = iceberg._commit_delete_snapshot
+    real_read = iceberg._read_bytes
+
+    def commit(*a, **k):
+        state["in_commit"] = True
+        try:
+            return real_commit(*a, **k)
+        finally:
+            state["in_commit"] = False
+
+    def read_then_race(spark_, path):
+        raw = real_read(spark_, path)
+        # the first metadata read inside the delete commit is its head
+        # read: land the racer right after it
+        if state["in_commit"] and not state["raced"] and \
+                path.endswith(".metadata.json"):
+            state["raced"] = True
+            append_iceberg(spark, racer, t)
+        return raw
+
+    monkeypatch.setattr(iceberg, "_commit_delete_snapshot", commit)
+    monkeypatch.setattr(iceberg, "_read_bytes", read_then_race)
+    try:
+        write_iceberg_position_deletes(spark, t, "k % 3 = 0")
+        landed = True
+    except IcebergCommitConflict:
+        landed = False
+    assert state["raced"]
+    got = _ks(read_iceberg_snapshot(spark, t))
+    racer_rows = [k for k in range(100, 105)
+                  if not landed or k % 3 != 0]
+    assert set(racer_rows) <= set(got)
+    expect_base = [k for k in range(30) if not landed or k % 3 != 0]
+    assert got == sorted(expect_base + racer_rows)
+    ids = [s["snapshot_id"] for s in iceberg_snapshot_ids(spark, t)]
+    assert len(ids) == len(set(ids))
+
+
+def test_failed_metadata_publish_leaves_table_at_old_head(spark, ice,
+                                                          monkeypatch):
+    """Fault injection: the metadata create fails AFTER the append has
+    written its data files, manifest and manifest list. The table still
+    reads at its old head with an unchanged snapshot list, and the next
+    append commits normally."""
+    from pyspark.sql import functions as F
+
+    from databricks_import_pyspark_scripts_spark.sinks import delta_writer
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        append_iceberg,
+    )
+
+    mdir = os.path.join(ice, "metadata")
+    snaps0 = iceberg_snapshot_ids(spark, ice)
+    hint0 = open(os.path.join(mdir, "version-hint.text")).read()
+    lists0 = {n for n in os.listdir(mdir) if n.startswith("snap-")}
+
+    def failing_create(spark_, path, payload):
+        raise OSError("injected: disk full")
+
+    monkeypatch.setattr(delta_writer, "_atomic_create", failing_create)
+    df = spark.range(40, 45).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
+    with pytest.raises(OSError, match="injected"):
+        append_iceberg(spark, df, ice)
+    # the fault hit after staging: a new manifest list is on disk
+    assert {n for n in os.listdir(mdir) if n.startswith("snap-")} > lists0
+    assert _ks(read_iceberg_snapshot(spark, ice)) == list(range(40))
+    assert iceberg_snapshot_ids(spark, ice) == snaps0
+    assert open(os.path.join(mdir, "version-hint.text")).read() == hint0
+
+    monkeypatch.undo()
+    sid = append_iceberg(spark, df, ice)
+    assert sid == snaps0[-1]["snapshot_id"] + 1
+    assert _ks(read_iceberg_snapshot(spark, ice)) == list(range(45))
+
+
 def test_v2_dml_stages_position_deletes_executor_side(spark, tmp_path,
                                                       monkeypatch):
     """VERDICT r12 #2: the v2 position-delete layout must never collect
@@ -3068,6 +3235,41 @@ def test_rest_catalog_two_concurrent_appenders_both_land(spark, ice):
     meta = cat.load_table("db", "race")["metadata"]
     assert meta["current-snapshot-id"] == max(sids)
     assert len(meta["snapshots"]) == 4        # 2 staged + 2 raced
+
+
+def test_rest_catalog_load_during_commit_reads_old_head(spark, ice,
+                                                        monkeypatch):
+    """A second client loading the table while a commit is in flight
+    sees the old head intact, never a created-but-unwritten
+    ``v<N+1>.metadata.json``."""
+    from databricks_import_pyspark_scripts_spark.sources.rest_catalog import (
+        FileRestCatalog,
+    )
+
+    wh = os.path.join(os.path.dirname(ice), "whtorn")
+    FileRestCatalog(wh).register_table("db", "torn", ice)
+    writer, reader = FileRestCatalog(wh), FileRestCatalog(wh)
+    old = reader.load_table("db", "torn")
+    seen = []
+    real_dumps = json.dumps
+
+    def dumps_and_load(obj, *a, **k):
+        out = real_dumps(obj, *a, **k)
+        if isinstance(obj, dict) and "snapshots" in obj and not seen:
+            seen.append(reader.load_table("db", "torn"))
+        return out
+
+    monkeypatch.setattr(json, "dumps", dumps_and_load)
+    res = writer.commit_table(
+        "db", "torn",
+        requirements=[{"type": "assert-ref-snapshot-id", "ref": "main",
+                       "snapshot-id": 1001}],
+        updates=[{"action": "set-properties", "updates": {"x": "1"}}])
+    monkeypatch.undo()
+    assert seen == [old]
+    assert res["metadata"]["properties"] == {"x": "1"}
+    assert reader.load_table("db", "torn")["metadata-location"] == \
+        res["metadata-location"]
 
 
 # ---------------------------------------------------------------------------
