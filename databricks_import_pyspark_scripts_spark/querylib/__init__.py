@@ -18,7 +18,13 @@ Determinism rules every query follows (SURVEY.md §7 risk register):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import fcntl
+import glob
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +50,79 @@ def register(name: str, oracle: str | None, doc: str = ""):
         REGISTRY[name] = QueryDef(name, fn, oracle, doc or (fn.__doc__ or ""))
         return fn
     return deco
+
+
+# Packages whose code writes or reads what ``stage`` builds: any change to
+# them keys a fresh build instead of reusing a table the old code wrote.
+_PKG = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WRITER_DIRS = ("sources", "sinks", "streaming")
+_DIGESTS: dict[tuple[str, str], str] = {}
+
+
+def _digest(key: tuple[str, str], parts: Callable[[], Iterable[bytes]]) -> str:
+    """sha256 over ``parts()``, computed once per process per ``key``."""
+    if key not in _DIGESTS:
+        h = hashlib.sha256()
+        for p in parts():
+            h.update(p)
+        _DIGESTS[key] = h.hexdigest()
+    return _DIGESTS[key]
+
+
+def _file_bytes(paths: Iterable[str]) -> Iterable[bytes]:
+    for p in paths:
+        with open(p, "rb") as f:
+            yield os.path.relpath(p, _PKG).encode() + b"\0" + f.read()
+
+
+def _input_stats(sf_dir: str) -> Iterable[bytes]:
+    for root, dirs, files in os.walk(sf_dir):
+        dirs.sort()
+        for n in sorted(files):
+            st = os.stat(os.path.join(root, n))
+            rel = os.path.relpath(os.path.join(root, n), sf_dir)
+            yield f"{rel}\0{st.st_size}\0{st.st_mtime_ns}\n".encode()
+
+
+def stage(sf_dir: str, name: str, build: Callable[[str], None]) -> str:
+    """Directory holding the table ``build(path)`` stages from ``sf_dir``,
+    built at most once per code and input content and reused across
+    processes. The key hashes the module defining ``build``, every module
+    under ``_WRITER_DIRS`` and the name, size and mtime of each file in
+    ``sf_dir``.
+
+    A finished build is marked by ``<path>.staged``, published last (temp
+    file + ``os.replace``), so a caller that sees the marker reads a
+    complete table without locking. Otherwise the build runs under an
+    exclusive ``flock`` on ``<path>.lock``: re-check the marker, clear any
+    half-built directory, build, mark. The build writes IN PLACE because
+    Iceberg metadata, REST catalog registrations and shallow clones record
+    absolute paths; a table moved after building would point elsewhere.
+    Old keys are never pruned here, since another checkout may read them."""
+    code = build.__code__.co_filename
+    key = hashlib.sha256("\0".join((
+        _digest(("code", code), lambda: _file_bytes([code])),
+        _digest(("writers", ""), lambda: _file_bytes(sorted(
+            p for d in _WRITER_DIRS for p in glob.glob(
+                os.path.join(_PKG, d, "**", "*.py"), recursive=True)))),
+        _digest(("inputs", sf_dir), lambda: _input_stats(sf_dir)),
+    )).encode()).hexdigest()
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    path = os.path.join(tempfile.gettempdir(),
+                        f"spark_graft_{name}_{tag}_{key[:12]}")
+    marker = f"{path}.staged"
+    if os.path.exists(marker):
+        return path
+    with open(f"{path}.lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if not os.path.exists(marker):
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            build(path)
+            with open(f"{marker}.tmp", "w") as f:
+                f.write(key)
+            os.replace(f"{marker}.tmp", marker)
+    return path
 
 
 # The driver's correctness gate checks a bounded window of queries (the first

@@ -8,9 +8,10 @@ from the parquet source with the staging predicates restated as SQL. A
 replay bug — wrong file set at a version, wrong change-type synthesis,
 wrong commit metadata — breaks the value hash.
 
-The staged table is cached per ``sf_dir`` under the system temp dir (the
-build is deterministic, so reuse across the driver's runs is safe; a
-``_SUCCESS`` marker guards against a torn build).
+Staged tables are built through ``querylib.stage``: cached under the system
+temp dir, keyed by the writing code and the ``sf_dir`` input files, built
+once under a lock (the build is deterministic, so reuse across the
+driver's runs is safe).
 
 Reference parity: the reference's source IS a Delta table read via
 versionAsOf / readChangeFeed (unload_databricks_data_to_s3.py:183-193);
@@ -21,7 +22,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,7 +32,7 @@ from ..sources.delta_log import (
     write_delta_table,
 )
 from ..sources.registry import load_table
-from . import register
+from . import register, stage
 
 _BASE_TS_MS = 1700000000000
 # v0 = events with event_id % 3 == 0; v1 appends event_id % 3 == 1.
@@ -42,19 +42,15 @@ _V0_PRED, _V1_PRED = "event_id % 3 = 0", "event_id % 3 = 1"
 
 
 def _staged_table(spark: SparkSession, sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_gate_{tag}_v1")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_delta_table(
             spark,
             [e.filter(F.expr(_V0_PRED)), e.filter(F.expr(_V1_PRED))],
             path, base_ts_ms=_BASE_TS_MS)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta", build)
 
 
 @register(
@@ -149,18 +145,14 @@ _DV_MOD = 5
 
 
 def _staged_dv_table(spark: SparkSession, sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_dv_gate_{tag}_v1")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_delta_table(spark, [e.filter(F.expr(_V0_PRED))], path,
                           enable_cdf=False, base_ts_ms=_BASE_TS_MS)
         _add_dv_delete_commit(spark, path, _DV_MOD)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_dv", build)
 
 
 @register(
@@ -205,18 +197,14 @@ def _staged_skip_table(spark: SparkSession, sf_dir: str) -> str:
     """Staged Delta table whose 8 data files are RANGE-partitioned on
     event_id, each add action carrying footer-derived stats JSON — the
     layout where Delta data skipping pays."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_skip_gate_{tag}_v1")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value")
              .repartitionByRange(8, "event_id"))
         write_delta_table(spark, [e], path, enable_cdf=False,
                           base_ts_ms=_BASE_TS_MS)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_skip", build)
 
 
 @register(
@@ -295,11 +283,7 @@ def _staged_cm_table(spark: SparkSession, sf_dir: str) -> str:
     """Column-mapped (``name`` mode) staged table: orders columns stored
     under opaque physical names; the log's schemaString carries the
     logical names + physicalName metadata (legacy protocol 2/5)."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_cm_gate_{tag}_v1")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders")
         df = o.select(*[F.col(c).alias(p) for c, p in _CM_PHYS.items()])
         staging = os.path.join(path, "_staging")
@@ -342,8 +326,8 @@ def _staged_cm_table(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(log, f"{0:020d}.json"), "w") as f:
             for a in actions:
                 f.write(json.dumps(a) + "\n")
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_cm", build)
 
 
 @register(
@@ -423,13 +407,7 @@ def _writer_staged_table(spark: SparkSession, sf_dir: str) -> str:
         update_where,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_writer_gate_{tag}_v2")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)  # torn build: start over
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_V0_PRED)), path,
@@ -443,8 +421,8 @@ def _writer_staged_table(spark: SparkSession, sf_dir: str) -> str:
         merge_into(spark, path, e.filter(F.expr(_W_MRG)), on=["event_id"],
                    when_matched_update={"value": "t.value + s.value"},
                    ts_ms=_BASE_TS_MS + 4000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_writer", build)
 
 
 @register(
@@ -531,11 +509,7 @@ def _staged_idm_table(spark: SparkSession, sf_dir: str) -> str:
     ``spark.sql.parquet.fieldId.write.enabled``, on by default, emits them
     from the alias metadata); the log's schemaString carries the logical
     names + delta.columnMapping.id annotations the reader matches on."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_idm_gate_{tag}_v1")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         o = load_table(spark, sf_dir, "orders")
         df = o.select(*[
             F.col(c).alias(p, metadata={"parquet.field.id": i})
@@ -580,8 +554,8 @@ def _staged_idm_table(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(log, f"{0:020d}.json"), "w") as f:
             for a in actions:
                 f.write(json.dumps(a) + "\n")
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_idm", build)
 
 
 @register(
@@ -661,85 +635,78 @@ def _staged_widened_table(spark: SparkSession, sf_dir: str) -> str:
     per the public protocol — and appends int64/float64 files. The log
     is hand-authored (the staging twin writes one fixed schema per
     table); data files come from Spark writes of the events slices."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_widen_gate_{tag}_v1")
-    marker = os.path.join(path, "_SUCCESS")
-    if os.path.exists(marker):
-        return path
     import shutil
 
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    e = load_table(spark, sf_dir, "events")
+    def build(path: str) -> None:
+        e = load_table(spark, sf_dir, "events")
 
-    def _stage(pred: str, casts: list, tag_: str) -> list[str]:
-        staging = os.path.join(path, f"_staging_{tag_}")
-        (e.filter(F.expr(pred)).select(*casts)
-         .write.mode("overwrite").parquet(staging))
-        names = []
-        for i, n in enumerate(sorted(x for x in os.listdir(staging)
-                                     if x.endswith(".parquet"))):
-            target = f"{tag_}-{i:04d}.parquet"
-            os.replace(os.path.join(staging, n),
-                       os.path.join(path, target))
-            names.append(target)
-        shutil.rmtree(staging, ignore_errors=True)
-        return names
+        def _stage(pred: str, casts: list, tag_: str) -> list[str]:
+            staging = os.path.join(path, f"_staging_{tag_}")
+            (e.filter(F.expr(pred)).select(*casts)
+             .write.mode("overwrite").parquet(staging))
+            names = []
+            for i, n in enumerate(sorted(x for x in os.listdir(staging)
+                                         if x.endswith(".parquet"))):
+                target = f"{tag_}-{i:04d}.parquet"
+                os.replace(os.path.join(staging, n),
+                           os.path.join(path, target))
+                names.append(target)
+            shutil.rmtree(staging, ignore_errors=True)
+            return names
 
-    narrow_files = _stage(_TW_NARROW_PRED, [
-        F.col("event_id").cast("int").alias("event_id"),
-        "event_type", F.col("value").cast("float").alias("value")], "n")
-    wide_files = _stage(_TW_WIDE_PRED, [
-        F.col("event_id").cast("long").alias("event_id"),
-        "event_type", F.col("value").cast("double").alias("value")], "w")
+        narrow_files = _stage(_TW_NARROW_PRED, [
+            F.col("event_id").cast("int").alias("event_id"),
+            "event_type", F.col("value").cast("float").alias("value")], "n")
+        wide_files = _stage(_TW_WIDE_PRED, [
+            F.col("event_id").cast("long").alias("event_id"),
+            "event_type", F.col("value").cast("double").alias("value")], "w")
 
-    def _schema(idt: str, vt: str, changes: bool) -> str:
-        def md(frm, to):
-            return ({"delta.typeChanges": [
-                {"fromType": frm, "toType": to, "tableVersion": 1}]}
-                if changes else {})
-        return json.dumps({"type": "struct", "fields": [
-            {"name": "event_id", "type": idt, "nullable": True,
-             "metadata": md("integer", "long")},
-            {"name": "event_type", "type": "string", "nullable": True,
-             "metadata": {}},
-            {"name": "value", "type": vt, "nullable": True,
-             "metadata": md("float", "double")}]})
+        def _schema(idt: str, vt: str, changes: bool) -> str:
+            def md(frm, to):
+                return ({"delta.typeChanges": [
+                    {"fromType": frm, "toType": to, "tableVersion": 1}]}
+                    if changes else {})
+            return json.dumps({"type": "struct", "fields": [
+                {"name": "event_id", "type": idt, "nullable": True,
+                 "metadata": md("integer", "long")},
+                {"name": "event_type", "type": "string", "nullable": True,
+                 "metadata": {}},
+                {"name": "value", "type": vt, "nullable": True,
+                 "metadata": md("float", "double")}]})
 
-    meta = {"id": "77777777-6666-5555-4444-333333333333",
-            "format": {"provider": "parquet", "options": {}},
-            "partitionColumns": [],
-            "configuration": {"delta.enableTypeWidening": "true"},
-            "createdTime": _BASE_TS_MS - 5000}
-    log = os.path.join(path, "_delta_log")
-    os.makedirs(log)
+        meta = {"id": "77777777-6666-5555-4444-333333333333",
+                "format": {"provider": "parquet", "options": {}},
+                "partitionColumns": [],
+                "configuration": {"delta.enableTypeWidening": "true"},
+                "createdTime": _BASE_TS_MS - 5000}
+        log = os.path.join(path, "_delta_log")
+        os.makedirs(log)
 
-    def _commit(v: int, actions: list[dict]) -> None:
-        with open(os.path.join(log, f"{v:020d}.json"), "w") as f:
-            for a in actions:
-                f.write(json.dumps(a) + "\n")
+        def _commit(v: int, actions: list[dict]) -> None:
+            with open(os.path.join(log, f"{v:020d}.json"), "w") as f:
+                for a in actions:
+                    f.write(json.dumps(a) + "\n")
 
-    _commit(0, [
-        {"commitInfo": {"timestamp": _BASE_TS_MS, "operation": "WRITE"}},
-        {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
-                      "readerFeatures": ["typeWidening"],
-                      "writerFeatures": ["typeWidening"]}},
-        {"metaData": {**meta,
-                      "schemaString": _schema("integer", "float", False)}},
-        *({"add": {"path": n, "partitionValues": {}, "size": 1,
-                   "dataChange": True, "modificationTime": 1}}
-          for n in narrow_files)])
-    _commit(1, [
-        {"commitInfo": {"timestamp": _BASE_TS_MS + 1000,
-                        "operation": "CHANGE COLUMN"}},
-        {"metaData": {**meta,
-                      "schemaString": _schema("long", "double", True)}},
-        *({"add": {"path": n, "partitionValues": {}, "size": 1,
-                   "dataChange": True, "modificationTime": 2}}
-          for n in wide_files)])
-    open(marker, "w").close()
-    return path
+        _commit(0, [
+            {"commitInfo": {"timestamp": _BASE_TS_MS, "operation": "WRITE"}},
+            {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
+                          "readerFeatures": ["typeWidening"],
+                          "writerFeatures": ["typeWidening"]}},
+            {"metaData": {**meta,
+                          "schemaString": _schema("integer", "float", False)}},
+            *({"add": {"path": n, "partitionValues": {}, "size": 1,
+                       "dataChange": True, "modificationTime": 1}}
+              for n in narrow_files)])
+        _commit(1, [
+            {"commitInfo": {"timestamp": _BASE_TS_MS + 1000,
+                            "operation": "CHANGE COLUMN"}},
+            {"metaData": {**meta,
+                          "schemaString": _schema("long", "double", True)}},
+            *({"add": {"path": n, "partitionValues": {}, "size": 1,
+                       "dataChange": True, "modificationTime": 2}}
+              for n in wide_files)])
+
+    return stage(sf_dir, "delta_widen", build)
 
 
 @register(
@@ -796,13 +763,7 @@ def _staged_dvw_table(spark: SparkSession, sf_dir: str) -> str:
     must MERGE bitmaps on files the first already stamped."""
     from ..sinks.delta_writer import create_delta_table, delete_where
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_dvw_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_V0_PRED)), path,
@@ -812,8 +773,8 @@ def _staged_dvw_table(spark: SparkSession, sf_dir: str) -> str:
                      use_dv=True)
         delete_where(spark, path, _DVW_DEL2, ts_ms=_BASE_TS_MS + 2000,
                      use_dv=True)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_dvw", build)
 
 
 @register(
@@ -871,13 +832,7 @@ def _staged_dvm_table(spark: SparkSession, sf_dir: str) -> str:
     staged as new files in the same commit."""
     from ..sinks.delta_writer import create_delta_table, merge_into
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_dvm_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_V0_PRED)), path,
@@ -888,8 +843,8 @@ def _staged_dvm_table(spark: SparkSession, sf_dir: str) -> str:
                    when_matched_update={"value": "t.value + s.value"},
                    when_matched_delete=f"s.{_DVM_DEL}",
                    ts_ms=_BASE_TS_MS + 1000, use_dv=True)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_dvm", build)
 
 
 @register(
@@ -938,21 +893,15 @@ def _staged_variant_table(spark: SparkSession, sf_dir: str) -> str:
     cannot parse the VARIANT logical type — unskippable is correct)."""
     from ..sinks.delta_writer import create_delta_table
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_variant_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .filter(F.expr(_V0_PRED))
              .select("event_id",
                      F.parse_json(F.to_json(F.struct(
                          "event_type", "value"))).alias("payload")))
         create_delta_table(spark, e, path, ts_ms=_BASE_TS_MS)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_variant", build)
 
 
 @register(
@@ -1003,15 +952,9 @@ def _staged_cm_written_table(spark: SparkSession, sf_dir: str) -> str:
     from ..sinks.delta_writer import append_delta, delete_where
     from ..sources.delta_log import replay_log
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_cmw_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-        src = _staged_cm_table(spark, sf_dir)
-        shutil.copytree(src, path)
-        os.unlink(os.path.join(path, "_SUCCESS"))
+    def build(path: str) -> None:
+        shutil.copytree(_staged_cm_table(spark, sf_dir), path,
+                        dirs_exist_ok=True)
         rep = replay_log(spark, path)
         o = (load_table(spark, sf_dir, "orders")
              .filter("o_orderkey % 3 = 1")
@@ -1022,8 +965,8 @@ def _staged_cm_written_table(spark: SparkSession, sf_dir: str) -> str:
             path, ts_ms=_BASE_TS_MS + 1000)
         delete_where(spark, path, "o_orderkey % 5 = 0",
                      ts_ms=_BASE_TS_MS + 2000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_cmw", build)
 
 
 @register(
@@ -1077,13 +1020,7 @@ def _staged_restored_table(spark: SparkSession, sf_dir: str) -> str:
         restore_delta,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_restore_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_V0_PRED)), path,
@@ -1093,8 +1030,8 @@ def _staged_restored_table(spark: SparkSession, sf_dir: str) -> str:
         delete_where(spark, path, "event_id % 5 = 0",
                      ts_ms=_BASE_TS_MS + 2000, use_dv=True)
         restore_delta(spark, path, 1, ts_ms=_BASE_TS_MS + 3000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_restore", build)
 
 
 @register(
@@ -1148,16 +1085,8 @@ def _staged_clone_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         delete_where,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    src = os.path.join(tempfile.gettempdir(),
-                       f"spark_graft_delta_clone_src_{tag}_v1")
-    dst = os.path.join(tempfile.gettempdir(),
-                       f"spark_graft_delta_clone_dst_{tag}_v1")
-    marker = os.path.join(dst, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(dst, ignore_errors=True)
+    def build(root: str) -> None:
+        src, dst = os.path.join(root, "src"), os.path.join(root, "dst")
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_V0_PRED)), src,
@@ -1172,8 +1101,9 @@ def _staged_clone_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         assert n_parquet == 0, "shallow clone moved data"
         append_delta(spark, e.filter(F.expr(_CL_NEW)), dst,
                      ts_ms=_BASE_TS_MS + 4000)
-        open(marker, "w").close()
-    return src, dst
+
+    root = stage(sf_dir, "delta_clone", build)
+    return os.path.join(root, "src"), os.path.join(root, "dst")
 
 
 @register(
@@ -1260,13 +1190,7 @@ def _staged_identity_table(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sinks.delta_writer import append_delta, create_delta_table
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_identity_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         w = Window.orderBy("event_id")
@@ -1285,8 +1209,8 @@ def _staged_identity_table(spark: SparkSession, sf_dir: str) -> str:
         grow = (e.filter(F.expr(_ID_V1))
                 .orderBy("event_id").coalesce(1))
         append_delta(spark, grow, path, ts_ms=_BASE_TS_MS + 1000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_identity", build)
 
 
 @register(
@@ -1346,13 +1270,7 @@ def _staged_identity_merge_table(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sinks.delta_writer import create_delta_table, merge_into
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_idmerge_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         w = Window.orderBy("event_id")
@@ -1372,8 +1290,8 @@ def _staged_identity_merge_table(spark: SparkSession, sf_dir: str) -> str:
         merge_into(spark, path, src, on=["event_id"],
                    when_matched_update={"value": "s.value + 100"},
                    ts_ms=_BASE_TS_MS + 1000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_idmerge", build)
 
 
 @register(
@@ -1443,13 +1361,7 @@ def _staged_row_tracking_table(spark: SparkSession, sf_dir: str) -> str:
         delete_where,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_rt_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(
@@ -1460,8 +1372,8 @@ def _staged_row_tracking_table(spark: SparkSession, sf_dir: str) -> str:
                      .coalesce(1), path, ts_ms=_BASE_TS_MS + 1000)
         delete_where(spark, path, _RT_DEAD, ts_ms=_BASE_TS_MS + 2000,
                      use_dv=True)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_rt", build)
 
 
 @register(
@@ -1516,13 +1428,7 @@ def _staged_replace_where_table(spark: SparkSession, sf_dir: str) -> str:
         replace_where,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_rw_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_RW_V0)), path,
@@ -1535,8 +1441,8 @@ def _staged_replace_where_table(spark: SparkSession, sf_dir: str) -> str:
                 .withColumn("value", F.col("value") + 1000.0))
         replace_where(spark, repl, path, "event_type = 'click'",
                       ts_ms=_BASE_TS_MS + 2000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "delta_rw", build)
 
 
 @register(
@@ -1588,13 +1494,7 @@ def _staged_stream_first_seen(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.delta_log import write_ingest_mark
     from ..streaming.delta_source import stream_delta_first_seen
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_delta_stream_fs_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         src = os.path.join(path, "src")
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
@@ -1616,8 +1516,8 @@ def _staged_stream_first_seen(spark: SparkSession, sf_dir: str) -> str:
         write_ingest_mark(spark, mark, 0)
         stream_delta_first_seen(spark, src, tgt, mark,
                                 id_col="event_id")
-        open(marker, "w").close()
-    return os.path.join(path, "tgt")
+
+    return os.path.join(stage(sf_dir, "delta_stream_fs", build), "tgt")
 
 
 @register(

@@ -10,34 +10,27 @@ field-id mismatch — breaks the value hash."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.iceberg import read_iceberg_snapshot, write_iceberg_table
 from ..sources.registry import load_table
-from . import register
+from . import register, stage
 
 _S0_PRED, _S1_PRED = "event_id % 3 = 0", "event_id % 3 = 1"
 _SNAP0, _SNAP1 = 1000, 1001
 
 
 def _staged_iceberg(spark: SparkSession, sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(
             spark, [e.filter(F.expr(_S0_PRED)), e.filter(F.expr(_S1_PRED))],
             path)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg", build)
 
 
 @register(
@@ -113,19 +106,13 @@ def _staged_mor_iceberg(spark: SparkSession, sf_dir: str) -> str:
     parquet, the layout Flink CDC / Spark MERGE writers produce."""
     from ..sources.iceberg import write_iceberg_position_deletes
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_mor_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value").repartition(4))
         write_iceberg_table(spark, [e], path)
         write_iceberg_position_deletes(spark, path, _MOR_DEAD)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_mor", build)
 
 
 @register(
@@ -162,19 +149,13 @@ def _staged_skip_iceberg(spark: SparkSession, sf_dir: str) -> str:
     """Staged Iceberg table whose 8 data files are RANGE-partitioned on
     event_id, each manifest entry carrying footer-derived lower/upper
     bounds — the layout where Iceberg data skipping pays."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_skip_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value")
              .repartitionByRange(8, "event_id"))
         write_iceberg_table(spark, [e], path)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_skip", build)
 
 
 @register(
@@ -215,19 +196,13 @@ def _staged_days_iceberg(spark: SparkSession, sf_dir: str) -> str:
     """Staged Iceberg table with a NON-IDENTITY ``days(ts)`` partition
     spec — the dominant real-world Iceberg layout — one file slice per
     event day, manifest partition structs carrying the day ordinal."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_days_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "ts", "event_type", "value"))
         write_iceberg_table(spark, [e], path,
                             partition_transforms=[("ts_day", "days", "ts")])
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_days", build)
 
 
 @register(
@@ -277,20 +252,14 @@ def _staged_append_iceberg(spark: SparkSession, sf_dir: str) -> str:
     protocol a live multi-writer table uses."""
     from ..sources.iceberg import append_iceberg
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_append_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(spark, [e.filter(F.expr(_AP_BASE))], path)
         append_iceberg(spark, e.filter(F.expr(_AP_NEW)), path,
                        ts_ms=1700000005000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_append", build)
 
 
 @register(
@@ -346,13 +315,7 @@ def _staged_eq_iceberg(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_equality_deletes,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_eq_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(spark, [e.filter(F.expr(_EQ_BASE))], path)
@@ -365,8 +328,8 @@ def _staged_eq_iceberg(spark: SparkSession, sf_dir: str) -> str:
             spark, e.filter(F.expr(_EQ_REINS)
                             & (F.col("event_type") == _EQ_DEAD_TYPE)),
             path, ts_ms=1700000007000)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_eq", build)
 
 
 @register(
@@ -425,20 +388,14 @@ def iceberg_mor_cdf_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ORC data files (format dispatch in the snapshot scan — r10)
 
 def _staged_iceberg_orc(spark: SparkSession, sf_dir: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_orc_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(
             spark, [e.filter(F.expr(_S0_PRED)), e.filter(F.expr(_S1_PRED))],
             path, file_format="orc")
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_orc", build)
 
 
 @register(
@@ -494,13 +451,7 @@ def _staged_iceberg_compacted(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_equality_deletes,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_compact_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(
@@ -513,8 +464,8 @@ def _staged_iceberg_compacted(spark: SparkSession, sf_dir: str) -> str:
             spark, path,
             e.select("event_type").filter("event_type = 'click'")
             .distinct(), ["event_type"])
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_compact", build)
 
 
 @register(
@@ -568,13 +519,7 @@ def _staged_iceberg_expired(spark: SparkSession, sf_dir: str) -> str:
     the GATE, not just the unit tests."""
     from ..sources.iceberg import expire_iceberg_snapshots
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_expire_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(
@@ -588,8 +533,8 @@ def _staged_iceberg_expired(spark: SparkSession, sf_dir: str) -> str:
             raise AssertionError("expired snapshot still readable")
         except FileNotFoundError:
             pass
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_expire", build)
 
 
 @register(
@@ -630,13 +575,7 @@ def _staged_iceberg_refs(spark: SparkSession, sf_dir: str) -> str:
         set_iceberg_ref,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_ref_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(
@@ -658,8 +597,8 @@ def _staged_iceberg_refs(spark: SparkSession, sf_dir: str) -> str:
             raise AssertionError("expired snapshot still readable")
         except FileNotFoundError:
             pass
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_ref", build)
 
 
 @register(
@@ -745,13 +684,7 @@ def _staged_iceberg_evolved(spark: SparkSession, sf_dir: str) -> str:
         read_table_metadata,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_spev_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(spark, [e.filter(F.expr(_SPEV_OLD))], path)
@@ -766,8 +699,8 @@ def _staged_iceberg_evolved(spark: SparkSession, sf_dir: str) -> str:
         assert len(kept) < n_all, "evolved-spec files did not prune"
         assert any(not (f.get("partition") or {}) for f in kept), \
             "old-spec file wrongly pruned"
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_spev", build)
 
 
 @register(
@@ -826,13 +759,7 @@ def _staged_uniform(spark: SparkSession, sf_dir: str) -> str:
     from ..sinks.delta_writer import append_delta, create_delta_table
     from ..sources.uniform import uniform_sync_iceberg
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_uniform_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_UNI_V0)), path,
@@ -842,8 +769,8 @@ def _staged_uniform(spark: SparkSession, sf_dir: str) -> str:
                      ts_ms=1700000001000)
         sid = uniform_sync_iceberg(spark, path)
         assert sid == 1001, sid      # reflects Delta version 1
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "uniform", build)
 
 
 @register(
@@ -884,13 +811,7 @@ def _staged_rest_catalog(spark: SparkSession, sf_dir: str) -> str:
         FileRestCatalog, RestCommitConflict, append_iceberg_via_catalog,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_rc_gate_{tag}_v2")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         root = os.path.join(path, "t")
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
@@ -956,8 +877,8 @@ def _staged_rest_catalog(spark: SparkSession, sf_dir: str) -> str:
             "append never lost the CAS round — race is vacuous"
         meta = cat.load_table("db", "events")["metadata"]
         assert meta["properties"]["owner"] == "racer"
-        open(marker, "w").close()
-    return os.path.join(path, "t")
+
+    return os.path.join(stage(sf_dir, "iceberg_rc", build), "t")
 
 
 @register(
@@ -1000,13 +921,7 @@ def _staged_v3_defaults(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sources.iceberg import append_iceberg
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_v3d_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(spark, [e.filter(F.expr(_V3D_V0))], path)
@@ -1030,8 +945,8 @@ def _staged_v3_defaults(spark: SparkSession, sf_dir: str) -> str:
                 .withColumn("bonus",
                             (F.col("event_id") % 100).cast("int")))
         append_iceberg(spark, era2, path)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_v3d", build)
 
 
 @register(
@@ -1080,13 +995,7 @@ def _staged_uniform_dv(spark: SparkSession, sf_dir: str) -> str:
     )
     from ..sources.uniform import uniform_sync_iceberg
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_uniform_dv_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         create_delta_table(spark, e.filter(F.expr(_UNI_V0)), path,
@@ -1095,8 +1004,8 @@ def _staged_uniform_dv(spark: SparkSession, sf_dir: str) -> str:
                      use_dv=True)
         sid = uniform_sync_iceberg(spark, path)
         assert sid == 1001, sid      # reflects Delta version 1 (the DV)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "uniform_dv", build)
 
 
 @register(
@@ -1134,13 +1043,7 @@ def _staged_wap(spark: SparkSession, sf_dir: str) -> str:
     that leaks into main fails the GATE."""
     from ..sources.iceberg import append_iceberg, set_iceberg_ref
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_wap_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(spark, [e.filter(F.expr(_WAP_BASE))], path)
@@ -1158,8 +1061,8 @@ def _staged_wap(spark: SparkSession, sf_dir: str) -> str:
                         snapshot_id=int(
                             meta["refs"]["audit"]["snapshot-id"]),
                         ts_ms=1700000009900)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_wap", build)
 
 
 @register(
@@ -1210,13 +1113,7 @@ def _staged_iceberg_v3dv(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_dv_deletes,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_v3dv_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(
@@ -1224,8 +1121,8 @@ def _staged_iceberg_v3dv(spark: SparkSession, sf_dir: str) -> str:
             path)
         write_iceberg_dv_deletes(spark, path, _V3_DEAD)
         assert int(read_table_metadata(spark, path)["format-version"]) == 3
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_v3dv", build)
 
 
 @register(
@@ -1281,13 +1178,7 @@ def _staged_iceberg_row_lineage(spark: SparkSession, sf_dir: str) -> str:
         write_iceberg_dv_deletes,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_rl_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(
@@ -1299,8 +1190,8 @@ def _staged_iceberg_row_lineage(spark: SparkSession, sf_dir: str) -> str:
                        e.filter(F.expr(_RL_V1)).orderBy("event_id")
                        .coalesce(1), path, ts_ms=1700000010000)
         write_iceberg_dv_deletes(spark, path, _RL_DEAD)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_rl", build)
 
 
 @register(
@@ -1357,13 +1248,7 @@ def _staged_delete_where(spark: SparkSession, sf_dir: str) -> str:
         compact_iceberg_table, iceberg_delete_where,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_dw_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value").repartition(4))
         write_iceberg_table(spark, [e], path)
@@ -1372,8 +1257,8 @@ def _staged_delete_where(spark: SparkSession, sf_dir: str) -> str:
                              equality_cols=["event_id"])
         iceberg_delete_where(spark, path, _DW_DV, mode="dv")
         assert compact_iceberg_table(spark, path) is not None
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_dw", build)
 
 
 @register(
@@ -1432,13 +1317,7 @@ def _staged_uuid_time(spark: SparkSession, sf_dir: str) -> str:
 
     from ..sources.iceberg import append_iceberg
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_ut_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value",
                      F.expr(_ut_uuid(_UT_HEX_SPARK)).alias("u"),
@@ -1455,8 +1334,8 @@ def _staged_uuid_time(spark: SparkSession, sf_dir: str) -> str:
                 f["type"] = "time"
         _json.dump(meta, open(mp, "w"))
         append_iceberg(spark, e.filter(F.expr(_UT_V1)), path)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_ut", build)
 
 
 @register(
@@ -1510,13 +1389,7 @@ def _staged_update_where(spark: SparkSession, sf_dir: str) -> str:
         compact_iceberg_table, iceberg_update_where,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_uw_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value").repartition(4))
         write_iceberg_table(spark, [e], path)
@@ -1526,8 +1399,8 @@ def _staged_update_where(spark: SparkSession, sf_dir: str) -> str:
         iceberg_update_where(spark, path, _UW_P2,
                              {"value": "value * 2"}, mode="dv")
         assert compact_iceberg_table(spark, path) is not None
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_uw", build)
 
 
 @register(
@@ -1577,13 +1450,7 @@ def _staged_merge_into(spark: SparkSession, sf_dir: str) -> str:
         compact_iceberg_table, iceberg_merge_into,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_mi_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(spark, [e.filter(F.expr(_MI_T))
@@ -1596,8 +1463,8 @@ def _staged_merge_into(spark: SparkSession, sf_dir: str) -> str:
             when_matched_delete=_MI_DEL,
             when_not_matched_insert=True)
         assert compact_iceberg_table(spark, path) is not None
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_mi", build)
 
 
 @register(
@@ -1652,13 +1519,7 @@ def _staged_dml_cdf(spark: SparkSession, sf_dir: str) -> str:
         iceberg_delete_where, iceberg_merge_into, iceberg_update_where,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_dmlcdf_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
         write_iceberg_table(spark, [e.filter(F.expr(_DML_BASE))
@@ -1670,8 +1531,8 @@ def _staged_dml_cdf(spark: SparkSession, sf_dir: str) -> str:
         iceberg_merge_into(spark, path, src, ["event_id"],
                            when_matched_update={"value": "t.value + 1"},
                            when_not_matched_insert=True)
-        open(marker, "w").close()
-    return path
+
+    return stage(sf_dir, "iceberg_dmlcdf", build)
 
 
 @register(
@@ -1732,13 +1593,7 @@ def _staged_rest_catalog_delete(spark: SparkSession, sf_dir: str) -> str:
         FileRestCatalog, delete_where_via_catalog,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_rcd_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         root = os.path.join(path, "t")
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
@@ -1748,8 +1603,8 @@ def _staged_rest_catalog_delete(spark: SparkSession, sf_dir: str) -> str:
         cat = FileRestCatalog(os.path.join(path, "wh"))
         cat.register_table("db", "events", root)
         delete_where_via_catalog(spark, cat, "db", "events", _RCD_DEAD)
-        open(marker, "w").close()
-    return os.path.join(path, "t")
+
+    return os.path.join(stage(sf_dir, "iceberg_rcd", build), "t")
 
 
 def _staged_iceberg_stream_first_seen(spark: SparkSession,
@@ -1767,13 +1622,7 @@ def _staged_iceberg_stream_first_seen(spark: SparkSession,
     from ..sources.iceberg import append_iceberg
     from ..streaming.iceberg_source import stream_iceberg_first_seen
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_stream_fs_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         src = os.path.join(path, "src")
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
@@ -1793,8 +1642,8 @@ def _staged_iceberg_stream_first_seen(spark: SparkSession,
         write_ingest_mark(spark, mark, 0)
         stream_iceberg_first_seen(spark, src, tgt, mark,
                                   id_col="event_id")
-        open(marker, "w").close()
-    return os.path.join(path, "tgt")
+
+    return os.path.join(stage(sf_dir, "iceberg_stream_fs", build), "tgt")
 
 
 @register(
@@ -1843,13 +1692,7 @@ def _staged_rest_catalog_merge(spark: SparkSession, sf_dir: str) -> str:
         FileRestCatalog, merge_into_via_catalog,
     )
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    path = os.path.join(tempfile.gettempdir(),
-                        f"spark_graft_iceberg_rcm_gate_{tag}_v1")
-    marker = os.path.join(path, "_STAGED")
-    if not os.path.exists(marker):
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         root = os.path.join(path, "t")
         e = (load_table(spark, sf_dir, "events")
              .select("event_id", "event_type", "value"))
@@ -1866,8 +1709,8 @@ def _staged_rest_catalog_merge(spark: SparkSession, sf_dir: str) -> str:
             when_matched_update={"value": "s.value"},
             when_matched_delete="s.event_id % 20 = 0",
             when_not_matched_insert=True)
-        open(marker, "w").close()
-    return os.path.join(path, "t")
+
+    return os.path.join(stage(sf_dir, "iceberg_rcm", build), "t")
 
 
 @register(

@@ -46,11 +46,13 @@ from .iceberg import (
     _MANIFEST_FILE_SCHEMA,
     METADATA_DIR,
     STATUS_ADDED,
-    _VMETA_RE,
     IcebergProtocolError,
+    _commit_metadata,
     _footer_bounds,
+    _head,
     _manifest_entry_schema,
     _part_avro_fields,
+    _write_hint,
 )
 
 _TYPE_MAP = {
@@ -191,14 +193,17 @@ def uniform_sync_iceberg(spark: SparkSession, table_path: str,
     snap_id = 1000 + rep.version
     mdir = os.path.join(root, METADATA_DIR)
     os.makedirs(mdir, exist_ok=True)
-    versions = sorted(int(m.group(1)) for n in os.listdir(mdir)
-                      if (m := _VMETA_RE.match(n)))
-    if versions:
-        prior = json.load(open(os.path.join(
-            mdir, f"v{versions[-1]}.metadata.json")))
-        have = {int(s["snapshot-id"]) for s in prior.get("snapshots") or []}
-        if snap_id in have:
+
+    def synced(meta: dict) -> bool:
+        return snap_id in {int(s["snapshot-id"])
+                           for s in meta.get("snapshots") or []}
+
+    try:
+        if synced(_head(spark, mdir)[1]):
             return snap_id            # this Delta version already synced
+        first = False
+    except FileNotFoundError:
+        first = True
 
     name_to_field = {phys[f["name"]]: (f["id"], f["type"])
                      for f in fields if isinstance(f["type"], str)}
@@ -334,11 +339,16 @@ def uniform_sync_iceberg(spark: SparkSession, table_path: str,
                                    "spark-graft-delta-version":
                                        str(rep.version)}}],
     }
-    v = (versions[-1] + 1) if versions else 1
-    with open(os.path.join(mdir, f"v{v}.metadata.json"), "w") as f:
-        json.dump(meta, f)
-    with open(os.path.join(mdir, "version-hint.text.tmp"), "w") as f:
-        f.write(str(v))
-    os.replace(os.path.join(mdir, "version-hint.text.tmp"),
-               os.path.join(mdir, "version-hint.text"))
-    return snap_id
+    # the synced metadata depends on the Delta snapshot only, so it can be
+    # published on whatever head a racing sync left — unless that head
+    # already carries this snapshot
+    from ..sinks import delta_writer
+
+    if first and delta_writer._atomic_create(
+            spark, os.path.join(mdir, "v1.metadata.json"),
+            json.dumps(meta).encode("utf-8")):
+        _write_hint(mdir, 1)
+        return snap_id
+    return _commit_metadata(
+        spark, root, "uniform_sync_iceberg",
+        lambda head: (None if synced(head) else meta, snap_id))[1]

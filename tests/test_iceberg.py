@@ -2193,6 +2193,69 @@ def test_uniform_sync_reads_delta_files_through_iceberg(spark, tmp_path):
     assert _ks(read_iceberg_snapshot(spark, t)) == list(range(50))
 
 
+def test_uniform_resync_publish_never_exposes_partial_head(
+        spark, tmp_path, monkeypatch):
+    """A head read made while a re-sync writes its metadata file sees the
+    old head or the new one whole, never a partial file: the sync
+    publishes through the shared commit path (temp file + atomic
+    create), not by writing ``v<N+1>.metadata.json`` in place."""
+    from databricks_import_pyspark_scripts_spark.sinks import delta_writer
+    from databricks_import_pyspark_scripts_spark.sources import (
+        iceberg,
+        uniform,
+    )
+
+    t = str(tmp_path / "uni")
+    rows = "id AS k", "CAST(id AS double) AS v"
+    delta_writer.create_delta_table(
+        spark, spark.range(0, 20).selectExpr(*rows), t, ts_ms=1000)
+    assert uniform.uniform_sync_iceberg(spark, t) == 1000
+    delta_writer.append_delta(
+        spark, spark.range(20, 30).selectExpr(*rows), t, ts_ms=2000)
+    mdir = os.path.join(t, "metadata")
+    seen = []
+
+    class Probe:
+        """Writes half of each chunk, reads the head, writes the rest."""
+
+        def __init__(self, f):
+            self.f = f
+
+        def write(self, data):
+            self.f.write(data[:len(data) // 2])
+            self.f.flush()
+            try:
+                seen.append(iceberg._head(None, mdir)[1]
+                            ["current-snapshot-id"])
+            except Exception as e:  # noqa: BLE001 — a torn read
+                seen.append(repr(e))
+            return self.f.write(data[len(data) // 2:])
+
+        def __getattr__(self, name):
+            return getattr(self.f, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return self.f.__exit__(*exc)
+
+    def probing_open(file, mode="r", *args, **kwargs):
+        f = open(file, mode, *args, **kwargs)
+        name = os.path.basename(str(file))
+        if ("w" in mode and os.path.dirname(str(file)) == mdir
+                and name.startswith("v") and ".metadata.json" in name):
+            return Probe(f)
+        return f
+
+    for mod in (uniform, delta_writer):
+        monkeypatch.setattr(mod, "open", probing_open, raising=False)
+    assert uniform.uniform_sync_iceberg(spark, t) == 1001
+    monkeypatch.undo()
+    assert seen and set(seen) <= {1000, 1001}, seen
+    assert _ks(read_iceberg_snapshot(spark, t)) == list(range(30))
+
+
 def test_uniform_sync_translates_dvs_to_position_deletes(spark, tmp_path):
     """A DV-bearing Delta table (the DBR-14+ default) syncs: each live
     deletion vector decodes into rows of ONE position-delete parquet
