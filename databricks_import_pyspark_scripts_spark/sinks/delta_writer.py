@@ -1879,13 +1879,20 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     build executor-side on the shared ``_dv_stamp_actions`` engine.
     Local filesystems only (the DV file write), like DELETE/UPDATE.
 
-    At 100 TB: the match scan is one join of the target scan against the
-    source keyed on ``on`` (shuffle or broadcast — AQE decides by source
-    size); the rewrite rescans ONLY affected files joined against the
-    source again (with DVs, nothing is rescanned at all — the one join
-    yields both the dead positions and the post-images). The duplicate-
-    match guard is a |matched-keys|-bounded aggregate probed with
-    ``limit(1)``, not a collect."""
+    At 100 TB: two passes, like Delta's own MergeIntoCommand. Pass 1 is
+    ONE aggregate over the full target scanning only the key columns:
+    the source's per-key row counts inner-join the target's keys
+    (``eqNullSafe``) and fold into (max count, set of touched files), so
+    the duplicate-match guard and the touched-file list cost one action
+    and raise before anything is staged. Pass 2 scans ONLY the touched
+    files and left-joins them to the source (AQE broadcasts a small
+    source; the join keeps the scan's partitioning). That join is
+    persisted for the data write, the change-feed write and the DV
+    stamp, and released in a ``finally`` once the commit is built or
+    the merge raised. Insert rows are the source anti-joined against the
+    matched keys of that join (against the touched files' keys for an
+    insert-only merge), so inserts never rescan the table; with DVs the
+    dead positions come out of the same join."""
     from ..sources.delta_log import _ROW_INDEX
 
     if use_dv and not _is_local(table_path):
@@ -1933,173 +1940,171 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     has_matched_clause = (when_matched_update is not None
                           or when_matched_delete is not None)
     dv_mode = use_dv and has_matched_clause
-    # DV-mode merge on a row-tracked table materializes the target rows'
-    # ids in the same scan that yields the dead positions, so post-update
-    # images keep their row ids exactly as the rewrite path does
-    # (ADVICE r10 #5)
-    rt_dv = (_rt_cols(rep.metadata)
-             if dv_mode and when_matched_update is not None else None)
-    snap = (_rt_scan_with_ids(spark, table_path, rep,
-                              list(rep.files.values()),
-                              keep_row_index=True)
-            if rt_dv
-            else _scan_files(spark, table_path, rep,
-                             list(rep.files.values()),
-                             keep_row_index=dv_mode))
-    key = [snap[c].eqNullSafe(src[c]) for c in on]
-
-    if has_matched_clause:
-        # Delta's nondeterministic-merge guard: a target key hit by >1
-        # source row has no well-defined update image. eqNullSafe
-        # throughout — a NULL merge key is a legitimate key value and
-        # must hit the guard like any other (a name-based equi-join
-        # would let duplicate NULL-keyed sources through).
-        dup_keys = (src.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
-                    .filter(F.col("__n") > 1))
-        tgt_keys = snap.select(*on).distinct()
-        dup = dup_keys.join(
-            tgt_keys,
-            [dup_keys[c].eqNullSafe(tgt_keys[c]) for c in on],
-            "left_semi")
-        if dup.limit(1).count() > 0:
-            raise ValueError(
-                "multiple source rows match a single target row; merge "
-                "would be nondeterministic (Delta parity)")
-        # DV mode needs no affected-file list: the dead positions fall
-        # out of the one full-scan join below, and no file is rewritten
-        matched_bases = set() if dv_mode else {
-            r[0] for r in snap.join(src, key, "left_semi")
-            .select(_FILE_BASE).distinct().collect()}
-    else:
-        # insert-only merge: matched rows are untouched by definition, so
-        # no file is rewritten (a rewrite would be wasted I/O AND, with
-        # no cdc rows to stage, would make CDF synthesize a spurious
-        # whole-file delete+insert feed from the dataChange add/remove)
-        matched_bases = set()
     by_base = _by_base_strict(table_path, rep, "merge")
-    affected = [by_base[b] for b in sorted(matched_bases)]
+
+    # pass 1: one aggregate over the full target's keys. eqNullSafe
+    # throughout — a NULL merge key is a legitimate key value, so it
+    # matches and hits the guard like any other
+    tk = _scan_files(spark, table_path, rep, list(rep.files.values())) \
+        .select(*on, _FILE_BASE)
+    sk = src.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
+    n_max, hit_bases = (sk.join(tk, [sk[c].eqNullSafe(tk[c]) for c in on])
+                        .agg(F.max("__n"), F.collect_set(_FILE_BASE))
+                        .first())
+    if has_matched_clause and (n_max or 0) > 1:
+        # Delta's nondeterministic-merge guard: a target key hit by >1
+        # source row has no well-defined update image
+        raise ValueError(
+            "multiple source rows match a single target row; merge "
+            "would be nondeterministic (Delta parity)")
+    hit = [by_base[b] for b in sorted(hit_bases)]
+    # only a matched clause rewrites: an insert-only merge leaves matched
+    # rows untouched by definition (a rewrite would be wasted I/O AND,
+    # with no cdc rows to stage, would make CDF synthesize a spurious
+    # whole-file delete+insert feed), and DV mode re-adds hit files with
+    # descriptors instead of removing them
+    affected = hit if has_matched_clause and not use_dv else []
+    # target rows stage (kept rows, or DV post-images) and carry their
+    # materialized row ids on a row-tracked table; inserts then carry
+    # NULL ids, read through the fresh baseRowId
+    rt = (_rt_cols(rep.metadata)
+          if affected or (dv_mode and hit and when_matched_update is not None)
+          else None)
 
     cdf = _cdf_enabled(rep.metadata)
     pieces_cdc: list[DataFrame] = []
     new_parts: list[DataFrame] = []
     dv_actions: list[dict] | None = None
+    joined = None
+    try:
+        if hit:
+            # pass 2: scan ONLY the hit files (with their positions in DV
+            # mode), left-joined to the source once
+            t_side = (_rt_scan_with_ids(spark, table_path, rep, hit,
+                                        keep_row_index=dv_mode)
+                      if rt else
+                      _scan_files(spark, table_path, rep, hit,
+                                  keep_row_index=dv_mode)).alias("t")
+        if hit and has_matched_clause:
+            # explicit match marker, not s-key-isNotNull: eqNullSafe makes
+            # (null, null) a legitimate match, so a null key cannot signal
+            # "unmatched"
+            s_side = src.withColumn("__s_matched", F.lit(True)).alias("s")
+            cond = [F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in on]
+            # let AQE coalesce the cached join's shuffles as it does an
+            # uncached plan's (read when the cache entry is built): a
+            # source the planner cannot size is joined by shuffle first,
+            # and an uncoalesced cached shuffle would split every
+            # rewritten file into spark.sql.shuffle.partitions pieces
+            cached_key = ("spark.sql.optimizer."
+                          "canChangeCachedPlanOutputPartitioning")
+            prev = spark.conf.get(cached_key)
+            spark.conf.set(cached_key, "true")
+            try:
+                joined = t_side.join(s_side, cond, "left").persist()
+            finally:
+                spark.conf.set(cached_key, prev)
+            is_match = F.coalesce(F.col("__s_matched"), F.lit(False))
+            types = {f.name: f.dataType.simpleString()
+                     for f in rep.schema.fields}
 
-    if dv_mode or affected:
-        # DV mode joins the FULL row-indexed scan once (dead positions +
-        # post-images from the same join); rewrite mode rescans only the
-        # affected files
-        rt_cols_m = rt_dv if dv_mode else _rt_cols(rep.metadata)
-        aff = (snap if dv_mode
-               else (_scan_files(spark, table_path, rep, affected)
-                     if rt_cols_m is None
-                     else _rt_scan_with_ids(spark, table_path, rep,
-                                            affected)))
-        t_side = aff.alias("t")
-        # explicit match marker, not s-key-isNotNull: eqNullSafe makes
-        # (null, null) a legitimate match, so a null key cannot signal
-        # "unmatched"
-        s_side = src.withColumn("__s_matched", F.lit(True)).alias("s")
-        cond = [F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in on]
-        joined = t_side.join(s_side, cond, "left")
-        is_match = F.coalesce(F.col("__s_matched"), F.lit(False))
-        types = {f.name: f.dataType.simpleString() for f in rep.schema.fields}
+            delete_cond = (is_match & F.coalesce(
+                F.expr(when_matched_delete), F.lit(False))
+                if when_matched_delete is not None else F.lit(False))
+            update_cond = (is_match & ~delete_cond
+                           if when_matched_update is not None
+                           else F.lit(False))
 
-        delete_cond = (is_match & F.coalesce(
-            F.expr(when_matched_delete), F.lit(False))
-            if when_matched_delete is not None else F.lit(False))
-        update_cond = (is_match & ~delete_cond
-                       if when_matched_update is not None else F.lit(False))
+            def target_row():
+                cols = []
+                for c in logical:
+                    if when_matched_update and c in when_matched_update:
+                        cols.append(
+                            F.when(update_cond,
+                                   F.expr(when_matched_update[c])
+                                   .cast(types[c]))
+                            .otherwise(F.col(f"t.{c}")).alias(c))
+                    else:
+                        cols.append(F.col(f"t.{c}").alias(c))
+                return cols
 
-        def target_row(prefix_updates: bool):
-            cols = []
-            for c in logical:
-                if prefix_updates and when_matched_update and \
-                        c in when_matched_update:
-                    cols.append(
-                        F.when(update_cond,
-                               F.expr(when_matched_update[c])
-                               .cast(types[c]))
-                        .otherwise(F.col(f"t.{c}")).alias(c))
-                else:
-                    cols.append(F.col(f"t.{c}").alias(c))
-            return cols
-
-        if dv_mode:
-            dead = joined.filter(delete_cond | update_cond).select(
-                F.col(f"t.{_FILE_BASE}").alias(_FILE_BASE),
-                F.col(f"t.{_ROW_INDEX}").alias(_ROW_INDEX))
-            dv_actions = _dv_stamp_actions(spark, table_path, rep, dead,
-                                           ts, "merge")
-            if when_matched_update is not None:
-                # only the POST-images stage as new rows; kept rows
-                # never move (their old positions are simply not dead).
-                # On a row-tracked table the post-images carry the old
-                # ids via the materialized columns
-                rt_keep_dv = ([F.col(f"t.{c}").alias(c) for c in rt_dv]
-                              if rt_dv else [])
-                new_parts.append(
-                    joined.filter(update_cond).select(*target_row(True),
-                                                      *rt_keep_dv))
-        else:
-            rt_keep = ([F.col(f"t.{c}").alias(c) for c in rt_cols_m]
-                       if rt_cols_m else [])
-            kept = joined.filter(~delete_cond).select(
-                *target_row(True), *rt_keep)
-            new_parts.append(kept)
-        if cdf:
-            deleted = joined.filter(delete_cond).select(
-                *[F.col(f"t.{c}").alias(c) for c in logical]) \
-                .withColumn(_CDC_TYPE, F.lit("delete"))
-            pre = joined.filter(update_cond).select(
-                *[F.col(f"t.{c}").alias(c) for c in logical]) \
-                .withColumn(_CDC_TYPE, F.lit("update_preimage"))
-            post = joined.filter(update_cond).select(*target_row(True)) \
-                .withColumn(_CDC_TYPE, F.lit("update_postimage"))
-            pieces_cdc += [deleted, pre, post]
-
-    if when_not_matched_insert:
-        tkeys = snap.select(*on).distinct()
-        inserts = src.join(
-            tkeys, [src[c].eqNullSafe(tkeys[c]) for c in on], "left_anti")
-        if ids_spec or gen_cols:
-            # fill absent identity columns above the watermark (a
-            # PRESENT one is validated against allowExplicitInsert) and
-            # compute absent generated columns from their declared
-            # expressions — the staged files then pass the value <=>
-            # expression constraint like any append
-            inserts, _ = _generate_identity(inserts, rep.schema)
-            inserts = _compute_generated(inserts, rep.schema)
-            inserts = inserts.select(*logical)
-        rt_cols_all = rt_dv if use_dv else _rt_cols(rep.metadata)
-        if rt_cols_all and (affected or rt_dv):
-            # kept/updated rows carry materialized ids; INSERTS are new
-            # rows id-wise — NULL cols read through the fresh baseRowId
-            for c in rt_cols_all:
+            rt_keep = [F.col(f"t.{c}").alias(c) for c in rt or ()]
+            if dv_mode:
+                dead = joined.filter(delete_cond | update_cond).select(
+                    F.col(f"t.{_FILE_BASE}").alias(_FILE_BASE),
+                    F.col(f"t.{_ROW_INDEX}").alias(_ROW_INDEX))
+                dv_actions = _dv_stamp_actions(spark, table_path, rep, dead,
+                                               ts, "merge")
+                if when_matched_update is not None:
+                    # only the POST-images stage as new rows; kept rows
+                    # never move (their old positions are simply not dead)
+                    new_parts.append(joined.filter(update_cond).select(
+                        *target_row(), *rt_keep))
+            else:
+                new_parts.append(joined.filter(~delete_cond).select(
+                    *target_row(), *rt_keep))
+            if cdf:
+                deleted = joined.filter(delete_cond).select(
+                    *[F.col(f"t.{c}").alias(c) for c in logical]) \
+                    .withColumn(_CDC_TYPE, F.lit("delete"))
+                pre = joined.filter(update_cond).select(
+                    *[F.col(f"t.{c}").alias(c) for c in logical]) \
+                    .withColumn(_CDC_TYPE, F.lit("update_preimage"))
+                post = joined.filter(update_cond).select(*target_row()) \
+                    .withColumn(_CDC_TYPE, F.lit("update_postimage"))
+                pieces_cdc += [deleted, pre, post]
+        if when_not_matched_insert:
+            inserts = src
+            if hit:
+                # the source minus the keys it matched: those of the cached
+                # join, or of the hit files for an insert-only merge (a
+                # matched key equals its target key under <=>)
+                mk = (t_side if joined is None
+                      else joined.filter(is_match)).select(
+                    *[F.col(f"t.{c}").alias(f"__mk{i}")
+                      for i, c in enumerate(on)])
+                inserts = src.join(
+                    mk, [F.col(c).eqNullSafe(F.col(f"__mk{i}"))
+                         for i, c in enumerate(on)], "left_anti")
+            if ids_spec or gen_cols:
+                # fill absent identity columns above the watermark (a
+                # PRESENT one is validated against allowExplicitInsert)
+                # and compute absent generated columns from their declared
+                # expressions — the staged files then pass the value <=>
+                # expression constraint like any append
+                inserts, _ = _generate_identity(inserts, rep.schema)
+                inserts = _compute_generated(inserts, rep.schema)
+                inserts = inserts.select(*logical)
+            for c in rt or ():
                 inserts = inserts.withColumn(c, F.lit(None).cast("long"))
-        new_parts.append(inserts)
-        if cdf:
-            pieces_cdc.append(
-                inserts.withColumn(_CDC_TYPE, F.lit("insert")))
+            new_parts.append(inserts)
+            if cdf:
+                pieces_cdc.append(
+                    inserts.withColumn(_CDC_TYPE, F.lit("insert")))
 
-    if dv_mode and dv_actions is None and not when_not_matched_insert:
-        return rep.version  # DV merge: nothing matched, no insert clause
-    if not dv_mode and not new_parts and not affected:
-        return rep.version  # nothing matched, nothing to insert
-
-    adds: list[dict] = []
-    if new_parts:
-        new_rows = new_parts[0]
-        for p in new_parts[1:]:
-            new_rows = new_rows.unionByName(p)
-        stage_cols = list(logical)
-        if rt_dv or (not use_dv and affected and _rt_cols(rep.metadata)):
-            stage_cols += list(rt_dv or _rt_cols(rep.metadata))
-        adds = _stage_files(spark, new_rows.select(*stage_cols),
-                            table_path, rep.partition_columns, ts,
-                            rep=rep)
-        _enforce_constraints(spark, table_path, rep, adds, "merge")
-    if dv_mode and dv_actions is None and not adds:
-        return rep.version  # insert clause present but zero insert rows
+        adds: list[dict] = []
+        if new_parts:
+            new_rows = new_parts[0]
+            for p in new_parts[1:]:
+                new_rows = new_rows.unionByName(p)
+            adds = _stage_files(spark,
+                                new_rows.select(*logical, *(rt or ())),
+                                table_path, rep.partition_columns, ts,
+                                rep=rep)
+            _enforce_constraints(spark, table_path, rep, adds, "merge")
+        if not adds and not affected and dv_actions is None:
+            return rep.version  # nothing matched, nothing inserted
+        cdc: list[dict] = []
+        if cdf and pieces_cdc:
+            cdc_df = pieces_cdc[0]
+            for p in pieces_cdc[1:]:
+                cdc_df = cdc_df.unionByName(p)
+            cdc = _stage_files(spark, cdc_df, table_path,
+                               rep.partition_columns, ts,
+                               subdir="_change_data", rep=rep)
+    finally:
+        if joined is not None:
+            joined.unpersist()
     rt_actions: list[dict] = []
     if _rt_enabled(rep.metadata):
         rt_actions = _assign_base_row_ids(rep.domains, adds,
@@ -2117,14 +2122,8 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
                       "partitionValues": a.get("partitionValues") or {},
                       "size": a.get("size")}}
           for a in affected),
+        *({"cdc": {**c, "dataChange": False}} for c in cdc),
     ]
-    if cdf and pieces_cdc:
-        cdc_df = pieces_cdc[0]
-        for p in pieces_cdc[1:]:
-            cdc_df = cdc_df.unionByName(p)
-        cdc = _stage_files(spark, cdc_df, table_path, rep.partition_columns,
-                           ts, subdir="_change_data", rep=rep)
-        actions += [{"cdc": {**c, "dataChange": False}} for c in cdc]
     return _strict_commit(spark, table_path, rep.version + 1, actions,
                           "merge", metadata=rep.metadata)
 

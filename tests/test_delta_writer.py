@@ -573,12 +573,8 @@ def test_merge_upsert_update_and_insert(spark, table):
         merge_into,
     )
 
-    # source: updates k in {0, 4, 8} (v -> t.v + s.v), inserts k in {200, 201}
-    source = spark.createDataFrame(
-        [(0, "0", 100.0), (4, "0", 100.0), (8, "0", 100.0),
-         (200, "x", 1.0), (201, "y", 2.0)],
-        "k long, p string, v double")
-    v = merge_into(spark, table, source, on=["k"],
+    # v -> t.v + s.v on the updated keys
+    v = merge_into(spark, table, _upsert_source(spark), on=["k"],
                    when_matched_update={"v": "t.v + s.v"}, ts_ms=3000)
     assert v == 1
     snap = read_delta_snapshot(spark, table)
@@ -666,6 +662,64 @@ def test_merge_touches_only_matching_files(spark, table):
                  if "/p=1/" not in f"/{urllib.parse.unquote(p)}"}
     assert untouched <= (before & after)
     assert read_delta_snapshot(spark, table).filter("k = 13").first().v == 9.0
+
+
+def _upsert_source(spark):
+    # updates k in {0, 4, 8}, inserts k in {200, 201}
+    return spark.createDataFrame(
+        [(0, "0", 100.0), (4, "0", 100.0), (8, "0", 100.0),
+         (200, "x", 1.0), (201, "y", 2.0)],
+        "k long, p string, v double")
+
+
+def test_merge_job_budget(spark, table):
+    """An update-plus-insert merge runs one probe over the target and
+    one join over the touched files shared by both writes. Measured on
+    this fixture (log replay, probe, data write, change-feed write):
+    the earlier four-action merge (duplicate guard, touched-file collect,
+    data write, change-feed write, each rebuilding the join) ran 26-27
+    jobs; the two-pass merge runs 18-20."""
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        merge_into,
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test-merge-job-budget", "merge job budget")
+    try:
+        merge_into(spark, table, _upsert_source(spark), on=["k"],
+                   when_matched_update={"v": "t.v + s.v"}, ts_ms=3000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test-merge-job-budget")
+    assert 0 < len(jobs) <= 20
+    assert read_delta_snapshot(spark, table).count() == 102
+
+
+def test_merge_releases_cached_join(spark, table):
+    """The joined frame both writes share is persisted only for the
+    merge: nothing stays persisted after a commit, nor after a merge
+    that raises a constraint violation once the join is cached. Compared
+    against the persisted set before the merge, since other code in the
+    same session may hold its own checkpoints."""
+    from databricks_import_pyspark_scripts_spark.operators.lineage import (
+        persistent_rdd_ids,
+    )
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        DeltaConstraintViolation,
+        merge_into,
+    )
+
+    before = persistent_rdd_ids(spark)
+    merge_into(spark, table, _upsert_source(spark), on=["k"],
+               when_matched_update={"v": "t.v + s.v"}, ts_ms=3000)
+    assert persistent_rdd_ids(spark) == before
+    _set_config(table, extra_conf={"delta.constraints.vcap": "v < 1000"})
+    for use_dv in (False, True):
+        with pytest.raises(DeltaConstraintViolation, match="vcap"):
+            merge_into(spark, table, _upsert_source(spark), on=["k"],
+                       when_matched_update={"v": "t.v + s.v * 100"},
+                       ts_ms=4000, use_dv=use_dv)
+        assert persistent_rdd_ids(spark) == before
 
 
 # ---------------------------------------------------------------------------
@@ -858,6 +912,16 @@ def test_merge_null_key_matches_not_duplicated(spark, tmp_path):
     with pytest.raises(ValueError, match="nondeterministic"):
         merge_into(spark, t, dup, on=["k"],
                    when_matched_update={"v": "s.v"})
+    # a NULL-keyed source row against a table with no NULL key matches
+    # nothing: inserted exactly once
+    t2 = str(tmp_path / "nokey")
+    create_delta_table(spark, spark.createDataFrame(
+        [(5, 5.0), (6, 6.0)], "k long, v double"), t2, ts_ms=1000)
+    merge_into(spark, t2, src, on=["k"],
+               when_matched_update={"v": "s.v"}, ts_ms=2000)
+    snap2 = read_delta_snapshot(spark, t2)
+    assert snap2.count() == 3
+    assert [r.v for r in snap2.filter("k IS NULL").collect()] == [100.0]
 
 
 def test_merge_insert_only_rewrites_nothing(spark, table):
@@ -878,6 +942,16 @@ def test_merge_insert_only_rewrites_nothing(spark, table):
     ch = read_delta_changes(spark, table, 0, 1)
     assert [(r.k, r["_change_type"]) for r in
             ch.select("k", "_change_type").collect()] == [(700, "insert")]
+    # a matched clause that matches nothing rewrites nothing either
+    src2 = spark.createDataFrame(
+        [(800, "z", 8.0), (801, "1", 8.5)], "k long, p string, v double")
+    v = merge_into(spark, table, src2, on=["k"],
+                   when_matched_update={"v": "s.v"}, ts_ms=4000)
+    assert after <= set(replay_log(spark, table).files)
+    ch = read_delta_changes(spark, table, v - 1, v)
+    assert sorted((r.k, r["_change_type"]) for r in
+                  ch.select("k", "_change_type").collect()) == \
+        [(800, "insert"), (801, "insert")]
 
 
 def test_merge_bare_column_name_is_ambiguous(spark, table):
@@ -1255,6 +1329,10 @@ def test_dv_merge_stamps_positions_and_stages_new_rows(spark, table):
     descriptors, untouched rows never move) — while post-images and
     inserts stage as new files; CDF carries the same explicit rows as
     the rewrite path."""
+    import urllib.parse
+
+    import pyarrow.parquet as pq
+
     from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
         merge_into,
     )
@@ -1276,6 +1354,12 @@ def test_dv_merge_stamps_positions_and_stages_new_rows(spark, table):
     dv_cards = [a["deletionVector"]["cardinality"]
                 for a in rep.files.values() if a.get("deletionVector")]
     assert sum(dv_cards) == 3            # k=0,4 updated + k=9 deleted
+    # ... and only the files holding a matched key do
+    hit_files = {p for p in old_paths if {0, 4, 9} & set(pq.read_table(
+        os.path.join(table, urllib.parse.unquote(p)),
+        columns=["k"]).column("k").to_pylist())}
+    assert {p for p, a in rep.files.items()
+            if a.get("deletionVector")} == hit_files
     assert int(rep.protocol["minReaderVersion"]) >= 3
     snap = read_delta_snapshot(spark, table)
     got = {r.k: r.v for r in snap.filter("k IN (0, 4, 9, 200, 1)")
