@@ -25,6 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
 from .sinks import delta_writer as _w
 from .sources import delta_log as _r
 
@@ -125,9 +126,10 @@ class DeltaTable:
                          _json.dumps(info.get("operationParameters") or {},
                                      sort_keys=True)))
         rows.sort(key=lambda r: -r[0])
-        return self.spark.createDataFrame(
-            rows, "version long, timestamp_ms long, operation string, "
-                  "operationParameters string")
+        return local_frame(
+            self.spark, rows,
+            "version long, timestamp_ms long, operation string, "
+            "operationParameters string")
 
     # -- writes -----------------------------------------------------------
     def append(self, df: DataFrame, **kwargs) -> int:

@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 NUM_PLANES = 8
 EMBED_DIM = 64
 QUANT_SCALE = 1000  # embedding quantization for exact-integer bucket math
@@ -119,7 +121,7 @@ def lsh_buckets_df(df: DataFrame, id_col: str, vec_col: str,
     plane_rows = [(pos, *[planes[i][pos] for i in range(len(planes))])
                   for pos in range(len(planes[0]))]
     schema = "pos int, " + ", ".join(f"w{i} long" for i in range(len(planes)))
-    weights = F.broadcast(spark.createDataFrame(plane_rows, schema))
+    weights = F.broadcast(local_frame(spark, plane_rows, schema))
     exploded = df.select(
         F.col(id_col), F.posexplode(F.col(vec_col)).alias("pos", "x"))
     q = F.round(F.col("x").cast("double") * QUANT_SCALE).cast("long")
@@ -488,8 +490,8 @@ def kmeans_centroids(vectors: DataFrame, num_centroids: int,
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
     model = KMeans(k=num_centroids, seed=seed, maxIter=max_iter).fit(feats)
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    return vectors.sparkSession.createDataFrame(
-        rows, "centroid_id long, embedding array<double>")
+    return local_frame(vectors.sparkSession, rows,
+                       "centroid_id long, embedding array<double>")
 
 
 def _seed_artifacts_local(vectors: DataFrame, centroid_mod: int | None,
@@ -531,29 +533,16 @@ def _seed_artifacts_local(vectors: DataFrame, centroid_mod: int | None,
         cond = c2 if cond is None else (cond | c2)
     seed = vectors.filter(cond).select(id_col, vec_col).collect()
 
-    # VALUES, not createDataFrame: parallelized Python rows plan as an
-    # OPAQUE `Scan ExistingRDD` (no codegen, no pruning, a Python-RDD
-    # evaluation per reference — measured 2-3x the gates' tree-CPU);
-    # a VALUES clause is a true Catalyst LocalRelation. repr(float)
-    # round-trips exactly through the SQL double parser.
-    def _values_df(rows_sql: list[str], alias: str) -> DataFrame:
-        return spark.sql(
-            f"SELECT * FROM VALUES {', '.join(rows_sql)} AS {alias}")
-
+    # replayed through local_frame: a Catalyst LocalRelation every consumer
+    # reads as a LocalTableScan, its doubles shipped as Arrow, bit-exact (a
+    # Python-RDD scan instead measured 2-3x the gates' tree-CPU)
     cents_df = cb_df = None
     if centroid_mod is not None:
         rows = sorted((int(r[0]) // centroid_mod,
                        [float(x) for x in r[1]])
                       for r in seed if int(r[0]) % centroid_mod == 0)
-        if rows:
-            cents_df = _values_df(
-                ["(CAST(%d AS BIGINT), array(%s))"
-                 % (cid, ", ".join(f"CAST({v!r} AS DOUBLE)" for v in vec))
-                 for cid, vec in rows],
-                "t(centroid_id, embedding)")
-        else:
-            cents_df = spark.createDataFrame(
-                [], "centroid_id bigint, embedding array<double>")
+        cents_df = local_frame(
+            spark, rows, "centroid_id bigint, embedding array<double>")
     if codebook_k is not None:
         m = PQ_M if m is None else m
         d_sub = _pq_check_dim(dim, m)
@@ -566,15 +555,8 @@ def _seed_artifacts_local(vectors: DataFrame, centroid_mod: int | None,
                                         dtype=np.float64)).tolist()
             cb_rows.extend((mm, j, qv[mm * d_sub:(mm + 1) * d_sub])
                            for mm in range(m))
-        if cb_rows:
-            cb_df = _values_df(
-                ["(%d, CAST(%d AS BIGINT), array(%s))"
-                 % (mm, j, ", ".join(f"CAST({v} AS BIGINT)" for v in sub))
-                 for mm, j, sub in cb_rows],
-                "t(m, j, cbv)")
-        else:
-            cb_df = spark.createDataFrame(
-                [], "m int, j bigint, cbv array<bigint>")
+        cb_df = local_frame(spark, cb_rows,
+                            "m int, j bigint, cbv array<bigint>")
     return cents_df, cb_df
 
 
@@ -681,7 +663,7 @@ def lsh_table_buckets_df(df: DataFrame, id_col: str, vec_col: str,
     plane_rows = [(pos, *[planes[i][pos] for i in range(n_planes)])
                   for pos in range(len(planes[0]))]
     schema = "pos int, " + ", ".join(f"w{i} long" for i in range(n_planes))
-    weights = F.broadcast(spark.createDataFrame(plane_rows, schema))
+    weights = F.broadcast(local_frame(spark, plane_rows, schema))
     exploded = df.select(
         F.col(id_col), F.posexplode(F.col(vec_col)).alias("pos", "x"))
     q = F.round(F.col("x").cast("double") * QUANT_SCALE).cast("long")

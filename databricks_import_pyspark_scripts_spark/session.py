@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Shuffle parallelism default: on local[N] match cores; AQE coalesces down at
 # runtime so a modest over-estimate is safe at any scale.
@@ -121,3 +122,39 @@ def get_spark(app_name: str = "spark_graft", master: str | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows,
+                schema: StructType | str) -> DataFrame:
+    """A DataFrame over rows the driver already holds, planned as a
+    Catalyst ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes the list as a
+    Python RDD: the plan is an opaque ``Scan ExistingRDD`` and every
+    evaluation runs ``defaultParallelism`` Python worker tasks that unpickle
+    the rows. Handing Spark a ``pyarrow.Table`` instead ships the rows to
+    the JVM once, so evaluating the frame starts no Python worker and the
+    optimizer sees the rows (``LocalTableScan``, broadcast size known).
+
+    ``rows`` is a sequence of tuples (positional) or dicts (by field
+    name), checked against ``schema`` exactly as ``createDataFrame``
+    checks a list (types, NULLs in non-nullable fields), or a
+    ``pyarrow.Table`` already in column form, cast to ``schema``.
+    ``schema`` is a ``StructType`` or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if not isinstance(rows, pa.Table):
+        verify = _make_type_verifier(schema)
+        for r in rows:
+            verify(r)
+        rows = pa.Table.from_arrays(
+            [pa.array([r.get(f.name) if isinstance(r, dict) else r[i]
+                       for r in rows], type=af.type)
+             for i, (f, af) in enumerate(zip(schema.fields, arrow_schema))],
+            schema=arrow_schema)
+    return spark.createDataFrame(rows, schema)

@@ -55,6 +55,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources.delta_log import (
     LOG_DIR,
     DeltaProtocolError,
@@ -425,8 +426,8 @@ def _rt_scan_with_ids(spark: SparkSession, table_path: str, rep,
     rows = [(_action_base(table_path, a["path"]), int(a["baseRowId"]),
              int(a.get("defaultRowCommitVersion") or -1))
             for a in actions]
-    m = spark.createDataFrame(
-        rows, f"{_FILE_BASE} string, __rt_base long, __rt_dcv long")
+    m = local_frame(
+        spark, rows, f"{_FILE_BASE} string, __rt_base long, __rt_dcv long")
     out = (scan.join(F.broadcast(m), _FILE_BASE, "left")
            .withColumn(rid_col, F.coalesce(
                F.col(rid_col), F.col("__rt_base") + F.col(_ROW_INDEX)))
@@ -1671,7 +1672,7 @@ def write_classic_checkpoint(spark: SparkSession, table_path: str,
     cp_schema, rows = _cp_schema_and_rows(rep, tombstone_retention_ms,
                                           now_ms)
     log = f"{table_path.rstrip('/')}/{LOG_DIR}"
-    _stage_one_parquet(spark, log, spark.createDataFrame(rows, cp_schema),
+    _stage_one_parquet(spark, log, local_frame(spark, rows, cp_schema),
                        f"{log}/{rep.version:020d}.checkpoint.parquet")
     _write_last_checkpoint(spark, log, rep.version, len(rows))
     return rep.version
@@ -1725,7 +1726,7 @@ def write_v2_checkpoint(spark: SparkSession, table_path: str,
         side_name = f"{uuid.uuid4()}.parquet"
         side_path = f"{log}/_sidecars/{side_name}"
         _stage_one_parquet(spark, log,
-                           spark.createDataFrame(shard, cp_schema),
+                           local_frame(spark, shard, cp_schema),
                            side_path)
         side_refs.append((side_name, _hadoop_size(spark, side_path)))
 

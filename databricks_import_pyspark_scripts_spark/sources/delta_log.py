@@ -94,6 +94,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 _CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet$")
@@ -699,7 +701,8 @@ def _attach_partition_columns(spark: SparkSession, df: DataFrame,
     """Re-attach partition columns from the log's partitionValues: broadcast
     map-join on the scanned file name (the ``_FILE_BASE`` column — Delta
     writers name data files with embedded UUIDs, and the caller falls back
-    to per-group scans on the rare basename collision)."""
+    to per-group scans on the rare basename collision). The map is a
+    ``local_frame`` (a JVM LocalRelation), so the join runs no Python."""
     rows = []
     for path, pv in file_parts:
         rows.append((_action_base(table_path, path),
@@ -708,7 +711,7 @@ def _attach_partition_columns(spark: SparkSession, df: DataFrame,
     map_schema.add(_FILE_BASE, "string")
     for c in part_cols:
         map_schema.add(f"__pv_{c}", "string")
-    pv_df = spark.createDataFrame(rows, map_schema)
+    pv_df = local_frame(spark, rows, map_schema)
     typed = {f.name: f.dataType for f in schema.fields}
     out = df.join(F.broadcast(pv_df), _FILE_BASE, "left")
     for c in part_cols:
@@ -774,22 +777,22 @@ def _apply_deletion_vectors(spark: SparkSession, df: DataFrame,
         total_card += int(d.get("cardinality") or 0)
     if total_card <= DV_ANTIJOIN_MAX_ROWS:
         import numpy as np
+        import pyarrow as pa
 
-        # build via numpy + Arrow, not a Python tuple list: the threshold
-        # admits up to 10^6 pairs and row-at-a-time createDataFrame would
-        # make PLANNING the slow path
+        # build as Arrow columns, not a Python tuple list: the threshold
+        # admits up to 10^6 pairs and row-at-a-time conversion would make
+        # PLANNING the slow path
         bases: list[str] = []
         idx_parts = []
         for base, raw in dv_raw.items():
             dead = deserialize_bitmap_array(raw)
             bases.extend([base] * dead.size)
             idx_parts.append(dead)
-        deleted = spark.createDataFrame(
-            pd.DataFrame({
-                _FILE_BASE: pd.Series(bases, dtype="object"),
-                _ROW_INDEX: (np.concatenate(idx_parts) if idx_parts
-                             else np.empty(0, dtype=np.int64))}),
-            schema=f"{_FILE_BASE} string, {_ROW_INDEX} long")
+        deleted = local_frame(spark, pa.table({
+            _FILE_BASE: pa.array(bases, pa.string()),
+            _ROW_INDEX: (np.concatenate(idx_parts) if idx_parts
+                         else np.empty(0, dtype=np.int64))}),
+            f"{_FILE_BASE} string, {_ROW_INDEX} long")
         return df.join(F.broadcast(deleted), [_FILE_BASE, _ROW_INDEX],
                        "left_anti")
 
@@ -992,7 +995,7 @@ def read_delta_snapshot(spark: SparkSession, table_path: str,
         adds = [a for a in adds if stats_filter(_stats(a))]
     df = _scan_files(spark, table_path, rep, adds)
     if df is None:
-        return spark.createDataFrame([], rep.schema)
+        return local_frame(spark, [], rep.schema)
     return df.drop(_FILE_BASE)
 
 
@@ -1010,7 +1013,10 @@ def read_delta_changes(spark: SparkSession, table_path: str,
     raises the DELTA_CHANGE_DATA_FILE_NOT_FOUND signature the caller's
     retry ladder already classifies). All versions are batched into at
     most three scans (cdc / inserts / deletes) with ``_commit_version``
-    attached from a broadcast file map — never one scan per version."""
+    attached from a broadcast file -> (version, timestamp) map — never one
+    scan per version. The map is built from the driver's log replay as a
+    ``local_frame`` (a JVM LocalRelation): a sync starts no Python
+    worker to read it back."""
     first = starting_version + 1
     rep = replay_log(spark, table_path, ending_version, collect_from=first)
     conf = rep.metadata.get("configuration") or {}
@@ -1059,8 +1065,8 @@ def read_delta_changes(spark: SparkSession, table_path: str,
                          extra_data_cols=extra, check_exists=True)
         ver_rows = [(_action_base(table_path, a["path"]),
                      v, rep.commit_ts_ms[v]) for v, a in group]
-        ver_df = spark.createDataFrame(
-            ver_rows, "__delta_file_base string, __v long, __ts long")
+        ver_df = local_frame(
+            spark, ver_rows, "__delta_file_base string, __v long, __ts long")
         df = (df.join(F.broadcast(ver_df), _FILE_BASE)
               .withColumn(_CDC_VERSION, F.col("__v"))
               .withColumn(_CDC_TS, F.timestamp_millis(F.col("__ts")))
@@ -1076,7 +1082,7 @@ def read_delta_changes(spark: SparkSession, table_path: str,
         empty.add(_CDC_TYPE, "string")
         empty.add(_CDC_VERSION, "long")
         empty.add(_CDC_TS, "timestamp")
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     out = pieces[0].select(*order)
     for p in pieces[1:]:
         out = out.unionByName(p.select(*order))
@@ -1338,7 +1344,7 @@ def delta_history(spark: SparkSession, table_path: str) -> DataFrame:
         StructField("operation_parameters",
                     MapType(StringType(), StringType())),
     ])
-    return spark.createDataFrame(rows, schema).orderBy(
+    return local_frame(spark, rows, schema).orderBy(
         F.col("version").desc())
 
 
@@ -1382,7 +1388,7 @@ def delta_table_detail(spark: SparkSession, table_path: str) -> DataFrame:
         StructField("reader_features", ArrayType(StringType())),
         StructField("writer_features", ArrayType(StringType())),
     ])
-    return spark.createDataFrame([row], schema)
+    return local_frame(spark, [row], schema)
 
 
 def read_delta_snapshot_with_row_ids(spark: SparkSession, table_path: str,
@@ -1418,12 +1424,12 @@ def read_delta_snapshot_with_row_ids(spark: SparkSession, table_path: str,
                            + [StructField("_row_id", LongType()),
                               StructField("_row_commit_version",
                                           LongType())])
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     rows = [(_action_base(table_path, p), int(a["baseRowId"]),
              int(a.get("defaultRowCommitVersion") or -1))
             for p, a in rep.files.items()]
-    base_df = spark.createDataFrame(
-        rows, f"{_FILE_BASE} string, __base_row_id long, __rcv long")
+    base_df = local_frame(
+        spark, rows, f"{_FILE_BASE} string, __base_row_id long, __rcv long")
     out = (scan.join(F.broadcast(base_df), _FILE_BASE, "left")
            .withColumn("_row_id", F.coalesce(
                F.col(rid_col),

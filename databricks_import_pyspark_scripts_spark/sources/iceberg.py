@@ -61,6 +61,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .avro_codec import read_container, write_container
 from .delta_log import (
     _exists,
@@ -1068,9 +1069,13 @@ def _position_delete_pairs(spark: SparkSession, table_path: str,
         # (descriptor bytes — the Delta-DV metadata class, KB per file;
         # record_count bounds the expanded rows) and anti-join the
         # expanded (file, pos) pairs exactly like parquet deletes
+        import numpy as np
+        import pyarrow as pa
+
         from . import delta_dv, puffin
 
-        rows = []
+        fkeys: list[str] = []
+        idx_parts = []
         cache: dict[str, bytes] = {}
         for d in dvs:
             ppath = _resolve_path(table_path, d["file_path"])
@@ -1081,13 +1086,16 @@ def _position_delete_pairs(spark: SparkSession, table_path: str,
             blob = puffin.read_puffin_blob(
                 raw, int(d["content_offset"]),
                 int(d["content_size_in_bytes"]))
-            key = "/".join(_strip_scheme(
+            fkey = "/".join(_strip_scheme(
                 d["referenced_data_file"]).rstrip("/").split("/")[-2:])
-            rows.extend((key, int(pos)) for pos in
-                        delta_dv.deserialize_bitmap_array(blob))
-        if rows:
-            parts.append(spark.createDataFrame(
-                rows, f"{_POS_KEY} string, {_POS_IDX} long"))
+            dead = delta_dv.deserialize_bitmap_array(blob)
+            fkeys.extend([fkey] * dead.size)
+            idx_parts.append(dead)
+        if fkeys:
+            parts.append(local_frame(spark, pa.table({
+                _POS_KEY: pa.array(fkeys, pa.string()),
+                _POS_IDX: np.concatenate(idx_parts)}),
+                f"{_POS_KEY} string, {_POS_IDX} long"))
     if not parts:
         out = (None, cardinality)
     else:
@@ -1144,8 +1152,8 @@ def _data_seq_map(spark: SparkSession, table_path: str,
                   data_files: list[dict]) -> DataFrame:
     seq_rows = [(_file_key(table_path, f), int(f.get("_seq") or 0))
                 for f in data_files]
-    return spark.createDataFrame(
-        seq_rows, f"{_POS_KEY} string, __iceberg_data_seq long")
+    return local_frame(
+        spark, seq_rows, f"{_POS_KEY} string, __iceberg_data_seq long")
 
 
 def _equality_delete_groups(spark: SparkSession, table_path: str,
@@ -1177,8 +1185,9 @@ def _equality_delete_groups(spark: SparkSession, table_path: str,
                          for d in dfiles})
         dseq_rows = [(_file_key(table_path, d), int(d.get("_seq") or 0))
                      for d in dfiles]
-        dseq_map = spark.createDataFrame(
-            dseq_rows, "__iceberg_del_key string, __iceberg_del_seq long")
+        dseq_map = local_frame(
+            spark, dseq_rows,
+            "__iceberg_del_key string, __iceberg_del_seq long")
         dels = (spark.read.schema(sub_schema).parquet(*dpaths)
                 .select(*[F.col(n).alias(f"__del_{n}") for n in names],
                         _file_key_expr(F.col("_metadata.file_path"))
@@ -1325,7 +1334,7 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
                             deletes_out=deletes)
     schema = iceberg_spark_schema(meta)
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     def _fmt(f: dict) -> str:
         return (f.get("file_format") or "PARQUET").upper()
@@ -1461,7 +1470,7 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
                 [T.StructField("__ice_fkey", T.StringType())]
                 + [T.StructField(f"__pv_{n}", T.StringType())
                    for n in in_schema])
-            pv_df = spark.createDataFrame(key_rows, kschema)
+            pv_df = local_frame(spark, key_rows, kschema)
             typed = {f.name: f.dataType for f in schema.fields}
             scan = (scan.withColumn(
                 "__ice_fkey",
@@ -2480,8 +2489,8 @@ def read_iceberg_snapshot_with_row_ids(spark: SparkSession,
                             deletes_out=deletes)
     schema = iceberg_spark_schema(meta)
     if not files:
-        return spark.createDataFrame(
-            [], T.StructType(list(schema.fields)
+        return local_frame(
+            spark, [], T.StructType(list(schema.fields)
                              + [T.StructField("_row_id", T.LongType())]))
     missing = [f["file_path"] for f in files
                if f.get("first_row_id") is None]
@@ -2506,7 +2515,7 @@ def read_iceberg_snapshot_with_row_ids(spark: SparkSession,
         keyed = _apply_row_deletes(spark, keyed, root, files, deletes,
                                    meta, drop_helpers=False)
     rows = [(_file_key(root, f), int(f["first_row_id"])) for f in files]
-    frid = spark.createDataFrame(rows, f"{_POS_KEY} string, __frid long")
+    frid = local_frame(spark, rows, f"{_POS_KEY} string, __frid long")
     out = (keyed.join(F.broadcast(frid), _POS_KEY, "left")
            .withColumn("_row_id", F.col("__frid") + F.col(_POS_IDX)))
     return out.select(*[f.name for f in schema.fields], "_row_id")
@@ -3944,6 +3953,12 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
             #     differs; one scan carrying both kill flags
             #     (_mark_row_deletes) emits exactly those rows, with no
             #     state-sized identity shuffle at all.
+            #   * a file in both under a DIFFERENT data sequence number
+            #     (re-listed by a rewrite) lands in added AND removed:
+            #     which deletes apply to it moved with the number, so its
+            #     whole effective set before is emitted as deletes and
+            #     after as inserts (pinned by test_iceberg.py::
+            #     test_change_feed_mor_resequenced_file_is_delete_plus_insert)
             # The r14 shape paid 2 full effective scans + 2 identity-
             # pruned scans + 2 table-state anti-joins per step.
             def _seq(f: dict) -> int:
@@ -4033,8 +4048,8 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
             df = (spark.read.schema(schema).orc(paths) if fmt == "ORC"
                   else spark.read.schema(schema).parquet(*paths)) \
                 .withColumn("__f", norm)
-            fmap = spark.createDataFrame(
-                [(_resolve_path(table_path, p), o, ts)
+            fmap = local_frame(
+                spark, [(_resolve_path(table_path, p), o, ts)
                  for o, ts, p, f2 in group if f2 == fmt],
                 "__f string, __o long, __ts long")
             df = (df.join(F.broadcast(fmap), "__f")
@@ -4052,7 +4067,7 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
         empty.add("_change_type", "string")
         empty.add("_commit_version", "long")
         empty.add("_commit_timestamp", "timestamp")
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     out = pieces[0].select(*order)
     for p in pieces[1:]:
         out = out.unionByName(p.select(*order))
@@ -4135,7 +4150,7 @@ def iceberg_metadata_table(spark: SparkSession, table_path: str,
                  s.get("snapshot-id") == cur)
                 for s in sorted(meta.get("snapshots") or [],
                                 key=lambda s: s.get("timestamp-ms") or 0)]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     if kind == "history":
         schema = StructType([
@@ -4147,7 +4162,7 @@ def iceberg_metadata_table(spark: SparkSession, table_path: str,
                  True)  # linear history in this layout: all ancestors
                 for s in sorted(meta.get("snapshots") or [],
                                 key=lambda s: s.get("timestamp-ms") or 0)]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     if kind == "refs":
         schema = StructType([
@@ -4160,7 +4175,7 @@ def iceberg_metadata_table(spark: SparkSession, table_path: str,
             refs["main"] = {"type": "branch", "snapshot-id": cur}
         rows = [(name, r.get("type"), int(r["snapshot-id"]))
                 for name, r in sorted(refs.items())]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     if kind == "manifests":
         snap = _snapshot(meta, snapshot_id)
@@ -4180,7 +4195,7 @@ def iceberg_metadata_table(spark: SparkSession, table_path: str,
                  m.get("added_snapshot_id"),
                  m.get("sequence_number"))
                 for m in manifests]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     if kind in ("files", "partitions"):
         deletes: list[dict] = []
@@ -4205,7 +4220,7 @@ def iceberg_metadata_table(spark: SparkSession, table_path: str,
                      f.get("record_count"), f.get("file_size_in_bytes"),
                      pm)
                     for f, pm in zip(files, part_map)]
-            return spark.createDataFrame(rows, schema)
+            return local_frame(spark, rows, schema)
         groups: dict[tuple, list[int]] = {}
         for f, pm in zip(files, part_map):
             key = tuple(sorted(pm.items()))
@@ -4218,7 +4233,7 @@ def iceberg_metadata_table(spark: SparkSession, table_path: str,
             StructField("file_count", LongType()),
         ])
         rows = [(dict(k), n, c) for k, (n, c) in sorted(groups.items())]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     raise ValueError(
         f"unknown metadata table {kind!r}: snapshots|history|refs|files|"

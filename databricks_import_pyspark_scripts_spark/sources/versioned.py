@@ -38,6 +38,8 @@ from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 CDC_COLUMNS = ("_change_type", "_commit_version", "_commit_timestamp")
 
 
@@ -293,7 +295,7 @@ def read_changes(spark: SparkSession, root: str, table: str,
         ]
         from pyspark.sql.types import StructType
 
-        return spark.createDataFrame([], StructType(fields))
+        return local_frame(spark, [], StructType(fields))
     return df.filter(
         (F.col("_commit_version") > F.lit(starting_version))
         & (F.col("_commit_version") <= F.lit(ending_version)))

@@ -142,6 +142,49 @@ def test_change_feed_mor_position_delete_step(spark, tmp_path):
     assert counts == {"insert": 30, "delete": 10}
 
 
+def test_change_feed_mor_resequenced_file_is_delete_plus_insert(spark,
+                                                                 tmp_path):
+    """A data file live on both sides of a merge-on-read step but under a
+    different data sequence number (re-listed by a rewrite) is not diffed
+    row by row: the deletes that apply to it depend on that number. The
+    step emits the file's whole effective row set before as deletes and
+    after as inserts — the whole-file over-approximation, exact once
+    applied in order."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        _MANIFEST_ENTRY_SCHEMA,
+        _MANIFEST_FILE_SCHEMA,
+        read_iceberg_changes,
+        write_iceberg_position_deletes,
+    )
+
+    t = str(tmp_path / "cdfreseq")
+    df = spark.range(0, 12).selectExpr("id AS k", "CAST(id AS double) AS v")
+    write_iceberg_table(spark, [df.coalesce(1)], t)
+    write_iceberg_position_deletes(spark, t, "k % 3 = 0")
+    # snapshot 1 re-lists the data file as EXISTING at data sequence 2
+    meta = read_table_metadata(spark, t)
+    snap = max(meta["snapshots"], key=lambda s: s["timestamp-ms"])
+    mlpath = snap["manifest-list"]
+    _, manifests = read_container(open(mlpath, "rb").read())
+    data_mf = next(m for m in manifests if int(m.get("content") or 0) == 0)
+    _, entries = read_container(open(data_mf["manifest_path"], "rb").read())
+    assert len(entries) == 1
+    for e in entries:
+        e["status"], e["sequence_number"] = 0, 2
+    data_mf["manifest_path"] += ".reseq.avro"
+    with open(data_mf["manifest_path"], "wb") as f:
+        f.write(write_container(_MANIFEST_ENTRY_SCHEMA, entries))
+    with open(mlpath, "wb") as f:
+        f.write(write_container(_MANIFEST_FILE_SCHEMA, manifests))
+
+    ch = read_iceberg_changes(spark, t, 0, 1).collect()
+    assert {r._commit_version for r in ch} == {1}
+    assert sorted(r.k for r in ch if r._change_type == "delete") == \
+        list(range(12))
+    assert sorted(r.k for r in ch if r._change_type == "insert") == \
+        [k for k in range(12) if k % 3]
+
+
 def test_change_feed_mor_equality_reinsert_steps(spark, tmp_path):
     """Equality delete then re-insert: each step's change rows are the
     newly-dead and newly-live rows only — a row already dead at o-1 is
@@ -2540,6 +2583,27 @@ def test_v3_puffin_dv_deletes_read_and_compose(spark, ice):
     assert _ks(read_iceberg_snapshot(spark, ice)) == \
         [k for k in expect if k >= 3]
     assert sid == 1003
+
+
+def test_puffin_dv_pairs_memo_hits_on_the_same_delete_set(spark, ice):
+    """The per-feed memo keys on the delete set, also when it holds
+    puffin DVs: the second lookup of the same set returns the first
+    frame instead of decoding the bitmaps again."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        _position_delete_pairs,
+        live_data_files,
+        write_iceberg_dv_deletes,
+    )
+
+    write_iceberg_dv_deletes(spark, ice, "k % 5 = 2")
+    deletes: list[dict] = []
+    live_data_files(spark, ice, read_table_metadata(spark, ice),
+                    deletes_out=deletes)
+    memo: dict = {}
+    first = _position_delete_pairs(spark, ice, deletes, memo)
+    assert first[0].count() == 8  # k % 5 = 2 over k in [0, 40)
+    assert _position_delete_pairs(spark, ice, deletes, memo) is first
+    assert len(memo) == 1
 
 
 def test_v3_dv_replacement_keeps_one_dv_per_file(spark, ice):

@@ -399,3 +399,117 @@ def test_update_where_gate_reads_plain_scan(spark, sf_dir):
     assert _nodes(plan, "MapInPandas") == 0
     assert _nodes(plan, "BatchEvalPython") == 0
     assert "Join" not in plan
+
+
+# Driver-built lookup tables (file -> version maps, partition-value maps,
+# row-id bases, delete positions) are LocalRelations: a `Scan ExistingRDD`
+# in a reader's plan means a list-built createDataFrame crept back, and
+# every evaluation would start Python workers to unpickle its rows.
+
+def test_delta_change_feed_maps_are_local_relations(spark, tmp_path):
+    """(0, 4] spans a pure file-ops commit (v1), a cdc commit (v2), an
+    add-only (v3) and a remove-only (v4) commit: three batched scans, each
+    tagged with versions from a LocalRelation (and, the table being
+    partitioned, re-attached partition values from another)."""
+    import os
+
+    from delta_fixture import _commit, _write_parquet, make_delta_table
+
+    from databricks_import_pyspark_scripts_spark.sources.delta_log import (
+        read_delta_changes,
+    )
+
+    t = make_delta_table(str(tmp_path / "tbl"))
+    log = os.path.join(t, "_delta_log")
+    _write_parquet(os.path.join(t, "part=c", "f5.parquet"), [9], [9.0])
+    _commit(log, 3, [
+        {"commitInfo": {"timestamp": 1700000001000, "operation": "WRITE"}},
+        {"add": {"path": "part=c/f5.parquet", "partitionValues": {"part": "c"},
+                 "size": 1, "dataChange": True, "modificationTime": 4}}])
+    _commit(log, 4, [
+        {"commitInfo": {"timestamp": 1700000002000, "operation": "DELETE"}},
+        {"remove": {"path": "part=a/f4.parquet", "deletionTimestamp": 5,
+                    "dataChange": True, "partitionValues": {"part": "a"}}}])
+    ch = read_delta_changes(spark, t, 0, 4)
+    plan = _plan(ch)
+    assert "Scan ExistingRDD" not in plan
+    assert _nodes(plan, "LocalTableScan") == 6  # 3 version + 3 partition maps
+    got = sorted((r._commit_version, r._change_type, r.id, r.part)
+                 for r in ch.collect())
+    assert got == [
+        (1, "delete", 4, "b"), (1, "delete", 5, "b"),
+        (1, "insert", 7, "a"), (1, "insert", 8, "a"),
+        (2, "update_postimage", 1, "a"), (2, "update_preimage", 1, "a"),
+        (3, "insert", 9, "c"),
+        (4, "delete", 7, "a"), (4, "delete", 8, "a")]
+
+
+def test_delta_partitioned_and_row_tracked_scans_are_local(spark, tmp_path):
+    from delta_fixture import make_delta_table
+
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        create_delta_table,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.delta_log import (
+        read_delta_snapshot,
+        read_delta_snapshot_with_row_ids,
+    )
+
+    snap = read_delta_snapshot(spark, make_delta_table(str(tmp_path / "p")))
+    plan = _plan(snap)
+    assert "Scan ExistingRDD" not in plan
+    assert _nodes(plan, "LocalTableScan") == 1  # the partition-value map
+    assert sorted((r.id, r.part) for r in snap.collect()) == [
+        (1, "a"), (2, "a"), (3, "a"), (6, None), (7, "a"), (8, "a")]
+
+    rt = str(tmp_path / "rt")
+    create_delta_table(spark, spark.range(0, 20).selectExpr("id AS k"), rt,
+                       configuration={"delta.enableRowTracking": "true"})
+    ids = read_delta_snapshot_with_row_ids(spark, rt)
+    plan = _plan(ids)
+    assert "Scan ExistingRDD" not in plan
+    assert _nodes(plan, "LocalTableScan") == 1  # the baseRowId map
+    assert sorted(r._row_id for r in ids.collect()) == list(range(20))
+
+
+def test_iceberg_change_feed_and_partitioned_scan_are_local(spark, tmp_path):
+    """Whole-file steps tag versions from a LocalRelation file map; MoR
+    steps and a partitioned merge-on-read scan read data and delete
+    sequence numbers from LocalRelations."""
+    from pyspark.sql import functions as F
+
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        append_iceberg,
+        read_iceberg_changes,
+        read_iceberg_snapshot,
+        write_iceberg_equality_deletes,
+        write_iceberg_position_deletes,
+        write_iceberg_table,
+    )
+
+    t = str(tmp_path / "ice")
+    base = spark.range(0, 24).select(F.col("id").alias("k"),
+                                     (F.col("id") % 3).alias("g"))
+    write_iceberg_table(spark, [base], t, partition_by=["g"])      # ord 0
+    write_iceberg_position_deletes(spark, t, "k % 4 = 0")          # ord 1
+    write_iceberg_equality_deletes(
+        spark, t, spark.range(1).selectExpr("5L AS k"), ["k"])     # ord 2
+    append_iceberg(spark, spark.range(100, 103).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("g")), t)  # ord 3
+
+    snap = read_iceberg_snapshot(spark, t)
+    plan = _plan(snap)
+    assert "Scan ExistingRDD" not in plan
+    assert _nodes(plan, "LocalTableScan") >= 2  # data + delete seq maps
+    assert sorted(r.k for r in snap.collect()) == sorted(
+        [k for k in range(24) if k % 4 and k != 5] + [100, 101, 102])
+
+    ch = read_iceberg_changes(spark, t, -1, 3)
+    plan = _plan(ch)
+    assert "Scan ExistingRDD" not in plan
+    assert _nodes(plan, "LocalTableScan") >= 1
+    counts = {(r._commit_version, r._change_type): r.n for r in ch.groupBy(
+        "_commit_version", "_change_type").agg(F.count("*").alias("n"))
+        .collect()}
+    assert counts == {(0, "insert"): 24, (1, "delete"): 6, (2, "delete"): 1,
+                      (3, "insert"): 3}
