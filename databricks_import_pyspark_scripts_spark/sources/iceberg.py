@@ -52,6 +52,7 @@ implementation of the public Avro spec (no avro library exists here).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import re
@@ -1771,12 +1772,14 @@ def _stage_commit(spark: SparkSession, df: DataFrame, root: str,
     names never collide."""
     from pyspark.sql import functions as F
 
+    if any(not isinstance(f["type"], str) for f in schema_fields):
+        raise IcebergProtocolError(
+            "writes support flat primitive schemas")
     ddir = os.path.join(root, "data")
     os.makedirs(ddir, exist_ok=True)
     by_name = {f["name"]: f for f in schema_fields}
     name_to_field = {f["name"]: (f["id"], f["type"])
-                     for f in schema_fields
-                     if isinstance(f["type"], str)}
+                     for f in schema_fields}
     with_ids = df.select(*[
         F.col(f["name"]).alias(f["name"],
                                metadata={"parquet.field.id": f["id"]})
@@ -1972,6 +1975,15 @@ class IcebergCommitConflict(RuntimeError):
     Rerun the verb to re-derive against the new head."""
 
 
+class RestCommitConflict(IcebergCommitConflict):
+    """The 409 of the REST commit protocol: a requirement failed against
+    the current table state. Retryable — reload, rebase, recommit."""
+
+
+class RestBadRequest(ValueError):
+    """The 400: a malformed or unsupported requirement/update."""
+
+
 def _writable_root(table_path: str, verb: str) -> str:
     """The guard every committing verb runs at entry: commits go through
     the HadoopCatalog file layout on a local filesystem. Returns the
@@ -2001,37 +2013,31 @@ def _head(spark: SparkSession | None, mdir: str) -> tuple[int, dict]:
 
 
 def _commit_metadata(spark: SparkSession | None, table_path: str,
-                     verb: str, build, retries: int = 0):
+                     verb: str, build):
     """The one metadata commit path of every verb that commits to an
     existing table: guard the handle, read the head ``(N, meta)`` once,
     call ``build(meta)`` for ``(new_meta, result)``, publish
     ``v<N+1>.metadata.json`` by atomic no-overwrite create, then update
     the advisory hint. Returns
     ``(version, result)``; ``new_meta=None`` means nothing to commit and
-    returns the head version unchanged.
-
-    A lost CAS re-reads the head and calls ``build`` again, at most
-    ``retries`` times, so ``build`` must derive everything head-dependent
-    (snapshot id, sequence number, manifest list) from the ``meta`` it is
-    given and raise ``IcebergCommitConflict`` when it cannot rebase. Only
-    the append passes ``retries``; every other verb raises on the first
-    lost race and leaves re-derivation to its caller."""
+    returns the head version unchanged. A lost CAS raises
+    ``IcebergCommitConflict``; the snapshot writers' ``_commit_loop``
+    reloads and rebuilds, every other verb leaves that to its caller."""
     from ..sinks import delta_writer
 
     mdir = os.path.join(_writable_root(table_path, verb), METADATA_DIR)
-    for _ in range(retries + 1):
-        v, meta = _head(spark, mdir)
-        new_meta, result = build(meta)
-        if new_meta is None:
-            return v, result
-        if delta_writer._atomic_create(
-                spark, os.path.join(mdir, f"v{v + 1}.metadata.json"),
-                json.dumps(new_meta).encode("utf-8")):
-            _write_hint(mdir, v + 1)
-            return v + 1, result
-    raise IcebergCommitConflict(
-        f"{verb} on {table_path} lost {retries + 1} metadata commit "
-        f"race(s), the last at v{v + 1}; rerun to rebase")
+    v, meta = _head(spark, mdir)
+    new_meta, result = build(meta)
+    if new_meta is None:
+        return v, result
+    if not delta_writer._atomic_create(
+            spark, os.path.join(mdir, f"v{v + 1}.metadata.json"),
+            json.dumps(new_meta).encode("utf-8")):
+        raise IcebergCommitConflict(
+            f"{verb} on {table_path} lost the metadata commit race at "
+            f"v{v + 1}; rerun to rebase")
+    _write_hint(mdir, v + 1)
+    return v + 1, result
 
 
 def _txn_watermark(meta: dict, app_id: str) -> int:
@@ -2061,6 +2067,389 @@ def _stamp_ts(meta: dict, ts_ms: int | None) -> int:
         else int(ts_ms)
 
 
+def _check_requirements(meta: dict, requirements: list[dict]) -> None:
+    """Validate REST ``TableRequirement``s against the head ``meta``;
+    a miss raises ``RestCommitConflict`` (the 409)."""
+    for r in requirements or []:
+        t = r.get("type")
+        if t == "assert-table-uuid":
+            if meta.get("table-uuid") != r.get("uuid"):
+                raise RestCommitConflict(
+                    f"table uuid is {meta.get('table-uuid')}, "
+                    f"requirement wants {r.get('uuid')}")
+        elif t == "assert-ref-snapshot-id":
+            ref = (meta.get("refs") or {}).get(r.get("ref"))
+            have = None if ref is None else int(ref["snapshot-id"])
+            # main falls back to current-snapshot-id (older
+            # metadata may carry no refs map)
+            if have is None and r.get("ref") == "main":
+                have = meta.get("current-snapshot-id")
+            want = r.get("snapshot-id")
+            if have != want:
+                raise RestCommitConflict(
+                    f"ref {r.get('ref')!r} is at {have}, "
+                    f"requirement wants {want}")
+        elif t == "assert-current-schema-id":
+            if int(meta.get("current-schema-id", 0)) != \
+                    int(r.get("current-schema-id", -1)):
+                raise RestCommitConflict("current-schema-id moved")
+        elif t == "assert-default-spec-id":
+            if int(meta.get("default-spec-id", 0)) != \
+                    int(r.get("default-spec-id", -1)):
+                raise RestCommitConflict("default-spec-id moved")
+        elif t == "assert-create":
+            raise RestCommitConflict(
+                "assert-create on an existing table")
+        else:
+            raise RestBadRequest(f"unsupported requirement {t!r}")
+
+
+def _added_records_from_list(meta: dict, sn: dict) -> int | None:
+    """Actual data rows the snapshot added (ADVICE r13 #4 — the
+    server-side truth a client summary can't spoof): open the
+    manifests the snapshot CONTRIBUTED (added_snapshot_id matches,
+    data content) from its manifest list and sum the record counts
+    of their ADDED entries. None when the list or a manifest is
+    absent/unreadable."""
+    ml = sn.get("manifest-list")
+    if not ml:
+        return None
+    root = meta.get("location") or ""
+    try:
+        _, manifests = read_container(
+            open(_resolve_path(root, ml), "rb").read())
+    except (OSError, ValueError):
+        return None
+    total = 0
+    for mf in manifests:
+        if int(mf.get("added_snapshot_id") or -1) != \
+                int(sn["snapshot-id"]):
+            continue
+        if int(mf.get("content") or 0) != 0:
+            continue               # delete manifests add no rows
+        try:
+            _, entries = read_container(open(_resolve_path(
+                root, mf["manifest_path"]), "rb").read())
+        except (OSError, ValueError):
+            return None
+        for e in entries:
+            if int(e.get("status") or 0) != STATUS_ADDED:
+                continue
+            total += int((e.get("data_file") or {})
+                         .get("record_count") or 0)
+    return total
+
+
+def _apply_updates(meta: dict, updates: list[dict]) -> dict:
+    """Apply REST ``TableUpdate``s to ``meta`` in place and return it —
+    the one applier of the local writers and ``FileRestCatalog``."""
+    for u in updates or []:
+        t = u.get("action")
+        if t == "add-snapshot":
+            sn = u["snapshot"]
+            # A replayed or buggy client must not append a
+            # duplicate snapshot-id: it would break max()-based id
+            # allocation and _snapshot lookups downstream
+            # (ADVICE r11 #4). 409-class so the client rebases.
+            if any(int(s["snapshot-id"]) == int(sn["snapshot-id"])
+                   for s in meta.get("snapshots") or []):
+                raise RestCommitConflict(
+                    f"snapshot-id {sn['snapshot-id']} already "
+                    f"exists; reload and rebase")
+            meta["snapshots"] = list(meta.get("snapshots") or []) \
+                + [sn]
+            meta["last-sequence-number"] = max(
+                int(meta.get("last-sequence-number") or 0),
+                int(sn.get("sequence-number") or 0))
+            meta["last-updated-ms"] = max(
+                int(meta.get("last-updated-ms") or 0),
+                int(sn.get("timestamp-ms") or 0))
+            if sn.get("first-row-id") is not None:
+                # v3 spec: the SERVER advances next-row-id to
+                # first-row-id + the snapshot's assigned rows
+                # (summary added-records) — ADVICE r12 #5; a real
+                # REST catalog ignores any client next-row-id
+                frid = int(sn["first-row-id"])
+                cur = int(meta.get("next-row-id") or 0)
+                if frid < cur:
+                    raise RestBadRequest(
+                        f"add-snapshot first-row-id {frid} is "
+                        f"below the table's next-row-id {cur}: "
+                        f"overlapping row-lineage id ranges")
+                raw = (sn.get("summary") or {}).get("added-records")
+                added = None if raw is None else int(raw)
+                if not added:
+                    # ADVICE r13 #4: don't trust an absent (or
+                    # suspicious zero) client summary — the
+                    # snapshot's own manifest list records the
+                    # actual added row counts; client next-row-id
+                    # is the last-resort legacy fallback
+                    verified = _added_records_from_list(meta, sn)
+                    if verified is not None:
+                        added = verified
+                    elif added is None:
+                        if sn.get("next-row-id") is not None:
+                            added = max(
+                                0, int(sn["next-row-id"]) - frid)
+                        else:
+                            raise RestBadRequest(
+                                "add-snapshot with first-row-id "
+                                "needs summary added-records, a "
+                                "readable manifest list, or "
+                                "next-row-id to advance the "
+                                "row-lineage watermark")
+                meta["next-row-id"] = max(cur, frid + added)
+            elif sn.get("next-row-id") is not None:
+                # legacy fallback for clients predating first-row-id
+                meta["next-row-id"] = int(sn["next-row-id"])
+        elif t == "set-snapshot-ref":
+            ref_name = u["ref-name"]
+            ref = {"snapshot-id": int(u["snapshot-id"]),
+                   "type": u.get("type", "branch")}
+            meta["refs"] = {**(meta.get("refs") or {}),
+                            ref_name: ref}
+            if ref_name == "main":
+                _advance_head(meta, int(u["snapshot-id"]))
+        elif t == "upgrade-format-version":
+            fv = int(u["format-version"])
+            if fv < int(meta.get("format-version", 1)):
+                raise RestBadRequest(
+                    f"cannot downgrade format-version to {fv}")
+            meta["format-version"] = fv
+        elif t == "set-properties":
+            meta["properties"] = {
+                **(meta.get("properties") or {}),
+                **(u.get("updates") or {})}
+        elif t == "remove-properties":
+            props = dict(meta.get("properties") or {})
+            for k in u.get("removals") or []:
+                props.pop(k, None)
+            meta["properties"] = props
+        else:
+            raise RestBadRequest(f"unsupported update {t!r}")
+    return meta
+
+
+def _commit_updates(spark: SparkSession | None, table_path: str,
+                    verb: str, requirements: list[dict], make_updates):
+    """Commit a REST requirement/update list to the file layout, exactly
+    as a catalog server would: inside ``_commit_metadata``'s build, check
+    ``requirements`` against the head, call ``make_updates(head)`` for
+    ``(updates, result)`` and apply them. ``FileRestCatalog.commit_table``
+    and the local snapshot writers both commit through here. Returns
+    ``(version, new_meta, result)``."""
+    def build(head: dict):
+        _check_requirements(head, requirements)
+        updates, result = make_updates(head)
+        new_meta = _apply_updates(dict(head), updates)
+        return new_meta, (new_meta, result)
+
+    v, (new_meta, result) = _commit_metadata(spark, table_path, verb,
+                                             build)
+    return v, new_meta, result
+
+
+def _head_requirements(meta: dict, ref: str = "main") -> list[dict]:
+    """The requirements that pin a snapshot to the head ``meta`` it was
+    derived on: same table, ``ref`` unmoved, and the schema and default
+    partition spec its staged files were written under."""
+    refs = meta.get("refs") or {}
+    return [
+        {"type": "assert-table-uuid", "uuid": meta.get("table-uuid")},
+        {"type": "assert-ref-snapshot-id", "ref": ref,
+         "snapshot-id": (int(refs[ref]["snapshot-id"]) if ref in refs
+                         else meta.get("current-snapshot-id"))},
+        {"type": "assert-current-schema-id",
+         "current-schema-id": int(meta.get("current-schema-id", 0))},
+        {"type": "assert-default-spec-id",
+         "default-spec-id": int(meta.get("default-spec-id", 0))}]
+
+
+def _snapshot_updates(spark: SparkSession | None, root: str, meta: dict,
+                      operation: str, deletes: list[dict] = (),
+                      data: list[dict] = (),
+                      part_fields: list[dict] | None = None,
+                      spec_id: int = 0,
+                      supersede_dv_keys: set[str] | None = None,
+                      format_version: int | None = None,
+                      ref: str = "main", ts_ms: int | None = None,
+                      summary: dict | None = None):
+    """The one builder of a snapshot that a write adds to an existing
+    table, built on the head ``meta``. The manifest list is the ``ref``
+    head's manifests plus one delete manifest of ``deletes`` and one
+    data manifest of ``data`` (partition spec ``spec_id``), both ADDED
+    at the next sequence number. ``supersede_dv_keys`` names data files
+    whose prior deletion vectors this snapshot replaces (v3 allows one
+    DV per data file): carried delete manifests are rewritten without
+    them. On a row-lineage table the data files claim fresh
+    ``first_row_id`` ranges from ``next-row-id``, in file-path order.
+
+    Returns ``(updates, snapshot id)``, the REST ``TableUpdate`` list:
+    ``upgrade-format-version`` when ``format_version`` is above the
+    table's, ``add-snapshot`` (carrying ``first-row-id`` and
+    ``added-records``, from which ``_apply_updates`` advances
+    ``next-row-id``) and ``set-snapshot-ref``. The local transport
+    applies the list with ``_apply_updates``; the catalog posts it."""
+    if data and _default_spec_part_fields(
+            meta, _current_schema(meta)["fields"]) != (spec_id, part_fields):
+        raise IcebergCommitConflict(
+            "the head's default partition spec is not the one the data "
+            "files were staged under")
+    mdir = os.path.join(root, METADATA_DIR)
+    tag = uuid.uuid4().hex[:12]
+    snap_id = _next_snapshot_id(meta)
+    seq = int(meta.get("last-sequence-number") or 0) + 1
+    refs = meta.get("refs") or {}
+    base = refs[ref]["snapshot-id"] if ref in refs \
+        else meta.get("current-snapshot-id")
+    manifests: list[dict] = []
+    if base is not None and int(base) != -1:
+        _, manifests = read_container(_read_bytes(spark, _resolve_path(
+            root, _snapshot(meta, int(base))["manifest-list"])))
+    if supersede_dv_keys:
+        manifests = _retire_superseded_dvs(spark, root, mdir, manifests,
+                                           supersede_dv_keys, snap_id)
+    snapshot = {"snapshot-id": snap_id,
+                "timestamp-ms": _stamp_ts(meta, ts_ms),
+                "sequence-number": seq,
+                "summary": {"operation": operation, **(summary or {})}}
+    if data and meta.get("next-row-id") is not None:
+        first = nri = int(meta["next-row-id"])
+        stamped = []
+        for e in sorted(data, key=lambda e: e["data_file"]["file_path"]):
+            stamped.append({**e, "data_file": {**e["data_file"],
+                                               "first_row_id": nri}})
+            nri += int(e["data_file"].get("record_count") or 0)
+        data = stamped
+        snapshot["first-row-id"] = first
+        snapshot["summary"]["added-records"] = str(nri - first)
+    for content, entries, sid, fields in ((1, deletes, 0, None),
+                                          (0, data, spec_id, part_fields)):
+        if not entries:
+            continue
+        mpath = os.path.join(mdir, f"manifest-{snap_id}-{tag}-{content}.avro")
+        blob = write_container(_manifest_entry_schema(fields),
+                               [{**e, "snapshot_id": snap_id}
+                                for e in entries])
+        with open(mpath, "wb") as f:
+            f.write(blob)
+        manifests.append({
+            "manifest_path": mpath, "manifest_length": len(blob),
+            "partition_spec_id": sid, "content": content,
+            "added_snapshot_id": snap_id,
+            "sequence_number": seq, "min_sequence_number": seq})
+    snapshot["manifest-list"] = os.path.join(mdir,
+                                             f"snap-{snap_id}-{tag}.avro")
+    with open(snapshot["manifest-list"], "wb") as f:
+        f.write(write_container(_MANIFEST_FILE_SCHEMA, manifests))
+    updates = []
+    if format_version is not None and \
+            format_version > int(meta.get("format-version", 1)):
+        updates.append({"action": "upgrade-format-version",
+                        "format-version": int(format_version)})
+    updates += [{"action": "add-snapshot", "snapshot": snapshot},
+                {"action": "set-snapshot-ref", "ref-name": ref,
+                 "type": "branch", "snapshot-id": snap_id}]
+    return updates, snap_id
+
+
+def _commit_loop(table, verb: str, max_retries: int, attempt) -> int:
+    """The optimistic loop of every snapshot writer, on either transport.
+    ``table`` is ``(name, load, publish)``: ``load()`` returns the head
+    as ``(root, meta)``; ``publish(root, meta, **snapshot)`` commits the
+    ``_snapshot_updates`` snapshot guarded by that head and raises
+    ``IcebergCommitConflict`` when the head moved. ``attempt(root,
+    meta)`` derives and stages against the loaded head and returns the
+    snapshot's keyword arguments, or None when there is nothing to
+    commit (the head's snapshot id is returned). A lost race reloads and
+    calls ``attempt`` again, at most ``max_retries`` times; a conflict
+    ``attempt`` raises itself (it cannot rebase) is not retried."""
+    name, load, publish = table
+    last: Exception | None = None
+    for _ in range(max_retries + 1):
+        root, meta = load()
+        snapshot = attempt(root, meta)
+        if snapshot is None:
+            return int(meta["current-snapshot-id"])
+        try:
+            return publish(root, meta, **snapshot)
+        except IcebergCommitConflict as exc:
+            last = exc     # head moved: reload and re-derive
+    raise IcebergCommitConflict(
+        f"{verb} on {name} lost {max_retries + 1} commit races") from last
+
+
+def _append(spark: SparkSession, df: DataFrame, table, verb: str,
+            ts_ms: int | None, max_retries: int,
+            txn_app_id: str | None = None, txn_version: int | None = None,
+            branch: str | None = None) -> int:
+    """The append of both transports (see ``append_iceberg``): order and
+    cast ``df`` to the head's schema, filling v3 ``write-default``
+    columns it lacks, stage the data files ONCE, then commit through
+    ``_commit_loop``. Each attempt re-checks the txn watermark and that
+    the head's schema and partition spec still match the staged layout
+    (else ``IcebergCommitConflict`` — rerun to restage)."""
+    from pyspark.sql import functions as F
+
+    name = table[0]
+    staged: dict = {}
+
+    def attempt(root: str, meta: dict):
+        if txn_app_id is not None and \
+                _txn_watermark(meta, txn_app_id) >= txn_version:
+            return None                  # idempotent replay (or racer)
+        if branch is not None:
+            refs = meta.get("refs") or {}
+            if branch not in refs:
+                raise FileNotFoundError(
+                    f"branch {branch!r} not found (have {sorted(refs)}); "
+                    f"create it with set_iceberg_ref(..., 'branch')")
+            if refs[branch].get("type") != "branch":
+                raise ValueError(f"ref {branch!r} is a tag; appends need "
+                                 f"a branch")
+        fields = _current_schema(meta)["fields"]
+        layout = _default_spec_part_fields(meta, fields)
+        if not staged:
+            names = [f["name"] for f in fields]
+            # v3 write-default: a column the writer does not supply is
+            # filled with its declared default at write time (spec
+            # "Default values") — only columns with NO default remain a
+            # schema-contract error
+            filled = df
+            for f in fields:
+                if f["name"] not in df.columns and "write-default" in f:
+                    filled = filled.withColumn(f["name"], F.lit(
+                        f["write-default"]).cast(_spark_type(f["type"])))
+            missing = [n for n in names if n not in filled.columns]
+            extra = [c for c in filled.columns if c not in names]
+            if missing or extra:
+                raise ValueError(f"append frame does not match table "
+                                 f"schema: missing {missing}, extra "
+                                 f"{extra}")
+            ordered = filled.select(*[
+                F.col(f["name"]).cast(_spark_type(f["type"]))
+                .alias(f["name"]) for f in fields])
+            staged.update(fields=fields, layout=layout, data=_stage_commit(
+                spark, ordered, root, fields, layout[1],
+                _next_snapshot_id(meta), f"a{uuid.uuid4().hex[:12]}"))
+        elif fields != staged["fields"]:
+            raise IcebergCommitConflict(
+                f"schema of {name} changed concurrently; staged files "
+                f"carry the old field ids — rerun to restage")
+        elif layout != staged["layout"]:
+            raise IcebergCommitConflict(
+                f"partition spec of {name} changed concurrently; staged "
+                f"files carry the old layout — rerun to restage")
+        summary = {} if txn_app_id is None else {
+            "spark-graft-app-id": txn_app_id,
+            "spark-graft-batch-id": str(int(txn_version))}
+        return dict(operation="append", data=staged["data"],
+                    part_fields=layout[1], spec_id=layout[0],
+                    ref=branch or "main", ts_ms=ts_ms, summary=summary)
+
+    return _commit_loop(table, verb, max_retries, attempt)
+
+
 def append_iceberg(spark: SparkSession, df: DataFrame, table_path: str,
                    ts_ms: int | None = None, max_retries: int = 10,
                    txn_app_id: str | None = None,
@@ -2069,15 +2458,16 @@ def append_iceberg(spark: SparkSession, df: DataFrame, table_path: str,
     """TRANSACTIONAL append to an existing Iceberg table — the CAS commit
     the HadoopCatalog convention defines: stage data files once
     (uuid-named, racer-collision-free), then commit through
-    ``_commit_metadata``. Each attempt re-verifies the head's schema and
+    ``_commit_loop``. Each attempt re-verifies the head's schema and
     partition spec still match the staged layout (else
     ``IcebergCommitConflict`` — the staged files' layout is
-    spec-derived), restamps snapshot id, sequence number and timestamp
-    from that head, and rebuilds the manifest LIST on it; a lost race
-    rebases the same way, up to ``max_retries`` times.
-    ``version-hint.text`` is updated last as the advisory pointer it is
-    — readers fall back to the highest metadata file, so a crash between
-    commit and hint write loses nothing.
+    spec-derived) and builds the snapshot ON the head it publishes
+    over (``_snapshot_updates``: snapshot id, sequence number, timestamp,
+    row-id ranges and manifest list); a lost race rebases the same way,
+    up to ``max_retries`` times. ``version-hint.text`` is updated last
+    as the advisory pointer it is — readers fall back to the highest
+    metadata file, so a crash between commit and hint write loses
+    nothing.
 
     ``txn_app_id``/``txn_version`` make the append IDEMPOTENT, the same
     exactly-once handshake the Delta writer's txn actions provide: the
@@ -2097,131 +2487,22 @@ def append_iceberg(spark: SparkSession, df: DataFrame, table_path: str,
     the WAP (write-audit-publish) workflow: stage to an audit branch,
     validate by reading ``ref=branch``, publish by fast-forwarding
     main. The branch must exist (``set_iceberg_ref(..., 'branch')``)."""
-    from pyspark.sql import functions as F
-
     root = _writable_root(table_path, "append_iceberg")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version go together")
     mdir = os.path.join(root, METADATA_DIR)
 
-    def _replayed(meta: dict) -> bool:
-        return txn_app_id is not None and \
-            _txn_watermark(meta, txn_app_id) >= txn_version
+    def publish(root: str, meta: dict, **snapshot) -> int:
+        return _commit_updates(
+            spark, table_path, "append_iceberg",
+            _head_requirements(meta, snapshot["ref"]),
+            lambda head: _snapshot_updates(spark, root, head, **snapshot))[2]
 
-    _, meta = _head(spark, mdir)
-    if _replayed(meta):
-        return int(meta["current-snapshot-id"])  # idempotent replay
-    schema_fields = _current_schema(meta)["fields"]
-    for f in schema_fields:
-        if not isinstance(f["type"], str):
-            raise IcebergProtocolError(
-                "append_iceberg supports flat primitive schemas")
-    sid, part_fields = _default_spec_part_fields(meta, schema_fields)
-
-    # order/cast df to the table schema (names must match exactly)
-    missing = [f["name"] for f in schema_fields if f["name"]
-               not in df.columns]
-    # v3 write-default: a column the writer does not supply is filled
-    # with its declared default at write time (spec "Default values") —
-    # only columns with NO default remain a schema-contract error
-    defaulted = {f["name"]: (f["write-default"], f["type"])
-                 for f in schema_fields
-                 if f["name"] in missing and "write-default" in f
-                 and isinstance(f["type"], str)}
-    for name, (dv, t) in defaulted.items():
-        df = df.withColumn(name, F.lit(dv).cast(_spark_type(t)))
-    missing = [m for m in missing if m not in defaulted]
-    extra = [c for c in df.columns
-             if c not in {f["name"] for f in schema_fields}]
-    if missing or extra:
-        raise ValueError(f"append frame does not match table schema: "
-                         f"missing {missing}, extra {extra}")
-    ordered = df.select(*[
-        F.col(f["name"]).cast(_spark_type(f["type"])).alias(f["name"])
-        for f in schema_fields])
-
-    tag = f"a{uuid.uuid4().hex[:12]}"
-    entries = _stage_commit(spark, ordered, root, schema_fields,
-                            part_fields, _next_snapshot_id(meta), tag)
-    mpath = os.path.join(mdir, f"manifest-{tag}.avro")
-
-    def build(meta: dict):
-        if _replayed(meta):
-            return None, int(meta["current-snapshot-id"])  # racer WAS us
-        if _current_schema(meta)["fields"] != schema_fields:
-            raise IcebergCommitConflict(
-                f"schema of {table_path} changed concurrently; staged "
-                f"files carry the old field ids — rerun to restage")
-        if _default_spec_part_fields(meta, schema_fields) != \
-                (sid, part_fields):
-            raise IcebergCommitConflict(
-                f"partition spec of {table_path} changed concurrently; "
-                f"staged files carry the old layout — rerun to restage")
-        if branch is not None:
-            refs = meta.get("refs") or {}
-            if branch not in refs:
-                raise FileNotFoundError(
-                    f"branch {branch!r} not found (have {sorted(refs)}); "
-                    f"create it with set_iceberg_ref(..., 'branch')")
-            if refs[branch].get("type") != "branch":
-                raise ValueError(f"ref {branch!r} is a tag; appends need "
-                                 f"a branch")
-            base_snap = int(refs[branch]["snapshot-id"])
-        else:
-            base_snap = meta.get("current-snapshot-id")
-        # a stale default ts would order this snapshot BELOW a racer's
-        # in the history (r9 review finding #4): always from this head
-        ts = _stamp_ts(meta, ts_ms)
-        snap_id = _next_snapshot_id(meta)
-        seq = int(meta.get("last-sequence-number") or 0) + 1
-        new_meta = dict(meta)
-        for e in entries:
-            e["snapshot_id"] = snap_id
-        if meta.get("next-row-id") is not None:
-            # v3 row lineage: claim fresh first_row_id ranges from THIS
-            # head's counter and advance next-row-id in the same commit
-            nri = int(meta["next-row-id"])
-            for e in sorted(entries,
-                            key=lambda e: e["data_file"]["file_path"]):
-                e["data_file"]["first_row_id"] = nri
-                nri += int(e["data_file"].get("record_count") or 0)
-            new_meta["next-row-id"] = nri
-        blob = write_container(_manifest_entry_schema(part_fields), entries)
-        with open(mpath, "wb") as f:
-            f.write(blob)
-        prior: list[dict] = []
-        if base_snap is not None and (meta.get("snapshots") or []):
-            cur = _snapshot(meta, base_snap)
-            _, prior = read_container(_read_bytes(
-                spark, _resolve_path(table_path, cur["manifest-list"])))
-        mlpath = os.path.join(mdir, f"snap-{snap_id}-{tag}.avro")
-        with open(mlpath, "wb") as f:
-            f.write(write_container(_MANIFEST_FILE_SCHEMA, list(prior) + [{
-                "manifest_path": mpath, "manifest_length": len(blob),
-                "partition_spec_id": sid, "content": 0,
-                "added_snapshot_id": snap_id,
-                "sequence_number": seq, "min_sequence_number": seq}]))
-        summary = {"operation": "append"}
-        if txn_app_id is not None:
-            summary["spark-graft-app-id"] = txn_app_id
-            summary["spark-graft-batch-id"] = str(int(txn_version))
-        new_meta["snapshots"] = list(meta.get("snapshots") or []) + [{
-            "snapshot-id": snap_id, "timestamp-ms": ts,
-            "sequence-number": seq,
-            "manifest-list": mlpath, "summary": summary}]
-        if branch is not None:
-            # branch commit: only the branch ref moves; main stays put
-            new_meta["refs"] = {**meta["refs"],
-                                branch: {**meta["refs"][branch],
-                                         "snapshot-id": snap_id}}
-        else:
-            _advance_head(new_meta, snap_id)
-        new_meta["last-updated-ms"] = ts
-        new_meta["last-sequence-number"] = seq
-        return new_meta, snap_id
-
-    return _commit_metadata(spark, table_path, "append_iceberg", build,
-                            retries=max_retries)[1]
+    return _append(spark, df,
+                   (table_path, lambda: (root, _head(spark, mdir)[1]),
+                    publish),
+                   "append_iceberg", ts_ms, max_retries,
+                   txn_app_id, txn_version, branch)
 
 
 def set_iceberg_ref(spark: SparkSession, table_path: str, name: str,
@@ -2903,33 +3184,6 @@ def _provenance_scan(spark: SparkSession, table_path: str, meta: dict,
 _PROV_F, _PROV_P = "__ice_prov_f", "__ice_prov_p"
 
 
-def _position_delete_entry(root: str, pairs: list[tuple[str, int]],
-                           tag: str) -> dict:
-    """One content=1 manifest entry + its position-delete parquet (spec
-    field ids 2147483546/2147483545). The file name needs only
-    uniqueness, not the final snapshot id."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    dpath = os.path.join(root, "data", f"delete-{tag}.parquet")
-    pq.write_table(pa.table(
-        {"file_path": pa.array([f for f, _ in pairs], pa.string()),
-         "pos": pa.array([p for _, p in pairs], pa.int64())},
-        schema=pa.schema([
-            pa.field("file_path", pa.string(), metadata={
-                b"PARQUET:field_id": str(_DELETE_FILE_PATH_FID).encode()}),
-            pa.field("pos", pa.int64(), metadata={
-                b"PARQUET:field_id": str(_DELETE_POS_FID).encode()})])),
-        dpath)
-    return {"status": STATUS_ADDED,
-            "data_file": {
-                "content": 1, "file_path": dpath,
-                "file_format": "PARQUET", "partition": {},
-                "record_count": len(pairs),
-                "file_size_in_bytes": os.path.getsize(dpath),
-                "lower_bounds": None, "upper_bounds": None}}
-
-
 def _pos_norm_udf():
     """pandas_udf normalizing provenance file paths to bare local paths
     (the form data-file manifests store in this staging layout)."""
@@ -2946,8 +3200,8 @@ def _pos_norm_udf():
 def _position_delete_entries_distributed(spark: SparkSession, root: str,
                                          pos_df, tag: str,
                                          num_files: int = 1) -> list[dict]:
-    """Scale form of ``_position_delete_entry`` (VERDICT r12 #2): the
-    doomed ``(_PROV_F, _PROV_P)`` positions NEVER reach the driver.
+    """The position-delete stager (VERDICT r12 #2): the doomed
+    ``(_PROV_F, _PROV_P)`` positions NEVER reach the driver.
     The frame is hash-routed by file path into ``num_files`` tasks,
     sorted ``(file_path, pos)`` WITHIN each task (the v2 spec's required
     position-delete sort order — global order across files is not
@@ -3015,7 +3269,7 @@ def _dv_delete_entries_distributed(spark: SparkSession, table_path: str,
                                    root: str, meta: dict, pos_df,
                                    deletes: list[dict], tag: str
                                    ) -> tuple[list[dict], set[str]]:
-    """Scale form of ``_dv_delete_entries``: ``pos_df`` is a DataFrame of
+    """The deletion-vector stager: ``pos_df`` is a DataFrame of
     ``(_PROV_F, _PROV_P)`` doomed positions; each affected file's roaring
     bitmap builds EXECUTOR-side (``groupBy(file).applyInPandas``, prior
     DVs broadcast for the union) and the driver receives ONE
@@ -3117,35 +3371,21 @@ def write_iceberg_position_deletes(spark: SparkSession, table_path: str,
     ``(file_path, pos)`` records in a position-delete parquet file
     (spec-reserved field ids 2147483546/2147483545), referenced by a
     content=1 delete manifest in a new snapshot's manifest list. Returns
-    the new snapshot id. Same scope as ``write_iceberg_table``: a
-    single-writer, local-FS staging utility so the MoR read path can be
-    exercised against a REAL v2 layout — the delete-row collect is
-    gate-scale by design."""
-    from pyspark.sql import functions as F
-
-    root = _writable_root(table_path, "write_iceberg_position_deletes")
-    meta = read_table_metadata(spark, table_path)
-    if int(meta.get("format-version", 1)) >= 3:
+    the new snapshot id. One attempt of ``_row_ops`` (a lost race
+    raises ``IcebergCommitConflict``); ``iceberg_delete_where`` is the
+    retrying verb. The doomed pairs sort and write inside tasks; the
+    driver sees one row per delete file (VERDICT r12 #2)."""
+    table = _local_rows(spark, table_path, "write_iceberg_position_deletes")
+    if int(read_table_metadata(spark, table_path)
+           .get("format-version", 1)) >= 3:
         raise IcebergProtocolError(
             "position-delete FILES are deprecated in format-version 3 "
             "(writers must use deletion vectors) — use "
             "write_iceberg_dv_deletes / iceberg_delete_where, which "
             "picks the v3 layout automatically")
-
-    cur, _, _ = _provenance_scan(spark, table_path, meta,
-                                 "position deletes")
-    pos_df = cur.filter(F.expr(predicate_sql)).select(_PROV_F, _PROV_P)
-    # executor-side staging (VERDICT r12 #2): doomed (file, pos) pairs
-    # sort + write inside tasks; the driver sees one row per delete file
-    entries = _position_delete_entries_distributed(
-        spark, root, pos_df, f"d{uuid.uuid4().hex[:12]}")
-    if not entries:
-        # DML semantics: nothing matched -> no commit (a 0-row delete
-        # snapshot would churn history and the change feed for nothing)
-        return int(meta["current-snapshot-id"])
-    return _commit_delete_snapshot(
-        spark, table_path, entries, "delete",
-        scanned_snapshot_id=int(meta["current-snapshot-id"]))
+    return _row_ops(spark, table, "position deletes", "position", 0,
+                    "delete", functools.partial(_derive_delete,
+                                                predicate_sql))
 
 
 def write_iceberg_dv_deletes(spark: SparkSession, table_path: str,
@@ -3157,28 +3397,14 @@ def write_iceberg_dv_deletes(spark: SparkSession, table_path: str,
     land in ONE puffin file, and each file gets a content=1 manifest
     entry carrying ``referenced_data_file`` + ``content_offset`` +
     ``content_size_in_bytes`` (the v3 DV descriptor). The commit bumps
-    the table's format-version to 3. Same staging scope as the
-    position-delete writer (single-writer, local FS, driver-side
-    position collect — gate-scale by design); the READ path
-    (_apply_position_deletes) is the production surface."""
-    from pyspark.sql import functions as F
-
-    root = _writable_root(table_path, "write_iceberg_dv_deletes")
-    meta = read_table_metadata(spark, table_path)
-    cur, _, deletes = _provenance_scan(spark, table_path, meta,
-                                       "deletion vectors")
-    pos_df = cur.filter(F.expr(predicate_sql)).select(_PROV_F, _PROV_P)
-    # executor-side bitmap build: the driver never receives doomed ROWS,
-    # only one (path, blob, cardinality) per affected file
-    entries, superseded = _dv_delete_entries_distributed(
-        spark, table_path, root, meta, pos_df,
-        deletes, f"v{uuid.uuid4().hex[:12]}")
-    if not entries:
-        return int(meta["current-snapshot-id"])  # nothing matched
-    return _commit_delete_snapshot(
-        spark, table_path, entries, "delete", format_version=3,
-        supersede_dv_keys=superseded,
-        scanned_snapshot_id=int(meta["current-snapshot-id"]))
+    the table's format-version to 3. One attempt of ``_row_ops``, like
+    the position-delete writer; the bitmaps build executor-side and the
+    driver receives one (path, blob, cardinality) row per affected
+    file."""
+    return _row_ops(spark, _local_rows(spark, table_path,
+                                       "write_iceberg_dv_deletes"),
+                    "deletion vectors", "dv", 0, "delete",
+                    functools.partial(_derive_delete, predicate_sql))
 
 
 def _retire_superseded_dvs(spark: SparkSession, table_path: str,
@@ -3247,123 +3473,121 @@ def _retire_superseded_dvs(spark: SparkSession, table_path: str,
 
 
 def _commit_delete_snapshot(spark: SparkSession, table_path: str,
-                            entry: dict | list[dict], op_summary: str,
-                            format_version: int | None = None,
-                            supersede_dv_keys: set[str] | None = None,
-                            data_entries: list[dict] | None = None,
-                            data_part_fields: list | None = None,
-                            data_spec_id: int = 0,
-                            scanned_snapshot_id: int | None = None) -> int:
-    """Shared staging commit for row-delete snapshots: content=1
-    manifest with ``entry``, new manifest list (prior manifests +
-    this one, sequence-stamped), committed through
-    ``_commit_metadata`` — built on the head it reads and published at
-    that head + 1, so a commit landing anywhere between that read and
-    the create makes this one lose the CAS and raise
-    ``IcebergCommitConflict`` instead of overwriting it.
-
-    ``supersede_dv_keys``: referenced-data-file keys (last two path
-    segments) whose prior deletion vectors this commit REPLACES — any
-    carried delete manifest holding a DV entry for one of them is
-    rewritten without it (survivors keep their effective sequence
-    numbers as EXISTING entries), enforcing v3's one-DV-per-data-file
-    rule.
-
-    ``data_entries``: content=0 manifest entries (from ``_stage_commit``)
-    committed IN THE SAME SNAPSHOT — the UPDATE shape: the deletes kill
-    the old rows, the data manifest adds the post-image rows, and a
-    reader can never observe one without the other. Both manifests share
-    the snapshot's sequence number; the new data files are never
-    referenced by the delete files, so the deletes cannot touch them.
+                            deletes: list[dict], operation: str,
+                            scanned_snapshot_id: int | None = None,
+                            **snapshot) -> int:
+    """Commit one row-op snapshot — ``deletes`` plus the other
+    ``_snapshot_updates`` keywords, e.g. an UPDATE's post-image
+    ``data`` — to the file layout, built on the head it publishes over
+    (a commit landing between that head read and the create loses the
+    CAS and raises ``IcebergCommitConflict`` instead of overwriting it).
 
     ``scanned_snapshot_id``: the head the CALLER derived its positions
     against. Position deletes reference (file, pos) pairs of a specific
     snapshot — if another commit (compaction, delete, update) lands
     between the caller's scan and this commit's head read, those pairs
-    point at retired files and pre-image rows silently survive. The CAS
-    covers only the window from this commit's head read to its create,
-    so the caller's scan head is re-checked against that head and a
-    drift raised as ``IcebergCommitConflict`` for the caller's rebase
-    loop (ADVICE r12; the catalog path's assert-ref-snapshot-id guard
-    is the template)."""
-    mdir = os.path.join(_strip_scheme(table_path), METADATA_DIR)
-    tag = uuid.uuid4().hex[:12]
+    point at retired files and pre-image rows silently survive. So the
+    commit requires main to still point there (the catalog's
+    assert-ref-snapshot-id), and a drift raises
+    ``IcebergCommitConflict`` for the caller's rebase loop. Equality
+    deletes pass None: they reference KEYS, which the strictly-older
+    sequence rule scopes correctly on whatever head the commit lands
+    on."""
+    guard = [] if scanned_snapshot_id is None else [
+        {"type": "assert-ref-snapshot-id", "ref": "main",
+         "snapshot-id": int(scanned_snapshot_id)}]
+    return _commit_updates(
+        spark, table_path, "delete snapshot", guard,
+        lambda head: _snapshot_updates(
+            spark, _strip_scheme(table_path), head, operation,
+            deletes=deletes, **snapshot))[2]
 
-    def build(meta: dict):
-        if scanned_snapshot_id is not None and \
-                int(meta.get("current-snapshot-id") or -1) != \
-                int(scanned_snapshot_id):
-            raise IcebergCommitConflict(
-                f"head of {table_path} moved from snapshot "
-                f"{scanned_snapshot_id} to "
-                f"{meta.get('current-snapshot-id')} between position scan "
-                f"and commit; re-derive and retry")
-        snap = _snapshot(meta, None)
-        _, manifests = read_container(_read_bytes(
-            spark, _resolve_path(table_path, snap["manifest-list"])))
-        new_snap = _next_snapshot_id(meta)
-        new_seq = int(meta.get("last-sequence-number") or 0) + 1
-        ts = (snap.get("timestamp-ms") or 0) + 1000
-        if supersede_dv_keys:
-            manifests = _retire_superseded_dvs(
-                spark, table_path, mdir, manifests, supersede_dv_keys,
-                new_snap)
-        new_meta = dict(meta)
-        all_manifests = list(manifests)
 
-        def _add_manifest(kind: str, content: int, spec_id: int,
-                          part_fields: list | None, ents: list[dict]):
-            mpath = os.path.join(mdir,
-                                 f"manifest-{kind}-{new_snap}-{tag}.avro")
-            blob = write_container(
-                _manifest_entry_schema(part_fields),
-                [{**e, "snapshot_id": new_snap} for e in ents])
-            with open(mpath, "wb") as f:
-                f.write(blob)
-            all_manifests.append({
-                "manifest_path": mpath, "manifest_length": len(blob),
-                "partition_spec_id": spec_id, "content": content,
-                "added_snapshot_id": new_snap,
-                "sequence_number": new_seq,
-                "min_sequence_number": new_seq})
+def _local_rows(spark: SparkSession, table_path: str, verb: str):
+    """The file layout as a ``_row_ops`` transport: load the head,
+    publish through ``_commit_delete_snapshot`` pinned to that head."""
+    root = _writable_root(table_path, verb)
+    mdir = os.path.join(root, METADATA_DIR)
+    return (table_path, lambda: (root, _head(spark, mdir)[1]),
+            lambda root, meta, **snapshot: _commit_delete_snapshot(
+                spark, table_path,
+                scanned_snapshot_id=meta["current-snapshot-id"],
+                **snapshot))
 
-        entries = [entry] if isinstance(entry, dict) else list(entry)
-        if entries:    # a pure-insert MERGE commits no delete manifest
-            _add_manifest("del", 1, 0, None, entries)
-        if data_entries:
-            if meta.get("next-row-id") is not None:
-                # v3 row lineage: DML-added post-image/insert files claim
-                # FRESH first_row_id ranges and advance next-row-id in
-                # the same commit — updated rows get NEW row ids (this
-                # engine does not materialize preserved ids through MoR
-                # updates; readers that need stable pre/post linkage
-                # join on business keys, and _with_row_ids reads stay
-                # well-defined instead of raising on id-less files)
-                nri = int(meta["next-row-id"])
-                for e in sorted(data_entries,
-                                key=lambda e: e["data_file"]["file_path"]):
-                    e["data_file"]["first_row_id"] = nri
-                    nri += int(e["data_file"].get("record_count") or 0)
-                new_meta["next-row-id"] = nri
-            _add_manifest("upd", 0, int(data_spec_id),
-                          data_part_fields or [], data_entries)
-        mlpath = os.path.join(mdir, f"snap-{new_snap}-{tag}.avro")
-        with open(mlpath, "wb") as f:
-            f.write(write_container(_MANIFEST_FILE_SCHEMA, all_manifests))
-        if format_version is not None:
-            new_meta["format-version"] = max(
-                int(meta.get("format-version", 1)), int(format_version))
-        new_meta["snapshots"] = list(meta["snapshots"]) + [{
-            "snapshot-id": new_snap, "timestamp-ms": ts,
-            "sequence-number": new_seq,
-            "manifest-list": mlpath, "summary": {"operation": op_summary}}]
-        _advance_head(new_meta, new_snap)
-        new_meta["last-updated-ms"] = ts
-        new_meta["last-sequence-number"] = new_seq
-        return new_meta, new_snap
 
-    return _commit_metadata(spark, table_path, "delete snapshot",
-                            build)[1]
+def _row_ops(spark: SparkSession, table, verb: str, mode: str,
+             max_retries: int, operation: str, derive) -> int:
+    """The one derive → stage → commit loop of DELETE, UPDATE and MERGE
+    on both transports (``table``: see ``_commit_loop``). Each attempt
+    scans the loaded head with file/position provenance and prior row
+    deletes applied, and ``derive(schema_fields, cur)`` returns
+    ``(dead_pos, new_rows, doomed_any, has_new)``. New rows stage as
+    data files under the default spec; doomed positions stage as a v2
+    position-delete parquet, or as deletion vectors when ``mode='dv'``
+    or the table is already format-version 3 (v3 deprecates
+    position-delete files), unioned with any prior DV of the same file.
+    Nothing staged -> no commit; a lost race re-derives against the new
+    head."""
+    if mode not in ("position", "dv"):
+        raise ValueError(f"mode must be position|dv, got {mode!r}")
+
+    def attempt(root: str, meta: dict):
+        fields = _current_schema(meta)["fields"]
+        cur, _, prior = _provenance_scan(spark, root, meta, verb)
+        dead, new_rows, doomed_any, has_new = derive(fields, cur)
+        tag = uuid.uuid4().hex[:12]
+        spec_id, part_fields = _default_spec_part_fields(meta, fields)
+        snapshot = {"operation": operation, "deletes": [], "data": [],
+                    "part_fields": part_fields, "spec_id": spec_id}
+        if has_new:
+            snapshot["data"] = _stage_commit(
+                spark, new_rows, root, fields, part_fields,
+                _next_snapshot_id(meta), tag)
+        if doomed_any and (mode == "dv"
+                           or int(meta.get("format-version", 1)) >= 3):
+            snapshot["deletes"], snapshot["supersede_dv_keys"] = \
+                _dv_delete_entries_distributed(spark, root, root, meta,
+                                               dead, prior, tag)
+            snapshot["format_version"] = 3
+        elif doomed_any:
+            snapshot["deletes"] = _position_delete_entries_distributed(
+                spark, root, dead, tag)
+        return snapshot if snapshot["deletes"] or snapshot["data"] \
+            else None
+
+    return _commit_loop(table, verb, max_retries, attempt)
+
+
+def _derive_delete(predicate_sql: str, schema_fields: list[dict],
+                   cur: DataFrame):
+    """DELETE's ``_row_ops`` derivation: the matched rows' positions.
+    No emptiness probe — the staged delete files tell."""
+    from pyspark.sql import functions as F
+
+    return (cur.filter(F.expr(predicate_sql)).select(_PROV_F, _PROV_P),
+            None, True, False)
+
+
+def _derive_update(predicate_sql: str, set_exprs: dict[str, str],
+                   schema_fields: list[dict], cur: DataFrame):
+    """UPDATE's ``_row_ops`` derivation: the matched rows' positions die
+    and their post-images are re-inserted, every SET expression bound to
+    the PRE-update row."""
+    from pyspark.sql import functions as F
+
+    bad = [c for c in set_exprs
+           if c not in {f["name"] for f in schema_fields}]
+    if bad:
+        raise ValueError(f"SET columns {bad} absent from the table "
+                         f"schema")
+    matched = cur.filter(F.expr(predicate_sql))
+    post = matched.select(*[
+        F.expr(set_exprs.get(f["name"], f["name"]))
+        .cast(_spark_type(f["type"])).alias(f["name"])
+        for f in schema_fields])
+    dead = matched.select(_PROV_F, _PROV_P)
+    hit = bool(dead.take(1))
+    return dead, post, hit, hit
 
 
 def write_iceberg_equality_deletes(spark: SparkSession, table_path: str,
@@ -3456,7 +3680,7 @@ def write_iceberg_equality_deletes(spark: SparkSession, table_path: str,
     # no scanned_snapshot_id guard: equality deletes reference KEYS, not
     # (file, pos) pairs — the strictly-older sequence rule makes them
     # correct against whatever head the commit lands on
-    return _commit_delete_snapshot(spark, table_path, entry,
+    return _commit_delete_snapshot(spark, table_path, [entry],
                                    "overwrite")
 
 
@@ -3490,49 +3714,40 @@ def iceberg_delete_where(spark: SparkSession, table_path: str,
     Returns the new snapshot id, or the UNCHANGED current snapshot id
     when nothing matched (no empty commit). On a lost metadata CAS the
     operation reloads the head, RE-DERIVES the matching rows against
-    the new state, and retries — the same optimistic loop
-    ``append_iceberg_via_catalog`` runs, which is what makes this a
+    the new state, and retries — ``_row_ops``, the loop the catalog's
+    ``delete_where_via_catalog`` runs too, which is what makes this a
     real DML verb rather than a staging utility: concurrent appends
     interleave safely and the predicate is always evaluated on the
     state it commits against."""
     if mode not in ("position", "dv", "equality"):
         raise ValueError(f"mode must be position|dv|equality, got {mode!r}")
-    if mode == "equality":
-        if not equality_cols:
-            raise ValueError("mode='equality' requires equality_cols")
-        meta0 = read_table_metadata(spark, table_path)
-        names = [f["name"] for f in _current_schema(meta0)["fields"]
-                 if isinstance(f["type"], str)]
-        referenced = [c for c in names
-                      if re.search(rf"\b{re.escape(c)}\b", predicate_sql)]
-        broader = [c for c in referenced if c not in equality_cols]
-        if broader:
-            raise ValueError(
-                f"equality-mode DELETE WHERE: predicate references "
-                f"non-key columns {broader} — an equality delete kills "
-                f"every row agreeing on {equality_cols}, which would "
-                f"delete MORE than the predicate matches. Use "
-                f"mode='position'/'dv', or restrict the predicate to "
-                f"the key columns")
+    if mode != "equality":
+        return _row_ops(spark, _local_rows(spark, table_path,
+                                           "iceberg_delete_where"),
+                        "DELETE WHERE", mode, max_retries, "delete",
+                        functools.partial(_derive_delete, predicate_sql))
+    if not equality_cols:
+        raise ValueError("mode='equality' requires equality_cols")
+    meta0 = read_table_metadata(spark, table_path)
+    names = [f["name"] for f in _current_schema(meta0)["fields"]
+             if isinstance(f["type"], str)]
+    referenced = [c for c in names
+                  if re.search(rf"\b{re.escape(c)}\b", predicate_sql)]
+    broader = [c for c in referenced if c not in equality_cols]
+    if broader:
+        raise ValueError(
+            f"equality-mode DELETE WHERE: predicate references "
+            f"non-key columns {broader} — an equality delete kills "
+            f"every row agreeing on {equality_cols}, which would "
+            f"delete MORE than the predicate matches. Use "
+            f"mode='position'/'dv', or restrict the predicate to "
+            f"the key columns")
 
     from pyspark.sql import functions as F
 
     last: Exception | None = None
     for _ in range(max_retries + 1):
         try:
-            if mode == "position":
-                # re-check per attempt: a concurrent writer may have
-                # upgraded the table to v3 since the last try
-                fv = int(read_table_metadata(spark, table_path)
-                         .get("format-version", 1))
-                if fv >= 3:
-                    return write_iceberg_dv_deletes(
-                        spark, table_path, predicate_sql)
-                return write_iceberg_position_deletes(
-                    spark, table_path, predicate_sql)
-            if mode == "dv":
-                return write_iceberg_dv_deletes(
-                    spark, table_path, predicate_sql)
             keys = (read_iceberg_snapshot(spark, table_path)
                     .filter(F.expr(predicate_sql))
                     .select(*equality_cols).distinct())
@@ -3567,71 +3782,13 @@ def iceberg_update_where(spark: SparkSession, table_path: str,
     retries (staged files from a lost round stay unreferenced orphans —
     harmless, same as every optimistic Iceberg writer).
 
-    Scale shape: matched positions collect driver-side (gate-scale by
-    contract, same as the delete writers); the post-image write and the
-    MoR read path are distributed."""
-    from pyspark.sql import functions as F
-
-    root = _writable_root(table_path, "iceberg_update_where")
-    if mode not in ("position", "dv"):
-        raise ValueError(f"mode must be position|dv, got {mode!r}")
-
-    last: Exception | None = None
-    for _ in range(max_retries + 1):
-        meta = read_table_metadata(spark, table_path)
-        schema_fields = _current_schema(meta)["fields"]
-        for f in schema_fields:
-            if not isinstance(f["type"], str):
-                raise IcebergProtocolError(
-                    "update supports flat primitive schemas")
-        names = [f["name"] for f in schema_fields]
-        bad = [c for c in set_exprs if c not in names]
-        if bad:
-            raise ValueError(f"SET columns {bad} absent from the table "
-                             f"schema")
-        use_dv = mode == "dv" or int(meta.get("format-version", 1)) >= 3
-
-        cur, _, deletes = _provenance_scan(spark, table_path, meta,
-                                           "UPDATE")
-        matched = cur.filter(F.expr(predicate_sql))
-        # post-image: every SET expression binds to the PRE-update row
-        post = matched.select(*[
-            F.expr(set_exprs.get(f["name"], f["name"]))
-            .cast(_spark_type(f["type"])).alias(f["name"])
-            for f in schema_fields])
-        dead_df = matched.select(_PROV_F, _PROV_P)
-        if not dead_df.take(1):
-            return int(meta["current-snapshot-id"])
-
-        # partition machinery, identical to the append writers
-        sid, part_fields = _default_spec_part_fields(meta, schema_fields)
-
-        tag = f"u{uuid.uuid4().hex[:12]}"
-        data_entries = _stage_commit(spark, post, root, schema_fields,
-                                     part_fields, _next_snapshot_id(meta),
-                                     tag)
-
-        if use_dv:
-            del_entries, superseded = _dv_delete_entries_distributed(
-                spark, table_path, root, meta, dead_df, deletes, tag)
-            fv, keys = 3, superseded
-        else:
-            # executor-side v2 position-delete staging (VERDICT r12 #2)
-            del_entries = _position_delete_entries_distributed(
-                spark, root, dead_df, tag)
-            fv, keys = None, None
-        try:
-            return _commit_delete_snapshot(
-                spark, table_path, del_entries, "overwrite",
-                format_version=fv, supersede_dv_keys=keys,
-                data_entries=data_entries,
-                data_part_fields=part_fields, data_spec_id=sid,
-                scanned_snapshot_id=int(meta["current-snapshot-id"]))
-        except IcebergCommitConflict as exc:
-            last = exc     # head moved: loop re-scans and re-derives
-    raise IcebergCommitConflict(
-        f"UPDATE WHERE on {table_path} lost {max_retries + 1} commit "
-        f"races") from last
+    Scale shape: the doomed positions and the post-images stage
+    executor-side; the driver sees one row per staged file."""
+    return _row_ops(spark, _local_rows(spark, table_path,
+                                       "iceberg_update_where"),
+                    "UPDATE WHERE", mode, max_retries, "overwrite",
+                    functools.partial(_derive_update, predicate_sql,
+                                      set_exprs))
 
 
 def _derive_merge(source: DataFrame, on: list[str],
@@ -3644,8 +3801,7 @@ def _derive_merge(source: DataFrame, on: list[str],
     keys, applies the nondeterministic-match guard, and returns
     ``(dead_pos, new_rows, doomed_any, has_new)`` — the doomed-position
     frame, the post-image/insert frame (or None), and their emptiness
-    probes. Used by the local ``iceberg_merge_into`` and the
-    catalog-managed ``rest_catalog.merge_into_via_catalog``."""
+    probes — MERGE's ``_row_ops`` derivation on both transports."""
     from pyspark.sql import functions as F
 
     names = [f["name"] for f in schema_fields]
@@ -3749,64 +3905,13 @@ def iceberg_merge_into(spark: SparkSession, table_path: str,
     |matched-positions| aggregate probed with limit(1), never a
     collect). Nothing matched AND nothing to insert -> no commit. A lost
     metadata CAS re-derives against the new head and retries."""
-    from pyspark.sql import functions as F
-
-    root = _writable_root(table_path, "iceberg_merge_into")
-    if mode not in ("position", "dv"):
-        raise ValueError(f"mode must be position|dv, got {mode!r}")
-
-    last: Exception | None = None
-    for _ in range(max_retries + 1):
-        meta = read_table_metadata(spark, table_path)
-        schema_fields = _current_schema(meta)["fields"]
-        for f in schema_fields:
-            if not isinstance(f["type"], str):
-                raise IcebergProtocolError(
-                    "merge supports flat primitive schemas")
-        use_dv = mode == "dv" or int(meta.get("format-version", 1)) >= 3
-
-        cur, _, deletes = _provenance_scan(spark, table_path, meta,
-                                           "MERGE")
-        dead_pos, new_rows, doomed_any, has_new = _derive_merge(
-            source, on, when_matched_update, when_matched_delete,
-            when_not_matched_insert, schema_fields, cur)
-        if not doomed_any and not has_new:
-            return int(meta["current-snapshot-id"])
-
-        # partition machinery, identical to the append writers
-        sid, part_fields = _default_spec_part_fields(meta, schema_fields)
-
-        tag = f"m{uuid.uuid4().hex[:12]}"
-        data_entries = []
-        if has_new:
-            data_entries = _stage_commit(spark, new_rows, root,
-                                         schema_fields, part_fields,
-                                         _next_snapshot_id(meta), tag)
-
-        del_entries: list[dict] = []
-        fv = keys = None
-        if doomed_any:
-            if use_dv:
-                del_entries, keys = _dv_delete_entries_distributed(
-                    spark, table_path, root, meta, dead_pos, deletes,
-                    tag)
-                fv = 3
-            else:
-                # executor-side v2 position-delete staging (VERDICT r12 #2)
-                del_entries = _position_delete_entries_distributed(
-                    spark, root, dead_pos, tag)
-        try:
-            return _commit_delete_snapshot(
-                spark, table_path, del_entries, "overwrite",
-                format_version=fv, supersede_dv_keys=keys,
-                data_entries=data_entries,
-                data_part_fields=part_fields, data_spec_id=sid,
-                scanned_snapshot_id=int(meta["current-snapshot-id"]))
-        except IcebergCommitConflict as exc:
-            last = exc     # head moved: loop re-scans and re-derives
-    raise IcebergCommitConflict(
-        f"MERGE INTO {table_path} lost {max_retries + 1} commit "
-        f"races") from last
+    return _row_ops(spark, _local_rows(spark, table_path,
+                                       "iceberg_merge_into"),
+                    "MERGE INTO", mode, max_retries, "overwrite",
+                    functools.partial(_derive_merge, source, on,
+                                      when_matched_update,
+                                      when_matched_delete,
+                                      when_not_matched_insert))
 
 
 # ---------------------------------------------------------------------------

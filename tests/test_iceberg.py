@@ -4317,3 +4317,177 @@ def test_update_where_on_row_lineage_table_assigns_fresh_ids(spark,
         else:
             assert v == float(k) and rid == before[k]  # stable id
     assert int(read_table_metadata(spark, t)["next-row-id"]) == hwm + 5
+
+
+def _lineage_table(spark, t):
+    """20 rows in one file with row lineage on (v3, next-row-id 20), then
+    an optional int column ``flag`` added with write-default 7 (and no
+    initial-default, so the first file reads it as NULL)."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        _commit_metadata,
+        enable_iceberg_row_lineage,
+    )
+
+    df = spark.range(0, 20).selectExpr("id AS k", "CAST(id AS double) AS v")
+    write_iceberg_table(spark, [df.coalesce(1)], t)
+    enable_iceberg_row_lineage(spark, t)
+
+    def add_flag(meta):
+        schema = dict(meta["schemas"][0])
+        schema["fields"] = schema["fields"] + [
+            {"id": 3, "name": "flag", "required": False, "type": "int",
+             "write-default": 7}]
+        return {**meta, "schemas": [schema]}, None
+
+    _commit_metadata(spark, t, "add column", add_flag)
+
+
+def _run_write(spark, op, t, cat):
+    """Run write verb ``op`` on table ``t``: on the file layout when
+    ``cat`` is None, else through the catalog that registered ``t`` as
+    ``db.t``."""
+    from databricks_import_pyspark_scripts_spark.sources import (
+        iceberg,
+        rest_catalog,
+    )
+
+    new = spark.range(100, 105).selectExpr(
+        "id AS k", "CAST(id AS double) AS v", "CAST(id AS int) AS flag")
+    if op == "append_default":
+        op, new = "append", new.drop("flag")
+    if op == "append":
+        if cat is None:
+            return iceberg.append_iceberg(spark, new, t)
+        return rest_catalog.append_iceberg_via_catalog(
+            spark, new, cat, "db", "t")
+    if op.startswith("delete_"):
+        mode = op[len("delete_"):]
+        if cat is None:
+            return iceberg.iceberg_delete_where(spark, t, "k % 4 = 1",
+                                                mode=mode)
+        return rest_catalog.delete_where_via_catalog(
+            spark, cat, "db", "t", "k % 4 = 1", mode=mode)
+    if op == "update":
+        if cat is None:
+            return iceberg.iceberg_update_where(spark, t, "k % 4 = 2",
+                                                {"v": "v + 100"})
+        return rest_catalog.update_where_via_catalog(
+            spark, cat, "db", "t", "k % 4 = 2", {"v": "v + 100"})
+    src = spark.range(15, 25).selectExpr(
+        "id AS k", "CAST(id * 10 AS double) AS v", "CAST(1 AS int) AS flag")
+    if cat is None:
+        return iceberg.iceberg_merge_into(spark, t, src, ["k"],
+                                          when_matched_update={"v": "s.v"})
+    return rest_catalog.merge_into_via_catalog(
+        spark, cat, "db", "t", src, ["k"], when_matched_update={"v": "s.v"})
+
+
+def _catalog_for(tmp_path, t, transport):
+    from databricks_import_pyspark_scripts_spark.sources.rest_catalog import (
+        FileRestCatalog,
+    )
+
+    if transport == "local":
+        return None
+    cat = FileRestCatalog(str(tmp_path / f"wh_{os.path.basename(t)}"))
+    cat.register_table("db", "t", t)
+    return cat
+
+
+@pytest.mark.parametrize("op", ["append", "append_default",
+                                "delete_position", "delete_dv", "update",
+                                "merge"])
+def test_local_and_catalog_writes_agree(spark, tmp_path, op):
+    """Each write verb leaves the same table whether it commits to the
+    file layout or through the REST catalog: same rows, same
+    next-row-id, format-version and head operation, and unique row ids
+    (every added file carries a first_row_id). The table has row lineage
+    on and a write-default column, so an append that omits ``flag`` must
+    write 7 on both transports."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        read_iceberg_snapshot_with_row_ids,
+    )
+
+    ends = {}
+    for transport in ("local", "catalog"):
+        t = str(tmp_path / f"{op}_{transport}")
+        _lineage_table(spark, t)
+        _run_write(spark, op, t, _catalog_for(tmp_path, t, transport))
+        meta = read_table_metadata(spark, t)
+        head = next(s for s in meta["snapshots"]
+                    if s["snapshot-id"] == meta["current-snapshot-id"])
+        rows = sorted(tuple(r) for r in read_iceberg_snapshot(spark, t)
+                      .select("k", "v", "flag").collect())
+        ids = [r._row_id for r in
+               read_iceberg_snapshot_with_row_ids(spark, t).collect()]
+        assert len(ids) == len(set(ids)) == len(rows), transport
+        ends[transport] = (rows, int(meta["next-row-id"]),
+                           int(meta["format-version"]),
+                           head["summary"]["operation"])
+    assert ends["local"][3] != "replace"      # the verb committed
+    assert ends["local"] == ends["catalog"]
+    if op.startswith("append"):
+        assert ends["local"][1] == 25
+        flags = {k: f for k, _, f in ends["local"][0]}
+        assert [flags[k] for k in range(100, 105)] == (
+            [7] * 5 if op == "append_default" else list(range(100, 105)))
+
+
+@pytest.mark.parametrize("transport", ["local", "catalog"])
+def test_dml_snapshot_timestamp_follows_the_head(spark, tmp_path,
+                                                 transport):
+    """A DML snapshot is stamped after everything the head records, on
+    both transports: above the head's ``last-updated-ms`` even when a
+    metadata-only commit moved it past the head snapshot, so the table
+    history stays ordered and a time-travel read at the DML's own
+    timestamp returns the post-commit rows."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        read_iceberg_snapshot_at_timestamp,
+        set_iceberg_ref,
+    )
+
+    t = str(tmp_path / f"ts_{transport}")
+    _lineage_table(spark, t)
+    head_ts = max(int(s["timestamp-ms"])
+                  for s in read_table_metadata(spark, t)["snapshots"])
+    set_iceberg_ref(spark, t, "pin", ref_type="tag", ts_ms=head_ts + 5000)
+    before = int(read_table_metadata(spark, t)["last-updated-ms"])
+    _run_write(spark, "delete_dv", t, _catalog_for(tmp_path, t, transport))
+    meta = read_table_metadata(spark, t)
+    dml = next(s for s in meta["snapshots"]
+               if s["snapshot-id"] == meta["current-snapshot-id"])
+    assert int(dml["timestamp-ms"]) > before
+    assert int(meta["last-updated-ms"]) >= int(dml["timestamp-ms"])
+    expect = [k for k in range(20) if k % 4 != 1]
+    assert _ks(read_iceberg_snapshot_at_timestamp(
+        spark, t, int(dml["timestamp-ms"]))) == expect
+
+
+def test_iceberg_snapshot_writers_share_one_builder():
+    """One snapshot builder: the REST-catalog module stages no manifests
+    of its own, and inside ``iceberg.py`` only the shared builder and the
+    writers that create a table or replace the whole manifest list write
+    a manifest list."""
+    import ast
+    import re
+
+    from databricks_import_pyspark_scripts_spark.sources import (
+        iceberg,
+        rest_catalog,
+    )
+
+    with open(rest_catalog.__file__) as f:
+        src = f.read()
+    for name in ("_MANIFEST_FILE_SCHEMA", "_manifest_entry_schema",
+                 "write_container"):
+        assert not re.search(rf"\b{name}\b", src), name
+    with open(iceberg.__file__) as f:
+        tree = ast.parse(f.read())
+    writers = set()
+    for fn in tree.body:
+        if isinstance(fn, ast.FunctionDef) and any(
+                isinstance(n, ast.Name) and n.id == "_MANIFEST_FILE_SCHEMA"
+                for n in ast.walk(fn)):
+            writers.add(fn.name)
+    assert writers == {"_snapshot_updates", "write_iceberg_table",
+                       "rewrite_iceberg_manifests", "_compact"}
