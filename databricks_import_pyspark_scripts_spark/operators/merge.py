@@ -1,13 +1,21 @@
-"""MERGE / CDC-apply without Delta: set-based emulation of ``MERGE INTO``
-(anti-join + union) and application of a CDF batch to a snapshot — the
-inverse of ``cdc.derive_changes`` (guide: "CDC/SCD2 -> MERGE INTO needs
-Delta; emulate with anti-join + union + window").
+"""MERGE without a table format, and CDC apply: set-based emulation of
+``MERGE INTO`` (anti-join + union), application of a CDF batch to a
+snapshot — the inverse of ``cdc.derive_changes`` — and
+``two_pass_merge``, the one MERGE planner the Delta writer
+(``sinks/delta_writer.merge_into``) and the Iceberg writer
+(``sources/iceberg.iceberg_merge_into`` and the REST-catalog merge) both
+stage their commits from.
 
-Scale shape: both operators are one shuffle per side on the key columns;
-the changes/source side is usually small (a version's delta) and broadcasts.
+Scale shape: the emulations are one shuffle per side on the key columns;
+the changes/source side is usually small (a version's delta) and
+broadcasts. The planner reads the target's keys once and joins only the
+files a source key hits.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -22,6 +30,115 @@ def _key_cond(left: str, right: str, keys: list[str]) -> Column:
         c = F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}"))
         cond = c if cond is None else (cond & c)
     return cond
+
+
+@dataclass
+class MergeJoin:
+    """A planned MERGE. ``joined`` is the persisted left join of the hit
+    files (alias ``t``) to the source (alias ``s``), or None when the
+    merge has no matched clause or no source key hit the target.
+    ``delete`` and ``update`` select the matched rows each clause takes
+    (a NULL delete condition falls through to the update); ``post`` is
+    the row after the merge, with the SET expressions applied to updated
+    rows; ``inserts`` is the source minus its matched keys, or None
+    without an insert clause."""
+    hit: list
+    joined: DataFrame | None
+    delete: Column
+    update: Column
+    post: list[Column]
+    inserts: DataFrame | None
+
+
+@contextmanager
+def two_pass_merge(target: DataFrame, scan, files: dict, file_col: str,
+                   keys: list[str], source: DataFrame, types: dict,
+                   update: dict[str, str] | None, delete: str | None,
+                   insert: bool):
+    """Plan ``MERGE INTO t USING s ON keys`` in two passes, as Delta's own
+    MergeIntoCommand does, and yield a ``MergeJoin``.
+
+    ``target`` is every live target row carrying ``file_col``, the id
+    under which ``files`` maps each live file; ``scan(files)`` returns
+    the rows of a file subset, with whatever row position the format
+    stages from. ``types`` maps each table column, in table order, to
+    the type its post-image casts to. Keys compare with ``eqNullSafe``:
+    a NULL key is a key value like any other.
+
+    Pass 1 is one aggregate: the source's per-key row counts join the
+    target's keys and fold into (most source rows on one key, hit
+    files). A key hit by more than one source row raises before
+    anything is staged when the merge has a matched clause; an
+    insert-only merge leaves matched rows alone, so duplicates are
+    harmless there. Pass 2 scans only the hit files and left-joins them
+    to the source once. The join is persisted for every write the
+    caller stages from it and released when the ``with`` block exits,
+    also when it raises. Inserts anti-join the source against the
+    join's matched keys (against the hit files' keys for an insert-only
+    merge), so they never rescan the table."""
+    matched = update is not None or delete is not None
+    hit = []
+    if files:
+        tk = target.select(*keys, file_col).alias("t")
+        sk = (source.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+              .alias("s"))
+        n_max, hit_ids = (sk.join(tk, _key_cond("t", "s", keys))
+                          .agg(F.max("__n"), F.collect_set(f"t.{file_col}"))
+                          .first())
+        if matched and (n_max or 0) > 1:
+            raise ValueError(
+                "multiple source rows match a single target row; merge "
+                "would be nondeterministic (Delta parity)")
+        hit = [files[i] for i in sorted(hit_ids)]
+    joined = None
+    try:
+        t_side = scan(hit).alias("t") if hit else None
+        is_match = delete_cond = update_cond = F.lit(False)
+        if hit and matched:
+            # explicit match marker, not s-key-isNotNull: eqNullSafe
+            # makes (null, null) a match, so a NULL key cannot signal
+            # "unmatched"
+            s_side = source.withColumn("__s_matched", F.lit(True)).alias("s")
+            # let AQE coalesce the cached join's shuffles as it does an
+            # uncached plan's (read when the cache entry is built): a
+            # source the planner cannot size is joined by shuffle, and an
+            # uncoalesced cached shuffle would split every staged file
+            # into spark.sql.shuffle.partitions pieces
+            conf = source.sparkSession.conf
+            cached_key = ("spark.sql.optimizer."
+                          "canChangeCachedPlanOutputPartitioning")
+            prev = conf.get(cached_key)
+            conf.set(cached_key, "true")
+            try:
+                joined = t_side.join(s_side, _key_cond("t", "s", keys),
+                                     "left").persist()
+            finally:
+                conf.set(cached_key, prev)
+            is_match = F.coalesce(F.col("__s_matched"), F.lit(False))
+            if delete is not None:
+                delete_cond = is_match & F.coalesce(F.expr(delete),
+                                                    F.lit(False))
+            if update is not None:
+                update_cond = is_match & ~delete_cond
+        post = [F.when(update_cond, F.expr(update[c]).cast(dt))
+                .otherwise(F.col(f"t.{c}")).alias(c)
+                if update and c in update else F.col(f"t.{c}").alias(c)
+                for c, dt in types.items()]
+        inserts = source if insert else None
+        if insert and hit:
+            # a matched key equals its target key under <=>
+            mk = (t_side if joined is None
+                  else joined.filter(is_match)).select(
+                *[F.col(f"t.{c}").alias(f"__mk{i}")
+                  for i, c in enumerate(keys)])
+            inserts = source.join(
+                mk, [F.col(c).eqNullSafe(F.col(f"__mk{i}"))
+                     for i, c in enumerate(keys)], "left_anti")
+        yield MergeJoin(hit, joined, delete_cond, update_cond, post,
+                        inserts)
+    finally:
+        if joined is not None:
+            joined.unpersist()
 
 
 def merge_upsert(target: DataFrame, source: DataFrame,

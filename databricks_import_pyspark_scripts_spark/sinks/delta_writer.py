@@ -46,6 +46,7 @@ the r7/r8 reader opened.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -1880,20 +1881,18 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     build executor-side on the shared ``_dv_stamp_actions`` engine.
     Local filesystems only (the DV file write), like DELETE/UPDATE.
 
-    At 100 TB: two passes, like Delta's own MergeIntoCommand. Pass 1 is
-    ONE aggregate over the full target scanning only the key columns:
-    the source's per-key row counts inner-join the target's keys
-    (``eqNullSafe``) and fold into (max count, set of touched files), so
-    the duplicate-match guard and the touched-file list cost one action
-    and raise before anything is staged. Pass 2 scans ONLY the touched
-    files and left-joins them to the source (AQE broadcasts a small
-    source; the join keeps the scan's partitioning). That join is
-    persisted for the data write, the change-feed write and the DV
-    stamp, and released in a ``finally`` once the commit is built or
-    the merge raised. Insert rows are the source anti-joined against the
-    matched keys of that join (against the touched files' keys for an
-    insert-only merge), so inserts never rescan the table; with DVs the
-    dead positions come out of the same join."""
+    At 100 TB: ``operators.merge.two_pass_merge`` plans it in two
+    passes, like Delta's own MergeIntoCommand, and the Iceberg merge
+    runs the same planner. Pass 1 is ONE aggregate over the target's key
+    columns: it is both the duplicate-match guard and the touched-file
+    list, and it raises before anything is staged. Pass 2 left-joins
+    ONLY the touched files to the source, once; that join is persisted
+    for the data write, the change-feed write and the DV stamp, and
+    released once the commit is built or the merge raised. Inserts are
+    the source anti-joined against the join's matched keys, so they
+    never rescan the table; with DVs the dead positions come out of the
+    same join."""
+    from ..operators.merge import two_pass_merge
     from ..sources.delta_log import _ROW_INDEX
 
     if use_dv and not _is_local(table_path):
@@ -1941,97 +1940,38 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     has_matched_clause = (when_matched_update is not None
                           or when_matched_delete is not None)
     dv_mode = use_dv and has_matched_clause
-    by_base = _by_base_strict(table_path, rep, "merge")
+    # rows of hit files stage (kept rows, or DV post-images) and carry
+    # their materialized row ids on a row-tracked table; inserts then
+    # carry NULL ids, read through the fresh baseRowId
+    rt_cols = (_rt_cols(rep.metadata) if has_matched_clause and (
+        not use_dv or when_matched_update is not None) else None)
 
-    # pass 1: one aggregate over the full target's keys. eqNullSafe
-    # throughout — a NULL merge key is a legitimate key value, so it
-    # matches and hits the guard like any other
-    tk = _scan_files(spark, table_path, rep, list(rep.files.values())) \
-        .select(*on, _FILE_BASE)
-    sk = src.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
-    n_max, hit_bases = (sk.join(tk, [sk[c].eqNullSafe(tk[c]) for c in on])
-                        .agg(F.max("__n"), F.collect_set(_FILE_BASE))
-                        .first())
-    if has_matched_clause and (n_max or 0) > 1:
-        # Delta's nondeterministic-merge guard: a target key hit by >1
-        # source row has no well-defined update image
-        raise ValueError(
-            "multiple source rows match a single target row; merge "
-            "would be nondeterministic (Delta parity)")
-    hit = [by_base[b] for b in sorted(hit_bases)]
-    # only a matched clause rewrites: an insert-only merge leaves matched
-    # rows untouched by definition (a rewrite would be wasted I/O AND,
-    # with no cdc rows to stage, would make CDF synthesize a spurious
-    # whole-file delete+insert feed), and DV mode re-adds hit files with
-    # descriptors instead of removing them
-    affected = hit if has_matched_clause and not use_dv else []
-    # target rows stage (kept rows, or DV post-images) and carry their
-    # materialized row ids on a row-tracked table; inserts then carry
-    # NULL ids, read through the fresh baseRowId
-    rt = (_rt_cols(rep.metadata)
-          if affected or (dv_mode and hit and when_matched_update is not None)
-          else None)
+    def scan(actions: list[dict]) -> DataFrame:
+        read = _rt_scan_with_ids if rt_cols else _scan_files
+        return read(spark, table_path, rep, actions, keep_row_index=dv_mode)
 
     cdf = _cdf_enabled(rep.metadata)
     pieces_cdc: list[DataFrame] = []
     new_parts: list[DataFrame] = []
     dv_actions: list[dict] | None = None
-    joined = None
-    try:
-        if hit:
-            # pass 2: scan ONLY the hit files (with their positions in DV
-            # mode), left-joined to the source once
-            t_side = (_rt_scan_with_ids(spark, table_path, rep, hit,
-                                        keep_row_index=dv_mode)
-                      if rt else
-                      _scan_files(spark, table_path, rep, hit,
-                                  keep_row_index=dv_mode)).alias("t")
-        if hit and has_matched_clause:
-            # explicit match marker, not s-key-isNotNull: eqNullSafe makes
-            # (null, null) a legitimate match, so a null key cannot signal
-            # "unmatched"
-            s_side = src.withColumn("__s_matched", F.lit(True)).alias("s")
-            cond = [F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}")) for c in on]
-            # let AQE coalesce the cached join's shuffles as it does an
-            # uncached plan's (read when the cache entry is built): a
-            # source the planner cannot size is joined by shuffle first,
-            # and an uncoalesced cached shuffle would split every
-            # rewritten file into spark.sql.shuffle.partitions pieces
-            cached_key = ("spark.sql.optimizer."
-                          "canChangeCachedPlanOutputPartitioning")
-            prev = spark.conf.get(cached_key)
-            spark.conf.set(cached_key, "true")
-            try:
-                joined = t_side.join(s_side, cond, "left").persist()
-            finally:
-                spark.conf.set(cached_key, prev)
-            is_match = F.coalesce(F.col("__s_matched"), F.lit(False))
-            types = {f.name: f.dataType.simpleString()
-                     for f in rep.schema.fields}
-
-            delete_cond = (is_match & F.coalesce(
-                F.expr(when_matched_delete), F.lit(False))
-                if when_matched_delete is not None else F.lit(False))
-            update_cond = (is_match & ~delete_cond
-                           if when_matched_update is not None
-                           else F.lit(False))
-
-            def target_row():
-                cols = []
-                for c in logical:
-                    if when_matched_update and c in when_matched_update:
-                        cols.append(
-                            F.when(update_cond,
-                                   F.expr(when_matched_update[c])
-                                   .cast(types[c]))
-                            .otherwise(F.col(f"t.{c}")).alias(c))
-                    else:
-                        cols.append(F.col(f"t.{c}").alias(c))
-                return cols
-
+    with two_pass_merge(
+            _scan_files(spark, table_path, rep, list(rep.files.values())),
+            scan, _by_base_strict(table_path, rep, "merge"), _FILE_BASE,
+            on, src, {f.name: f.dataType.simpleString()
+                      for f in rep.schema.fields},
+            when_matched_update, when_matched_delete,
+            when_not_matched_insert) as m:
+        # only a matched clause rewrites: an insert-only merge leaves
+        # matched rows untouched by definition (a rewrite would be wasted
+        # I/O AND, with no cdc rows to stage, would make CDF synthesize a
+        # spurious whole-file delete+insert feed), and DV mode re-adds hit
+        # files with descriptors instead of removing them
+        affected = m.hit if has_matched_clause and not use_dv else []
+        rt = rt_cols if m.hit else None
+        if m.joined is not None:
             rt_keep = [F.col(f"t.{c}").alias(c) for c in rt or ()]
             if dv_mode:
-                dead = joined.filter(delete_cond | update_cond).select(
+                dead = m.joined.filter(m.delete | m.update).select(
                     F.col(f"t.{_FILE_BASE}").alias(_FILE_BASE),
                     F.col(f"t.{_ROW_INDEX}").alias(_ROW_INDEX))
                 dv_actions = _dv_stamp_actions(spark, table_path, rep, dead,
@@ -2039,34 +1979,22 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
                 if when_matched_update is not None:
                     # only the POST-images stage as new rows; kept rows
                     # never move (their old positions are simply not dead)
-                    new_parts.append(joined.filter(update_cond).select(
-                        *target_row(), *rt_keep))
+                    new_parts.append(m.joined.filter(m.update).select(
+                        *m.post, *rt_keep))
             else:
-                new_parts.append(joined.filter(~delete_cond).select(
-                    *target_row(), *rt_keep))
+                new_parts.append(m.joined.filter(~m.delete).select(
+                    *m.post, *rt_keep))
             if cdf:
-                deleted = joined.filter(delete_cond).select(
-                    *[F.col(f"t.{c}").alias(c) for c in logical]) \
-                    .withColumn(_CDC_TYPE, F.lit("delete"))
-                pre = joined.filter(update_cond).select(
-                    *[F.col(f"t.{c}").alias(c) for c in logical]) \
-                    .withColumn(_CDC_TYPE, F.lit("update_preimage"))
-                post = joined.filter(update_cond).select(*target_row()) \
-                    .withColumn(_CDC_TYPE, F.lit("update_postimage"))
-                pieces_cdc += [deleted, pre, post]
-        if when_not_matched_insert:
-            inserts = src
-            if hit:
-                # the source minus the keys it matched: those of the cached
-                # join, or of the hit files for an insert-only merge (a
-                # matched key equals its target key under <=>)
-                mk = (t_side if joined is None
-                      else joined.filter(is_match)).select(
-                    *[F.col(f"t.{c}").alias(f"__mk{i}")
-                      for i, c in enumerate(on)])
-                inserts = src.join(
-                    mk, [F.col(c).eqNullSafe(F.col(f"__mk{i}"))
-                         for i, c in enumerate(on)], "left_anti")
+                pre = [F.col(f"t.{c}").alias(c) for c in logical]
+                pieces_cdc += [
+                    m.joined.filter(m.delete).select(*pre)
+                    .withColumn(_CDC_TYPE, F.lit("delete")),
+                    m.joined.filter(m.update).select(*pre)
+                    .withColumn(_CDC_TYPE, F.lit("update_preimage")),
+                    m.joined.filter(m.update).select(*m.post)
+                    .withColumn(_CDC_TYPE, F.lit("update_postimage"))]
+        if m.inserts is not None:
+            inserts = m.inserts
             if ids_spec or gen_cols:
                 # fill absent identity columns above the watermark (a
                 # PRESENT one is validated against allowExplicitInsert)
@@ -2085,9 +2013,7 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
 
         adds: list[dict] = []
         if new_parts:
-            new_rows = new_parts[0]
-            for p in new_parts[1:]:
-                new_rows = new_rows.unionByName(p)
+            new_rows = functools.reduce(DataFrame.unionByName, new_parts)
             adds = _stage_files(spark,
                                 new_rows.select(*logical, *(rt or ())),
                                 table_path, rep.partition_columns, ts,
@@ -2097,15 +2023,10 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
             return rep.version  # nothing matched, nothing inserted
         cdc: list[dict] = []
         if cdf and pieces_cdc:
-            cdc_df = pieces_cdc[0]
-            for p in pieces_cdc[1:]:
-                cdc_df = cdc_df.unionByName(p)
+            cdc_df = functools.reduce(DataFrame.unionByName, pieces_cdc)
             cdc = _stage_files(spark, cdc_df, table_path,
                                rep.partition_columns, ts,
                                subdir="_change_data", rep=rep)
-    finally:
-        if joined is not None:
-            joined.unpersist()
     rt_actions: list[dict] = []
     if _rt_enabled(rep.metadata):
         rt_actions = _assign_base_row_ids(rep.domains, adds,

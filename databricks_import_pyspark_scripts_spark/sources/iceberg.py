@@ -1114,6 +1114,17 @@ def _file_key(table_path: str, f: dict) -> str:
                     .rstrip("/").split("/")[-2:])
 
 
+def _keyed_files(table_path: str, files: list[dict]) -> dict[str, dict]:
+    """``{file key: file}``, refusing a 2-segment key collision: delete
+    rows and merge hits could not be attributed to one data file."""
+    out = {_file_key(table_path, f): f for f in files}
+    if len(out) != len(files):
+        raise IcebergProtocolError(
+            "file basename collision in a merge-on-read snapshot; delete "
+            "rows cannot be attributed to data files unambiguously")
+    return out
+
+
 def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
                             table_path: str, data_files: list[dict],
                             eq_files: list[dict], meta: dict) -> DataFrame:
@@ -1276,11 +1287,7 @@ def _apply_row_deletes(spark: SparkSession, keyed: DataFrame,
     helper columns unless the caller still needs the row identity (the
     change-feed diff does). The 2-segment file-key collision check
     guards BOTH attributions."""
-    keys = [_file_key(table_path, f) for f in data_files]
-    if len(set(keys)) != len(keys):
-        raise IcebergProtocolError(
-            "file basename collision in a merge-on-read snapshot; delete "
-            "rows cannot be attributed to data files unambiguously")
+    _keyed_files(table_path, data_files)
     pos = [d for d in deletes if int(d.get("content") or 0) == 1]
     eq = [d for d in deletes if int(d.get("content") or 0) == 2]
     out = keyed
@@ -1333,9 +1340,27 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
                             partition_filter=partition_filter,
                             stats_filter=stats_filter,
                             deletes_out=deletes)
-    schema = iceberg_spark_schema(meta)
     if not files:
-        return local_frame(spark, [], schema)
+        return local_frame(spark, [], iceberg_spark_schema(meta))
+    scan = _scan_data_files(spark, table_path, meta, files,
+                            keyed=bool(deletes))
+    if not deletes:
+        return scan
+    return _apply_row_deletes(spark, scan, table_path, files, deletes,
+                              meta).drop(_PROV_F)
+
+
+def _scan_data_files(spark: SparkSession, table_path: str, meta: dict,
+                     files: list[dict], keyed: bool = False) -> DataFrame:
+    """One scan over ``files`` in the current schema: columns resolved by
+    field id (by name under a name mapping), v3 ``initial-default``
+    literals for files written before their column, and identity
+    partition values from the manifests for imported files. ``keyed``
+    adds each row's file URI (``_PROV_F``), file key (``_POS_KEY``) and
+    position (``_POS_IDX``) — the row identity row deletes and DML
+    address — taken inside each per-format and per-default group before
+    the union, since a union carries no ``_metadata``."""
+    from pyspark.sql import functions as F
 
     def _fmt(f: dict) -> str:
         return (f.get("file_format") or "PARQUET").upper()
@@ -1344,12 +1369,12 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
                        for f in files if _fmt(f) == "ORC")
     pq_paths = [_resolve_path(table_path, f["file_path"])
                 for f in files if _fmt(f) != "ORC"]
-    if orc_paths and deletes:
+    if orc_paths and keyed:
         raise IcebergProtocolError(
-            "merge-on-read over ORC data files: position-delete "
-            "application needs _metadata.row_index, which Spark's ORC "
-            "reader does not emit — rewrite the table or drop the "
-            "deletes")
+            "merge-on-read over ORC data files: row positions need "
+            "_metadata.row_index, which Spark's ORC reader does not "
+            "emit — rewrite the table or drop the deletes")
+    schema = iceberg_spark_schema(meta)
     name_mapped = bool((meta.get("properties") or {}).get(
         "schema.name-mapping.default"))
     if name_mapped:
@@ -1395,32 +1420,35 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
         raise IcebergProtocolError(
             "v3 initial-default over ORC data files is not supported "
             "(per-file field presence needs parquet footers)")
+    if rename and defaults:
+        raise IcebergProtocolError(
+            "initial-default over physically-renamed (name-mapped) "
+            "files is not supported in one table")
+    ident = ([F.col("_metadata.file_path").alias(_PROV_F),
+              F.col("_metadata.row_index").alias(_POS_IDX)]
+             if keyed else [])
     parts = []
-    if pq_paths:
+    if pq_paths or not orc_paths:     # no files: one empty parquet scan
         if not name_mapped:
             spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
                            "true")
-        if defaults:
-            # v3 column defaults: ``initial-default`` is the value of a
-            # field for every row written BEFORE the field existed —
-            # i.e. for data files whose footer carries neither the
-            # field id nor the name. Group the scan by the set of
-            # absent defaulted fields and materialize the literals per
-            # group (per-file FOOTER reads — the same metadata class as
-            # the stats/bounds work, never data-bounded).
-            from pyspark.sql import functions as _F
-
-            for absent, group in sorted(
-                    _group_by_absent_defaults(
-                        spark, table_path, pq_paths, defaults).items()):
-                part = spark.read.schema(schema).parquet(*group)
-                for fid in sorted(absent):
-                    name, lit_v, dt = defaults[fid]
-                    part = part.withColumn(
-                        name, _F.lit(lit_v).cast(dt))
-                parts.append(part)
-        else:
-            parts.append(spark.read.schema(schema).parquet(*pq_paths))
+        # v3 column defaults: ``initial-default`` is the value of a field
+        # for every row written BEFORE the field existed — i.e. for data
+        # files whose footer carries neither the field id nor the name.
+        # Group the scan by the set of absent defaulted fields and
+        # materialize the literals per group (per-file FOOTER reads —
+        # the same metadata class as the stats/bounds work, never
+        # data-bounded).
+        groups = (_group_by_absent_defaults(spark, table_path, pq_paths,
+                                            defaults)
+                  if defaults and pq_paths else {frozenset(): pq_paths})
+        for absent, group in sorted(groups.items()):
+            part = spark.read.schema(schema).parquet(*group) \
+                .select("*", *ident)
+            for fid in sorted(absent):
+                name, lit_v, dt = defaults[fid]
+                part = part.withColumn(name, F.lit(lit_v).cast(dt))
+            parts.append(part)
     if orc_paths:
         # Spark's native ORC reader resolves columns BY NAME (no
         # field-id matching like parquet's fieldId.read) — correct for
@@ -1435,19 +1463,14 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
     if rename:
         # back to logical: positional struct cast renames every nesting
         # level in one shot (_metadata stays resolvable for the
-        # provenance expressions below — empirically pinned by the
+        # partition re-attach below — empirically pinned by the
         # column-mapped read tests)
-        if _initial_defaults(_current_schema(meta)):
-            raise IcebergProtocolError(
-                "initial-default over physically-renamed (name-mapped) "
-                "files is not supported in one table")
-        from pyspark.sql import functions as _F
-
         scan = scan.select(*[
-            _F.col(p.name).cast(lf.dataType).alias(lf.name)
-            for p, lf in zip(schema.fields, logical_schema.fields)])
+            F.col(p.name).cast(lf.dataType).alias(lf.name)
+            for p, lf in zip(schema.fields, logical_schema.fields)],
+            *([_PROV_F, _POS_IDX] if keyed else []))
         schema = logical_schema
-    if name_mapped and files:
+    if name_mapped:
         # identity-partition values are METADATA-authoritative for
         # imported files (spec: readers use partition metadata for
         # identity transforms) — the Delta/hive layout UniForm syncs
@@ -1455,8 +1478,6 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
         # so they read back NULL by name; re-attach from the manifest
         # partition structs (broadcast map join on the file key, the
         # same shape as delta_log._attach_partition_columns)
-        from pyspark.sql import functions as F
-
         id_names = _identity_partition_names(meta) or []
         in_schema = [n for n in id_names
                      if n in {f.name for f in schema.fields}]
@@ -1482,16 +1503,9 @@ def read_iceberg_snapshot(spark: SparkSession, table_path: str,
                     n, F.col(f"__pv_{n}").cast(typed[n]))
             scan = scan.drop("__ice_fkey",
                              *[f"__pv_{n}" for n in in_schema])
-    if not deletes:
-        return scan
-    from pyspark.sql import functions as F
-
-    keyed = scan.select(
-        "*",
-        _file_key_expr(F.col("_metadata.file_path")).alias(_POS_KEY),
-        F.col("_metadata.row_index").alias(_POS_IDX))
-    return _apply_row_deletes(spark, keyed, table_path, files, deletes,
-                              meta)
+    if keyed:
+        scan = scan.withColumn(_POS_KEY, _file_key_expr(F.col(_PROV_F)))
+    return scan
 
 
 def resolve_iceberg_snapshot_at(meta: dict, ts_ms: int) -> int:
@@ -2780,18 +2794,7 @@ def read_iceberg_snapshot_with_row_ids(spark: SparkSession,
             f"{len(missing)} live file(s) carry no first_row_id — "
             f"explicit or inherited from the manifest's first_row_id "
             f"assignment; run enable_iceberg_row_lineage to backfill")
-    if any((f.get("file_format") or "PARQUET").upper() != "PARQUET"
-           for f in files):
-        raise IcebergProtocolError(
-            "row lineage needs _metadata.row_index: parquet data files "
-            "only")
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    scan = spark.read.schema(schema).parquet(
-        *[_resolve_path(root, f["file_path"]) for f in files])
-    keyed = scan.select(
-        "*",
-        _file_key_expr(F.col("_metadata.file_path")).alias(_POS_KEY),
-        F.col("_metadata.row_index").alias(_POS_IDX))
+    keyed = _scan_data_files(spark, root, meta, files, keyed=True)
     if deletes:
         keyed = _apply_row_deletes(spark, keyed, root, files, deletes,
                                    meta, drop_helpers=False)
@@ -3149,39 +3152,43 @@ def _compact(spark: SparkSession, table_path: str, meta: dict,
 
 def _provenance_scan(spark: SparkSession, table_path: str, meta: dict,
                      op: str):
-    """Current snapshot WITH ``(__ice_prov_f, __ice_prov_p)`` file/
-    position provenance and prior row deletes APPLIED — the shared scan
-    behind every position-addressed row op (position deletes, DV
-    deletes, UPDATE): rows already dead in an earlier delete snapshot
-    are never re-recorded. Returns ``(cur_df, files, deletes)``."""
-    from pyspark.sql import functions as F
-
+    """Current snapshot WITH ``(_PROV_F, _PROV_P)`` file/position
+    provenance and prior row deletes APPLIED — the shared scan behind
+    every position-addressed row op (position deletes, DV deletes,
+    UPDATE, MERGE): rows already dead in an earlier delete snapshot are
+    never re-recorded. It is the snapshot read's own per-file scan, so
+    v3 ``initial-default`` and name mapping hold for DML as for reads.
+    Returns ``(cur, files, deletes)``, ``files`` keyed by the
+    ``_POS_KEY`` every row also carries."""
     deletes: list[dict] = []
-    files = live_data_files(spark, table_path, meta, None,
-                            deletes_out=deletes)
+    files = _keyed_files(table_path, live_data_files(
+        spark, table_path, meta, None, deletes_out=deletes))
     if any((f.get("file_format") or "PARQUET").upper() == "ORC"
-           for f in files):
+           for f in files.values()):
         raise IcebergProtocolError(
             f"{op} over ORC data files: row positions need "
             f"_metadata.row_index, which Spark's ORC reader does not "
             f"emit")
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    # reserved provenance names — bare aliases like "f"/"p" collide
-    # with same-named TABLE columns and make every reference ambiguous
-    cur = (spark.read.schema(iceberg_spark_schema(meta)).parquet(
-        *[_resolve_path(table_path, f["file_path"]) for f in files])
-        .select("*", F.col("_metadata.file_path").alias(_PROV_F),
-                F.col("_metadata.row_index").alias(_PROV_P)))
-    if deletes:
-        keyed = cur.select(
-            "*", _file_key_expr(F.col(_PROV_F)).alias(_POS_KEY),
-            F.col(_PROV_P).alias(_POS_IDX))
-        cur = _apply_row_deletes(spark, keyed, table_path, files,
-                                 deletes, meta)
-    return cur, files, deletes
+    return (_provenance_rows(spark, table_path, meta, files, deletes,
+                             list(files.values())), files, deletes)
 
 
-_PROV_F, _PROV_P = "__ice_prov_f", "__ice_prov_p"
+def _provenance_rows(spark: SparkSession, table_path: str, meta: dict,
+                     files: dict[str, dict], deletes: list[dict],
+                     subset: list[dict]) -> DataFrame:
+    """The ``_provenance_scan`` rows of ``subset``, some of the live
+    ``files``."""
+    rows = _scan_data_files(spark, table_path, meta, subset, keyed=True)
+    if not deletes:
+        return rows
+    return _apply_row_deletes(spark, rows, table_path,
+                              list(files.values()), deletes, meta,
+                              drop_helpers=False)
+
+
+#: provenance columns of DML scans; the row position is the same column
+#: the row-delete apply joins on
+_PROV_F, _PROV_P = "__ice_prov_f", _POS_IDX
 
 
 def _pos_norm_udf():
@@ -3277,18 +3284,11 @@ def _dv_delete_entries_distributed(spark: SparkSession, table_path: str,
     rows themselves. Mirrors the Delta writer's ``_dv_stamp_actions``
     engine; the v3 one-DV-per-file supersede set is computed from the
     affected-file list (itself O(files))."""
-    from urllib.parse import unquote as _unq
-
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
     from . import delta_dv, puffin
 
-    @pandas_udf("string")
-    def _norm(s):
-        return s.map(lambda p: re.sub(r"^file:/+", "/", _unq(p)))
-
-    keyed = pos_df.select(_norm(F.col(_PROV_F)).alias("fp"),
+    keyed = pos_df.select(_pos_norm_udf()(F.col(_PROV_F)).alias("fp"),
                           F.col(_PROV_P).cast("long").alias("pos"))
     affected = sorted(r.fp for r in keyed.select("fp")
                       .distinct().collect())       # O(affected files)
@@ -3519,39 +3519,48 @@ def _row_ops(spark: SparkSession, table, verb: str, mode: str,
              max_retries: int, operation: str, derive) -> int:
     """The one derive → stage → commit loop of DELETE, UPDATE and MERGE
     on both transports (``table``: see ``_commit_loop``). Each attempt
-    scans the loaded head with file/position provenance and prior row
-    deletes applied, and ``derive(schema_fields, cur)`` returns
-    ``(dead_pos, new_rows, doomed_any, has_new)``. New rows stage as
-    data files under the default spec; doomed positions stage as a v2
-    position-delete parquet, or as deletion vectors when ``mode='dv'``
-    or the table is already format-version 3 (v3 deprecates
-    position-delete files), unioned with any prior DV of the same file.
-    Nothing staged -> no commit; a lost race re-derives against the new
-    head."""
+    scans the loaded head with ``_provenance_scan``; ``derive(
+    schema_fields, cur, files, scan)`` — ``scan(subset)`` reads some of
+    the live ``files`` the same way — is a context manager yielding
+    ``(dead_pos, new_rows)``, either possibly None, and holding what it
+    persisted until both are staged. New rows stage as data files under
+    the default spec, a zero-row file dropped; doomed positions stage as
+    a v2 position-delete parquet, or as deletion vectors when
+    ``mode='dv'`` or the table is already format-version 3 (v3
+    deprecates position-delete files), unioned with any prior DV of the
+    same file. Nothing staged -> no commit; a lost race re-derives
+    against the new head."""
     if mode not in ("position", "dv"):
         raise ValueError(f"mode must be position|dv, got {mode!r}")
 
     def attempt(root: str, meta: dict):
         fields = _current_schema(meta)["fields"]
-        cur, _, prior = _provenance_scan(spark, root, meta, verb)
-        dead, new_rows, doomed_any, has_new = derive(fields, cur)
+        cur, files, prior = _provenance_scan(spark, root, meta, verb)
+        scan = functools.partial(_provenance_rows, spark, root, meta,
+                                 files, prior)
         tag = uuid.uuid4().hex[:12]
         spec_id, part_fields = _default_spec_part_fields(meta, fields)
         snapshot = {"operation": operation, "deletes": [], "data": [],
                     "part_fields": part_fields, "spec_id": spec_id}
-        if has_new:
-            snapshot["data"] = _stage_commit(
-                spark, new_rows, root, fields, part_fields,
-                _next_snapshot_id(meta), tag)
-        if doomed_any and (mode == "dv"
-                           or int(meta.get("format-version", 1)) >= 3):
-            snapshot["deletes"], snapshot["supersede_dv_keys"] = \
-                _dv_delete_entries_distributed(spark, root, root, meta,
-                                               dead, prior, tag)
-            snapshot["format_version"] = 3
-        elif doomed_any:
-            snapshot["deletes"] = _position_delete_entries_distributed(
-                spark, root, dead, tag)
+        with derive(fields, cur, files, scan) as (dead, new_rows):
+            if new_rows is not None:
+                for e in _stage_commit(spark, new_rows, root, fields,
+                                       part_fields, _next_snapshot_id(meta),
+                                       tag):
+                    if e["data_file"]["record_count"]:
+                        snapshot["data"].append(e)
+                    else:
+                        os.remove(e["data_file"]["file_path"])
+            if dead is not None and (
+                    mode == "dv" or int(meta.get("format-version", 1)) >= 3):
+                snapshot["deletes"], snapshot["supersede_dv_keys"] = \
+                    _dv_delete_entries_distributed(spark, root, root, meta,
+                                                   dead, prior, tag)
+                if snapshot["deletes"]:
+                    snapshot["format_version"] = 3
+            elif dead is not None:
+                snapshot["deletes"] = _position_delete_entries_distributed(
+                    spark, root, dead, tag)
         return snapshot if snapshot["deletes"] or snapshot["data"] \
             else None
 
@@ -3559,17 +3568,17 @@ def _row_ops(spark: SparkSession, table, verb: str, mode: str,
 
 
 def _derive_delete(predicate_sql: str, schema_fields: list[dict],
-                   cur: DataFrame):
-    """DELETE's ``_row_ops`` derivation: the matched rows' positions.
-    No emptiness probe — the staged delete files tell."""
+                   cur: DataFrame, files: dict, scan):
+    """DELETE's ``_row_ops`` derivation: the matched rows' positions."""
     from pyspark.sql import functions as F
 
-    return (cur.filter(F.expr(predicate_sql)).select(_PROV_F, _PROV_P),
-            None, True, False)
+    return contextlib.nullcontext(
+        (cur.filter(F.expr(predicate_sql)).select(_PROV_F, _PROV_P), None))
 
 
 def _derive_update(predicate_sql: str, set_exprs: dict[str, str],
-                   schema_fields: list[dict], cur: DataFrame):
+                   schema_fields: list[dict], cur: DataFrame, files: dict,
+                   scan):
     """UPDATE's ``_row_ops`` derivation: the matched rows' positions die
     and their post-images are re-inserted, every SET expression bound to
     the PRE-update row."""
@@ -3585,9 +3594,7 @@ def _derive_update(predicate_sql: str, set_exprs: dict[str, str],
         F.expr(set_exprs.get(f["name"], f["name"]))
         .cast(_spark_type(f["type"])).alias(f["name"])
         for f in schema_fields])
-    dead = matched.select(_PROV_F, _PROV_P)
-    hit = bool(dead.take(1))
-    return dead, post, hit, hit
+    return contextlib.nullcontext((matched.select(_PROV_F, _PROV_P), post))
 
 
 def write_iceberg_equality_deletes(spark: SparkSession, table_path: str,
@@ -3791,18 +3798,21 @@ def iceberg_update_where(spark: SparkSession, table_path: str,
                                       set_exprs))
 
 
+@contextlib.contextmanager
 def _derive_merge(source: DataFrame, on: list[str],
                   when_matched_update: dict[str, str] | None,
                   when_matched_delete: str | None,
                   when_not_matched_insert: bool,
-                  schema_fields: list[dict], cur: DataFrame):
-    """Shared MERGE derivation over a provenance-scanned target ``cur``:
-    validates clause arguments, joins target and source on the merge
-    keys, applies the nondeterministic-match guard, and returns
-    ``(dead_pos, new_rows, doomed_any, has_new)`` — the doomed-position
-    frame, the post-image/insert frame (or None), and their emptiness
-    probes — MERGE's ``_row_ops`` derivation on both transports."""
+                  schema_fields: list[dict], cur: DataFrame, files: dict,
+                  scan):
+    """MERGE's ``_row_ops`` derivation on both transports: validates the
+    clause arguments and plans the merge with
+    ``operators.merge.two_pass_merge``. The matched rows' provenance are
+    the dead positions; the update post-images and the inserts are the
+    new rows."""
     from pyspark.sql import functions as F
+
+    from ..operators.merge import two_pass_merge
 
     names = [f["name"] for f in schema_fields]
     bad_on = [c for c in on if c not in names]
@@ -3818,60 +3828,22 @@ def _derive_merge(source: DataFrame, on: list[str],
         raise ValueError(
             f"insert clause needs the full table schema on the "
             f"source; missing {missing_src}")
-
-    t = cur.alias("t")
-    s = source.alias("s")
-    cond = None
-    for c in on:
-        eq = F.col(f"t.{c}").eqNullSafe(F.col(f"s.{c}"))
-        cond = eq if cond is None else (cond & eq)
-    joined = t.join(s, cond, "inner")
-    pf, pp = f"t.{_PROV_F}", f"t.{_PROV_P}"
-    # nondeterministic-merge guard: >1 source row per target row
-    dup = (joined.groupBy(F.col(pf), F.col(pp)).count()
-           .filter(F.col("count") > 1).limit(1).count())
-    if dup:
-        raise ValueError(
-            "MERGE matched multiple source rows to one target row; "
-            "deduplicate the source on the merge keys first")
-
-    dead_cond = (F.expr(when_matched_delete)
-                 if when_matched_delete is not None else F.lit(False))
-    # NULL delete conditions fall through to the UPDATE clause
-    # (Delta clause semantics; three-valued ~NULL would drop the row
-    # from BOTH branches — ADVICE r12)
-    dead_cond = F.coalesce(dead_cond, F.lit(False))
-    upd = joined.filter(~dead_cond) if when_matched_update else None
-
-    def _pos(df):
-        return df.select(F.col(pf).alias(_PROV_F),
-                         F.col(pp).alias(_PROV_P))
-
-    dead_pos = _pos(joined.filter(dead_cond))
-    if when_matched_update:
-        # updated rows' OLD positions die too (project provenance
-        # FIRST: the joined frame carries duplicate column names)
-        dead_pos = dead_pos.unionByName(_pos(upd))
-    doomed_any = bool(dead_pos.take(1))
-
-    pieces = []
-    if when_matched_update:
-        pieces.append(upd.select(*[
-            F.expr(when_matched_update.get(f["name"], f't.{f["name"]}'))
-            .cast(_spark_type(f["type"])).alias(f["name"])
-            for f in schema_fields]))
-    if when_not_matched_insert:
-        anti = s.join(t, cond, "left_anti")
-        pieces.append(anti.select(*[
-            F.col(f's.{f["name"]}')
-            .cast(_spark_type(f["type"])).alias(f["name"])
-            for f in schema_fields]))
-    new_rows = None
-    for p_df in pieces:
-        new_rows = p_df if new_rows is None \
-            else new_rows.unionByName(p_df)
-    has_new = new_rows is not None and bool(new_rows.take(1))
-    return dead_pos, new_rows, doomed_any, has_new
+    types = {f["name"]: _spark_type(f["type"]) for f in schema_fields}
+    with two_pass_merge(cur, scan, files, _POS_KEY, on, source, types,
+                        when_matched_update, when_matched_delete,
+                        when_not_matched_insert) as m:
+        dead, parts = None, []
+        if m.joined is not None:
+            dead = m.joined.filter(m.delete | m.update).select(
+                F.col(f"t.{_PROV_F}").alias(_PROV_F),
+                F.col(f"t.{_PROV_P}").alias(_PROV_P))
+            if when_matched_update is not None:
+                parts.append(m.joined.filter(m.update).select(*m.post))
+        if m.inserts is not None:
+            parts.append(m.inserts.select(
+                *[F.col(c).cast(dt).alias(c) for c, dt in types.items()]))
+        yield dead, functools.reduce(DataFrame.unionByName, parts) \
+            if parts else None
 
 
 def iceberg_merge_into(spark: SparkSession, table_path: str,
@@ -3900,11 +3872,15 @@ def iceberg_merge_into(spark: SparkSession, table_path: str,
     Physical form (no rewrite, MoR): matched rows' old positions become
     position deletes (or deletion vectors, ``mode='dv'`` / v3 tables);
     update post-images and inserts stage as new data files; one snapshot
-    references all of it. Multiple source rows matching one target row
-    raise ``ValueError`` (nondeterministic-merge protection, bounded
-    |matched-positions| aggregate probed with limit(1), never a
-    collect). Nothing matched AND nothing to insert -> no commit. A lost
-    metadata CAS re-derives against the new head and retries."""
+    references all of it. The plan is the Delta writer's: one
+    aggregate over the target's keys, then one persisted join over the
+    files a source key hits (``operators.merge.two_pass_merge``), which
+    serves the position deletes, the post-images and the inserts. With
+    a matched clause, multiple source rows matching one target row raise
+    ``ValueError`` (nondeterministic-merge protection) before anything
+    is staged; an insert-only merge takes them. Nothing matched AND
+    nothing to insert -> no commit. A lost metadata CAS re-derives
+    against the new head and retries."""
     return _row_ops(spark, _local_rows(spark, table_path,
                                        "iceberg_merge_into"),
                     "MERGE INTO", mode, max_retries, "overwrite",

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 
@@ -3811,6 +3812,115 @@ def test_iceberg_merge_into_pure_insert_and_dv_mode(spark, tmp_path):
             read_iceberg_snapshot(spark, t).collect()} == expect
 
 
+def _merge_fixture(spark, t):
+    """200 rows in 8 files, one key range per file, and a source that
+    updates keys 0, 4 and 8 (all in the first file) and inserts 300 and
+    301."""
+    from databricks_import_pyspark_scripts_spark.session import local_frame
+
+    df = spark.range(0, 200).selectExpr("id AS k", "CAST(id AS double) AS v")
+    write_iceberg_table(spark, [df.repartitionByRange(8, "k")], t)
+    return local_frame(
+        spark, [(0, 100.0), (4, 100.0), (8, 100.0), (300, 1.0), (301, 2.0)],
+        "k long, v double")
+
+
+def test_iceberg_merge_job_budget(spark, tmp_path):
+    """An update-plus-insert Iceberg merge runs one probe over the target
+    and one join over the touched file, shared by the data write and the
+    position-delete write. Measured on this fixture: the earlier merge
+    (a duplicate probe, emptiness probes on the dead positions and the
+    new rows, and a full-table anti-join for the inserts) ran 17 jobs;
+    the two-pass merge runs 11."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        iceberg_merge_into,
+    )
+
+    t = str(tmp_path / "budget")
+    src = _merge_fixture(spark, t)
+    sc = spark.sparkContext
+    sc.setJobGroup("test-iceberg-merge-job-budget", "iceberg merge budget")
+    try:
+        iceberg_merge_into(spark, t, src, ["k"],
+                           when_matched_update={"v": "t.v + s.v"})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(
+        "test-iceberg-merge-job-budget")
+    assert 0 < len(jobs) <= 12
+    got = {r.k: r.v for r in read_iceberg_snapshot(spark, t).collect()}
+    assert len(got) == 202
+    assert (got[0], got[4], got[300]) == (100.0, 104.0, 1.0)
+
+
+def test_iceberg_merge_inserts_scan_only_hit_files(spark, tmp_path,
+                                                   monkeypatch):
+    """The rows a merge stages (post-images and inserts) are planned over
+    the one file a source key hits: no scan in their plan reads any of
+    the other seven live files, so the inserts never anti-join the whole
+    table."""
+    from databricks_import_pyspark_scripts_spark.sources import iceberg
+
+    t = str(tmp_path / "hit")
+    src = _merge_fixture(spark, t)
+    plans = []
+    real = iceberg._stage_commit
+
+    def spy(spark_, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(spark_, df, *args, **kwargs)
+
+    monkeypatch.setattr(iceberg, "_stage_commit", spy)
+    iceberg.iceberg_merge_into(spark, t, src, ["k"],
+                               when_matched_update={"v": "t.v + s.v"})
+    (plan,) = plans
+    scanned = [int(n) for n in re.findall(r"InMemoryFileIndex\((\d+) paths",
+                                          plan)]
+    assert scanned and set(scanned) == {1}
+
+
+def test_iceberg_merge_releases_cached_join(spark, tmp_path, monkeypatch):
+    """The join an Iceberg merge stages from is persisted only for the
+    attempt: nothing stays persisted after a commit, after a merge that
+    raises once the join is cached, or after an attempt that loses the
+    commit race and re-derives."""
+    from databricks_import_pyspark_scripts_spark.operators.lineage import (
+        persistent_rdd_ids,
+    )
+    from databricks_import_pyspark_scripts_spark.sources import iceberg
+
+    t = str(tmp_path / "rel")
+    src = _merge_fixture(spark, t)
+    before = persistent_rdd_ids(spark)
+    iceberg.iceberg_merge_into(spark, t, src, ["k"],
+                               when_matched_update={"v": "t.v + s.v"})
+    assert persistent_rdd_ids(spark) == before
+
+    with pytest.raises(Exception, match="merge-staging-boom"):
+        iceberg.iceberg_merge_into(
+            spark, t, src, ["k"],
+            when_matched_update={
+                "v": "IF(s.v > 0, raise_error('merge-staging-boom'), t.v)"})
+    assert persistent_rdd_ids(spark) == before
+
+    real = iceberg._commit_delete_snapshot
+    state = {"lost": 0}
+
+    def lose_once(*args, **kwargs):
+        if not state["lost"]:
+            state["lost"] += 1
+            raise iceberg.IcebergCommitConflict("lost the race")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(iceberg, "_commit_delete_snapshot", lose_once)
+    iceberg.iceberg_merge_into(spark, t, src, ["k"],
+                               when_matched_update={"v": "t.v + s.v"})
+    assert state["lost"] == 1
+    assert persistent_rdd_ids(spark) == before
+    got = {r.k: r.v for r in read_iceberg_snapshot(spark, t).collect()}
+    assert (got[0], got[4], got[300]) == (200.0, 204.0, 2.0)
+
+
 def test_expire_after_dml_keeps_live_delete_files(spark, tmp_path):
     """Snapshot expiration over a DML history: the puffin DV and the
     update's post-image files are referenced by the CURRENT snapshot, so
@@ -4319,10 +4429,10 @@ def test_update_where_on_row_lineage_table_assigns_fresh_ids(spark,
     assert int(read_table_metadata(spark, t)["next-row-id"]) == hwm + 5
 
 
-def _lineage_table(spark, t):
+def _lineage_table(spark, t, initial_default=False):
     """20 rows in one file with row lineage on (v3, next-row-id 20), then
-    an optional int column ``flag`` added with write-default 7 (and no
-    initial-default, so the first file reads it as NULL)."""
+    an optional int column ``flag`` added with write-default 7. Without
+    ``initial_default`` the first file reads it as NULL; with it, as 7."""
     from databricks_import_pyspark_scripts_spark.sources.iceberg import (
         _commit_metadata,
         enable_iceberg_row_lineage,
@@ -4336,7 +4446,8 @@ def _lineage_table(spark, t):
         schema = dict(meta["schemas"][0])
         schema["fields"] = schema["fields"] + [
             {"id": 3, "name": "flag", "required": False, "type": "int",
-             "write-default": 7}]
+             "write-default": 7,
+             **({"initial-default": 7} if initial_default else {})}]
         return {**meta, "schemas": [schema]}, None
 
     _commit_metadata(spark, t, "add column", add_flag)
@@ -4396,22 +4507,27 @@ def _catalog_for(tmp_path, t, transport):
 
 @pytest.mark.parametrize("op", ["append", "append_default",
                                 "delete_position", "delete_dv", "update",
-                                "merge"])
+                                "merge", "update_initial_default",
+                                "merge_initial_default"])
 def test_local_and_catalog_writes_agree(spark, tmp_path, op):
     """Each write verb leaves the same table whether it commits to the
     file layout or through the REST catalog: same rows, same
     next-row-id, format-version and head operation, and unique row ids
     (every added file carries a first_row_id). The table has row lineage
     on and a write-default column, so an append that omits ``flag`` must
-    write 7 on both transports."""
+    write 7 on both transports. In the ``*_initial_default`` cases the
+    column also has initial-default 7: the rows an UPDATE or MERGE
+    rewrites keep the 7 they read, and the table stays readable."""
     from databricks_import_pyspark_scripts_spark.sources.iceberg import (
         read_iceberg_snapshot_with_row_ids,
     )
 
+    initial = op.endswith("_initial_default")
+    op = op.removesuffix("_initial_default")
     ends = {}
     for transport in ("local", "catalog"):
         t = str(tmp_path / f"{op}_{transport}")
-        _lineage_table(spark, t)
+        _lineage_table(spark, t, initial_default=initial)
         _run_write(spark, op, t, _catalog_for(tmp_path, t, transport))
         meta = read_table_metadata(spark, t)
         head = next(s for s in meta["snapshots"]
@@ -4431,6 +4547,13 @@ def test_local_and_catalog_writes_agree(spark, tmp_path, op):
         flags = {k: f for k, _, f in ends["local"][0]}
         assert [flags[k] for k in range(100, 105)] == (
             [7] * 5 if op == "append_default" else list(range(100, 105)))
+    if initial:
+        flags = {k: f for k, _, f in ends["local"][0]}
+        # UPDATE rewrites k % 4 = 2, MERGE updates 15..19 and inserts
+        # 20..24 with the source's flag 1
+        assert flags == {k: 1 if k >= 20 else 7 for k in flags}
+        assert sorted(flags) == (list(range(25)) if op == "merge"
+                                 else list(range(20)))
 
 
 @pytest.mark.parametrize("transport", ["local", "catalog"])

@@ -410,3 +410,107 @@ def test_checkpoint_scope_releases_on_exception(spark):
             assert len(persistent_rdd_ids(spark) - base) == 1
             raise RuntimeError("boom")
     assert persistent_rdd_ids(spark) - base == set()
+
+
+# ---------------------------------------------------------------------------
+# the MERGE planner both table formats share
+
+_PARITY_TARGET = [(k, float(k)) for k in range(10)] + [(None, -1.0)]
+
+#: case -> (source rows, merge clauses, expected rows | None to raise)
+_PARITY_CASES = {
+    # update 2, delete 3 (delete wins over update), insert 100
+    "three_clauses": (
+        [(2, 20.0), (3, 30.0), (100, 1.0)],
+        {"when_matched_update": {"v": "t.v + s.v"},
+         "when_matched_delete": "t.k = 3"},
+        [(k, float(k)) for k in range(10) if k not in (2, 3)]
+        + [(2, 22.0), (100, 1.0), (None, -1.0)]),
+    # a NULL key matches the NULL target key under <=>
+    "null_key": (
+        [(None, 5.0), (11, 11.0)],
+        {"when_matched_update": {"v": "s.v"}},
+        [(k, float(k)) for k in range(10)] + [(11, 11.0), (None, 5.0)]),
+    # key 4's delete condition is NULL: it falls through to the update
+    "null_delete_falls_through": (
+        [(4, None), (5, 500.0), (6, 6.5)],
+        {"when_matched_update": {"v": "coalesce(s.v, t.v + 1000)"},
+         "when_matched_delete": "s.v > 100"},
+        [(k, float(k)) for k in range(10) if k not in (4, 5, 6)]
+        + [(4, 1004.0), (6, 6.5), (None, -1.0)]),
+    # two source rows on key 2 cannot both update it
+    "duplicate_matched": (
+        [(2, 1.0), (2, 2.0)],
+        {"when_matched_update": {"v": "s.v"}},
+        None),
+    # an insert-only merge leaves key 2 alone, however often it appears
+    "duplicate_insert_only": (
+        [(2, 1.0), (2, 2.0), (200, 3.0)],
+        {},
+        _PARITY_TARGET + [(200, 3.0)]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY_CASES))
+def test_delta_and_iceberg_merge_agree(spark, tmp_path, case):
+    """The same source merged into the same rows leaves the same table in
+    Delta and in Iceberg, or raises in both."""
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        create_delta_table,
+        merge_into,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.delta_log import (
+        read_delta_snapshot,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        iceberg_merge_into,
+        read_iceberg_snapshot,
+        write_iceberg_table,
+    )
+
+    src_rows, clauses, expect = _PARITY_CASES[case]
+    schema = "k long, v double"
+    target = spark.createDataFrame(_PARITY_TARGET, schema).coalesce(2)
+    source = spark.createDataFrame(src_rows, schema)
+    delta, ice = str(tmp_path / "delta"), str(tmp_path / "ice")
+    create_delta_table(spark, target, delta, ts_ms=1000)
+    write_iceberg_table(spark, [target], ice)
+    if expect is None:
+        with pytest.raises(ValueError, match="multiple source rows"):
+            merge_into(spark, delta, source, ["k"], ts_ms=2000, **clauses)
+        with pytest.raises(ValueError, match="multiple source rows"):
+            iceberg_merge_into(spark, ice, source, ["k"], **clauses)
+        return
+    merge_into(spark, delta, source, ["k"], ts_ms=2000, **clauses)
+    iceberg_merge_into(spark, ice, source, ["k"], **clauses)
+
+    def table_rows(df):
+        return sorted((tuple(r) for r in df.select("k", "v").collect()),
+                      key=lambda r: (r[0] is None, r[0] or 0))
+
+    want = table_rows(spark.createDataFrame(expect, schema))
+    assert table_rows(read_delta_snapshot(spark, delta)) == want
+    assert table_rows(read_iceberg_snapshot(spark, ice)) == want
+
+
+def test_merges_share_one_planner():
+    """Delta's ``merge_into`` and Iceberg's merge derivation both plan
+    through ``operators.merge.two_pass_merge``, and neither joins the
+    target to the source itself."""
+    import ast
+    import inspect
+    import textwrap
+
+    from databricks_import_pyspark_scripts_spark.sinks import delta_writer
+    from databricks_import_pyspark_scripts_spark.sources import iceberg
+
+    for fn in (delta_writer.merge_into, iceberg._derive_merge):
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+        calls = [n.func for n in ast.walk(tree) if isinstance(n, ast.Call)]
+        names = {c.id for c in calls if isinstance(c, ast.Name)}
+        # frame joins only: a string literal's join builds text
+        joins = [c for c in calls if isinstance(c, ast.Attribute)
+                 and c.attr == "join"
+                 and not isinstance(c.value, ast.Constant)]
+        assert "two_pass_merge" in names, fn.__name__
+        assert not joins, fn.__name__
