@@ -34,9 +34,11 @@ def _key_cond(left: str, right: str, keys: list[str]) -> Column:
 
 @dataclass
 class MergeJoin:
-    """A planned MERGE. ``joined`` is the persisted left join of the hit
-    files (alias ``t``) to the source (alias ``s``), or None when the
-    merge has no matched clause or no source key hit the target.
+    """A planned MERGE, and the record every Delta row-level verb
+    commits from (``sinks/delta_writer._commit_rows``). ``joined`` is
+    the persisted left join of the hit files (alias ``t``) to the source
+    (alias ``s``), or None when the merge has no matched clause or no
+    source key hit the target.
     ``delete`` and ``update`` select the matched rows each clause takes
     (a NULL delete condition falls through to the update); ``post`` is
     the row after the merge, with the SET expressions applied to updated
@@ -48,6 +50,17 @@ class MergeJoin:
     update: Column
     post: list[Column]
     inserts: DataFrame | None
+
+
+def post_image(types: dict, cond: Column,
+               update: dict[str, str] | None) -> list[Column]:
+    """The row after an update, over a frame aliased ``t``: each column
+    of ``types`` (name to type, in table order) takes its SET expression,
+    cast to its type, where ``cond`` holds, else keeps its value."""
+    return [F.when(cond, F.expr(update[c]).cast(dt))
+            .otherwise(F.col(f"t.{c}")).alias(c)
+            if update and c in update else F.col(f"t.{c}").alias(c)
+            for c, dt in types.items()]
 
 
 @contextmanager
@@ -120,10 +133,7 @@ def two_pass_merge(target: DataFrame, scan, files: dict, file_col: str,
                                                     F.lit(False))
             if update is not None:
                 update_cond = is_match & ~delete_cond
-        post = [F.when(update_cond, F.expr(update[c]).cast(dt))
-                .otherwise(F.col(f"t.{c}")).alias(c)
-                if update and c in update else F.col(f"t.{c}").alias(c)
-                for c, dt in types.items()]
+        post = post_image(types, update_cond, update)
         inserts = source if insert else None
         if insert and hit:
             # a matched key equals its target key under <=>

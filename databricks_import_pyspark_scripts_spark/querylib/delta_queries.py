@@ -860,8 +860,9 @@ def _staged_dvm_table(spark: SparkSession, sf_dir: str) -> str:
     doc="DV-PRODUCING MERGE round-trip (sinks/delta_writer.py "
         "merge_into(use_dv=True), the Databricks-default DBR 14+ MERGE "
         "layout): one commit stamps matched rows' old positions dead "
-        "via roaring-bitmap deletion vectors on the shared "
-        "_dv_stamp_actions engine — every pre-merge file stays live, "
+        "via roaring-bitmap deletion vectors in the row-level commit "
+        "DELETE and UPDATE share (_commit_rows, _dv_stamp_actions) — "
+        "every pre-merge file stays live, "
         "bitmaps built executor-side — while update post-images "
         "(t.value + s.value = value doubled, the source being the same "
         "events row) and not-matched inserts stage as new files; the "

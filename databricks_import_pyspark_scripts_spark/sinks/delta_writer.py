@@ -27,15 +27,18 @@ Concurrency Control", "Add CDC File", "Checkpoints"):
   here are data-skipping-capable from birth. Partition columns live in
   ``partitionValues`` and are NOT duplicated into the data files, exactly
   the layout the replay reader re-attaches from.
-* DELETE / UPDATE with CDF enabled write explicit ``cdc`` change files
-  under ``_change_data/`` (``delete`` / ``update_preimage`` /
-  ``update_postimage`` rows): file-op synthesis would double-count the
-  untouched rows of rewritten files. Plain appends and overwrites write no
-  cdc files — readers synthesize insert/delete from add/remove actions,
-  as Delta itself does.
-* DELETE / UPDATE on deletion-vector tables are handled by rewrite: the
-  scan already drops DV-deleted rows, so rewritten files come out
-  DV-free (a compaction) and the stale DV'd file is ``remove``d.
+* DELETE, UPDATE, MERGE and replaceWhere share one commit
+  (``_commit_rows``). With CDF enabled it writes explicit ``cdc`` change
+  files under ``_change_data/`` (``delete`` / ``update_preimage`` /
+  ``update_postimage`` / ``insert`` rows): file-op synthesis would
+  double-count the untouched rows of rewritten files. Plain appends and
+  overwrites write no cdc files — readers synthesize insert/delete from
+  add/remove actions, as Delta itself does.
+* DELETE, UPDATE and MERGE write one of two layouts. The default
+  rewrite removes the touched files and stages their surviving rows;
+  the scan already drops DV-deleted rows, so rewritten files come out
+  DV-free (a compaction). ``use_dv=True`` stamps the dead rows'
+  positions into deletion vectors instead and stages only new rows.
 
 Reference parity: the reference only READS Delta and writes parquet/JSON
 exports (unload_databricks_data_to_s3.py:399-403); this module is
@@ -64,6 +67,7 @@ from ..sources.delta_log import (
     _exists,
     _file_stats_json,
     _FILE_BASE,
+    _ROW_INDEX,
     _is_local,
     _scan_files,
     _strip_scheme,
@@ -79,8 +83,9 @@ _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 #: (invariants, constraints, generated/identity columns) are only safe when
 #: no such artifact is declared — ``_check_writable`` verifies that from the
 #: schema/configuration, so listing them here is not a blanket bypass.
-#: ``deletionVectors`` is writable because this writer never PRODUCES DVs
-#: and its rewrites (delete/update) fold existing DVs into plain files.
+#: ``deletionVectors`` is writable: the DV layout of DELETE/UPDATE/MERGE
+#: writes deletion vectors (``_dv_stamp_actions``) and every rewrite
+#: folds existing DVs into plain files.
 SUPPORTED_WRITER_FEATURES = {
     "appendOnly", "invariants", "checkConstraints", "changeDataFeed",
     "generatedColumns", "identityColumns", "deletionVectors",
@@ -261,7 +266,7 @@ def _identity_cols(schema) -> dict[str, dict]:
     return out
 
 
-def _generate_identity(df: DataFrame, schema) -> tuple[DataFrame, bool]:
+def _generate_identity(df: DataFrame, schema) -> DataFrame:
     """Fill ABSENT identity columns with fresh values above the high
     watermark: ``hwm + step * (1 + monotonically_increasing_id())`` —
     one pass, no shuffle, executor-parallel; the sparse ranges the id
@@ -272,9 +277,7 @@ def _generate_identity(df: DataFrame, schema) -> tuple[DataFrame, bool]:
     BY DEFAULT). The real committed watermark is derived later from the
     STAGED FILES' stats (_identity_hwm_update), so plan re-execution can
     never desync values from metadata."""
-    ids = _identity_cols(schema)
-    changed = False
-    for name, spec in ids.items():
+    for name, spec in _identity_cols(schema).items():
         if name in df.columns:
             if not spec["explicit"]:
                 raise DeltaProtocolError(
@@ -289,8 +292,7 @@ def _generate_identity(df: DataFrame, schema) -> tuple[DataFrame, bool]:
             (F.lit(base + spec["step"])
              + F.lit(spec["step"]) * F.monotonically_increasing_id())
             .cast(dt))
-        changed = True
-    return df, changed
+    return df
 
 
 def _identity_hwm_update(rep, adds: list[dict],
@@ -412,8 +414,6 @@ def _rt_scan_with_ids(spark: SparkSession, table_path: str, rep,
     ids survive a rewrite without a bitmap. ``keep_row_index`` retains
     the physical position column for the DV paths, which stamp dead
     positions from the same scan."""
-    from ..sources.delta_log import _ROW_INDEX
-
     rid_col, rcv_col = _rt_cols(rep.metadata)
     missing = [a["path"] for a in actions if a.get("baseRowId") is None]
     if missing:
@@ -929,8 +929,7 @@ def append_delta(spark: SparkSession, df: DataFrame, table_path: str,
     _check_writable(rep.metadata, rep.protocol, "append")
     if txn_app_id is not None and             rep.txns.get(txn_app_id, -1) >= txn_version:
         return rep.version  # already committed: idempotent replay
-    df, _ = _generate_identity(df, rep.schema)
-    df = _compute_generated(df, rep.schema)
+    df = _compute_generated(_generate_identity(df, rep.schema), rep.schema)
     meta_action: list[dict] = []
     ordered = None
     if merge_schema:
@@ -1105,8 +1104,7 @@ def overwrite_delta(spark: SparkSession, df: DataFrame, table_path: str,
     ts = _now_ms(ts_ms)
     rep = replay_log(spark, table_path)
     _check_writable(rep.metadata, rep.protocol, "overwrite")
-    df, _ = _generate_identity(df, rep.schema)
-    df = _compute_generated(df, rep.schema)
+    df = _compute_generated(_generate_identity(df, rep.schema), rep.schema)
     adds = _stage_files(spark, _ordered(df, rep), table_path,
                         rep.partition_columns, ts,
                         max_records_per_file=max_records_per_file,
@@ -1121,126 +1119,236 @@ def overwrite_delta(spark: SparkSession, df: DataFrame, table_path: str,
         *([{"metaData": id_md}] if id_md is not None else []),
         *rt_actions,
         *({"add": {**a, "dataChange": True}} for a in adds),
-        *({"remove": {"path": a["path"], "deletionTimestamp": ts,
-                      "dataChange": True,
-                      "partitionValues": a.get("partitionValues") or {},
-                      "size": a.get("size")}}
-          for a in rep.files.values()),
+        *(_remove(a, ts) for a in rep.files.values()),
     ]
     return _strict_commit(spark, table_path, rep.version + 1, actions,
                           "overwrite", metadata=rep.metadata)
 
 
-def _rewrite_op(spark: SparkSession, table_path: str, predicate: str,
-                op: str, ts_ms: int | None,
-                transform, check=None) -> int:
-    """Shared DELETE/UPDATE engine: find the files with matching rows (one
-    distinct-file scan — bounded by the file count, the zone-map caveat),
-    rewrite ONLY those files, and commit remove+add+cdc atomically.
-    ``transform(aff, hit, logical)`` returns (new_rows_df, cdc_df|None)."""
-    ts = _now_ms(ts_ms)
-    rep = replay_log(spark, table_path)
-    _check_writable(rep.metadata, rep.protocol, op)
-    if check is not None:
-        check(rep)          # op-specific refusals (e.g. SET on identity)
-    if not rep.files:
-        return rep.version  # empty table: nothing to do, no commit
-    pred = F.expr(predicate)
-    hit = F.coalesce(pred, F.lit(False))
-    snap = _scan_files(spark, table_path, rep, list(rep.files.values()))
-    matched = {r[0] for r in
-               snap.filter(hit).select(_FILE_BASE).distinct().collect()}
-    if not matched:
-        return rep.version  # no row matches: no commit (Delta parity)
-    by_base = _by_base_strict(table_path, rep, op)
-    affected = [by_base[b] for b in sorted(matched)]
-    rt_cols = _rt_cols(rep.metadata)
-    if rt_cols is None:
-        aff = _scan_files(spark, table_path, rep, affected)
-    else:
-        # row-tracked rewrite: carry each surviving row's id/commit
-        # version as MATERIALIZED columns into the rewritten files
-        aff = _rt_scan_with_ids(spark, table_path, rep, affected)
-    logical = [f.name for f in rep.schema.fields]
-    new_rows, cdc_df = transform(aff, hit, logical)
-    keep_cols = list(logical) + (list(rt_cols) if rt_cols else [])
-    adds = _stage_files(spark, new_rows.select(*keep_cols), table_path,
-                        rep.partition_columns, ts, rep=rep)
-    _enforce_constraints(spark, table_path, rep, adds, op)
-    rt_actions: list[dict] = []
-    if rt_cols is not None:
-        # fresh baseRowId ranges still back any NULL-materialized row
-        # (none in a pure rewrite, but the invariant is per-add)
-        rt_actions = _assign_base_row_ids(rep.domains, adds,
-                                          rep.version + 1)
-    actions: list[dict] = [
-        {"commitInfo": {"timestamp": ts, "operation": op.upper(),
-                        "operationParameters": {"predicate": predicate}}},
-        *rt_actions,
-        *({"add": {**a, "dataChange": True}} for a in adds),
-        *({"remove": {"path": a["path"], "deletionTimestamp": ts,
-                      "dataChange": True,
-                      "partitionValues": a.get("partitionValues") or {},
-                      "size": a.get("size")}}
-          for a in affected),
-    ]
-    if cdc_df is not None and _cdf_enabled(rep.metadata):
-        cdc = _stage_files(spark, cdc_df, table_path, rep.partition_columns,
-                           ts, subdir="_change_data", rep=rep)
-        actions += [{"cdc": {**c, "dataChange": False}} for c in cdc]
-    return _strict_commit(spark, table_path, rep.version + 1, actions, op,
-                          metadata=rep.metadata)
+def _remove(add: dict, ts: int, data_change: bool = True) -> dict:
+    """The ``remove`` action retiring the live file ``add``."""
+    return {"remove": {"path": add["path"], "deletionTimestamp": ts,
+                       "dataChange": data_change,
+                       "partitionValues": add.get("partitionValues") or {},
+                       "size": add.get("size")}}
 
 
 def delete_where(spark: SparkSession, table_path: str, predicate: str,
                  ts_ms: int | None = None, use_dv: bool = False) -> int:
-    """DELETE FROM <table> WHERE <predicate>: rewrite only the files that
-    contain matching rows (NULL-predicate rows are kept, SQL semantics).
-    With CDF enabled, the deleted rows are written as explicit cdc files —
-    file-op synthesis would double-count the kept rows of rewritten files.
-    Files on which the predicate matches nothing are NOT touched. Returns
-    the new version (unchanged version when nothing matched).
+    """DELETE FROM <table> WHERE <predicate> (NULL-predicate rows are
+    kept, SQL semantics), committed by ``_commit_rows``. Files on which
+    the predicate matches nothing are NOT touched. With CDF enabled, the
+    deleted rows are written as explicit cdc files — file-op synthesis
+    would double-count the kept rows of rewritten files. Returns the new
+    version (unchanged version when nothing matched).
 
-    ``use_dv=True`` writes DELETION VECTORS instead of rewriting: the
+    The default rewrite layout rewrites only the files that contain
+    matching rows. ``use_dv=True`` writes DELETION VECTORS instead: the
     matched rows' indexes become roaring bitmaps in a DV file and each
     affected file is re-added with its descriptor — no data bytes move,
     the Databricks-default (DBR 14+) DELETE layout this repo's reader
     already applies. Upgrades the table protocol in-commit when the
     feature is not yet declared. Local filesystems only (the DV file
     write); remote tables use the rewrite path."""
-    if use_dv:
-        return _delete_with_dvs(spark, table_path, predicate, ts_ms)
-    def transform(aff, hit, logical):
-        kept = aff.filter(~hit)
-        cdc = (aff.filter(hit).select(*logical)
-               .withColumn(_CDC_TYPE, F.lit("delete")))
-        return kept, cdc
-    return _rewrite_op(spark, table_path, predicate, "delete", ts_ms,
-                       transform)
+    ts = _now_ms(ts_ms)
+    rep = replay_log(spark, table_path)
+    _check_writable(rep.metadata, rep.protocol, "delete")
+    m = _predicate_rows(spark, table_path, rep, "delete", predicate, use_dv)
+    return _commit_rows(spark, table_path, rep, ts, m, use_dv, False,
+                        "delete", "DELETE", {"predicate": predicate})
 
 
-def _delete_with_dvs(spark: SparkSession, table_path: str, predicate: str,
-                     ts_ms: int | None) -> int:
-    return _dv_row_op(spark, table_path, predicate, ts_ms, "delete",
-                      set_exprs=None)
+def update_where(spark: SparkSession, table_path: str, predicate: str,
+                 set_exprs: dict[str, str],
+                 ts_ms: int | None = None, use_dv: bool = False) -> int:
+    """UPDATE <table> SET col = expr, ... WHERE <predicate>, committed by
+    ``_commit_rows``. Expressions are SQL over the PRE-update row
+    (applied simultaneously) and are cast back to the column's declared
+    type; the hit set is decided on pre-update values, also when a SET
+    column appears in the predicate. With CDF enabled, writes
+    update_preimage/update_postimage cdc rows.
+
+    ``use_dv=True`` stamps the matched rows' old positions with
+    deletion vectors and appends only their post-update images —
+    delta-spark's DV-update shape: untouched rows of affected files
+    never move. Local filesystems only; see ``delete_where``."""
+    ts = _now_ms(ts_ms)
+    rep = replay_log(spark, table_path)
+    _check_writable(rep.metadata, rep.protocol, "update")
+    bad = sorted(set(set_exprs) & set(_identity_cols(rep.schema)))
+    if bad:
+        raise DeltaProtocolError(f"UPDATE cannot SET identity columns {bad}")
+    unknown = [c for c in set_exprs
+               if c not in {f.name for f in rep.schema.fields}]
+    if unknown:
+        raise ValueError(f"SET targets {unknown} are not table columns")
+    m = _predicate_rows(spark, table_path, rep, "update", predicate, use_dv,
+                        set_exprs)
+    return _commit_rows(spark, table_path, rep, ts, m, use_dv, True,
+                        "update", "UPDATE", {"predicate": predicate})
+
+
+def _predicate_rows(spark: SparkSession, table_path: str, rep, op: str,
+                    predicate: str, use_dv: bool,
+                    set_exprs: dict[str, str] | None = None,
+                    inserts: DataFrame | None = None):
+    """DELETE, UPDATE and replaceWhere's input to ``_commit_rows``, the
+    record a MERGE plans (``operators.merge.MergeJoin``): the touched
+    files, a frame over them aliased ``t``, the predicate as the delete
+    condition (as the update condition with ``set_exprs``), the
+    post-images and ``inserts``. The rewrite layout first collects the
+    distinct files holding a matching row (bounded by the file count)
+    and scans only those; the DV layout scans every live file once with
+    its row index, and the stamp finds the files."""
+    from ..operators.merge import MergeJoin, post_image
+
+    hit = F.coalesce(F.expr(predicate), F.lit(False))
+    files = list(rep.files.values())
+    if files and not use_dv:
+        matched = {r[0] for r in _scan_files(spark, table_path, rep, files)
+                   .filter(hit).select(_FILE_BASE).distinct().collect()}
+        files = ([a for b, a in sorted(
+            _by_base_strict(table_path, rep, op).items()) if b in matched]
+            if matched else [])
+    read = (_rt_scan_with_ids if _frame_rt(rep, use_dv, set_exprs is not None)
+            else _scan_files)
+    frame = (read(spark, table_path, rep, files,
+                  keep_row_index=use_dv).alias("t") if files else None)
+    never = F.lit(False)
+    delete, update = (never, hit) if set_exprs is not None else (hit, never)
+    types = {f.name: f.dataType.simpleString() for f in rep.schema.fields}
+    return MergeJoin(files, frame, delete, update,
+                     post_image(types, update, set_exprs), inserts)
+
+
+def _frame_rt(rep, use_dv: bool, updates: bool) -> tuple[str, str] | None:
+    """Row tracking's one rule for a row-level verb: its frame carries
+    the materialized row-id columns (``_rt_scan_with_ids``) iff rows of
+    the frame are staged — every row the verb keeps in the rewrite
+    layout, only the update post-images in the DV layout — so a staged
+    row keeps its id. Inserts stage NULL ids beside them, which their
+    fresh baseRowId range backs."""
+    return _rt_cols(rep.metadata) if updates or not use_dv else None
+
+
+def _commit_rows(spark: SparkSession, table_path: str, rep, ts: int, m,
+                 use_dv: bool, updates: bool, op: str, operation: str,
+                 params: dict,
+                 max_records_per_file: int | None = None) -> int:
+    """The one commit of every row-level verb (DELETE, UPDATE, MERGE,
+    replaceWhere), in both physical layouts — delta-spark's
+    DMLWithDeletionVectorsHelper role. ``m`` is the verb's
+    ``operators.merge.MergeJoin``: the touched files, the frame over
+    them aliased ``t`` (None when nothing was touched), the delete and
+    update conditions, the post-image columns and the inserts.
+
+    * Rewrite layout: the touched files are removed and every frame row
+      the delete condition does not take stages as its post-image.
+    * DV layout (``use_dv``): the positions of the deleted and updated
+      rows are stamped dead (``_dv_stamp_actions``) and only the
+      post-images of the updated rows stage (``updates``: the verb has
+      an update clause); untouched rows never move.
+
+    Both layouts then stage the inserts (capped at
+    ``max_records_per_file`` rows per file, with the frame's rows) and,
+    with CDF on, the ``cdc`` rows: ``delete``, ``update_preimage``,
+    ``update_postimage`` and ``insert``. Staged frame rows keep the row
+    ids the frame carries (``_frame_rt``). The staged files must pass
+    the table's constraints, may advance the identity watermark, and
+    commit strictly as ``operation`` with ``params``. Nothing touched
+    and nothing staged commits nothing: the current version returns."""
+    if use_dv and not _is_local(table_path):
+        raise NotImplementedError(
+            f"DV-writing {op.upper()} needs a local table dir (DV file "
+            f"write); use the rewrite path (use_dv=False) elsewhere")
+    logical = [f.name for f in rep.schema.fields]
+    cdf = _cdf_enabled(rep.metadata)
+    t = m.joined
+    stamp = None
+    if t is not None and use_dv:
+        stamp = _dv_stamp_actions(
+            spark, table_path, rep, t.filter(m.delete | m.update).select(
+                F.col(f"t.{_FILE_BASE}").alias(_FILE_BASE),
+                F.col(f"t.{_ROW_INDEX}").alias(_ROW_INDEX)), ts, op)
+        if stamp is None:
+            t = None                  # no row died: the frame is untouched
+    rt = _frame_rt(rep, use_dv, updates) if t is not None else None
+    rows: list[DataFrame] = []
+    changes: list[DataFrame] = []
+    removed: list[dict] = []
+    if t is not None:
+        keep = [*m.post, *(F.col(f"t.{c}").alias(c) for c in rt or ())]
+        if not use_dv:
+            removed = m.hit
+            rows.append(t.filter(~m.delete).select(*keep))
+        elif updates:
+            rows.append(t.filter(m.update).select(*keep))
+        if cdf:
+            pre = [F.col(f"t.{c}").alias(c) for c in logical]
+            changes += [
+                t.filter(m.delete).select(*pre)
+                .withColumn(_CDC_TYPE, F.lit("delete")),
+                t.filter(m.update).select(*pre)
+                .withColumn(_CDC_TYPE, F.lit("update_preimage")),
+                t.filter(m.update).select(*m.post)
+                .withColumn(_CDC_TYPE, F.lit("update_postimage"))]
+    if m.inserts is not None:
+        inserts = m.inserts
+        for c in rt or ():
+            inserts = inserts.withColumn(c, F.lit(None).cast("long"))
+        rows.append(inserts)
+        if cdf:
+            changes.append(m.inserts.withColumn(_CDC_TYPE, F.lit("insert")))
+    adds: list[dict] = []
+    if rows:
+        adds = _stage_files(
+            spark, functools.reduce(DataFrame.unionByName, rows)
+            .select(*logical, *(rt or ())), table_path,
+            rep.partition_columns, ts,
+            max_records_per_file=max_records_per_file, rep=rep)
+        _enforce_constraints(spark, table_path, rep, adds, op)
+    if not adds and not removed and stamp is None:
+        return rep.version
+    cdc = (_stage_files(spark, functools.reduce(DataFrame.unionByName,
+                                                changes),
+                        table_path, rep.partition_columns, ts,
+                        subdir="_change_data", rep=rep)
+           if changes else [])
+    id_md = _identity_hwm_update(rep, adds)
+    actions: list[dict] = [
+        {"commitInfo": {"timestamp": ts, "operation": operation,
+                        "operationParameters": params}},
+        *([{"metaData": id_md}] if id_md is not None else []),
+        *(stamp or ()),
+        *(_assign_base_row_ids(rep.domains, adds, rep.version + 1)
+          if _rt_enabled(rep.metadata) else ()),
+        *({"add": {**a, "dataChange": True}} for a in adds),
+        *(_remove(a, ts) for a in removed),
+        *({"cdc": {**c, "dataChange": False}} for c in cdc),
+    ]
+    return _strict_commit(spark, table_path, rep.version + 1, actions, op,
+                          metadata=rep.metadata)
 
 
 def _dv_stamp_actions(spark: SparkSession, table_path: str, rep,
                       dead: "DataFrame", ts: int,
                       op: str) -> list[dict] | None:
-    """The shared DV stamping engine behind DELETE/UPDATE/MERGE
-    (use_dv=True): ``dead`` is a DataFrame of (_FILE_BASE, _ROW_INDEX)
-    rows to mark deleted. Builds each affected file's roaring bitmap
-    EXECUTOR-side (``groupBy(file).applyInPandas``, prior DVs broadcast
-    for the union — the driver receives only one (base, dv-bytes,
-    cardinality) row per affected file), writes ONE DV file carrying
-    every bitmap, and returns the [protocol-upgrade?] + remove +
-    add-with-descriptor actions. None when ``dead`` is empty (callers
-    skip the commit). Raises on a live-file 2-segment key collision —
-    mirrors the reader's _scan_files guard; a collision would silently
-    union two files' matched indexes into one deletion vector."""
+    """``_commit_rows``' DV stamp: ``dead`` is a DataFrame of
+    (_FILE_BASE, _ROW_INDEX) rows to mark deleted. Builds each affected
+    file's roaring bitmap EXECUTOR-side (``groupBy(file).applyInPandas``,
+    prior DVs broadcast for the union — the driver never materializes
+    matched row indexes and receives only one (base, dv-bytes,
+    cardinality) row per affected file; the scan already excluded
+    previously-dead rows, so indexes never double-count), writes ONE DV
+    file carrying every bitmap, and returns the [protocol-upgrade?] +
+    remove + add-with-descriptor actions. Stats are kept verbatim —
+    Delta's DV semantics: numRecords stays the PHYSICAL count, readers
+    subtract cardinality. None when ``dead`` is empty. Raises on a
+    live-file 2-segment key collision — mirrors the reader's _scan_files
+    guard; a collision would silently union two files' matched indexes
+    into one deletion vector."""
     from ..sources import delta_dv
-    from ..sources.delta_log import _ROW_INDEX, _dv_bytes
+    from ..sources.delta_log import _dv_bytes
 
     by_base = _by_base_strict(table_path, rep, op)
     prior_dv_bytes = {
@@ -1304,169 +1412,10 @@ def _dv_stamp_actions(spark: SparkSession, table_path: str, rep,
             "pathOrInlineDv": delta_dv.make_uuid_path_or_inline(u),
             "offset": offset, "sizeInBytes": size,
             "cardinality": card}
-        actions.append({"remove": {
-            "path": add["path"], "deletionTimestamp": ts,
-            "dataChange": True,
-            "partitionValues": add.get("partitionValues") or {},
-            "size": add.get("size")}})
+        actions.append(_remove(add, ts))
         actions.append({"add": {**add, "dataChange": True,
                                 "deletionVector": descriptor}})
     return actions
-
-
-def _dv_row_op(spark: SparkSession, table_path: str, predicate: str,
-               ts_ms: int | None, op: str,
-               set_exprs: dict[str, str] | None) -> int:
-    """The DV-writing DELETE/UPDATE engine: one scan finds the surviving
-    matched rows WITH their (file, row index) provenance; their indexes
-    union into each file's existing bitmap (the scan already excluded
-    previously-dead rows, so indexes never double-count); one DV file
-    carries every affected file's serialized bitmap; the commit re-adds
-    each affected file with its descriptor. UPDATE additionally stages
-    the matched rows' POST-update images as new files in the same
-    commit — delta-spark's own DV-update shape (old positions stamped
-    dead, new rows appended; untouched rows never move). Stats are kept
-    verbatim — Delta's DV semantics: numRecords stays the PHYSICAL
-    count, readers subtract cardinality.
-
-    Scale: each affected file's bitmap is built EXECUTOR-side
-    (``groupBy(file).applyInPandas``) — the driver never materializes
-    matched row indexes (a DELETE matching 100 M rows would otherwise
-    ship ~1.6 GB of int64 into driver pandas); it receives only one row
-    per affected file: (base, serialized roaring bitmap, cardinality) —
-    the same bytes it must write into the DV file anyway. Prior DVs are
-    broadcast to the union site keyed by file base (bounded by the
-    table's total live DV bytes, the driver-metadata class)."""
-    from ..sources.delta_log import _ROW_INDEX
-
-    if not _is_local(table_path):
-        raise NotImplementedError(
-            f"DV-writing {op.upper()} needs a local table dir (DV file "
-            f"write); use the rewrite path (use_dv=False) elsewhere")
-    ts = _now_ms(ts_ms)
-    rep = replay_log(spark, table_path)
-    _check_writable(rep.metadata, rep.protocol, op)
-    if set_exprs:
-        bad = sorted(set(set_exprs) & set(_identity_cols(rep.schema)))
-        if bad:
-            raise DeltaProtocolError(
-                f"UPDATE cannot SET identity columns {bad}")
-    if not rep.files:
-        return rep.version
-    hit = F.coalesce(F.expr(predicate), F.lit(False))
-    # row-tracked UPDATE must carry the matched rows' ids into the
-    # post-update images (spec: updates preserve row ids); materialize
-    # them in the same scan the dead positions come from (ADVICE r10 #5)
-    rt_cols_dv = _rt_cols(rep.metadata) if set_exprs is not None else None
-    snap = (_rt_scan_with_ids(spark, table_path, rep,
-                              list(rep.files.values()),
-                              keep_row_index=True)
-            if rt_cols_dv
-            else _scan_files(spark, table_path, rep,
-                             list(rep.files.values()),
-                             keep_row_index=True))
-    dead = snap.filter(hit).select(_FILE_BASE, _ROW_INDEX)
-    stamp = _dv_stamp_actions(spark, table_path, rep, dead, ts, op)
-    if stamp is None:
-        return rep.version
-    actions: list[dict] = [
-        {"commitInfo": {"timestamp": ts, "operation": op.upper(),
-                        "operationParameters": {"predicate": predicate}}},
-        *stamp,
-    ]
-    logical = [f.name for f in rep.schema.fields]
-    if set_exprs is not None:
-        # UPDATE: stage the post-update images of the matched rows
-        types = dict(snap.dtypes)
-        unknown = [c for c in set_exprs if c not in types]
-        if unknown:
-            raise ValueError(f"SET targets {unknown} are not table "
-                             f"columns")
-        stage_cols = list(logical) + (list(rt_cols_dv) if rt_cols_dv
-                                      else [])
-        updated = snap.filter(hit).select(
-            *[F.expr(set_exprs[c]).cast(types[c]).alias(c)
-              if c in set_exprs else F.col(c) for c in stage_cols])
-        new_adds = _stage_files(spark, updated.select(*stage_cols),
-                                table_path,
-                                rep.partition_columns, ts, rep=rep)
-        _enforce_constraints(spark, table_path, rep, new_adds, op)
-        if _rt_enabled(rep.metadata):
-            # post-update images carry their old ids in the MATERIALIZED
-            # columns (staged above); the fresh ranges claimed here only
-            # back rows whose materialized value is NULL — none, for an
-            # update — and keep the every-add-has-a-baseRowId invariant
-            actions += _assign_base_row_ids(rep.domains, new_adds,
-                                            rep.version + 1)
-        actions += [{"add": {**a, "dataChange": True}} for a in new_adds]
-        if rt_cols_dv:
-            updated = updated.select(*logical)
-        cdc_df = None
-        if _cdf_enabled(rep.metadata):
-            pre = (snap.filter(hit).select(*logical)
-                   .withColumn(_CDC_TYPE, F.lit("update_preimage")))
-            post = updated.withColumn(_CDC_TYPE,
-                                      F.lit("update_postimage"))
-            cdc_df = pre.unionByName(post)
-    else:
-        cdc_df = ((snap.filter(hit).select(*logical)
-                   .withColumn(_CDC_TYPE, F.lit("delete")))
-                  if _cdf_enabled(rep.metadata) else None)
-    if cdc_df is not None:
-        cdc = _stage_files(spark, cdc_df, table_path,
-                           rep.partition_columns, ts,
-                           subdir="_change_data", rep=rep)
-        actions += [{"cdc": {**c, "dataChange": False}} for c in cdc]
-    return _strict_commit(spark, table_path, rep.version + 1, actions,
-                          op, metadata=rep.metadata)
-
-
-def update_where(spark: SparkSession, table_path: str, predicate: str,
-                 set_exprs: dict[str, str],
-                 ts_ms: int | None = None, use_dv: bool = False) -> int:
-    """UPDATE <table> SET col = expr, ... WHERE <predicate>. Expressions
-    are SQL over the PRE-update row (applied simultaneously) and are cast
-    back to the column's declared type. With CDF enabled, writes
-    update_preimage/update_postimage cdc rows.
-
-    ``use_dv=True`` stamps the matched rows' old positions with
-    deletion vectors and appends only their post-update images —
-    delta-spark's DV-update shape: untouched rows of affected files
-    never move. Local filesystems only; see ``delete_where``."""
-    if use_dv:
-        return _dv_row_op(spark, table_path, predicate, ts_ms, "update",
-                          set_exprs=set_exprs)
-    def transform(aff, hit, logical):
-        types = dict(aff.dtypes)
-        unknown = [c for c in set_exprs if c not in types]
-        if unknown:
-            raise ValueError(f"SET targets {unknown} are not table columns")
-        # the hit set is decided on PRE-update values and must be
-        # REUSED for the postimages: re-filtering the updated frame
-        # with the raw predicate would re-evaluate it on post-update
-        # values and lose (or invent) postimage rows whenever a SET
-        # column appears in the WHERE clause (e.g. v < 5 -> v + 100
-        # emitted preimages but ZERO postimages)
-        marked = aff.withColumn("__upd_hit", hit)
-        updated_all = marked.select(
-            *[F.when(F.col("__upd_hit"), F.expr(set_exprs[c]))
-              .otherwise(F.col(c)).cast(types[c]).alias(c)
-              if c in set_exprs else F.col(c)
-              for c in marked.columns])
-        new_rows = updated_all  # helper cols dropped by _rewrite_op
-        pre = (marked.filter(F.col("__upd_hit")).select(*logical)
-               .withColumn(_CDC_TYPE, F.lit("update_preimage")))
-        post = (updated_all.filter(F.col("__upd_hit")).select(*logical)
-                .withColumn(_CDC_TYPE, F.lit("update_postimage")))
-        return new_rows, pre.unionByName(post)
-    def check(rep):
-        bad = sorted(set(set_exprs) & set(_identity_cols(rep.schema)))
-        if bad:
-            raise DeltaProtocolError(
-                f"UPDATE cannot SET identity columns {bad}")
-
-    return _rewrite_op(spark, table_path, predicate, "update", ts_ms,
-                       transform, check=check)
 
 
 # ---------------------------------------------------------------------------
@@ -1877,9 +1826,8 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     ``use_dv=True`` stamps matched rows' OLD positions with DELETION
     VECTORS instead of rewriting the affected files — the Databricks-
     default (DBR 14+) MERGE physical layout: untouched rows never move,
-    update post-images and inserts stage as new files, the DV bitmaps
-    build executor-side on the shared ``_dv_stamp_actions`` engine.
-    Local filesystems only (the DV file write), like DELETE/UPDATE.
+    update post-images and inserts stage as new files. Local filesystems
+    only (the DV file write), like DELETE/UPDATE.
 
     At 100 TB: ``operators.merge.two_pass_merge`` plans it in two
     passes, like Delta's own MergeIntoCommand, and the Iceberg merge
@@ -1887,18 +1835,13 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
     columns: it is both the duplicate-match guard and the touched-file
     list, and it raises before anything is staged. Pass 2 left-joins
     ONLY the touched files to the source, once; that join is persisted
-    for the data write, the change-feed write and the DV stamp, and
-    released once the commit is built or the merge raised. Inserts are
-    the source anti-joined against the join's matched keys, so they
-    never rescan the table; with DVs the dead positions come out of the
-    same join."""
+    for the data write, the change-feed write and the DV stamp of
+    ``_commit_rows``, which commits the planned merge as it commits
+    DELETE and UPDATE, and released once the merge committed or raised.
+    Inserts are the source anti-joined against the join's matched keys,
+    so they never rescan the table."""
     from ..operators.merge import two_pass_merge
-    from ..sources.delta_log import _ROW_INDEX
 
-    if use_dv and not _is_local(table_path):
-        raise NotImplementedError(
-            "DV-writing MERGE needs a local table dir (DV file write); "
-            "use the rewrite path (use_dv=False) elsewhere")
     ts = _now_ms(ts_ms)
     rep = replay_log(spark, table_path)
     _check_writable(rep.metadata, rep.protocol, "merge")
@@ -1937,117 +1880,33 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
             return rep.version
         return append_delta(spark, src, table_path, ts_ms=ts)
 
-    has_matched_clause = (when_matched_update is not None
-                          or when_matched_delete is not None)
-    dv_mode = use_dv and has_matched_clause
-    # rows of hit files stage (kept rows, or DV post-images) and carry
-    # their materialized row ids on a row-tracked table; inserts then
-    # carry NULL ids, read through the fresh baseRowId
-    rt_cols = (_rt_cols(rep.metadata) if has_matched_clause and (
-        not use_dv or when_matched_update is not None) else None)
-
-    def scan(actions: list[dict]) -> DataFrame:
-        read = _rt_scan_with_ids if rt_cols else _scan_files
-        return read(spark, table_path, rep, actions, keep_row_index=dv_mode)
-
-    cdf = _cdf_enabled(rep.metadata)
-    pieces_cdc: list[DataFrame] = []
-    new_parts: list[DataFrame] = []
-    dv_actions: list[dict] | None = None
+    updates = when_matched_update is not None
+    # only a matched clause touches the hit files: an insert-only merge
+    # scans them for their keys alone
+    matched = updates or when_matched_delete is not None
+    read = (_rt_scan_with_ids if matched and _frame_rt(rep, use_dv, updates)
+            else _scan_files)
     with two_pass_merge(
             _scan_files(spark, table_path, rep, list(rep.files.values())),
-            scan, _by_base_strict(table_path, rep, "merge"), _FILE_BASE,
+            functools.partial(read, spark, table_path, rep,
+                              keep_row_index=use_dv and matched),
+            _by_base_strict(table_path, rep, "merge"), _FILE_BASE,
             on, src, {f.name: f.dataType.simpleString()
                       for f in rep.schema.fields},
             when_matched_update, when_matched_delete,
             when_not_matched_insert) as m:
-        # only a matched clause rewrites: an insert-only merge leaves
-        # matched rows untouched by definition (a rewrite would be wasted
-        # I/O AND, with no cdc rows to stage, would make CDF synthesize a
-        # spurious whole-file delete+insert feed), and DV mode re-adds hit
-        # files with descriptors instead of removing them
-        affected = m.hit if has_matched_clause and not use_dv else []
-        rt = rt_cols if m.hit else None
-        if m.joined is not None:
-            rt_keep = [F.col(f"t.{c}").alias(c) for c in rt or ()]
-            if dv_mode:
-                dead = m.joined.filter(m.delete | m.update).select(
-                    F.col(f"t.{_FILE_BASE}").alias(_FILE_BASE),
-                    F.col(f"t.{_ROW_INDEX}").alias(_ROW_INDEX))
-                dv_actions = _dv_stamp_actions(spark, table_path, rep, dead,
-                                               ts, "merge")
-                if when_matched_update is not None:
-                    # only the POST-images stage as new rows; kept rows
-                    # never move (their old positions are simply not dead)
-                    new_parts.append(m.joined.filter(m.update).select(
-                        *m.post, *rt_keep))
-            else:
-                new_parts.append(m.joined.filter(~m.delete).select(
-                    *m.post, *rt_keep))
-            if cdf:
-                pre = [F.col(f"t.{c}").alias(c) for c in logical]
-                pieces_cdc += [
-                    m.joined.filter(m.delete).select(*pre)
-                    .withColumn(_CDC_TYPE, F.lit("delete")),
-                    m.joined.filter(m.update).select(*pre)
-                    .withColumn(_CDC_TYPE, F.lit("update_preimage")),
-                    m.joined.filter(m.update).select(*m.post)
-                    .withColumn(_CDC_TYPE, F.lit("update_postimage"))]
-        if m.inserts is not None:
-            inserts = m.inserts
-            if ids_spec or gen_cols:
-                # fill absent identity columns above the watermark (a
-                # PRESENT one is validated against allowExplicitInsert)
-                # and compute absent generated columns from their declared
-                # expressions — the staged files then pass the value <=>
-                # expression constraint like any append
-                inserts, _ = _generate_identity(inserts, rep.schema)
-                inserts = _compute_generated(inserts, rep.schema)
-                inserts = inserts.select(*logical)
-            for c in rt or ():
-                inserts = inserts.withColumn(c, F.lit(None).cast("long"))
-            new_parts.append(inserts)
-            if cdf:
-                pieces_cdc.append(
-                    inserts.withColumn(_CDC_TYPE, F.lit("insert")))
-
-        adds: list[dict] = []
-        if new_parts:
-            new_rows = functools.reduce(DataFrame.unionByName, new_parts)
-            adds = _stage_files(spark,
-                                new_rows.select(*logical, *(rt or ())),
-                                table_path, rep.partition_columns, ts,
-                                rep=rep)
-            _enforce_constraints(spark, table_path, rep, adds, "merge")
-        if not adds and not affected and dv_actions is None:
-            return rep.version  # nothing matched, nothing inserted
-        cdc: list[dict] = []
-        if cdf and pieces_cdc:
-            cdc_df = functools.reduce(DataFrame.unionByName, pieces_cdc)
-            cdc = _stage_files(spark, cdc_df, table_path,
-                               rep.partition_columns, ts,
-                               subdir="_change_data", rep=rep)
-    rt_actions: list[dict] = []
-    if _rt_enabled(rep.metadata):
-        rt_actions = _assign_base_row_ids(rep.domains, adds,
-                                          rep.version + 1)
-    id_md = _identity_hwm_update(rep, adds)
-    actions: list[dict] = [
-        {"commitInfo": {"timestamp": ts, "operation": "MERGE",
-                        "operationParameters": {"predicate": " AND ".join(on)}}},
-        *([{"metaData": id_md}] if id_md is not None else []),
-        *(dv_actions or ()),
-        *rt_actions,
-        *({"add": {**a, "dataChange": True}} for a in adds),
-        *({"remove": {"path": a["path"], "deletionTimestamp": ts,
-                      "dataChange": True,
-                      "partitionValues": a.get("partitionValues") or {},
-                      "size": a.get("size")}}
-          for a in affected),
-        *({"cdc": {**c, "dataChange": False}} for c in cdc),
-    ]
-    return _strict_commit(spark, table_path, rep.version + 1, actions,
-                          "merge", metadata=rep.metadata)
+        if m.inserts is not None and (ids_spec or gen_cols):
+            # fill absent identity columns above the watermark (a
+            # PRESENT one is validated against allowExplicitInsert) and
+            # compute absent generated columns from their declared
+            # expressions — the staged files then pass the value <=>
+            # expression constraint like any append
+            m.inserts = _compute_generated(
+                _generate_identity(m.inserts, rep.schema),
+                rep.schema).select(*logical)
+        return _commit_rows(spark, table_path, rep, ts, m, use_dv, updates,
+                            "merge", "MERGE",
+                            {"predicate": " AND ".join(on)})
 
 
 def restore_delta(spark: SparkSession, table_path: str, version: int,
@@ -2091,11 +1950,7 @@ def restore_delta(spark: SparkSession, table_path: str, version: int,
           if p not in cur_by_path
           or cur_by_path[p].get("deletionVector")
           != a.get("deletionVector")),
-        *({"remove": {"path": p, "deletionTimestamp": ts,
-                      "dataChange": True,
-                      "partitionValues": a.get("partitionValues") or {},
-                      "size": a.get("size")}}
-          for p, a in sorted(cur_by_path.items())
+        *(_remove(a, ts) for p, a in sorted(cur_by_path.items())
           if p not in tgt_by_path),
     ]
     if len(actions) == 1:
@@ -2195,11 +2050,7 @@ def optimize_delta(spark: SparkSession, table_path: str,
                             "zOrderBy": zorder_by or []}}},
         *rt_actions,
         *({"add": {**a, "dataChange": False}} for a in adds),
-        *({"remove": {"path": a["path"], "deletionTimestamp": ts,
-                      "dataChange": False,
-                      "partitionValues": a.get("partitionValues") or {},
-                      "size": a.get("size")}}
-          for a in targets),
+        *(_remove(a, ts, data_change=False) for a in targets),
     ]
     return _strict_commit(spark, table_path, rep.version + 1, actions,
                           "optimize", metadata=rep.metadata)
@@ -2460,12 +2311,12 @@ def replace_where(spark: SparkSession, df: DataFrame, table_path: str,
     the new files. Delta's contract, enforced here the same way:
 
     * every INCOMING row must satisfy the predicate (else the "overwrite"
-      would smuggle rows outside the declared region) — checked against
-      the staged files via the constraint engine's scan, violations
-      named before any commit exists;
-    * only files containing a matching row are rewritten; their
-      NON-matching rows are carried over into new files (file-level
-      granularity, like DELETE);
+      would smuggle rows outside the declared region) — checked on
+      ``df`` alone and refused before anything is staged;
+    * it is then a DELETE on ``predicate`` in the rewrite layout with
+      ``df``'s rows as inserts, committed by ``_commit_rows``: only files
+      containing a matching row are rewritten, their NON-matching rows
+      carried over into new files (file-level granularity, like DELETE);
     * with CDF enabled, explicit delete cdc rows for the replaced rows
       and insert rows for the new ones.
 
@@ -2476,81 +2327,16 @@ def replace_where(spark: SparkSession, df: DataFrame, table_path: str,
     ts = _now_ms(ts_ms)
     rep = replay_log(spark, table_path)
     _check_writable(rep.metadata, rep.protocol, "replace-where")
-    rt_cols = _rt_cols(rep.metadata)
-    df, _ = _generate_identity(df, rep.schema)
-    df = _compute_generated(df, rep.schema)
-    logical = [f.name for f in rep.schema.fields]
-    pred = F.expr(predicate)
-    hit = F.coalesce(pred, F.lit(False))
-
-    affected: list[dict] = []
-    carried = None
-    if rep.files:
-        snap = _scan_files(spark, table_path, rep,
-                           list(rep.files.values()))
-        matched = {r[0] for r in
-                   snap.filter(hit).select(_FILE_BASE).distinct()
-                   .collect()}
-        if matched:
-            by_base = _by_base_strict(table_path, rep, "replace-where")
-            affected = [by_base[b] for b in sorted(matched)]
-            aff = (_scan_files(spark, table_path, rep, affected)
-                   if rt_cols is None
-                   else _rt_scan_with_ids(spark, table_path, rep,
-                                          affected))
-            keep = list(logical) + (list(rt_cols) if rt_cols else [])
-            carried = aff.filter(~hit).select(*keep)
-
-    new_rows = _ordered(df, rep)
-    staged_new = new_rows
-    if rt_cols is not None:
-        # replacement rows are NEW rows id-wise: NULL materialized cols,
-        # so the fresh baseRowId range backs them at read time
-        for c in rt_cols:
-            staged_new = staged_new.withColumn(
-                c, F.lit(None).cast("long"))
-    staged = (staged_new if carried is None
-              else staged_new.unionByName(carried))
-    adds = _stage_files(spark, staged, table_path, rep.partition_columns,
-                        ts, max_records_per_file=max_records_per_file,
-                        rep=rep)
-    _enforce_constraints(spark, table_path, rep, adds, "replace-where")
-    # incoming rows must live INSIDE the replaced region: scan only the
-    # NEW frame (cheap, pre-staging) — a violation aborts pre-commit
-    outside = new_rows.filter(~hit).limit(1).count()
-    if outside:
+    new_rows = _ordered(_compute_generated(
+        _generate_identity(df, rep.schema), rep.schema), rep)
+    if new_rows.filter(~F.coalesce(F.expr(predicate), F.lit(False))) \
+            .limit(1).count():
         raise DeltaConstraintViolation(
             f"replaceWhere: incoming rows do not all satisfy "
             f"{predicate!r}")
-    id_md = _identity_hwm_update(rep, adds)
-    rt_actions = (_assign_base_row_ids(rep.domains, adds, rep.version + 1)
-                  if rt_cols is not None else [])
-    actions: list[dict] = [
-        {"commitInfo": {"timestamp": ts, "operation": "WRITE",
-                        "operationParameters": {
-                            "mode": "Overwrite",
-                            "predicate": predicate}}},
-        *([{"metaData": id_md}] if id_md is not None else []),
-        *rt_actions,
-        *({"add": {**a, "dataChange": True}} for a in adds),
-        *({"remove": {"path": a["path"], "deletionTimestamp": ts,
-                      "dataChange": True,
-                      "partitionValues": a.get("partitionValues") or {},
-                      "size": a.get("size")}}
-          for a in affected),
-    ]
-    if _cdf_enabled(rep.metadata):
-        pieces = [new_rows.withColumn(_CDC_TYPE, F.lit("insert"))]
-        if affected:
-            aff = _scan_files(spark, table_path, rep, affected)
-            pieces.append(aff.filter(hit).select(*logical)
-                          .withColumn(_CDC_TYPE, F.lit("delete")))
-        cdc_df = pieces[0]
-        for p in pieces[1:]:
-            cdc_df = cdc_df.unionByName(p)
-        cdc = _stage_files(spark, cdc_df, table_path,
-                           rep.partition_columns, ts,
-                           subdir="_change_data", rep=rep)
-        actions += [{"cdc": {**c, "dataChange": False}} for c in cdc]
-    return _strict_commit(spark, table_path, rep.version + 1, actions,
-                          "replace-where", metadata=rep.metadata)
+    m = _predicate_rows(spark, table_path, rep, "replace-where", predicate,
+                        False, inserts=new_rows)
+    return _commit_rows(spark, table_path, rep, ts, m, False, False,
+                        "replace-where", "WRITE",
+                        {"mode": "Overwrite", "predicate": predicate},
+                        max_records_per_file)

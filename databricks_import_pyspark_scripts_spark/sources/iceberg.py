@@ -1114,6 +1114,16 @@ def _file_key(table_path: str, f: dict) -> str:
                     .rstrip("/").split("/")[-2:])
 
 
+def _need_positions(files: list[dict], what: str) -> None:
+    """Refuse ``what`` over ORC data files: it addresses rows by
+    position, and Spark's ORC reader emits no ``_metadata.row_index``."""
+    if any((f.get("file_format") or "PARQUET").upper() == "ORC"
+           for f in files):
+        raise IcebergProtocolError(
+            f"{what} over ORC data files: row positions need "
+            f"_metadata.row_index, which Spark's ORC reader does not emit")
+
+
 def _keyed_files(table_path: str, files: list[dict]) -> dict[str, dict]:
     """``{file key: file}``, refusing a 2-segment key collision: delete
     rows and merge hits could not be attributed to one data file."""
@@ -1287,6 +1297,7 @@ def _apply_row_deletes(spark: SparkSession, keyed: DataFrame,
     helper columns unless the caller still needs the row identity (the
     change-feed diff does). The 2-segment file-key collision check
     guards BOTH attributions."""
+    _need_positions(data_files, "merge-on-read")
     _keyed_files(table_path, data_files)
     pos = [d for d in deletes if int(d.get("content") or 0) == 1]
     eq = [d for d in deletes if int(d.get("content") or 0) == 2]
@@ -1359,7 +1370,9 @@ def _scan_data_files(spark: SparkSession, table_path: str, meta: dict,
     adds each row's file URI (``_PROV_F``), file key (``_POS_KEY``) and
     position (``_POS_IDX``) — the row identity row deletes and DML
     address — taken inside each per-format and per-default group before
-    the union, since a union carries no ``_metadata``."""
+    the union, since a union carries no ``_metadata``. ORC rows carry a
+    NULL position: whatever addresses rows by position refuses ORC files
+    first (``_need_positions``)."""
     from pyspark.sql import functions as F
 
     def _fmt(f: dict) -> str:
@@ -1369,11 +1382,6 @@ def _scan_data_files(spark: SparkSession, table_path: str, meta: dict,
                        for f in files if _fmt(f) == "ORC")
     pq_paths = [_resolve_path(table_path, f["file_path"])
                 for f in files if _fmt(f) != "ORC"]
-    if orc_paths and keyed:
-        raise IcebergProtocolError(
-            "merge-on-read over ORC data files: row positions need "
-            "_metadata.row_index, which Spark's ORC reader does not "
-            "emit — rewrite the table or drop the deletes")
     schema = iceberg_spark_schema(meta)
     name_mapped = bool((meta.get("properties") or {}).get(
         "schema.name-mapping.default"))
@@ -1456,7 +1464,9 @@ def _scan_data_files(spark: SparkSession, table_path: str, meta: dict,
         # renamed-column history over ORC files would need id
         # resolution and is out of scope (parquet files in the same
         # table keep full id resolution)
-        parts.append(spark.read.schema(schema).orc(orc_paths))
+        parts.append(spark.read.schema(schema).orc(orc_paths).select(
+            "*", *ident[:1],
+            *([F.lit(None).cast("long").alias(_POS_IDX)] if keyed else [])))
     scan = parts[0]
     for p in parts[1:]:
         scan = scan.unionByName(p)
@@ -2794,6 +2804,7 @@ def read_iceberg_snapshot_with_row_ids(spark: SparkSession,
             f"{len(missing)} live file(s) carry no first_row_id — "
             f"explicit or inherited from the manifest's first_row_id "
             f"assignment; run enable_iceberg_row_lineage to backfill")
+    _need_positions(files, "row lineage")
     keyed = _scan_data_files(spark, root, meta, files, keyed=True)
     if deletes:
         keyed = _apply_row_deletes(spark, keyed, root, files, deletes,
@@ -2990,8 +3001,6 @@ def _compact(spark: SparkSession, table_path: str, meta: dict,
     ts = _stamp_ts(meta, ts_ms)
     tag = f"c{uuid.uuid4().hex[:12]}"
     ddir = os.path.join(root, "data")
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    read_schema = iceberg_spark_schema(meta)
     with_ids_cols = [
         F.col(f["name"]).alias(f["name"],
                                metadata={"parquet.field.id": f["id"]})
@@ -3001,20 +3010,14 @@ def _compact(spark: SparkSession, table_path: str, meta: dict,
     import pyarrow.parquet as pq
 
     for j, (pkey, fs) in enumerate(sorted(groups.items(), key=str)):
-        paths = [_resolve_path(table_path, f["file_path"]) for f in fs]
         total = sum(int(f.get("file_size_in_bytes") or 0) for f in fs)
         n_out = max(1, -(-total // max(small_file_bytes, 1)))
-        scan = spark.read.schema(read_schema).parquet(*paths)
+        # the snapshot read's own scan and delete apply: outputs carry
+        # only EFFECTIVE rows, with v3 initial-default values
+        scan = _scan_data_files(spark, table_path, meta, fs,
+                                keyed=bool(deletes))
         if deletes:
-            # fold row-level deletes into the rewrite: outputs carry
-            # only EFFECTIVE rows, via the same apply machinery the
-            # snapshot read uses
-            keyed = scan.select(
-                "*",
-                _file_key_expr(F.col("_metadata.file_path"))
-                .alias(_POS_KEY),
-                F.col("_metadata.row_index").alias(_POS_IDX))
-            scan = _apply_row_deletes(spark, keyed, table_path, fs,
+            scan = _apply_row_deletes(spark, scan, table_path, fs,
                                       deletes, meta)
         merged = scan.select(*with_ids_cols).coalesce(int(n_out))
         staging = os.path.join(root, f"_staging_{tag}-g{j:03d}")
@@ -3163,12 +3166,7 @@ def _provenance_scan(spark: SparkSession, table_path: str, meta: dict,
     deletes: list[dict] = []
     files = _keyed_files(table_path, live_data_files(
         spark, table_path, meta, None, deletes_out=deletes))
-    if any((f.get("file_format") or "PARQUET").upper() == "ORC"
-           for f in files.values()):
-        raise IcebergProtocolError(
-            f"{op} over ORC data files: row positions need "
-            f"_metadata.row_index, which Spark's ORC reader does not "
-            f"emit")
+    _need_positions(list(files.values()), op)
     return (_provenance_rows(spark, table_path, meta, files, deletes,
                              list(files.values())), files, deletes)
 
@@ -3957,12 +3955,13 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
     _pairs_memo: dict = {}        # position-delete frames, per delete set
 
     def raw_keyed(files: dict[str, dict]) -> DataFrame | None:
-        """Scan of the given data files WITH the (file key, row index)
-        identity columns, deletes NOT applied — the probe-guarded base
-        both the effective form and the r15 flag diff build on."""
+        """The snapshot read's scan of the given data files WITH the
+        row identity columns (``_scan_data_files``: v3 initial-default,
+        name mapping), deletes NOT applied — the probe-guarded base of
+        the effective form, the r15 flag diff and the whole-file
+        batches."""
         if not files:
             return None
-        paths = []
         for f in files.values():
             rp = _resolve_path(table_path, f["file_path"])
             if rp not in _exist_ok:
@@ -3971,11 +3970,8 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
                         f"DELTA_CHANGE_DATA_FILE_NOT_FOUND: {rp} referenced "
                         f"by a past snapshot but absent (expired?)")
                 _exist_ok.add(rp)
-            paths.append(rp)
-        return (spark.read.schema(schema).parquet(*paths).select(
-            "*",
-            _file_key_expr(F.col("_metadata.file_path")).alias(_POS_KEY),
-            F.col("_metadata.row_index").alias(_POS_IDX)))
+        return _scan_data_files(spark, table_path, meta,
+                                list(files.values()), keyed=True)
 
     def effective_keyed(files: dict[str, dict],
                         deletes: list[dict]) -> DataFrame | None:
@@ -3996,10 +3992,8 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
     # _exists probe in raw_keyed still runs once per file per feed.)
 
     schema = iceberg_spark_schema(meta)
-    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-
-    ins: list[tuple[int, int, str]] = []   # (ordinal, ts, path)
-    dels: list[tuple[int, int, str]] = []
+    ins: list[tuple[int, int, dict]] = []   # (ordinal, ts, data file)
+    dels: list[tuple[int, int, dict]] = []
     mor_pieces: list[DataFrame] = []
     prev, prev_dels = live_state(starting_ordinal)
     for o in range(starting_ordinal + 1, ending_ordinal + 1):
@@ -4010,12 +4004,9 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
             # 2-segment key must be unique across BOTH snapshots' files
             # (within-snapshot uniqueness is checked at delete apply)
             by_key: dict[str, str] = {}
+            _need_positions([*prev.values(), *cur.values()],
+                            "merge-on-read ordinal step")
             for f in list(prev.values()) + list(cur.values()):
-                if (f.get("file_format") or "PARQUET").upper() == "ORC":
-                    raise IcebergProtocolError(
-                        "merge-on-read ordinal step over ORC data "
-                        "files: row identity needs _metadata.row_index "
-                        "(parquet-only in Spark)")
                 k = _file_key(table_path, f)
                 rp = _resolve_path(table_path, f["file_path"])
                 if by_key.setdefault(k, rp) != rp:
@@ -4092,14 +4083,8 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
                     .withColumn("_commit_timestamp",
                                 F.timestamp_millis(F.lit(ts))))
         else:
-            for p in cur.keys() - prev.keys():
-                ins.append((o, ts, p,
-                            (cur[p].get("file_format")
-                             or "PARQUET").upper()))
-            for p in prev.keys() - cur.keys():
-                dels.append((o, ts, p,
-                             (prev[p].get("file_format")
-                              or "PARQUET").upper()))
+            ins += [(o, ts, cur[p]) for p in cur.keys() - prev.keys()]
+            dels += [(o, ts, prev[p]) for p in prev.keys() - cur.keys()]
         prev, prev_dels = cur, cur_dels
 
     pieces = list(mor_pieces)
@@ -4111,35 +4096,20 @@ def read_iceberg_changes(spark: SparkSession, table_path: str,
         # row out to every (ordinal, ts) the file changed at — the
         # correct multiplicity. Join key: full normalized path, not the
         # basename (two dirs may share basenames; a basename join would
-        # cross-tag ordinals). ORC files batch into their own scan —
-        # one reader call per format, never per file.
-        by_fmt: dict[str, set] = {}
-        for _, _, p, fmt in group:
-            by_fmt.setdefault(fmt, set()).add(_resolve_path(table_path, p))
-        for fmt, pset in by_fmt.items():
-            paths = sorted(pset)
-            for p in paths:
-                if not _exists(spark, p):
-                    raise FileNotFoundError(
-                        f"DELTA_CHANGE_DATA_FILE_NOT_FOUND: {p} "
-                        f"referenced by a past snapshot but absent "
-                        f"(expired?)")
-            norm = F.regexp_replace(
-                _uri_decode(F.input_file_name()), "^file:/+", "/")
-            df = (spark.read.schema(schema).orc(paths) if fmt == "ORC"
-                  else spark.read.schema(schema).parquet(*paths)) \
-                .withColumn("__f", norm)
-            fmap = local_frame(
-                spark, [(_resolve_path(table_path, p), o, ts)
-                 for o, ts, p, f2 in group if f2 == fmt],
-                "__f string, __o long, __ts long")
-            df = (df.join(F.broadcast(fmap), "__f")
-                  .withColumn("_change_type", F.lit(ctype))
-                  .withColumn("_commit_version", F.col("__o"))
-                  .withColumn("_commit_timestamp",
-                              F.timestamp_millis(F.col("__ts")))
-                  .drop("__f", "__o", "__ts"))
-            pieces.append(df)
+        # cross-tag ordinals). The read path scans each format once.
+        fmap = local_frame(
+            spark, [(_resolve_path(table_path, f["file_path"]), o, ts)
+                    for o, ts, f in group],
+            "__f string, __o long, __ts long")
+        pieces.append(
+            raw_keyed({f["file_path"]: f for _, _, f in group})
+            .withColumn("__f", F.regexp_replace(
+                _uri_decode(F.col(_PROV_F)), "^file:/+", "/"))
+            .join(F.broadcast(fmap), "__f")
+            .withColumn("_change_type", F.lit(ctype))
+            .withColumn("_commit_version", F.col("__o"))
+            .withColumn("_commit_timestamp",
+                        F.timestamp_millis(F.col("__ts"))))
 
     order = [f.name for f in schema.fields] + [
         "_change_type", "_commit_version", "_commit_timestamp"]

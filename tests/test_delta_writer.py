@@ -20,7 +20,9 @@ from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
     create_delta_table,
     delete_where,
     latest_delta_version,
+    merge_into,
     overwrite_delta,
+    replace_where,
     update_where,
     vacuum_delta,
     write_classic_checkpoint,
@@ -672,27 +674,60 @@ def _upsert_source(spark):
         "k long, p string, v double")
 
 
-def test_merge_job_budget(spark, table):
-    """An update-plus-insert merge runs one probe over the target and
-    one join over the touched files shared by both writes. Measured on
-    this fixture (log replay, probe, data write, change-feed write):
-    the earlier four-action merge (duplicate guard, touched-file collect,
-    data write, change-feed write, each rebuilding the join) ran 26-27
-    jobs; the two-pass merge runs 18-20."""
-    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
-        merge_into,
-    )
+def _replacement(spark):
+    return spark.range(200, 210).selectExpr(
+        "id AS k", "'2' AS p", "CAST(id * 3.0 AS double) AS v")
 
+
+#: verb x layout -> (op on the ``table`` fixture, Spark jobs it may run,
+#: rows left in the table)
+_ROW_OP_BUDGETS = {
+    "delete-rewrite": (lambda spark, t: delete_where(
+        spark, t, "k % 7 = 1", ts_ms=3000), 9, 85),
+    "delete-dv": (lambda spark, t: delete_where(
+        spark, t, "k % 7 = 1", ts_ms=3000, use_dv=True), 5, 85),
+    "update-rewrite": (lambda spark, t: update_where(
+        spark, t, "k % 7 = 1", {"v": "v + 1"}, ts_ms=3000), 9, 100),
+    "update-dv": (lambda spark, t: update_where(
+        spark, t, "k % 7 = 1", {"v": "v + 1"}, ts_ms=3000,
+        use_dv=True), 10, 100),
+    "merge-rewrite": (lambda spark, t: merge_into(
+        spark, t, _upsert_source(spark), on=["k"],
+        when_matched_update={"v": "t.v + s.v"}, ts_ms=3000), 20, 102),
+    "merge-dv": (lambda spark, t: merge_into(
+        spark, t, _upsert_source(spark), on=["k"],
+        when_matched_update={"v": "t.v + s.v"}, ts_ms=3000,
+        use_dv=True), 19, 102),
+    "replace_where": (lambda spark, t: replace_where(
+        spark, _replacement(spark), t, "p = '2'", ts_ms=3000), 11, 87),
+}
+
+
+@pytest.mark.parametrize("case", list(_ROW_OP_BUDGETS))
+def test_merge_job_budget(spark, table, case):
+    """Spark jobs per row-level verb and layout, all committed by
+    ``_commit_rows``. An update-plus-insert merge runs one probe over
+    the target and one join over the touched files shared by both
+    writes: the earlier four-action merge (duplicate guard, touched-file
+    collect, data write, change-feed write, each rebuilding the join)
+    ran 26-27 jobs, the two-pass merge 18-20. Before the row-level verbs
+    shared one commit, on this fixture in a warm 4-core session
+    (``statusTracker().getJobIdsForGroup``, 3 rounds): DELETE 9
+    (rewrite) and 5 (DV), UPDATE 9 and 10, MERGE 19 and 19,
+    replaceWhere 11. With the shared commit each case measures the same
+    count and is pinned at it, except the rewrite MERGE, which keeps its
+    earlier bound of 20 (it has measured 18-20)."""
+    op, budget, rows = _ROW_OP_BUDGETS[case]
     sc = spark.sparkContext
-    sc.setJobGroup("test-merge-job-budget", "merge job budget")
+    group = f"test-merge-job-budget-{case}"
+    sc.setJobGroup(group, "row-level job budget")
     try:
-        merge_into(spark, table, _upsert_source(spark), on=["k"],
-                   when_matched_update={"v": "t.v + s.v"}, ts_ms=3000)
+        op(spark, table)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("test-merge-job-budget")
-    assert 0 < len(jobs) <= 20
-    assert read_delta_snapshot(spark, table).count() == 102
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= budget
+    assert read_delta_snapshot(spark, table).count() == rows
 
 
 def test_merge_releases_cached_join(spark, table):
@@ -1311,7 +1346,7 @@ def test_dv_row_op_base_collision_rejects(spark, tmp_path):
     with pytest.raises(NotImplementedError, match="collision"):
         delete_where(spark, t, "k >= 0", ts_ms=3000, use_dv=True)
     # the rewrite path attributes matched rows through the same 2-segment
-    # key (_rewrite_op by_base) — a collision there silently drops one
+    # key (_predicate_rows' by_base) — a collision there silently drops one
     # file from the rewrite set, so it must reject too
     with pytest.raises(NotImplementedError, match="collision"):
         delete_where(spark, t, "k >= 0", ts_ms=3000, use_dv=False)
@@ -2493,6 +2528,95 @@ def test_replace_where_selective_overwrite(spark, table):
         replace_where(spark, spark.range(0, 3).selectExpr(
             "id AS k", "'9' AS p", "CAST(id AS double) AS v"), table,
             "p = '2'", ts_ms=3000)
+
+
+def test_replace_where_refuses_before_staging(spark, table):
+    """A replaceWhere whose incoming rows fall outside its predicate is
+    refused before anything is staged: no new file under the table."""
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        DeltaConstraintViolation,
+    )
+
+    def files():
+        return {os.path.join(d, n) for d, _, ns in os.walk(table)
+                for n in ns}
+
+    before = files()
+    with pytest.raises(DeltaConstraintViolation, match="replaceWhere"):
+        replace_where(spark, spark.range(0, 3).selectExpr(
+            "id AS k", "'1' AS p", "CAST(id AS double) AS v"), table,
+            "p = '2'", ts_ms=3000)
+    assert files() == before
+
+
+_LAYOUT_OPS = {
+    # p IS NULL for k < 6: the predicate is NULL there and the row kept
+    "delete": lambda spark, t, use_dv: delete_where(
+        spark, t, "p <> '1' AND k % 3 = 0", ts_ms=2000, use_dv=use_dv),
+    # self-referential SET: the hit set binds to the pre-update v, so
+    # rows pushed past 40 still get their post-image
+    "update": lambda spark, t, use_dv: update_where(
+        spark, t, "v <= 40 AND p <> '3'", {"v": "v + 7"}, ts_ms=2000,
+        use_dv=use_dv),
+    # the NULL source key matches the NULL target key (<=>)
+    "merge": lambda spark, t, use_dv: merge_into(
+        spark, t, spark.createDataFrame(
+            [(None, "1", 5.0), (0, "9", 1.0), (4, "9", -1.0),
+             (500, "2", 1.0)], "k long, p string, v double"),
+        on=["k"], when_matched_update={"v": "t.v + s.v"},
+        when_matched_delete="s.v < 0", ts_ms=2000, use_dv=use_dv),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LAYOUT_OPS))
+def test_row_op_layouts_agree(spark, tmp_path, op):
+    """The rewrite and deletion-vector layouts of one row-level verb,
+    run on two deep clones of one table with CDF and row tracking on,
+    leave the same snapshot, the same change feed and the same row id
+    on every row that existed before; inserted rows get fresh ids above
+    the old ones."""
+    from databricks_import_pyspark_scripts_spark.sources.delta_log import (
+        read_delta_snapshot_with_row_ids,
+    )
+
+    def rows(df, cols):
+        return sorted((tuple(r) for r in df.select(*cols).collect()),
+                      key=repr)
+
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        clone_delta,
+    )
+
+    base = str(tmp_path / "base")
+    create_delta_table(
+        spark, _frame(spark, 0, 40, null_p_below=6).unionByName(
+            spark.createDataFrame([(None, "1", -1.0)],
+                                  "k long, p string, v double")),
+        base, partition_by=["p"], cdf=True, ts_ms=1000,
+        configuration={"delta.enableRowTracking": "true"})
+    old_ids = {r.k: r._row_id for r in
+               read_delta_snapshot_with_row_ids(spark, base).collect()}
+    ends = {}
+    for use_dv in (False, True):
+        # a deep clone keeps every file's baseRowId: both layouts start
+        # from the same row ids
+        t = str(tmp_path / f"{op}_{use_dv}")
+        clone_delta(spark, base, t, shallow=False, ts_ms=1000)
+        assert _LAYOUT_OPS[op](spark, t, use_dv) == 1
+        dvs = [a for a in replay_log(spark, t).files.values()
+               if a.get("deletionVector")]
+        assert bool(dvs) == use_dv
+        ids = {r.k: r._row_id for r in
+               read_delta_snapshot_with_row_ids(spark, t).collect()}
+        assert len(set(ids.values())) == len(ids)
+        assert all(i > max(old_ids.values())
+                   for k, i in ids.items() if k not in old_ids)
+        ends[use_dv] = (
+            rows(read_delta_snapshot(spark, t), ["k", "p", "v"]),
+            rows(read_delta_changes(spark, t, 0, 1),
+                 ["k", "p", "v", "_change_type", "_commit_version"]),
+            {k: i for k, i in ids.items() if k in old_ids})
+    assert ends[False] == ends[True]
 
 
 def test_v2_checkpoint_multi_sidecar_shards_and_replays(spark, table,

@@ -4556,6 +4556,50 @@ def test_local_and_catalog_writes_agree(spark, tmp_path, op):
                                  else list(range(20)))
 
 
+def test_compaction_keeps_initial_default(spark, tmp_path):
+    """Compaction reads through the snapshot read's scan: rows of a file
+    written before an ``initial-default`` column keep the default in the
+    compacted output instead of turning NULL."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        append_iceberg,
+        compact_iceberg_table,
+    )
+
+    t = str(tmp_path / "cmp_default")
+    _lineage_table(spark, t, initial_default=True)
+    append_iceberg(spark, spark.range(100, 102).selectExpr(
+        "id AS k", "CAST(id AS double) AS v", "CAST(1 AS int) AS flag"), t)
+    before = sorted(tuple(r) for r in read_iceberg_snapshot(spark, t)
+                    .select("k", "v", "flag").collect())
+    assert {r[2] for r in before} == {7, 1}
+    assert compact_iceberg_table(spark, t) is not None
+    assert sorted(tuple(r) for r in read_iceberg_snapshot(spark, t)
+                  .select("k", "v", "flag").collect()) == before
+
+
+def test_change_feed_applies_initial_default(spark, tmp_path):
+    """The change feed reads through the snapshot read's scan: an
+    UPDATE's delete row (merge-on-read step) and the whole-file insert
+    rows of the first snapshot carry ``initial-default`` 7 for a file
+    written before the column, like the snapshot read does."""
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        iceberg_update_where,
+        read_iceberg_changes,
+    )
+
+    t = str(tmp_path / "cdf_default")
+    _lineage_table(spark, t, initial_default=True)
+    iceberg_update_where(spark, t, "k = 1", {"v": "v + 100"})
+    last = len(read_table_metadata(spark, t)["snapshots"]) - 1
+    step = read_iceberg_changes(spark, t, last - 1, last)
+    assert sorted((r.k, r._change_type, r.v, r.flag)
+                  for r in step.collect()) == [
+        (1, "delete", 1.0, 7), (1, "insert", 101.0, 7)]
+    first = read_iceberg_changes(spark, t, -1, 0)
+    assert {(r._change_type, r.flag) for r in first.collect()} == {
+        ("insert", 7)}
+
+
 @pytest.mark.parametrize("transport", ["local", "catalog"])
 def test_dml_snapshot_timestamp_follows_the_head(spark, tmp_path,
                                                  transport):

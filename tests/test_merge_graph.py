@@ -514,3 +514,35 @@ def test_merges_share_one_planner():
                  and not isinstance(c.value, ast.Constant)]
         assert "two_pass_merge" in names, fn.__name__
         assert not joins, fn.__name__
+
+
+def test_row_level_verbs_share_one_commit():
+    """Delta's DELETE, UPDATE, MERGE and replaceWhere all commit through
+    ``_commit_rows``: none of them (nor the record builder the predicate
+    verbs share) stages files, stamps deletion vectors or commits on its
+    own, and only the committer stages ``_change_data`` files."""
+    import ast
+    import inspect
+    import textwrap
+
+    from databricks_import_pyspark_scripts_spark.sinks import delta_writer
+
+    def called(fn):
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
+        return {n.func.id for n in ast.walk(tree)
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)}
+
+    own = {"_strict_commit", "_stage_files", "_dv_stamp_actions"}
+    for fn in (delta_writer.delete_where, delta_writer.update_where,
+               delta_writer.merge_into, delta_writer.replace_where):
+        assert "_commit_rows" in called(fn), fn.__name__
+        assert not called(fn) & own, fn.__name__
+    assert not called(delta_writer._predicate_rows) & own
+    module = ast.parse(inspect.getsource(delta_writer))
+    cdc_stagers = {
+        f.name for f in module.body if isinstance(f, ast.FunctionDef)
+        for n in ast.walk(f)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+        and n.func.id == "_stage_files"
+        and any(k.arg == "subdir" for k in n.keywords)}
+    assert cdc_stagers == {"_commit_rows"}
