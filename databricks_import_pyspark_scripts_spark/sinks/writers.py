@@ -5,9 +5,10 @@ Reference operators W1-W4 (/root/reference/unload_databricks_data_to_s3.py:
 
 * Parquet writes are VOID-scrubbed first (reference parity, W2 applies P2;
   JSON is not scrubbed — JSON can carry nulls).
-* Sidecars go through the Hadoop FileSystem API instead of ``dbutils.fs.put``
-  so the same code writes file://, hdfs:// or s3a:// — no Databricks
-  dependency, works from the driver on any cluster.
+* Sidecars are written from the driver instead of by ``dbutils.fs.put``:
+  local and ``file:`` paths with plain file I/O, hdfs:// or s3a:// through
+  the Hadoop FileSystem API — no Databricks dependency, works on any
+  cluster.
 * zstd level 3 parquet compression, like the reference.
 """
 
@@ -19,6 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.void_scrub import drop_void_fields
+from ..sources.delta_log import _write_bytes
 
 FORMATS = ("json", "parquet", "csv", "orc", "delta")
 
@@ -138,16 +140,8 @@ def write_export(df: DataFrame, path: str, fmt: str = "parquet",
 
 
 def write_text_sidecar(spark: SparkSession, path: str, content: str) -> None:
-    """Small driver-side file via Hadoop FS (replaces dbutils.fs.put)."""
-    sc = spark.sparkContext
-    jvm = sc._jvm  # noqa: SLF001
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(content.encode("utf-8")))
-    finally:
-        out.close()
+    """Small driver-side file (replaces dbutils.fs.put)."""
+    _write_bytes(spark, path, content.encode("utf-8"))
 
 
 def write_json_sidecar(spark: SparkSession, path: str, payload: Any) -> None:

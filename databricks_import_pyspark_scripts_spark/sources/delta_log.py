@@ -81,6 +81,7 @@ Supported reader features: ``timestampNtz``, ``vacuumProtocolCheck``,
 
 from __future__ import annotations
 
+import contextlib
 import io
 import json
 import os
@@ -179,7 +180,10 @@ def _is_local(path: str) -> bool:
     return "://" not in path or path.startswith("file:")
 
 def _strip_scheme(path: str) -> str:
-    return path[len("file://"):] if path.startswith("file://") else path
+    for scheme in ("file://", "file:"):
+        if path.startswith(scheme):
+            return path[len(scheme):]
+    return path
 
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm  # noqa: SLF001
@@ -212,6 +216,26 @@ def _read_bytes(spark: SparkSession, path: str) -> bytes:
         return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
+
+def _write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Create or overwrite ``path`` with ``data``, making parent dirs."""
+    if _is_local(path):
+        local = _strip_scheme(path)
+        os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
+        with open(local, "wb") as f:
+            f.write(data)
+        # a checksum Hadoop's local FS left from an earlier write would
+        # no longer match, and Hadoop reads verify it
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(os.path.dirname(local),
+                                   f".{os.path.basename(local)}.crc"))
+        return
+    fs, p = _hadoop_fs(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
 
 def _mtime_ms(spark: SparkSession, path: str) -> int:
     if _is_local(path):
@@ -670,7 +694,9 @@ def _with_file_base(df: DataFrame) -> DataFrame:
     hive-style partition dir, and the file name itself embeds a UUID —
     the pair is unique for every real-world layout (a colliding log still
     gets a correct answer via the per-group fallback scan)."""
-    segs = F.split(F.col("_metadata.file_path"), "/")
+    # a URI path keeps "+" literal, where url_decode would read a space
+    segs = F.split(F.replace(F.col("_metadata.file_path"), F.lit("+"),
+                             F.lit("%2B")), "/")
     return df.withColumn(
         _FILE_BASE,
         F.url_decode(F.concat_ws(
@@ -1012,11 +1038,28 @@ def read_delta_changes(spark: SparkSession, table_path: str,
     by re-reading the removed file, which VACUUM may have dropped: that
     raises the DELTA_CHANGE_DATA_FILE_NOT_FOUND signature the caller's
     retry ladder already classifies). All versions are batched into at
-    most three scans (cdc / inserts / deletes) with ``_commit_version``
-    attached from a broadcast file -> (version, timestamp) map — never one
-    scan per version. The map is built from the driver's log replay as a
-    ``local_frame`` (a JVM LocalRelation): a sync starts no Python
-    worker to read it back."""
+    most three scans (cdc / inserts / deletes), never one scan per
+    version, and each scan reads every distinct file once.
+
+    Rows get their version and timestamp by a broadcast join on the file
+    key (``_FILE_BASE``) to a file -> (version, timestamp) map built from
+    the driver's log replay as a ``local_frame`` (a JVM LocalRelation, so
+    no Python worker starts to read it back). Its shape depends on the
+    map:
+
+    * every file changed at one version: a LEFT join to the map
+      deduplicated on the key. The optimizer knows the map is unique on
+      the key, so when no consumer reads ``_commit_version`` or
+      ``_commit_timestamp`` — the unload path, where ``cdc.filter_data``
+      drops both — it removes the join, and the export runs as the one
+      write job with no broadcast;
+    * a file changed at several versions (removed, restored, removed
+      again): an INNER join, which emits one copy of the file's rows per
+      version, whether or not the tags are read.
+
+    Two distinct files in one batch that share a file key would be tagged
+    with each other's versions, so that raises ``DeltaProtocolError``
+    before any data is read."""
     first = starting_version + 1
     rep = replay_log(spark, table_path, ending_version, collect_from=first)
     conf = rep.metadata.get("configuration") or {}
@@ -1061,16 +1104,39 @@ def read_delta_changes(spark: SparkSession, table_path: str,
                                 (dels, "delete", None)):
         if not group:
             continue
-        df = _scan_files(spark, table_path, rep, [a for _, a in group],
+        # one scan per distinct file: a file removed, restored and removed
+        # again inside the window is read once, then fanned out below
+        actions = list({_resolve(table_path, a["path"]): a
+                        for _, a in group}.values())
+        if len({_action_base(table_path, a["path"])
+                for a in actions}) != len(actions):
+            # the version map joins on the 2-segment file key; two files
+            # sharing it would each be tagged with the other's versions
+            raise DeltaProtocolError(
+                f"file key collision among change files of {table_path} "
+                f"in ({starting_version}, {ending_version}]; rows cannot "
+                f"be attributed to versions unambiguously")
+        df = _scan_files(spark, table_path, rep, actions,
                          extra_data_cols=extra, check_exists=True)
-        ver_rows = [(_action_base(table_path, a["path"]),
-                     v, rep.commit_ts_ms[v]) for v, a in group]
+        ver_rows = list(dict.fromkeys(
+            (_action_base(table_path, a["path"]), v, rep.commit_ts_ms[v])
+            for v, a in group))
         ver_df = local_frame(
-            spark, ver_rows, "__delta_file_base string, __v long, __ts long")
-        df = (df.join(F.broadcast(ver_df), _FILE_BASE)
-              .withColumn(_CDC_VERSION, F.col("__v"))
+            spark, ver_rows, f"{_FILE_BASE} string, __v long, __ts long")
+        if len(ver_rows) > len(actions):
+            # a file changed at several versions: the inner join emits one
+            # copy of its rows per version
+            df = df.join(F.broadcast(ver_df), _FILE_BASE)
+        else:
+            # one version per file: a left join to a map deduplicated on
+            # the key, which the optimizer drops when nothing reads a tag.
+            # coalesce(1) lets the dedup run inside the broadcast job
+            # instead of adding a shuffle when the join stays.
+            unique = ver_df.coalesce(1).dropDuplicates([_FILE_BASE])
+            df = df.join(F.broadcast(unique), _FILE_BASE, "left")
+        df = (df.withColumn(_CDC_VERSION, F.col("__v"))
               .withColumn(_CDC_TS, F.timestamp_millis(F.col("__ts")))
-              .drop("__delta_file_base", "__v", "__ts"))
+              .drop(_FILE_BASE, "__v", "__ts"))
         if ctype is not None:
             df = df.withColumn(_CDC_TYPE, F.lit(ctype))
         pieces.append(df)

@@ -31,6 +31,7 @@ instead (import-gated; the v1 image has no Delta jars).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 
@@ -97,10 +98,17 @@ def _snapshot_dir(root: str, table: str, version: int) -> str:
 
 
 def _delta_available(spark: SparkSession) -> bool:
+    return _delta_on_classpath(spark._jvm)  # noqa: SLF001
+
+
+@functools.cache
+def _delta_on_classpath(jvm) -> bool:
+    """Asked once per JVM: its classpath cannot change while it runs, and
+    a failed lookup costs a py4j exception conversion on every read."""
     try:
         # Class.forName raises if the Delta jars are absent (a bare package
         # lookup would not — Py4J returns a stub for unknown packages)
-        spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")  # noqa: SLF001
+        jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
         return True
     except Exception:
         return False

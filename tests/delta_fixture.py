@@ -652,3 +652,32 @@ def make_type_widened_table(table_path: str) -> str:
                  "dataChange": True, "modificationTime": 2}},
     ])
     return table_path
+
+
+MERGED_SYNC_SQL = ("SELECT event_id, unix_millis(ts) AS time, "
+                   "named_struct('event_type', event_type, 'value', value) "
+                   "AS user_properties FROM events")
+
+
+def make_merged_cdf_table(spark, table_path: str, merges: int = 3) -> str:
+    """A CDF-enabled table written by the package's own Delta writer: 40
+    events at v0, then ``merges`` MERGE commits of 15 rows each (updates,
+    plus inserts once the keys run past 39) — the incremental-sync shape
+    at test size. Query it with ``MERGED_SYNC_SQL``."""
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        create_delta_table,
+        merge_into,
+    )
+    from pyspark.sql import functions as F
+
+    cols = ("id AS event_id", "CAST(id % 3 AS string) AS event_type",
+            "CAST(id AS double) * 1.5 AS value",
+            "timestamp_seconds(id) AS ts")
+    create_delta_table(spark, spark.range(0, 40).selectExpr(*cols),
+                       table_path, cdf=True)
+    for v in range(1, merges + 1):
+        src = spark.range(10 * v, 10 * v + 15).selectExpr(*cols) \
+            .withColumn("value", F.col("value") + v)
+        merge_into(spark, table_path, src, on=["event_id"],
+                   when_matched_update={"value": "s.value"})
+    return table_path

@@ -121,6 +121,56 @@ def test_cdf_vacuumed_file_raises_retryable_signature(spark, delta_table):
         == "DELTA_CHANGE_DATA_FILE_NOT_FOUND"
 
 
+def test_cdf_file_changed_at_several_versions_scans_once(spark, delta_table):
+    """part=b/f2 is removed at v1, restored at v3 and removed again at v4:
+    each of its rows is one delete per removing version, not one per
+    occurrence times its versions."""
+    log = os.path.join(delta_table, "_delta_log")
+    _commit(log, 3, [
+        {"commitInfo": {"timestamp": V2_TS_MS + 1000, "operation": "RESTORE"}},
+        {"add": {"path": "part=b/f2.parquet", "partitionValues": {"part": "b"},
+                 "size": 1, "dataChange": True, "modificationTime": 4}}])
+    _commit(log, 4, [
+        {"commitInfo": {"timestamp": V2_TS_MS + 2000, "operation": "DELETE"}},
+        {"remove": {"path": "part=b/f2.parquet", "deletionTimestamp": 5,
+                    "dataChange": True, "partitionValues": {"part": "b"}}}])
+    ch = read_delta_changes(spark, delta_table, 0, 4)
+    got = sorted((r._commit_version, r._change_type, r.id, r.part)
+                 for r in ch.collect() if r.id in (4, 5))
+    assert got == [(1, "delete", 4, "b"), (1, "delete", 5, "b"),
+                   (3, "insert", 4, "b"), (3, "insert", 5, "b"),
+                   (4, "delete", 4, "b"), (4, "delete", 5, "b")]
+    # the unload path drops the tags; the fan-out must still hold
+    from databricks_import_pyspark_scripts_spark.operators.cdc import (
+        filter_data,
+    )
+    kept = filter_data(ch, "EVENT", mutability_mode=True)
+    assert sorted(r.id for r in kept.collect() if r.id in (4, 5)) \
+        == [4, 4, 4, 5, 5, 5]
+
+
+def test_cdf_change_file_key_collision_rejected(spark, delta_table):
+    """Two change files sharing their last two path segments would be
+    tagged with each other's versions: refuse before scanning."""
+    from delta_fixture import _write_parquet
+
+    log = os.path.join(delta_table, "_delta_log")
+    _write_parquet(
+        os.path.join(delta_table, "x", "_change_data", "cdc-0.parquet"),
+        [6], [6.0], ["delete"])
+    _commit(log, 3, [
+        {"commitInfo": {"timestamp": V2_TS_MS + 1000, "operation": "DELETE"}},
+        {"remove": {"path": "f3.parquet", "deletionTimestamp": 4,
+                    "dataChange": True, "partitionValues": {"part": None}}},
+        {"cdc": {"path": "x/_change_data/cdc-0.parquet",
+                 "partitionValues": {"part": None}, "size": 1,
+                 "dataChange": False}}])
+    with pytest.raises(DeltaProtocolError, match="collision"):
+        read_delta_changes(spark, delta_table, 1, 3)
+    # each window alone holds one of the two files and reads normally
+    assert read_delta_changes(spark, delta_table, 2, 3).count() == 1
+
+
 # --------------------------------------------------------------------- checkpoint
 
 def _checkpoint_and_truncate(spark, table):
@@ -562,8 +612,17 @@ def test_url_encoded_paths(spark, tmp_path):
         {"add": {"path": "part=a/f%201.parquet",
                  "partitionValues": {"part": "a"}, "size": 1,
                  "dataChange": True}}])
+    # a URI path keeps "+" literal: the file must still match its action
+    _write_parquet(os.path.join(t, "part=b", "f+2.parquet"), [2], [2.0])
+    _commit(os.path.join(t, "_delta_log"), 1, [
+        {"add": {"path": "part=b/f+2.parquet",
+                 "partitionValues": {"part": "b"}, "size": 1,
+                 "dataChange": True}}])
     df = read_delta_snapshot(spark, t)
-    assert [(r.id, r.part) for r in df.collect()] == [(1, "a")]
+    assert sorted((r.id, r.part) for r in df.collect()) == [(1, "a"), (2, "b")]
+    ch = read_delta_changes(spark, t, 0, 1)
+    assert [(r.id, r.part, r._commit_version) for r in ch.collect()] \
+        == [(2, "b", 1)]
 
 
 def test_basename_collision_falls_back_to_grouped_scans(spark, tmp_path):
@@ -600,6 +659,24 @@ def test_versioned_source_dispatches_to_delta(spark, tmp_path):
     # S3 dispatcher: start==0 -> snapshot of end, same as the reference
     assert _ids(fetch_data(spark, root, "events_delta", 0, 2)) \
         == [1, 2, 3, 6, 7, 8]
+
+
+def test_repeated_fetch_converts_no_py4j_exception(spark, tmp_path,
+                                                   monkeypatch):
+    """Whether Delta's jars are on the classpath is asked once per JVM.
+    Without them the lookup raises in the JVM, and PySpark's conversion
+    of that exception cost every read about 25 ms."""
+    from pyspark.errors.exceptions import captured
+
+    root = str(tmp_path)
+    make_delta_table(os.path.join(root, "t"))
+    fetch_data(spark, root, "t", 1, 2)
+    converted = []
+    real = captured.convert_exception
+    monkeypatch.setattr(captured, "convert_exception",
+                        lambda e: converted.append(e) or real(e))
+    assert fetch_data(spark, root, "t", 1, 2).count() == 2
+    assert converted == []
 
 
 def test_run_unload_end_to_end_from_delta_table(spark, tmp_path):

@@ -276,3 +276,67 @@ def test_unload_e2e_on_non_local_fs_scheme(spark, root, tmp_path):
     # the bytes really landed under the mount target on the backing FS
     import glob as _glob
     assert _glob.glob(f"{mount}/job1/part-*.parquet")
+
+
+@pytest.fixture(scope="module")
+def merged_root(spark, tmp_path_factory):
+    from delta_fixture import make_merged_cdf_table
+
+    r = str(tmp_path_factory.mktemp("merged_src"))
+    make_merged_cdf_table(spark, f"{r}/events")
+    return r
+
+
+def test_incremental_sync_runs_one_job(spark, merged_root, tmp_path):
+    """A USER_PROPERTY JSON export over a 2-version window of a merged
+    change feed runs one Spark job, the write. No consumer reads the
+    change rows' version tags, so the optimizer removes their map join;
+    while it ran, its broadcast was a second job."""
+    from delta_fixture import MERGED_SYNC_SQL
+
+    sc = spark.sparkContext
+    for n in range(2):  # the first sync of a session warms caches
+        group = f"test-sync-job-budget-{n}"
+        job = UnloadJob(source_root=merged_root,
+                        table_versions={"events": [1, 3]},
+                        sql=MERGED_SYNC_SQL,
+                        output_path=str(tmp_path / f"out{n}"),
+                        data_type="USER_PROPERTY", fmt="json")
+        sc.setJobGroup(group, "incremental sync job budget")
+        try:
+            report = run_unload(spark, job)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert report["rows"] > 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+@pytest.mark.parametrize("scheme", ["file://", "file:"])
+def test_sidecars_on_file_uri(spark, merged_root, tmp_path, scheme):
+    """Sidecars land at the same paths with the same bytes whether the
+    output is a bare path or a ``file:`` URI."""
+    import os
+
+    from delta_fixture import MERGED_SYNC_SQL
+
+    local = str(tmp_path / "out")
+    job = UnloadJob(source_root=merged_root,
+                    table_versions={"events": [1, 3]}, sql=MERGED_SYNC_SQL,
+                    output_path=f"{scheme}{local}",
+                    data_type="USER_PROPERTY", fmt="json")
+    report = run_unload(spark, job)
+
+    def read(rel):
+        with open(os.path.join(local, rel), "rb") as f:
+            return f.read()
+
+    assert read("meta") == json.dumps(
+        {"event_count": report["rows"],
+         "partition_count": report["partitions"]}).encode()
+    base = f"logs/run_{report['run_id']}"
+    assert read(f"{base}/table_results.json") \
+        == json.dumps(report["table_results"]).encode()
+    assert read(f"{base}/logs.txt") == "\n".join(report["logs"]).encode()
+    assert json.loads(spark.read.text(f"{scheme}{local}/meta").first().value) \
+        == {"event_count": report["rows"],
+            "partition_count": report["partitions"]}

@@ -444,6 +444,35 @@ def test_delta_change_feed_maps_are_local_relations(spark, tmp_path):
         (4, "delete", 7, "a"), (4, "delete", 8, "a")]
 
 
+def test_incremental_export_plan_drops_version_map(spark, tmp_path):
+    """The unload path drops the change rows' version tags, so the
+    optimized export plan keeps no join to the version map: no join, no
+    broadcast, no LocalTableScan. Readers that keep the tags join it
+    (test above)."""
+    from delta_fixture import MERGED_SYNC_SQL, make_merged_cdf_table
+
+    from databricks_import_pyspark_scripts_spark.operators.cdc import (
+        filter_data,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.versioned import (
+        fetch_data,
+    )
+
+    root = str(tmp_path)
+    make_merged_cdf_table(spark, f"{root}/events")
+    filter_data(fetch_data(spark, root, "events", 1, 3),
+                "USER_PROPERTY").createOrReplaceTempView("events")
+    try:
+        export = spark.sql(MERGED_SYNC_SQL)
+        plan = _plan(export)
+        assert "Join" not in plan
+        assert _nodes(plan, "BroadcastExchange") == 0
+        assert _nodes(plan, "LocalTableScan") == 0
+        assert export.count() > 0
+    finally:
+        spark.catalog.dropTempView("events")
+
+
 def test_delta_partitioned_and_row_tracked_scans_are_local(spark, tmp_path):
     from delta_fixture import make_delta_table
 
