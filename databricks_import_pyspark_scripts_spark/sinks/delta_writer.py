@@ -125,23 +125,11 @@ def _now_ms(ts_ms: int | None) -> int:
     return int(time.time() * 1000) if ts_ms is None else int(ts_ms)
 
 
-def _by_base_strict(table_path: str, rep, op: str) -> dict[str, dict]:
-    """Live files keyed by their 2-segment file key, raising on collision.
-    Row-level ops attribute matched rows back to add actions through this
-    key (the scan exposes only ``_FILE_BASE``); a collision would silently
-    drop one colliding file from a rewrite set (its matched rows survive
-    the DELETE) or union two files' row indexes into one deletion vector.
-    Mirrors the reader's ``_scan_files`` guard."""
-    by_base: dict[str, dict] = {}
-    for p, a in rep.files.items():
-        base = _action_base(table_path, p)
-        if base in by_base:
-            raise NotImplementedError(
-                f"file basename collision among live files ({base}); "
-                f"{op.upper()} cannot attribute matched rows to files — "
-                f"compact or rewrite the table first")
-        by_base[base] = a
-    return by_base
+def _by_key(spark: SparkSession, table_path: str, rep) -> dict[str, dict]:
+    """Live add actions by file key: row-level ops attribute the matched
+    rows of a scan (which carries ``_FILE_BASE``) back to their files."""
+    return {_action_base(spark, table_path, p): a
+            for p, a in rep.files.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -424,7 +412,8 @@ def _rt_scan_with_ids(spark: SparkSession, table_path: str, rep,
                        extra_data_cols=[(rid_col, "long"),
                                         (rcv_col, "long")],
                        keep_row_index=True)
-    rows = [(_action_base(table_path, a["path"]), int(a["baseRowId"]),
+    rows = [(_action_base(spark, table_path, a["path"]),
+             int(a["baseRowId"]),
              int(a.get("defaultRowCommitVersion") or -1))
             for a in actions]
     m = local_frame(
@@ -1153,7 +1142,7 @@ def delete_where(spark: SparkSession, table_path: str, predicate: str,
     ts = _now_ms(ts_ms)
     rep = replay_log(spark, table_path)
     _check_writable(rep.metadata, rep.protocol, "delete")
-    m = _predicate_rows(spark, table_path, rep, "delete", predicate, use_dv)
+    m = _predicate_rows(spark, table_path, rep, predicate, use_dv)
     return _commit_rows(spark, table_path, rep, ts, m, use_dv, False,
                         "delete", "DELETE", {"predicate": predicate})
 
@@ -1182,13 +1171,13 @@ def update_where(spark: SparkSession, table_path: str, predicate: str,
                if c not in {f.name for f in rep.schema.fields}]
     if unknown:
         raise ValueError(f"SET targets {unknown} are not table columns")
-    m = _predicate_rows(spark, table_path, rep, "update", predicate, use_dv,
+    m = _predicate_rows(spark, table_path, rep, predicate, use_dv,
                         set_exprs)
     return _commit_rows(spark, table_path, rep, ts, m, use_dv, True,
                         "update", "UPDATE", {"predicate": predicate})
 
 
-def _predicate_rows(spark: SparkSession, table_path: str, rep, op: str,
+def _predicate_rows(spark: SparkSession, table_path: str, rep,
                     predicate: str, use_dv: bool,
                     set_exprs: dict[str, str] | None = None,
                     inserts: DataFrame | None = None):
@@ -1208,7 +1197,7 @@ def _predicate_rows(spark: SparkSession, table_path: str, rep, op: str,
         matched = {r[0] for r in _scan_files(spark, table_path, rep, files)
                    .filter(hit).select(_FILE_BASE).distinct().collect()}
         files = ([a for b, a in sorted(
-            _by_base_strict(table_path, rep, op).items()) if b in matched]
+            _by_key(spark, table_path, rep).items()) if b in matched]
             if matched else [])
     read = (_rt_scan_with_ids if _frame_rt(rep, use_dv, set_exprs is not None)
             else _scan_files)
@@ -1269,7 +1258,7 @@ def _commit_rows(spark: SparkSession, table_path: str, rep, ts: int, m,
         stamp = _dv_stamp_actions(
             spark, table_path, rep, t.filter(m.delete | m.update).select(
                 F.col(f"t.{_FILE_BASE}").alias(_FILE_BASE),
-                F.col(f"t.{_ROW_INDEX}").alias(_ROW_INDEX)), ts, op)
+                F.col(f"t.{_ROW_INDEX}").alias(_ROW_INDEX)), ts)
         if stamp is None:
             t = None                  # no row died: the frame is untouched
     rt = _frame_rt(rep, use_dv, updates) if t is not None else None
@@ -1331,8 +1320,7 @@ def _commit_rows(spark: SparkSession, table_path: str, rep, ts: int, m,
 
 
 def _dv_stamp_actions(spark: SparkSession, table_path: str, rep,
-                      dead: "DataFrame", ts: int,
-                      op: str) -> list[dict] | None:
+                      dead: "DataFrame", ts: int) -> list[dict] | None:
     """``_commit_rows``' DV stamp: ``dead`` is a DataFrame of
     (_FILE_BASE, _ROW_INDEX) rows to mark deleted. Builds each affected
     file's roaring bitmap EXECUTOR-side (``groupBy(file).applyInPandas``,
@@ -1343,14 +1331,11 @@ def _dv_stamp_actions(spark: SparkSession, table_path: str, rep,
     file carrying every bitmap, and returns the [protocol-upgrade?] +
     remove + add-with-descriptor actions. Stats are kept verbatim —
     Delta's DV semantics: numRecords stays the PHYSICAL count, readers
-    subtract cardinality. None when ``dead`` is empty. Raises on a
-    live-file 2-segment key collision — mirrors the reader's _scan_files
-    guard; a collision would silently union two files' matched indexes
-    into one deletion vector."""
+    subtract cardinality. None when ``dead`` is empty."""
     from ..sources import delta_dv
     from ..sources.delta_log import _dv_bytes
 
-    by_base = _by_base_strict(table_path, rep, op)
+    by_base = _by_key(spark, table_path, rep)
     prior_dv_bytes = {
         base: _dv_bytes(spark, table_path, a["deletionVector"])
         for base, a in by_base.items()
@@ -1890,7 +1875,7 @@ def merge_into(spark: SparkSession, table_path: str, source: DataFrame,
             _scan_files(spark, table_path, rep, list(rep.files.values())),
             functools.partial(read, spark, table_path, rep,
                               keep_row_index=use_dv and matched),
-            _by_base_strict(table_path, rep, "merge"), _FILE_BASE,
+            _by_key(spark, table_path, rep), _FILE_BASE,
             on, src, {f.name: f.dataType.simpleString()
                       for f in rep.schema.fields},
             when_matched_update, when_matched_delete,
@@ -2334,7 +2319,7 @@ def replace_where(spark: SparkSession, df: DataFrame, table_path: str,
         raise DeltaConstraintViolation(
             f"replaceWhere: incoming rows do not all satisfy "
             f"{predicate!r}")
-    m = _predicate_rows(spark, table_path, rep, "replace-where", predicate,
+    m = _predicate_rows(spark, table_path, rep, predicate,
                         False, inserts=new_rows)
     return _commit_rows(spark, table_path, rep, ts, m, False, False,
                         "replace-where", "WRITE",

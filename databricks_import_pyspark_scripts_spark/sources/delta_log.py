@@ -82,6 +82,7 @@ Supported reader features: ``timestampNtz``, ``vacuumProtocolCheck``,
 from __future__ import annotations
 
 import contextlib
+import functools
 import io
 import json
 import os
@@ -682,25 +683,87 @@ def _resolve(table_path: str, rel_or_abs: str) -> str:
     return os.path.join(table_path, decoded)
 
 
+# ---------------------------------------------------------------------------
+# the file key: how a scanned row finds its file's log or manifest entry
+# (partition values, commit version, deletion vector, position deletes,
+# MERGE/DELETE target file). Both formats name every file uniquely by its
+# URI (Delta: ``add.path`` relative to the root; Iceberg: ``file_path``,
+# "the full URI for the file"), so the key is that URI, decoded. The scan
+# side decodes per row and strips nothing; the driver side qualifies.
+
+def _file_key_col(col):
+    """Scan side: the raw file URI from ``col``, a scan's
+    ``_metadata.file_path``, which Spark percent-encodes (``file:/abs``
+    on local files). ``url_decode`` is form decoding, but a URI keeps
+    ``+`` literal, so it is armored as ``%2B`` first."""
+    return F.url_decode(F.replace(col, F.lit("+"), F.lit("%2B")))
+
+
+def _file_key(spark: SparkSession | None, path: str) -> str:
+    """Driver side: the key ``_file_key_col`` reads off the scan of the
+    resolved ``path``. A local path becomes ``file:`` plus its absolute
+    form with no py4j call (``spark`` may be None), so a relative path
+    resolves against this process's directory, as Spark's does when the
+    JVM started there. A scheme path keeps its scheme and authority; an
+    empty authority (``hdfs:///x``) takes the file system's own, which
+    Spark puts into the scan's path."""
+    if _is_local(path):
+        return "file:/" + os.path.abspath(_strip_scheme(path)).lstrip("/")
+    m = _EMPTY_AUTHORITY.match(path)
+    return f"{_fs_uri(spark, m[1])}/{path[m.end():]}" if m else path
+
+
+_EMPTY_AUTHORITY = re.compile(r"([a-zA-Z][a-zA-Z0-9+.-]*):///")
+
+
+@functools.cache
+def _fs_uri(spark: SparkSession, scheme: str) -> str:
+    """``scheme://authority`` Hadoop qualifies ``scheme:///`` paths to:
+    one py4j lookup per session and scheme, not one per file."""
+    return _hadoop_fs(spark, f"{scheme}:///")[0].getUri().toString() \
+        .rstrip("/")
+
+
+#: a stored path string that is absolute or carries a scheme
+_ABSOLUTE = "^(/|[a-zA-Z][a-zA-Z0-9+.-]*:)"
+
+
+def _stored_file_key(spark: SparkSession | None, root: str,
+                     stored: str) -> str:
+    """Driver side for a path string a writer stored verbatim (not
+    percent-encoded), as Iceberg's manifests, position-delete files and
+    ``referenced_data_file`` do: ``_file_key`` of the string, joined to
+    the table ``root`` first when it is relative."""
+    if not re.match(_ABSOLUTE, stored):
+        stored = os.path.join(root, stored)
+    return _file_key(spark, stored)
+
+
+def _stored_file_key_col(spark: SparkSession, root: str, col):
+    """``_stored_file_key`` as a column, for the ``file_path`` rows of
+    Iceberg's position-delete files: a relative string joins the root,
+    the local forms (``/x``, ``file:/x``, ``file:///x``) become
+    ``file:/x``, and an empty authority under the root's scheme is
+    qualified as ``_file_key`` does."""
+    col = F.when(col.rlike(_ABSOLUTE), col) \
+        .otherwise(F.concat(F.lit(_file_key(spark, root) + "/"), col))
+    col = F.regexp_replace(col, "^(file:)?/+", "file:/")
+    m = _EMPTY_AUTHORITY.match(root)
+    if m and not _is_local(root):
+        col = F.regexp_replace(col, f"^{re.escape(m[0])}",
+                               _file_key(spark, m[0]))
+    return col
+
+
 _FILE_BASE = "__delta_file_base"
 
 
 def _with_file_base(df: DataFrame) -> DataFrame:
-    """Scanned file's identity key — its last two path segments
-    (``partdir/name``, URL-decoded), from the parquet source's
-    ``_metadata.file_path``. Resolvable only directly on the scan, so it
-    is attached immediately and carried as a regular column. Two segments
-    because Delta writers place files either at the root or under one
-    hive-style partition dir, and the file name itself embeds a UUID —
-    the pair is unique for every real-world layout (a colliding log still
-    gets a correct answer via the per-group fallback scan)."""
-    # a URI path keeps "+" literal, where url_decode would read a space
-    segs = F.split(F.replace(F.col("_metadata.file_path"), F.lit("+"),
-                             F.lit("%2B")), "/")
-    return df.withColumn(
-        _FILE_BASE,
-        F.url_decode(F.concat_ws(
-            "/", F.element_at(segs, -2), F.element_at(segs, -1))))
+    """Attach the scan side of the file key as ``_FILE_BASE``. Resolvable
+    only directly on the scan, so it is attached immediately and carried
+    as a regular column."""
+    return df.withColumn(_FILE_BASE,
+                         _file_key_col(F.col("_metadata.file_path")))
 
 
 def _with_row_index(df: DataFrame) -> DataFrame:
@@ -712,26 +775,35 @@ def _with_row_index(df: DataFrame) -> DataFrame:
     return df.withColumn(_ROW_INDEX, F.col("_metadata.row_index"))
 
 
-def _action_base(table_path: str, action_path: str) -> str:
-    """The action's identity key, matching ``_with_file_base``: last two
-    segments of the RESOLVED path (so a root-level file keys as
-    ``<table_dir>/<name>``, same as the scan sees it)."""
-    return "/".join(_resolve(table_path, action_path).rstrip("/")
-                    .split("/")[-2:])
+def _action_base(spark: SparkSession, table_path: str,
+                 action_path: str) -> str:
+    """The driver side of the file key of a log action's path."""
+    return _file_key(spark, _resolve(table_path, action_path))
+
+
+def _unique_map(df: DataFrame) -> DataFrame:
+    """A driver-built map with one row per file key, as a frame the
+    optimizer knows is unique on ``_FILE_BASE``: a LEFT join to it whose
+    columns no consumer reads is removed. ``max`` is deterministic
+    (``dropDuplicates``' ``first`` is not), so a plan that joins the map
+    twice reuses one broadcast of it; ``coalesce(1)`` keeps the
+    aggregate inside that broadcast's job."""
+    return df.coalesce(1).groupBy(_FILE_BASE).agg(
+        *[F.max(c).alias(c) for c in df.columns if c != _FILE_BASE])
 
 
 def _attach_partition_columns(spark: SparkSession, df: DataFrame,
                               schema: StructType, part_cols: list[str],
                               file_parts: list[tuple[str, dict]],
                               table_path: str) -> DataFrame:
-    """Re-attach partition columns from the log's partitionValues: broadcast
-    map-join on the scanned file name (the ``_FILE_BASE`` column — Delta
-    writers name data files with embedded UUIDs, and the caller falls back
-    to per-group scans on the rare basename collision). The map is a
-    ``local_frame`` (a JVM LocalRelation), so the join runs no Python."""
+    """Re-attach partition columns from the log's partitionValues: a
+    broadcast LEFT join on the file key (``_FILE_BASE``) to the
+    ``_unique_map`` of the values, which the optimizer drops when no
+    consumer reads a partition column. The map is a ``local_frame`` (a
+    JVM LocalRelation), so the join runs no Python."""
     rows = []
     for path, pv in file_parts:
-        rows.append((_action_base(table_path, path),
+        rows.append((_action_base(spark, table_path, path),
                      *[pv.get(c) for c in part_cols]))
     map_schema = StructType()
     map_schema.add(_FILE_BASE, "string")
@@ -739,7 +811,7 @@ def _attach_partition_columns(spark: SparkSession, df: DataFrame,
         map_schema.add(f"__pv_{c}", "string")
     pv_df = local_frame(spark, rows, map_schema)
     typed = {f.name: f.dataType for f in schema.fields}
-    out = df.join(F.broadcast(pv_df), _FILE_BASE, "left")
+    out = df.join(F.broadcast(_unique_map(pv_df)), _FILE_BASE, "left")
     for c in part_cols:
         out = out.withColumn(c, F.col(f"__pv_{c}").cast(typed[c]))
     return out.drop(*[f"__pv_{c}" for c in part_cols])
@@ -769,7 +841,8 @@ def _apply_deletion_vectors(spark: SparkSession, df: DataFrame,
                             table_path: str,
                             dv_actions: list[dict]) -> DataFrame:
     """Drop DV-deleted rows from a scan carrying ``_FILE_BASE`` +
-    ``_ROW_INDEX``.
+    ``_ROW_INDEX``: a row dies when its (file key, position) pair is in
+    its own file's bitmap.
 
     DV descriptors and bitmap BYTES are driver-side metadata (same class as
     the log itself — compressed bitmaps, KBs per file); the row-level
@@ -790,16 +863,8 @@ def _apply_deletion_vectors(spark: SparkSession, df: DataFrame,
     total_card = 0
     for a in dv_actions:
         d = a["deletionVector"]
-        base = _action_base(table_path, a["path"])
-        if base in dv_raw:
-            # the (file, row_index) key the filter joins on would alias two
-            # distinct files — deleting rows from the wrong one. Real Delta
-            # writers embed UUIDs in file names, so this never fires in
-            # practice; when it does, refuse loudly rather than read wrongly
-            raise DeltaProtocolError(
-                f"basename collision among DV-bearing files ({base}); "
-                f"deletion vectors cannot be applied unambiguously")
-        dv_raw[base] = _dv_bytes(spark, table_path, d)
+        dv_raw[_action_base(spark, table_path, a["path"])] = _dv_bytes(
+            spark, table_path, d)
         total_card += int(d.get("cardinality") or 0)
     if total_card <= DV_ANTIJOIN_MAX_ROWS:
         import numpy as np
@@ -856,7 +921,9 @@ def _scan_files(spark: SparkSession, table_path: str, rep: _Replay,
                 check_exists: bool = False,
                 keep_row_index: bool = False) -> DataFrame | None:
     """One parquet scan over the listed files, schema from the log,
-    partition columns re-attached. None when the list is empty.
+    partition columns re-attached and deletion vectors applied through
+    the file key every row carries (``_FILE_BASE``). None when the list
+    is empty.
 
     ``check_exists`` pre-verifies every file driver-side and raises the
     DELTA_CHANGE_DATA_FILE_NOT_FOUND signature the retry ladder classifies
@@ -893,21 +960,6 @@ def _scan_files(spark: SparkSession, table_path: str, rep: _Replay,
         # foreign files will then error by id instead of matching by name
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
 
-    def _scan(scan_paths: list[str]) -> DataFrame:
-        g = _with_file_base(spark.read.schema(data_schema).parquet(*scan_paths))
-        if need_idx:
-            g = _with_row_index(g)
-        if mapped:
-            # physical -> logical: positional struct cast renames nested
-            # fields in one expression, no data movement
-            keep = ([c[0] if isinstance(c, tuple) else c
-                     for c in (extra_data_cols or ())] + [_FILE_BASE]
-                    + ([_ROW_INDEX] if need_idx else []))
-            g = g.select(
-                *[F.col(_physical_name(f)).cast(f.dataType).alias(f.name)
-                  for f in logical_data], *keep)
-        return g
-
     paths = [_resolve(table_path, a["path"]) for a in actions]
     if not paths:
         return None
@@ -917,40 +969,23 @@ def _scan_files(spark: SparkSession, table_path: str, rep: _Replay,
                 raise FileNotFoundError(
                     f"DELTA_CHANGE_DATA_FILE_NOT_FOUND: {p} referenced by "
                     f"the log but absent (vacuumed?)")
-    bases = [_action_base(table_path, a["path"]) for a in actions]
-    collision = len(set(bases)) != len(bases)
-    if collision and has_dv:
-        # DV filtering joins on the 2-segment file key; a collision would
-        # also delete rows from the colliding NON-DV twin. Never produced
-        # by real (UUID-named) Delta writers — reject loudly.
-        raise DeltaProtocolError(
-            "file basename collision in a snapshot with deletion vectors; "
-            "rows cannot be attributed to files unambiguously")
-    if not collision:
-        df = _scan(paths)
-        if part_cols:
-            file_parts = [(a["path"], a.get("partitionValues") or {})
-                          for a in actions]
-            df = _attach_partition_columns(spark, df, schema, part_cols,
-                                           file_parts, table_path)
-    else:
-        # basename collision (non-UUID writer): per-partition-group
-        # scans, unioned — correct for any layout, more plan overhead
-        groups: dict[tuple, list[str]] = {}
-        for a in actions:
-            pv = a.get("partitionValues") or {}
-            groups.setdefault(tuple(pv.get(c) for c in part_cols), []) \
-                .append(_resolve(table_path, a["path"]))
-        parts = []
-        typed = {f.name: f.dataType for f in schema.fields}
-        for pv_tuple, group_paths in groups.items():
-            g = _scan(group_paths)
-            for c, v in zip(part_cols, pv_tuple):
-                g = g.withColumn(c, F.lit(v).cast(typed[c]))
-            parts.append(g)
-        df = parts[0]
-        for g in parts[1:]:
-            df = df.unionByName(g)
+    df = _with_file_base(spark.read.schema(data_schema).parquet(*paths))
+    if need_idx:
+        df = _with_row_index(df)
+    if mapped:
+        # physical -> logical: positional struct cast renames nested
+        # fields in one expression, no data movement
+        keep = ([c[0] if isinstance(c, tuple) else c
+                 for c in (extra_data_cols or ())] + [_FILE_BASE]
+                + ([_ROW_INDEX] if need_idx else []))
+        df = df.select(
+            *[F.col(_physical_name(f)).cast(f.dataType).alias(f.name)
+              for f in logical_data], *keep)
+    if part_cols:
+        file_parts = [(a["path"], a.get("partitionValues") or {})
+                      for a in actions]
+        df = _attach_partition_columns(spark, df, schema, part_cols,
+                                       file_parts, table_path)
     if has_dv:
         df = _apply_deletion_vectors(
             spark, df, table_path,
@@ -1047,9 +1082,9 @@ def read_delta_changes(spark: SparkSession, table_path: str,
     no Python worker starts to read it back). Its shape depends on the
     map:
 
-    * every file changed at one version: a LEFT join to the map
-      deduplicated on the key. The optimizer knows the map is unique on
-      the key, so when no consumer reads ``_commit_version`` or
+    * every file changed at one version: a LEFT join to the map's
+      ``_unique_map``. The optimizer knows it is unique on the key, so
+      when no consumer reads ``_commit_version`` or
       ``_commit_timestamp`` — the unload path, where ``cdc.filter_data``
       drops both — it removes the join, and the export runs as the one
       write job with no broadcast;
@@ -1057,9 +1092,8 @@ def read_delta_changes(spark: SparkSession, table_path: str,
       again): an INNER join, which emits one copy of the file's rows per
       version, whether or not the tags are read.
 
-    Two distinct files in one batch that share a file key would be tagged
-    with each other's versions, so that raises ``DeltaProtocolError``
-    before any data is read."""
+    The file key is the file's full URI, so two change files that share
+    a directory or file name each keep their own versions."""
     first = starting_version + 1
     rep = replay_log(spark, table_path, ending_version, collect_from=first)
     conf = rep.metadata.get("configuration") or {}
@@ -1106,21 +1140,13 @@ def read_delta_changes(spark: SparkSession, table_path: str,
             continue
         # one scan per distinct file: a file removed, restored and removed
         # again inside the window is read once, then fanned out below
-        actions = list({_resolve(table_path, a["path"]): a
-                        for _, a in group}.values())
-        if len({_action_base(table_path, a["path"])
-                for a in actions}) != len(actions):
-            # the version map joins on the 2-segment file key; two files
-            # sharing it would each be tagged with the other's versions
-            raise DeltaProtocolError(
-                f"file key collision among change files of {table_path} "
-                f"in ({starting_version}, {ending_version}]; rows cannot "
-                f"be attributed to versions unambiguously")
+        keyed = [(_action_base(spark, table_path, a["path"]), v, a)
+                 for v, a in group]
+        actions = list({k: a for k, _, a in keyed}.values())
         df = _scan_files(spark, table_path, rep, actions,
                          extra_data_cols=extra, check_exists=True)
         ver_rows = list(dict.fromkeys(
-            (_action_base(table_path, a["path"]), v, rep.commit_ts_ms[v])
-            for v, a in group))
+            (k, v, rep.commit_ts_ms[v]) for k, v, _ in keyed))
         ver_df = local_frame(
             spark, ver_rows, f"{_FILE_BASE} string, __v long, __ts long")
         if len(ver_rows) > len(actions):
@@ -1128,12 +1154,10 @@ def read_delta_changes(spark: SparkSession, table_path: str,
             # copy of its rows per version
             df = df.join(F.broadcast(ver_df), _FILE_BASE)
         else:
-            # one version per file: a left join to a map deduplicated on
-            # the key, which the optimizer drops when nothing reads a tag.
-            # coalesce(1) lets the dedup run inside the broadcast job
-            # instead of adding a shuffle when the join stays.
-            unique = ver_df.coalesce(1).dropDuplicates([_FILE_BASE])
-            df = df.join(F.broadcast(unique), _FILE_BASE, "left")
+            # one version per file: a left join the optimizer drops when
+            # nothing reads a tag
+            df = df.join(F.broadcast(_unique_map(ver_df)), _FILE_BASE,
+                         "left")
         df = (df.withColumn(_CDC_VERSION, F.col("__v"))
               .withColumn(_CDC_TS, F.timestamp_millis(F.col("__ts")))
               .drop(_FILE_BASE, "__v", "__ts"))
@@ -1491,7 +1515,7 @@ def read_delta_snapshot_with_row_ids(spark: SparkSession, table_path: str,
                               StructField("_row_commit_version",
                                           LongType())])
         return local_frame(spark, [], empty)
-    rows = [(_action_base(table_path, p), int(a["baseRowId"]),
+    rows = [(_action_base(spark, table_path, p), int(a["baseRowId"]),
              int(a.get("defaultRowCommitVersion") or -1))
             for p, a in rep.files.items()]
     base_df = local_frame(

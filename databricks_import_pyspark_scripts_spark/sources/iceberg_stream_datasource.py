@@ -52,6 +52,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructField, StructType
 
 from .avro_codec import read_container
+from .delta_log import _file_key, _stored_file_key
 from .iceberg import (
     _VMETA_RE,
     STATUS_ADDED,
@@ -126,8 +127,9 @@ class _IceFilePartition(InputPartition):
     def __init__(self, path: str, cols: list[tuple],
                  dv_blob: bytes | None = None,
                  delete_paths: tuple = (),
-                 eq_deletes: tuple = ()):
+                 eq_deletes: tuple = (), root: str = ""):
         self.path = path
+        self.root = root        # resolves relative stored delete paths
         self.cols = cols        # (name, field_id)
         self.dv_blob = dv_blob              # v3 DV bitmap, plan-resolved
         self.delete_paths = delete_paths    # v2 position-delete parquet
@@ -136,13 +138,6 @@ class _IceFilePartition(InputPartition):
         # seq — the strictly-older rule): ((key (name, fid) tuple,
         # (delete parquet paths...)), ...) grouped by equality_ids set
         self.eq_deletes = eq_deletes
-
-
-def _file_suffix_key(path: str) -> str:
-    """Last two path components — the join key the full reader uses
-    (``iceberg._file_key``); file names embed UUIDs, so the suffix is
-    collision-free across layouts/schemes."""
-    return "/".join(path.rstrip("/").split("/")[-2:])
 
 
 def _resolve_cols(path: str, schema_arrow, cols: list[tuple]
@@ -244,10 +239,14 @@ def _read_ice_partition(partition: _IceFilePartition
     if partition.delete_paths:
         import pyarrow.compute as pc
 
-        key = "/" + _file_suffix_key(partition.path)
+        # a delete row applies to the file whose key its stored path has
+        key = _file_key(None, partition.path)
         for dp in partition.delete_paths:
             dt = pq.read_table(dp, columns=["file_path", "pos"])
-            m = pc.ends_with(dt["file_path"], pattern=key)
+            mine = [p for p in pc.unique(dt["file_path"]).to_pylist()
+                    if _stored_file_key(None, partition.root, p) == key]
+            m = pc.is_in(dt["file_path"],
+                         value_set=pa.array(mine, pa.string()))
             dead_parts.append(
                 dt["pos"].filter(m).combine_chunks()
                 .to_numpy(zero_copy_only=False).astype("i8"))
@@ -508,8 +507,8 @@ class IcebergLogBatchReader(DataSourceReader):
                         if raw is None:
                             raw = open(ppath, "rb").read()
                             puffin_cache[ppath] = raw
-                        key = _file_suffix_key(
-                            df["referenced_data_file"])
+                        key = _stored_file_key(
+                            None, root, df["referenced_data_file"])
                         dv_by_key[key] = read_puffin_blob(
                             raw, int(df["content_offset"]),
                             int(df["content_size_in_bytes"]))
@@ -554,10 +553,9 @@ class IcebergLogBatchReader(DataSourceReader):
                          for ids, paths in sorted(groups.items()))
 
         return [_IceFilePartition(p, cols,
-                                  dv_blob=dv_by_key.get(
-                                      _file_suffix_key(p)),
+                                  dv_blob=dv_by_key.get(_file_key(None, p)),
                                   delete_paths=pos_t,
-                                  eq_deletes=eq_for(seq))
+                                  eq_deletes=eq_for(seq), root=root)
                 for p, seq in sorted(live)]
 
     def read(self, partition: InputPartition

@@ -149,9 +149,11 @@ def test_cdf_file_changed_at_several_versions_scans_once(spark, delta_table):
         == [4, 4, 4, 5, 5, 5]
 
 
-def test_cdf_change_file_key_collision_rejected(spark, delta_table):
-    """Two change files sharing their last two path segments would be
-    tagged with each other's versions: refuse before scanning."""
+def test_cdf_change_files_sharing_a_suffix_keep_their_versions(
+        spark, delta_table):
+    """Two change files sharing their last two path segments
+    (``_change_data/cdc-0.parquet`` at the root and under ``x/``) are
+    distinct files: each row keeps its own file's version."""
     from delta_fixture import _write_parquet
 
     log = os.path.join(delta_table, "_delta_log")
@@ -165,10 +167,12 @@ def test_cdf_change_file_key_collision_rejected(spark, delta_table):
         {"cdc": {"path": "x/_change_data/cdc-0.parquet",
                  "partitionValues": {"part": None}, "size": 1,
                  "dataChange": False}}])
-    with pytest.raises(DeltaProtocolError, match="collision"):
-        read_delta_changes(spark, delta_table, 1, 3)
-    # each window alone holds one of the two files and reads normally
-    assert read_delta_changes(spark, delta_table, 2, 3).count() == 1
+    got = sorted((r._commit_version, r._change_type, r.id, r.val, r.part)
+                 for r in read_delta_changes(spark, delta_table, 1, 3)
+                 .collect())
+    assert got == [(2, "update_postimage", 1, 99.0, "a"),
+                   (2, "update_preimage", 1, 1.0, "a"),
+                   (3, "delete", 6, 6.0, None)]
 
 
 # --------------------------------------------------------------------- checkpoint
@@ -643,6 +647,149 @@ def test_basename_collision_falls_back_to_grouped_scans(spark, tmp_path):
     df = read_delta_snapshot(spark, t)
     assert sorted((r.id, r.part) for r in df.collect()) \
         == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize("form", ["relative", "absolute", "file:",
+                                  "file://", "file:///"])
+def test_table_root_forms(spark, tmp_path, monkeypatch, form):
+    """Rows find their files' log and manifest entries (partition values,
+    versions, deletion vectors, position deletes, merge targets) whatever
+    form the table root takes: relative, absolute, or behind a ``file:``
+    prefix with one, three or four slashes. The root's directory name
+    holds a space, a '+', a literal '%41' and a non-ASCII letter."""
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        create_delta_table,
+        delete_where,
+        merge_into,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        iceberg_delete_where,
+        read_iceberg_changes,
+        read_iceberg_snapshot,
+        write_iceberg_table,
+    )
+
+    base = tmp_path / "r a+b%41\u00e9"
+    base.mkdir()
+    if form == "relative":
+        # Spark resolves a relative path against the directory its JVM
+        # started in: run from there, so both sides read the same file
+        monkeypatch.chdir(
+            spark._jvm.java.lang.System.getProperty("user.dir"))  # noqa: SLF001
+        root = os.path.relpath(base)
+    else:
+        root = ("" if form == "absolute" else form) + str(base)
+
+    # Delta, partitioned, CDF on: snapshot, DV DELETE, MERGE, change feed
+    t = f"{root}/delta"
+    df = spark.range(0, 20).selectExpr(
+        "id AS k", "CAST(id AS double) AS v",
+        "IF(id % 2 = 0, 'p q', 'r+s') AS part")
+    create_delta_table(spark, df.repartition(2), t, partition_by=["part"],
+                       cdf=True, ts_ms=1000)
+
+    def part(k):
+        return "p q" if k % 2 == 0 else "r+s"
+
+    snap = read_delta_snapshot(spark, t).collect()
+    assert sorted((r.k, r.part) for r in snap) == \
+        [(k, part(k)) for k in range(20)]
+    delete_where(spark, t, "k < 4", ts_ms=2000, use_dv=True)
+    src = spark.range(18, 22).selectExpr(
+        "id AS k", "CAST(id AS double) + 0.5 AS v", "'p q' AS part")
+    merge_into(spark, t, src, on=["k"], when_matched_update={"v": "s.v"},
+               ts_ms=3000)
+    snap = read_delta_snapshot(spark, t).collect()
+    assert sorted((r.k, r.v, r.part) for r in snap) == sorted(
+        [(k, float(k), part(k)) for k in range(4, 18)]
+        + [(k, k + 0.5, part(k)) for k in (18, 19)]
+        + [(k, k + 0.5, "p q") for k in (20, 21)])
+    ch = read_delta_changes(spark, t, 0, 2).collect()
+    assert sorted((r._commit_version, r._change_type, r.k, r.part)
+                  for r in ch) == sorted(
+        [(1, "delete", k, part(k)) for k in range(4)]
+        + [(2, c, k, part(k)) for k in (18, 19)
+           for c in ("update_preimage", "update_postimage")]
+        + [(2, "insert", k, "p q") for k in (20, 21)])
+
+    # Iceberg: merge-on-read after a position-delete DELETE and after a
+    # DV DELETE, then the change feed over both
+    t = f"{root}/ice"
+    write_iceberg_table(spark, [df.select("k", "v").repartition(2)], t)
+    iceberg_delete_where(spark, t, "k % 5 = 0", mode="position")
+    assert sorted(r.k for r in read_iceberg_snapshot(spark, t).collect()) \
+        == [k for k in range(20) if k % 5]
+    iceberg_delete_where(spark, t, "k % 7 = 1", mode="dv")
+    assert sorted(r.k for r in read_iceberg_snapshot(spark, t).collect()) \
+        == [k for k in range(20) if k % 5 and k % 7 != 1]
+    ch = read_iceberg_changes(spark, t, 0, 2).collect()
+    assert sorted((r._commit_version, r._change_type, r.k) for r in ch) \
+        == [(1, "delete", k) for k in (0, 5, 10, 15)] \
+        + [(2, "delete", k) for k in (1, 8)]
+
+
+def test_file_key_forms(spark, monkeypatch):
+    """The driver side of the file key for each path form, and the
+    stored-form column agreeing with it: a local path becomes its
+    absolute ``file:`` URI, a scheme path keeps its authority, and an
+    empty authority takes the file system's own, as Spark's scan
+    reports it."""
+    from pyspark.sql import functions as F
+
+    from databricks_import_pyspark_scripts_spark.sources import delta_log
+
+    class _Fs:  # a java.net.URI and the FileSystem returning it
+        def getUri(self):
+            return self
+
+        def toString(self):
+            return "hdfs://nn:8020"
+
+    monkeypatch.setattr(delta_log, "_hadoop_fs",
+                        lambda spark, path: (_Fs(), path))
+    delta_log._fs_uri.cache_clear()
+    try:
+        key = delta_log._file_key
+        assert key(None, "/t/a b/f.parquet") == "file:/t/a b/f.parquet"
+        assert key(None, "file:///t/f") == key(None, "file:/t/f") \
+            == key(None, "file:////t/f") == "file:/t/f"
+        assert key(None, "rel/f") == "file:" + os.path.abspath("rel/f")
+        assert key(None, "s3a://b/k/f") == "s3a://b/k/f"
+        assert key(spark, "hdfs:///w/t/f") == "hdfs://nn:8020/w/t/f"
+        stored = ["hdfs:///w/t/d/f", "d/f", "hdfs://other/w/t/d/f"]
+        got = [r.k for r in spark.createDataFrame(
+            [(s,) for s in stored], "p string").select(
+            delta_log._stored_file_key_col(spark, "hdfs:///w/t", F.col("p"))
+            .alias("k")).collect()]
+        assert got == [delta_log._stored_file_key(spark, "hdfs:///w/t", s)
+                       for s in stored] == [
+            "hdfs://nn:8020/w/t/d/f", "hdfs://nn:8020/w/t/d/f",
+            "hdfs://other/w/t/d/f"]
+    finally:
+        delta_log._fs_uri.cache_clear()
+
+
+def test_file_key_has_one_definition():
+    """Readers and writers key rows to files through the shared file key
+    in ``delta_log`` alone: no module under sources/, sinks/ or
+    operators/ keys on a path suffix or defines a key of its own."""
+    import pathlib
+    import re
+
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "databricks_import_pyspark_scripts_spark")
+    suffix = re.compile(r'\[-2:\]|"/",\s*-2\s*\)|element_at\(\w+,\s*-2\)')
+    defs: dict[str, list[str]] = {}
+    for sub in ("sources", "sinks", "operators"):
+        for f in sorted((pkg / sub).glob("*.py")):
+            text = f.read_text()
+            assert not suffix.search(text), f"path-suffix key in {f.name}"
+            for name in re.findall(r"^def (_\w*file_key\w*)\(", text,
+                                   re.MULTILINE):
+                defs.setdefault(name, []).append(f.name)
+    assert defs == {name: ["delta_log.py"] for name in (
+        "_file_key_col", "_file_key", "_stored_file_key",
+        "_stored_file_key_col")}
 
 
 # ----------------------------------------------------- versioned-source dispatch

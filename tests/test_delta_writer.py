@@ -1314,47 +1314,52 @@ def test_dv_row_op_builds_bitmaps_executor_side(spark, table, monkeypatch):
     assert got.filter("k % 10 = 4").filter("v < 1000").count() == 0
 
 
-def test_dv_row_op_base_collision_rejects(spark, tmp_path):
-    """Two live files sharing their last-2-segment path key (multi-level
-    layouts with non-UUID names) must reject: the DV group key would
-    silently union both files' matched indexes into one deletion
-    vector. Mirrors the reader's _scan_files collision guard."""
+def test_row_ops_on_files_sharing_a_suffix(spark, tmp_path):
+    """Two live files sharing their last two path segments (the root file
+    and a copy at <table>/<table_dirname>/<same name>) are distinct
+    files: DELETE and MERGE attribute each matched row to its own file,
+    in both layouts, so no file is dropped from a rewrite set and no two
+    files' positions fold into one deletion vector."""
     import shutil
 
     from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
         merge_into,
     )
 
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 20).selectExpr("id AS k", "CAST(id AS double) AS v")
-    create_delta_table(spark, df.coalesce(1), t, cdf=False, ts_ms=1000)
-    rep = replay_log(spark, t)
-    (rel,) = list(rep.files)          # single root-level data file
-    name = os.path.basename(rel)
-    # a second live file at <table>/<table_dirname>/<same name> resolves
-    # to the same 2-segment suffix as the root file
-    sub = os.path.join(t, os.path.basename(t))
-    os.makedirs(sub)
-    shutil.copy(os.path.join(t, name), os.path.join(sub, name))
-    add = dict(rep.files[rel])
-    add["path"] = f"{os.path.basename(t)}/{name}"
-    with open(os.path.join(t, "_delta_log",
-                           f"{1:020d}.json"), "w") as f:
-        f.write(json.dumps({"commitInfo": {"timestamp": 2000,
-                                           "operation": "WRITE"}}) + "\n")
-        f.write(json.dumps({"add": {**add, "dataChange": True}}) + "\n")
-    with pytest.raises(NotImplementedError, match="collision"):
-        delete_where(spark, t, "k >= 0", ts_ms=3000, use_dv=True)
-    # the rewrite path attributes matched rows through the same 2-segment
-    # key (_predicate_rows' by_base) — a collision there silently drops one
-    # file from the rewrite set, so it must reject too
-    with pytest.raises(NotImplementedError, match="collision"):
-        delete_where(spark, t, "k >= 0", ts_ms=3000, use_dv=False)
+    def layout(t: str) -> str:
+        df = spark.range(0, 20).selectExpr("id AS k",
+                                           "CAST(id AS double) AS v")
+        create_delta_table(spark, df.coalesce(1), t, cdf=False, ts_ms=1000)
+        rep = replay_log(spark, t)
+        (rel,) = list(rep.files)          # single root-level data file
+        name = os.path.basename(rel)
+        sub = os.path.join(t, os.path.basename(t))
+        os.makedirs(sub)
+        shutil.copy(os.path.join(t, name), os.path.join(sub, name))
+        add = dict(rep.files[rel])
+        add["path"] = f"{os.path.basename(t)}/{name}"
+        with open(os.path.join(t, "_delta_log",
+                               f"{1:020d}.json"), "w") as f:
+            f.write(json.dumps({"commitInfo": {
+                "timestamp": 2000, "operation": "WRITE"}}) + "\n")
+            f.write(json.dumps({"add": {**add, "dataChange": True}}) + "\n")
+        assert read_delta_snapshot(spark, t).count() == 40
+        return t
+
     src = spark.range(0, 5).selectExpr("id AS k",
                                        "CAST(id AS double) AS v")
-    with pytest.raises(NotImplementedError, match="collision"):
+    want = sorted([(k, k + 1.0) for k in range(5)] * 2
+                  + [(k, float(k)) for k in range(5, 20)] * 2)
+    for use_dv in (True, False):
+        t = layout(str(tmp_path / f"del{int(use_dv)}"))
+        delete_where(spark, t, "k >= 0", ts_ms=3000, use_dv=use_dv)
+        assert read_delta_snapshot(spark, t).count() == 0
+        t = layout(str(tmp_path / f"merge{int(use_dv)}"))
         merge_into(spark, t, src, on=["k"],
-                   when_matched_update={"v": "s.v + 1"}, ts_ms=3000)
+                   when_matched_update={"v": "s.v + 1"}, ts_ms=3000,
+                   use_dv=use_dv)
+        got = read_delta_snapshot(spark, t).select("k", "v").collect()
+        assert sorted((r.k, r.v) for r in got) == want
 
 
 def test_dv_merge_stamps_positions_and_stages_new_rows(spark, table):

@@ -1226,14 +1226,15 @@ def test_exact_micros_never_off_by_one():
 
 
 def test_file_key_consistent_for_plus_named_files(spark, tmp_path):
-    """Scan-side _file_key_expr and driver-side _file_key must agree for
-    file names containing '+' (URLDecoder form-decodes '+' to space;
-    the armored decode must not)."""
+    """The scan side (``_file_key_col``) and the driver side
+    (``_file_key``) of the shared file key agree on a file name holding
+    a '+' and a literal '%20' (``url_decode`` form-decodes '+' to a
+    space; the armored decode must not), and both are the full URI."""
     from pyspark.sql import functions as F
 
-    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+    from databricks_import_pyspark_scripts_spark.sources.delta_log import (
         _file_key,
-        _file_key_expr,
+        _file_key_col,
     )
 
     d = tmp_path / "data"
@@ -1243,10 +1244,10 @@ def test_file_key_consistent_for_plus_named_files(spark, tmp_path):
     target = d / "part a+b%20c.parquet"
     os.replace(src, target)
     scan_key = (spark.read.parquet(str(target))
-                .select(_file_key_expr(F.col("_metadata.file_path"))
+                .select(_file_key_col(F.col("_metadata.file_path"))
                         .alias("k")).first().k)
-    driver_key = _file_key(str(tmp_path), {"file_path": str(target)})
-    assert scan_key == driver_key == "data/part a+b%20c.parquet"
+    driver_key = _file_key(spark, str(target))
+    assert scan_key == driver_key == f"file:{target}"
 
 
 def test_append_race_keeps_history_ordered(spark, ice, monkeypatch):

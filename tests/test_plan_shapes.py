@@ -473,6 +473,38 @@ def test_incremental_export_plan_drops_version_map(spark, tmp_path):
         spark.catalog.dropTempView("events")
 
 
+def test_partitioned_export_plan_drops_partition_map(spark, tmp_path):
+    """An export that reads no partition column keeps no join to the
+    partition-value map: on the partitioned fixture the exported change
+    feed plans no Join, and its JSON write runs one job. A reader of the
+    partition column still gets its values."""
+    from delta_fixture import make_delta_table
+
+    from databricks_import_pyspark_scripts_spark.operators.cdc import (
+        filter_data,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.delta_log import (
+        read_delta_changes,
+    )
+
+    t = make_delta_table(str(tmp_path / "p"))
+    sc = spark.sparkContext
+    for n in range(2):  # the first write of a session warms caches
+        export = filter_data(read_delta_changes(spark, t, 0, 2),
+                             "USER_PROPERTY").select("id", "val")
+        assert "Join" not in _plan(export)
+        group = f"test-partitioned-export-{n}"
+        sc.setJobGroup(group, "partitioned export job budget")
+        try:
+            export.write.json(str(tmp_path / f"out{n}"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    tagged = read_delta_changes(spark, t, 0, 2).select("id", "part")
+    assert sorted(tuple(r) for r in tagged.collect()) == [
+        (1, "a"), (1, "a"), (4, "b"), (5, "b"), (7, "a"), (8, "a")]
+
+
 def test_delta_partitioned_and_row_tracked_scans_are_local(spark, tmp_path):
     from delta_fixture import make_delta_table
 

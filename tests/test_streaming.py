@@ -886,6 +886,75 @@ def test_readstream_format_iceberg_jarless(spark, tmp_path):
         .load().select("v").count() == 9
 
 
+def test_iceberg_deletes_reach_only_their_own_file(spark, tmp_path):
+    """Position deletes aimed at data/x/a/f.parquet leave
+    data/y/a/f.parquet whole, though the two share their last two path
+    segments: the iceberg_jarless batch reader and the full reader both
+    match a delete row to the file its full path names."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark
+
+    if tuple(int(x) for x in pyspark.__version__.split(".")[:2]) < (4, 0):
+        pytest.skip("Python Data Source API needs Spark 4")
+
+    from databricks_import_pyspark_scripts_spark.sources.avro_codec import (
+        read_container,
+        write_container,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        _MANIFEST_ENTRY_SCHEMA,
+        _MANIFEST_FILE_SCHEMA,
+        read_iceberg_snapshot,
+        read_table_metadata,
+        write_iceberg_table,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.iceberg_stream_datasource import (
+        register_iceberg_stream_source,
+    )
+
+    t = str(tmp_path / "suffix")
+    write_iceberg_table(
+        spark, [spark.range(0, 10).selectExpr("id AS k").coalesce(1)], t)
+    snap = read_table_metadata(spark, t)["snapshots"][-1]
+    _, (data_mf,) = read_container(open(snap["manifest-list"], "rb").read())
+    _, (entry,) = read_container(open(data_mf["manifest_path"], "rb").read())
+    paths = []
+    for d in ("x", "y"):
+        p = os.path.join(t, "data", d, "a", "f.parquet")
+        os.makedirs(os.path.dirname(p))
+        shutil.copy(entry["data_file"]["file_path"], p)
+        paths.append(p)
+    with open(data_mf["manifest_path"], "wb") as f:
+        f.write(write_container(_MANIFEST_ENTRY_SCHEMA, [
+            {**entry, "data_file": {**entry["data_file"], "file_path": p}}
+            for p in paths]))
+    dpath = os.path.join(t, "data", "x-deletes.parquet")
+    pq.write_table(pa.table({"file_path": [paths[0]] * 2,
+                             "pos": pa.array([0, 1], pa.int64())}), dpath)
+    del_mf = os.path.join(t, "metadata", "manifest-del.avro")
+    with open(del_mf, "wb") as f:
+        f.write(write_container(_MANIFEST_ENTRY_SCHEMA, [{
+            "status": 1, "snapshot_id": snap["snapshot-id"],
+            "data_file": {"content": 1, "file_path": dpath,
+                          "file_format": "PARQUET", "record_count": 2,
+                          "file_size_in_bytes": os.path.getsize(dpath)}}]))
+    with open(snap["manifest-list"], "wb") as f:
+        f.write(write_container(_MANIFEST_FILE_SCHEMA, [
+            data_mf, {**data_mf, "manifest_path": del_mf, "content": 1,
+                      "manifest_length": os.path.getsize(del_mf)}]))
+
+    want = sorted([*range(2, 10), *range(10)])
+    register_iceberg_stream_source(spark)
+    jarless = spark.read.format("iceberg_jarless").option("path", t).load()
+    assert sorted(r.k for r in jarless.collect()) == want
+    assert sorted(r.k for r in read_iceberg_snapshot(spark, t).collect()) \
+        == want
+
+
 def test_iceberg_jarless_mor_batch_read(spark, tmp_path):
     """Merge-on-read in the iceberg_jarless BATCH half: v2
     position-delete parquet applies via the per-task applicable-delete
