@@ -109,18 +109,9 @@ class DeltaTable:
         behavior after log-retention cleanup."""
         import json as _json
 
-        log = os.path.join(self.path, _r.LOG_DIR)
         rows = []
-        for name in _r._list_names(self.spark, log):
-            m = _r._COMMIT_RE.match(name)
-            if not m:
-                continue
-            v = int(m.group(1))
-            acts = [_json.loads(line) for line in
-                    _r._read_bytes(self.spark, os.path.join(log, name))
-                    .decode("utf-8").splitlines() if line.strip()]
-            info = next((a["commitInfo"] for a in acts
-                         if "commitInfo" in a), {})
+        for v in _r.list_delta_versions(self.spark, self.path):
+            info = _r._commit_info(_r._read_commit(self.spark, self.path, v))
             rows.append((v, info.get("timestamp"),
                          info.get("operation"),
                          _json.dumps(info.get("operationParameters") or {},
@@ -198,7 +189,7 @@ class DeltaTable:
                          30 * 24 * 3600 * 1000,
                          now_ms: int | None = None) -> list[str]:
         """Metadata-side vacuum (Delta's log retention): delete json
-        commits that are BOTH strictly below the newest classic
+        commits that are BOTH strictly below the newest complete
         checkpoint AND older than ``log_retention_ms`` (keyed on the
         commit's own timestamp — commitInfo, mtime fallback), matching
         ``delta.logRetentionDuration``'s 30-day default. Replay serves
@@ -215,12 +206,9 @@ class DeltaTable:
         now = int(_time.time() * 1000) if now_ms is None else int(now_ms)
         log = os.path.join(_r._strip_scheme(self.path), _r.LOG_DIR)
         names = sorted(os.listdir(log))
-        cps = [int(m.group(1)) for n in names
-               if (m := (_r._CHECKPOINT_RE.match(n)
-                         or _r._CHECKPOINT_V2_RE.match(n)))]
-        if not cps:
+        cutoff = max(_r._complete_checkpoints(names), default=None)
+        if cutoff is None:
             return []
-        cutoff = max(cps)
         doomed = []
         # delete a contiguous PREFIX only (a hole would leave later
         # pre-checkpoint commits unreplayable while looking retained):

@@ -1700,28 +1700,18 @@ def vacuum_delta(spark: SparkSession, table_path: str,
 
     now = _now_ms(now_ms)
     cutoff = now - retention_ms
-    rep = replay_log(spark, table_path, collect_from=0)
+    rep = replay_log(spark, table_path)
     # retention is measured from REMOVAL (the remove action's
     # deletionTimestamp), not from file creation: a 30-day-old file
     # removed a minute ago must survive the full window so time travel
-    # and CDF delete synthesis over recent versions keep working. Files
-    # with no surviving remove action (staging garbage, or tombstones in
-    # a retired log prefix) fall back to mtime.
-    removed_at: dict[str, int] = {}
-    # checkpoint-carried tombstones first: after cleanup_metadata retires
-    # the JSON prefix they are the ONLY source of deletionTimestamps
-    for r in rep.tombstones.values():
-        if isinstance(r, dict) and r.get("path"):
-            ts_r = int(r.get("deletionTimestamp") or 0)
-            key = urllib.parse.unquote(r["path"])
-            removed_at[key] = max(removed_at.get(key, 0), ts_r)
-    for acts in rep.commit_actions.values():
-        for a in acts:
-            r = a.get("remove")
-            if isinstance(r, dict) and r.get("path"):
-                ts_r = int(r.get("deletionTimestamp") or 0)
-                key = urllib.parse.unquote(r["path"])
-                removed_at[key] = max(removed_at.get(key, 0), ts_r)
+    # and CDF delete synthesis over recent versions keep working. The
+    # replay's tombstones hold each removed file's latest remove, from
+    # the checkpoint (the only source once cleanup_metadata retired the
+    # JSON prefix) and the JSON commits after it. Files with no standing
+    # tombstone (staging garbage) fall back to mtime.
+    removed_at = {urllib.parse.unquote(r["path"]):
+                  int(r.get("deletionTimestamp") or 0)
+                  for r in rep.tombstones.values()}
     root = _strip_scheme(table_path).rstrip("/")
     live: set[str] = set()
     for a in rep.files.values():

@@ -8,10 +8,11 @@ Implements the public Delta Lake table protocol
 * the log at ``<table>/_delta_log/`` is ``%020d.json`` commit files (one
   JSON action per line), optional ``%020d.checkpoint.parquet`` files
   (single-part or ``%020d.checkpoint.%010d.%010d.parquet`` multi-part)
-  and a ``_last_checkpoint`` pointer;
-* snapshot state at version V = latest checkpoint <= V, then JSON commits
-  replayed in order: ``add`` upserts a data file by path, ``remove``
-  drops it, last ``metaData``/``protocol`` win;
+  and an advisory ``_last_checkpoint`` pointer, which readers here do
+  not need: the listing names every checkpoint;
+* snapshot state at version V = newest COMPLETE checkpoint <= V, then
+  JSON commits replayed in order: ``add`` upserts a data file by path,
+  ``remove`` drops it, last ``metaData``/``protocol`` win;
 * ``metaData.schemaString`` is Spark StructType JSON (the protocol adopts
   Spark's schema serialization), so the table schema round-trips through
   ``StructType.fromJson`` exactly;
@@ -32,6 +33,10 @@ directory pruning: it works even for tables whose files are not laid out
 hive-style. Partition columns are re-attached with ONE broadcast map-join
 keyed on ``_metadata.file_path`` instead of per-partition scan unions, so
 a 100k-file snapshot plans one scan, not one per partition.
+
+This module is the only reader of the log: the batch readers, the
+change feed, the writers' replays and the ``delta_jarless`` Python data
+source (``delta_stream_datasource.py``) all go through ``replay_log``.
 
 Reference parity: the reference reads Delta via
 ``spark.read.format("delta").option("versionAsOf"/"readChangeFeed", ...)``
@@ -100,7 +105,9 @@ from ..session import local_frame
 
 LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
-_CHECKPOINT_RE = re.compile(r"^(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet$")
+#: classic checkpoints: single-part, or part ``i`` of ``n`` of a multi-part
+_CHECKPOINT_RE = re.compile(
+    r"^(\d{20})\.checkpoint(?:\.(\d{10})\.(\d{10}))?\.parquet$")
 #: v2 ("uuid-named") checkpoints: %020d.checkpoint.<uuid>.{json|parquet},
 #: actions split between the top-level file and parquet sidecars under
 #: _delta_log/_sidecars/ referenced by `sidecar` actions.
@@ -157,6 +164,9 @@ class _Replay:
     #: System domains (delta.*) carry writer state like the row-tracking
     #: high watermark.
     domains: dict[str, str] = field(default_factory=dict)
+    #: version of the checkpoint the state was seeded from (None: the
+    #: state was replayed from commit 0)
+    checkpoint: int | None = None
 
     @property
     def schema(self) -> StructType:
@@ -272,23 +282,15 @@ def _commit_timestamps_ms(spark: SparkSession,
     history does (each commit >= previous + 1 ms), so timestamp resolution
     is well-defined even when wall clocks regressed between writers.
     Driver-side metadata reads over the (few-MB) log, like all replay."""
-    log = os.path.join(table_path, LOG_DIR)
     out: list[tuple[int, int]] = []
     prev = -1
     for v in list_delta_versions(spark, table_path):
-        path = os.path.join(log, f"{v:020d}.json")
-        ts = None
-        for line in _read_bytes(spark, path).decode("utf-8").splitlines():
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "commitInfo" in action:
-                # inCommitTimestamp (writer feature) is the authoritative
-                # monotonic clock when present; plain timestamp otherwise
-                ci = action["commitInfo"]
-                ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
-                break
-        ts = int(ts) if ts is not None else _mtime_ms(spark, path)
+        # inCommitTimestamp (writer feature) is the authoritative
+        # monotonic clock when present; plain timestamp otherwise
+        ci = _commit_info(_read_commit(spark, table_path, v))
+        ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
+        ts = int(ts) if ts is not None else _mtime_ms(
+            spark, _commit_path(table_path, v))
         ts = max(ts, prev + 1)
         out.append((v, ts))
         prev = ts
@@ -370,35 +372,28 @@ def read_delta_changes_from_timestamp(spark: SparkSession, table_path: str,
     return read_delta_changes(spark, table_path, first - 1, ending_version)
 
 
-def _checkpoint_parts(names: list[str], version: int) -> list[str]:
-    """Checkpoint file(s) for ``version``: a v2 uuid-named checkpoint when
-    present (several UUIDs for one version are interchangeable per the
-    protocol — pick the lexicographically last), else the classic
-    single/multi-part parquet parts."""
-    v2 = sorted(n for n in names
-                if (m := _CHECKPOINT_V2_RE.match(n))
-                and int(m.group(1)) == version)
-    if v2:
-        return [v2[-1]]
-    return [n for n in names
-            if (m := _CHECKPOINT_RE.match(n)) and int(m.group(1)) == version]
-
-
-def _latest_checkpoint_version(spark: SparkSession, log: str,
-                               names: list[str], ceiling: int) -> int | None:
-    """Best checkpoint version <= ceiling: the ``_last_checkpoint`` pointer
-    when it qualifies, else the newest complete checkpoint in the listing."""
-    try:
-        lc = json.loads(_read_bytes(spark, os.path.join(log, "_last_checkpoint")))
-        if int(lc["version"]) <= ceiling:
-            return int(lc["version"])
-    except Exception:  # noqa: BLE001 — pointer absent/corrupt: fall back to listing
-        pass
-    versions = sorted({int(m.group(1)) for n in names
-                       if ((m := _CHECKPOINT_RE.match(n))
-                           or (m := _CHECKPOINT_V2_RE.match(n)))
-                       and int(m.group(1)) <= ceiling})
-    return versions[-1] if versions else None
+def _complete_checkpoints(names: list[str]) -> dict[int, list[str]]:
+    """``{version: file names}`` of every COMPLETE checkpoint in a log
+    listing: a single-part classic checkpoint, a multi-part one whose
+    parts ``1..n`` are all present, or a v2 uuid-named one. Several UUIDs
+    for one version are interchangeable per the protocol, so the
+    lexicographically last is taken, and a v2 checkpoint wins over a
+    classic one at the same version (same state, newer layout)."""
+    out: dict[int, list[str]] = {}
+    parts: dict[tuple[int, int], dict[int, str]] = {}
+    for n in names:
+        if m := _CHECKPOINT_RE.match(n):
+            if m[2] is None:
+                out[int(m[1])] = [n]
+            else:
+                parts.setdefault((int(m[1]), int(m[3])), {})[int(m[2])] = n
+    for (v, total), got in parts.items():
+        if v not in out and set(got) == set(range(1, total + 1)):
+            out[v] = [got[i] for i in range(1, total + 1)]
+    for n in sorted(names):
+        if m := _CHECKPOINT_V2_RE.match(n):
+            out[int(m[1])] = [n]
+    return out
 
 
 _CP_ACTION_KEYS = ("add", "remove", "metaData", "protocol", "txn",
@@ -416,7 +411,14 @@ def _read_parquet_actions(spark: SparkSession, path: str) -> list[dict]:
     for row in table.to_pylist():
         for key in _CP_ACTION_KEYS:
             if row.get(key) is not None:
-                actions.append({key: _unarrow_maps(row[key])})
+                action = _unarrow_maps(row[key])
+                # a nullable DV struct column can read back as a struct
+                # of NULLs for a file without a deletion vector
+                dv = action.get("deletionVector")
+                if isinstance(dv, dict) and all(
+                        x is None for x in dv.values()):
+                    del action["deletionVector"]
+                actions.append({key: action})
     return actions
 
 
@@ -487,66 +489,80 @@ def _check_protocol(protocol: dict, metadata: dict) -> None:
             f"column mapping mode {mapping!r} is not supported")
 
 
-def replay_log(spark: SparkSession, table_path: str,
+def _commit_path(table_path: str, version: int) -> str:
+    return os.path.join(table_path, LOG_DIR, f"{version:020d}.json")
+
+
+def _read_commit(spark: SparkSession | None, table_path: str,
+                version: int) -> list[dict]:
+    """The actions of one JSON commit file, in file order."""
+    return [json.loads(line) for line in
+            _read_bytes(spark, _commit_path(table_path, version))
+            .decode("utf-8").splitlines() if line.strip()]
+
+
+def _commit_info(actions: list[dict]) -> dict:
+    return next((a["commitInfo"] for a in actions if "commitInfo" in a), {})
+
+
+def replay_log(spark: SparkSession | None, table_path: str,
                version: int | None = None,
                collect_from: int | None = None) -> _Replay:
-    """Replay the log to ``version`` (default: latest). ``collect_from``
-    additionally retains per-commit action lists and timestamps for
-    versions >= it (the change-feed reader's input)."""
+    """Replay the log to ``version`` (default: latest).
+
+    The state starts at the newest COMPLETE checkpoint in the log listing
+    at or below ``version`` (``_complete_checkpoints``; the advisory
+    ``_last_checkpoint`` pointer is not read), and every later commit is
+    applied from its JSON file. ``collect_from`` additionally keeps the
+    actions and timestamp of each commit from ``collect_from`` through
+    ``version`` (the change feed's window), every one of them read from
+    its own JSON file — a window commit the checkpoint already holds is
+    read for its actions, not applied twice. A JSON file the state or
+    the window needs that the log no longer has raises the
+    DELTA_CHANGE_DATA_FILE_NOT_FOUND signature, so a window is never
+    served in part.
+
+    Driver-side metadata work; ``spark`` may be None on local paths."""
     log = os.path.join(table_path, LOG_DIR)
     names = _list_names(spark, log)
-    commits = sorted(int(m.group(1)) for n in names if (m := _COMMIT_RE.match(n)))
-    cp_versions = sorted({int(m.group(1)) for n in names
-                          if (m := (_CHECKPOINT_RE.match(n)
-                                    or _CHECKPOINT_V2_RE.match(n)))})
-    if not commits and not cp_versions:
+    commits = {int(m.group(1)) for n in names if (m := _COMMIT_RE.match(n))}
+    checkpoints = _complete_checkpoints(names)
+    if not commits and not checkpoints:
         raise FileNotFoundError(f"not a Delta table (empty log): {table_path}")
     # metadata cleanup can leave a checkpoint-only log (every JSON commit
     # retired): the latest state is then the newest checkpoint's version
-    latest = max([*commits, *cp_versions])
-    target = latest if version is None else int(version)
-
-    metadata: dict | None = None
-    protocol: dict = {"minReaderVersion": 1}
-    files: dict[str, dict] = {}
-    rep = _Replay(target, {}, protocol, files)
-
-    cp_version = _latest_checkpoint_version(spark, log, names, target)
-    start = 0
-    if cp_version is not None:
-        for action in _checkpoint_actions(
-                spark, log, _checkpoint_parts(names, cp_version)):
-            metadata, protocol = _apply(action, files, metadata, protocol,
-                                        rep.txns, rep.tombstones,
+    target = (max([*commits, *checkpoints]) if version is None
+              else int(version))
+    cp = max((v for v in checkpoints if v <= target), default=None)
+    rep = _Replay(target, {}, {"minReaderVersion": 1}, {}, checkpoint=cp)
+    metadata, protocol = None, rep.protocol
+    if cp is not None:
+        for action in _checkpoint_actions(spark, log, checkpoints[cp]):
+            metadata, protocol = _apply(action, rep.files, metadata,
+                                        protocol, rep.txns, rep.tombstones,
                                         rep.domains)
-        start = cp_version + 1
-    # every version in (start, target] must still have its commit file —
-    # a cleaned-up (vacuumed) log prefix below the checkpoint is fine, a
-    # MISSING commit above it would silently drop changes
-    have = set(commits)
-    missing = [v for v in range(start, target + 1) if v not in have]
+    first = 0 if cp is None else cp + 1
+    if collect_from is not None:
+        first = min(first, collect_from)
+    missing = [v for v in range(first, target + 1) if v not in commits]
     if missing:
         raise FileNotFoundError(
-            f"DELTA_CHANGE_DATA_FILE_NOT_FOUND: log entries for versions "
-            f"{missing} of {table_path} are missing (vacuumed or not yet "
+            f"DELTA_CHANGE_DATA_FILE_NOT_FOUND: versions {missing} of "
+            f"{table_path} are not in the log (vacuumed or not yet "
             f"written); earliest replayable state is "
-            f"{'checkpoint ' + str(cp_version) if cp_version is not None else 'none'}")
-    for v in range(start, target + 1):
-        path = os.path.join(log, f"{v:020d}.json")
-        acts = [json.loads(line)
-                for line in _read_bytes(spark, path).decode("utf-8").splitlines()
-                if line.strip()]
-        ts = None
-        for action in acts:
-            if "commitInfo" in action and ts is None:
-                ts = action["commitInfo"].get("timestamp")
-            metadata, protocol = _apply(action, files, metadata, protocol,
-                                        rep.txns, rep.tombstones,
-                                        rep.domains)
+            f"{'checkpoint ' + str(cp) if cp is not None else 'none'}")
+    for v in range(first, target + 1):
+        acts = _read_commit(spark, table_path, v)
+        if cp is None or v > cp:
+            for action in acts:
+                metadata, protocol = _apply(action, rep.files, metadata,
+                                            protocol, rep.txns,
+                                            rep.tombstones, rep.domains)
         if collect_from is not None and v >= collect_from:
+            ts = _commit_info(acts).get("timestamp")
             rep.commit_actions[v] = acts
-            rep.commit_ts_ms[v] = int(ts if ts is not None
-                                      else _mtime_ms(spark, path))
+            rep.commit_ts_ms[v] = int(ts if ts is not None else _mtime_ms(
+                spark, _commit_path(table_path, v)))
     if metadata is None:
         raise FileNotFoundError(
             f"no metaData action found replaying {table_path} to {target}")
@@ -1410,17 +1426,9 @@ def delta_history(spark: SparkSession, table_path: str) -> DataFrame:
         LongType, MapType, StringType, StructField, StructType,
     )
 
-    log = os.path.join(table_path, LOG_DIR)
     rows = []
     for v in list_delta_versions(spark, table_path):
-        path = os.path.join(log, f"{v:020d}.json")
-        ci: dict = {}
-        for line in _read_bytes(spark, path).decode("utf-8").splitlines():
-            if line.strip():
-                a = json.loads(line)
-                if "commitInfo" in a:
-                    ci = a["commitInfo"]
-                    break
+        ci = _commit_info(_read_commit(spark, table_path, v))
         params = {k: (val if isinstance(val, str) else json.dumps(val))
                   for k, val in (ci.get("operationParameters")
                                  or {}).items()}

@@ -575,20 +575,26 @@ def _identity_partition_names(meta: dict) -> list[str] | None:
     return names
 
 
-def live_data_files(spark: SparkSession, table_path: str,
+def live_data_files(spark: SparkSession | None, table_path: str,
                     meta: dict, snapshot_id: int | None = None,
                     partition_filter=None,
                     stats_filter=None,
                     deletes_out: list | None = None) -> list[dict]:
-    """``data_file`` records (dicts) live in the chosen snapshot.
+    """``data_file`` records (dicts) live in the chosen snapshot, each
+    with its data sequence number as ``_seq`` (``_sift_entries``).
 
-    ``deletes_out``: when a list is passed, live POSITION delete files
-    (delete-manifest entries with ``data_file.content == 1``) are
-    appended to it for the caller to apply (``read_iceberg_snapshot``
-    does); equality deletes (content == 2) always reject loudly. When
-    ``None`` (the default), ANY live delete entry rejects — callers that
-    cannot apply deletes (the change-feed synthesizer diffs whole-file
-    live sets) must never silently over-count rows.
+    ``deletes_out``: when a list is passed, live delete files — position
+    deletes and v3 deletion vectors (``data_file.content == 1``) and
+    equality deletes (``content == 2``, with their ``equality_ids``) —
+    are appended to it for the caller to apply
+    (``read_iceberg_snapshot`` does, through ``_apply_row_deletes``).
+    When ``None`` (the default), ANY live delete entry rejects — callers
+    that cannot apply deletes must never silently over-count rows.
+
+    Manifests decode on the driver, or in executors once there are
+    ``ICEBERG_PARALLEL_MANIFEST_THRESHOLD`` of them on a local or shared
+    file system and a ``spark`` session to run the job; with
+    ``spark=None`` they always decode on the driver.
 
     ``partition_filter``: optional ``dict[str, value] -> bool`` over each
     entry's partition struct (keyed by partition field name) — metadata-
@@ -616,7 +622,8 @@ def live_data_files(spark: SparkSession, table_path: str,
               int(mf.get("content") or 0),
               int(mf.get("sequence_number") or 0),
               mf.get("first_row_id")) for mf in manifests]
-    if (len(pairs) >= ICEBERG_PARALLEL_MANIFEST_THRESHOLD
+    if (spark is not None
+            and len(pairs) >= ICEBERG_PARALLEL_MANIFEST_THRESHOLD
             and all("://" not in p for p, _, _, _ in pairs)):
         groups = _parallel_manifest_records(
             spark, pairs, meta, partition_filter, stats_filter,
@@ -1036,22 +1043,11 @@ def _position_delete_pairs(spark: SparkSession, table_path: str,
         import numpy as np
         import pyarrow as pa
 
-        from . import delta_dv, puffin
+        from . import delta_dv
 
         fkeys: list[str] = []
         idx_parts = []
-        cache: dict[str, bytes] = {}
-        for d in dvs:
-            ppath = _resolve_path(table_path, d["file_path"])
-            raw = cache.get(ppath)
-            if raw is None:
-                raw = _read_bytes(spark, ppath)
-                cache[ppath] = raw
-            blob = puffin.read_puffin_blob(
-                raw, int(d["content_offset"]),
-                int(d["content_size_in_bytes"]))
-            fkey = _stored_file_key(spark, table_path,
-                                    d["referenced_data_file"])
+        for fkey, blob in _puffin_dv_blobs(spark, table_path, dvs):
             dead = delta_dv.deserialize_bitmap_array(blob)
             fkeys.extend([fkey] * dead.size)
             idx_parts.append(dead)
@@ -1069,6 +1065,25 @@ def _position_delete_pairs(spark: SparkSession, table_path: str,
         out = (dels, cardinality)
     if memo is not None:
         memo[key] = out
+    return out
+
+
+def _puffin_dv_blobs(spark: SparkSession | None, table_path: str,
+                     dvs: list[dict]) -> list[tuple[str, bytes]]:
+    """``(file key of the referenced data file, serialized bitmap)`` per
+    v3 deletion-vector descriptor; each puffin file is read once."""
+    from .puffin import read_puffin_blob
+
+    cache: dict[str, bytes] = {}
+    out = []
+    for d in dvs:
+        ppath = _resolve_path(table_path, d["file_path"])
+        if ppath not in cache:
+            cache[ppath] = _read_bytes(spark, ppath)
+        out.append((_stored_file_key(spark, table_path,
+                                     d["referenced_data_file"]),
+                    read_puffin_blob(cache[ppath], int(d["content_offset"]),
+                                     int(d["content_size_in_bytes"]))))
     return out
 
 
@@ -1125,6 +1140,27 @@ def _data_seq_map(spark: SparkSession, table_path: str,
         spark, seq_rows, f"{_POS_KEY} string, __iceberg_data_seq long")
 
 
+def _equality_groups(eq_files: list[dict]) -> dict[tuple, list[dict]]:
+    """Equality delete files by their sorted ``equality_ids``."""
+    groups: dict[tuple, list[dict]] = {}
+    for d in eq_files:
+        groups.setdefault(tuple(sorted(int(i) for i in d["equality_ids"])),
+                          []).append(d)
+    return groups
+
+
+def _equality_fields(meta: dict, ids: tuple) -> list[dict]:
+    """The current schema's fields for equality ``ids``: top-level
+    primitive fields only, anything else rejects loudly."""
+    by_id = {int(f["id"]): f for f in _current_schema(meta)["fields"]
+             if isinstance(f["type"], str)}
+    missing = [i for i in ids if i not in by_id]
+    if missing:
+        raise IcebergProtocolError(
+            f"equality_ids reference unknown/nested field ids {missing}")
+    return [by_id[i] for i in ids]
+
+
 def _equality_delete_groups(spark: SparkSession, table_path: str,
                             eq_files: list[dict], meta: dict) -> list:
     """``[(key column names, delete-rows DataFrame, cardinality)]`` per
@@ -1133,21 +1169,9 @@ def _equality_delete_groups(spark: SparkSession, table_path: str,
     (``_apply_equality_deletes``) and the r15 flag twin."""
     from pyspark.sql import functions as F
 
-    id_fields = {int(f["id"]): f
-                 for f in _current_schema(meta)["fields"]
-                 if isinstance(f["type"], str)}
-    groups: dict[tuple, list[dict]] = {}
-    for d in eq_files:
-        ids = tuple(sorted(int(i) for i in d["equality_ids"]))
-        groups.setdefault(ids, []).append(d)
     out = []
-    for ids, dfiles in sorted(groups.items()):
-        missing = [i for i in ids if i not in id_fields]
-        if missing:
-            raise IcebergProtocolError(
-                f"equality_ids reference unknown/nested field ids "
-                f"{missing}")
-        sub_fields = [id_fields[i] for i in ids]
+    for ids, dfiles in sorted(_equality_groups(eq_files).items()):
+        sub_fields = _equality_fields(meta, ids)
         names = [f["name"] for f in sub_fields]
         sub_schema = T.StructType([_field(f) for f in sub_fields])
         dpaths = sorted({_resolve_path(table_path, d["file_path"])
@@ -2088,33 +2112,33 @@ def _added_records_from_list(meta: dict, sn: dict) -> int | None:
     data content) from its manifest list and sum the record counts
     of their ADDED entries. None when the list or a manifest is
     absent/unreadable."""
-    ml = sn.get("manifest-list")
-    if not ml:
-        return None
     root = meta.get("location") or ""
+    if not sn.get("manifest-list") or not _is_local(
+            _resolve_path(root, sn["manifest-list"])):
+        return None
     try:
-        _, manifests = read_container(
-            open(_resolve_path(root, ml), "rb").read())
+        return sum(int(f.get("record_count") or 0)
+                   for f in _snapshot_added_files(None, root, sn))
     except (OSError, ValueError):
         return None
-    total = 0
+
+
+def _snapshot_added_files(spark: SparkSession | None, root: str,
+                          sn: dict) -> list[dict]:
+    """``data_file`` records snapshot ``sn`` ADDED: the ADDED entries of
+    the data manifests it contributed (``added_snapshot_id`` matches)."""
+    _, manifests = read_container(_read_bytes(
+        spark, _resolve_path(root, sn["manifest-list"])))
+    out = []
     for mf in manifests:
-        if int(mf.get("added_snapshot_id") or -1) != \
-                int(sn["snapshot-id"]):
-            continue
-        if int(mf.get("content") or 0) != 0:
-            continue               # delete manifests add no rows
-        try:
-            _, entries = read_container(open(_resolve_path(
-                root, mf["manifest_path"]), "rb").read())
-        except (OSError, ValueError):
-            return None
-        for e in entries:
-            if int(e.get("status") or 0) != STATUS_ADDED:
-                continue
-            total += int((e.get("data_file") or {})
-                         .get("record_count") or 0)
-    return total
+        if int(mf.get("added_snapshot_id") or -1) != int(sn["snapshot-id"]) \
+                or int(mf.get("content") or 0) != 0:
+            continue               # another snapshot's, or deletes
+        _, entries = read_container(_read_bytes(
+            spark, _resolve_path(root, mf["manifest_path"])))
+        out.extend(e["data_file"] for e in entries
+                   if int(e.get("status") or 0) == STATUS_ADDED)
+    return out
 
 
 def _apply_updates(meta: dict, updates: list[dict]) -> dict:

@@ -160,7 +160,9 @@ def read_snapshot_at_timestamp(spark: SparkSession, root: str, table: str,
     form). Jar-backed Delta uses the native ``timestampAsOf`` option; a
     real Delta dir without jars resolves through the replayed commit
     timestamps (delta_log.resolve_version_at_timestamp, monotonic-adjusted
-    commitInfo times); the ``v=N`` parquet convention resolves against the
+    commitInfo times); an Iceberg root through its snapshot log (the
+    latest snapshot whose ``timestamp-ms`` <= ts); the ``v=N`` parquet
+    convention resolves against the
     version directories' modification times (latest dir mtime <= ts) —
     same at-or-before contract, driver-side metadata only."""
     if _delta_available(spark):
@@ -179,9 +181,13 @@ def read_snapshot_at_timestamp(spark: SparkSession, root: str, table: str,
                         ts.strftime("%Y-%m-%d %H:%M:%S.%f"))
                 .load(os.path.join(root, table)))
     from .delta_log import is_delta_table, read_delta_snapshot_at_timestamp
+    from .registry import _normalize_ntz
     if is_delta_table(spark, os.path.join(root, table)):
-        from .registry import _normalize_ntz
         return _normalize_ntz(read_delta_snapshot_at_timestamp(
+            spark, os.path.join(root, table), ts_ms))
+    from .iceberg import is_iceberg_table, read_iceberg_snapshot_at_timestamp
+    if is_iceberg_table(spark, os.path.join(root, table)):
+        return _normalize_ntz(read_iceberg_snapshot_at_timestamp(
             spark, os.path.join(root, table), ts_ms))
     versions = list_versions(spark, os.path.join(root, table), "v=")
     if not versions:

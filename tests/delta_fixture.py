@@ -681,3 +681,22 @@ def make_merged_cdf_table(spark, table_path: str, merges: int = 3) -> str:
         merge_into(spark, table_path, src, on=["event_id"],
                    when_matched_update={"value": "s.value"})
     return table_path
+
+
+def make_checkpointed_cdf_table(spark, table_path: str) -> str:
+    """A CDF-enabled table of six 10-row append commits (v``n`` adds ids
+    ``10n .. 10n+9``) with a classic checkpoint at v3 — a change-feed
+    window over it crosses the checkpoint, as any window crossing a
+    multiple of ``delta.checkpointInterval`` does on a real table."""
+    from databricks_import_pyspark_scripts_spark.sinks.delta_writer import (
+        write_classic_checkpoint,
+    )
+    from databricks_import_pyspark_scripts_spark.sources.delta_log import (
+        write_delta_table,
+    )
+
+    write_delta_table(spark, [spark.range(10 * v, 10 * v + 10)
+                              .selectExpr("id", "CAST(id AS double) AS val")
+                              for v in range(6)], table_path)
+    write_classic_checkpoint(spark, table_path, 3)
+    return table_path

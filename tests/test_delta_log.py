@@ -203,6 +203,34 @@ def test_truncated_log_raises_below_checkpoint(spark, delta_table):
     assert extract_missing_cdf_error_signature(ei.value) is not None
 
 
+def test_cdf_window_across_a_checkpoint(spark, tmp_path):
+    """A change-feed window that crosses a checkpoint reads each of its
+    commits from its JSON file, so every row keeps its own commit's
+    version. Once the JSON of the window's commits below the checkpoint
+    is gone, the read raises the missing-change-file signature instead
+    of serving part of the window."""
+    from delta_fixture import make_checkpointed_cdf_table
+
+    t = make_checkpointed_cdf_table(spark, str(tmp_path / "cp"))
+
+    def changes(start, end):
+        return sorted((r._commit_version, r.id) for r in
+                      read_delta_changes(spark, t, start, end)
+                      .select("_commit_version", "id").collect())
+
+    assert changes(0, 5) == [(v, i) for v in range(1, 6)
+                             for i in range(10 * v, 10 * v + 10)]
+    for v in range(3):
+        os.remove(os.path.join(t, "_delta_log", f"{v:020d}.json"))
+    with pytest.raises(FileNotFoundError) as ei:
+        read_delta_changes(spark, t, 0, 5)
+    assert extract_missing_cdf_error_signature(ei.value) is not None
+    # a window whose commits all survive still reads in full: the state
+    # comes from the checkpoint, the window from the JSON files
+    assert changes(2, 5) == [(v, i) for v in range(3, 6)
+                             for i in range(10 * v, 10 * v + 10)]
+
+
 # --------------------------------------------------------------------- protocol
 
 def test_protocol_reader_features_gate(spark, tmp_path):
@@ -213,6 +241,21 @@ def test_protocol_reader_features_gate(spark, tmp_path):
                       "writerFeatures": ["madeUpFeature"]}}])
     with pytest.raises(DeltaProtocolError, match="madeUpFeature"):
         read_delta_snapshot(spark, t)
+    # the Python data source reads through the same gate
+    from databricks_import_pyspark_scripts_spark.sources.delta_stream_datasource import (
+        register_delta_stream_source,
+    )
+
+    register_delta_stream_source(spark)
+
+    def jarless(**opts):
+        r = spark.read.format("delta_jarless").option("path", t)
+        for key, val in opts.items():
+            r = r.option(key, val)
+        return r.load()
+
+    with pytest.raises(Exception, match="madeUpFeature"):
+        jarless().collect()
     # every feature this reader implements is accepted together
     _commit(os.path.join(t, "_delta_log"), 4, [
         {"protocol": {"minReaderVersion": 3, "minWriterVersion": 7,
@@ -221,6 +264,7 @@ def test_protocol_reader_features_gate(spark, tmp_path):
                                          "typeWidening"],
                       "writerFeatures": ["timestampNtz"]}}])
     assert _ids(read_delta_snapshot(spark, t, 4)) == [1, 2, 3, 6, 7, 8]
+    assert _ids(jarless(versionAsOf="4")) == [1, 2, 3, 6, 7, 8]
 
 
 def test_v2_checkpoint_replay_with_sidecar(spark, delta_table):
@@ -513,8 +557,9 @@ def test_cdf_starting_timestamp(spark, delta_table):
 
 def test_versioned_snapshot_at_timestamp_dispatch(spark, tmp_path,
                                                   delta_table):
-    """Dispatcher: Delta dirs resolve via commit timestamps; the v=N
-    parquet convention resolves via directory mtimes."""
+    """Dispatcher: Delta dirs resolve via commit timestamps, Iceberg
+    roots via their snapshot log; the v=N parquet convention resolves via
+    directory mtimes."""
     from databricks_import_pyspark_scripts_spark.sources.versioned import (
         read_snapshot_at_timestamp,
     )
@@ -532,6 +577,16 @@ def test_versioned_snapshot_at_timestamp_dispatch(spark, tmp_path,
     spark.range(5).write.parquet(os.path.join(vroot, "t", "v=2"))
     got = read_snapshot_at_timestamp(spark, vroot, "t", cut_ms)
     assert got.count() == 3
+    # an Iceberg root resolves through its snapshot log
+    from databricks_import_pyspark_scripts_spark.sources.iceberg import (
+        write_iceberg_table,
+    )
+    write_iceberg_table(spark, [spark.range(2), spark.range(2, 5)],
+                        os.path.join(vroot, "ice"), base_ts_ms=V2_TS_MS)
+    assert sorted(r.id for r in read_snapshot_at_timestamp(
+        spark, vroot, "ice", V2_TS_MS + 999).collect()) == [0, 1]
+    assert sorted(r.id for r in read_snapshot_at_timestamp(
+        spark, vroot, "ice", V2_TS_MS + 1000).collect()) == [0, 1, 2, 3, 4]
 
 
 # --------------------------------------------------------------- column mapping
@@ -792,6 +847,31 @@ def test_file_key_has_one_definition():
         "_stored_file_key_col")}
 
 
+def test_delta_log_has_one_reader():
+    """The Delta log is read by ``delta_log`` alone: no other module
+    names commit or checkpoint files, no other Delta module defines a
+    checkpoint function that does not write one, and the Iceberg data
+    source plans through ``sources/iceberg.py`` instead of decoding
+    manifests itself."""
+    import pathlib
+    import re
+
+    pkg = (pathlib.Path(__file__).resolve().parents[1]
+           / "databricks_import_pyspark_scripts_spark")
+    for f in sorted(pkg.rglob("*.py")):
+        if f.name != "delta_log.py":
+            assert r"\d{20}" not in f.read_text(), f"log file names in {f}"
+    for f in [*(pkg / "sources").glob("*.py"), *(pkg / "sinks").glob("*.py"),
+              pkg / "delta.py"]:
+        if f.name != "delta_log.py":
+            for name in re.findall(r"^\s*def (\w*checkpoint\w*)\(",
+                                   f.read_text(), re.MULTILINE):
+                assert "write" in name or name.startswith("checkpoint"), \
+                    f"checkpoint selection {name} in {f.name}"
+    ice = (pkg / "sources" / "iceberg_stream_datasource.py").read_text()
+    assert "read_container" not in ice
+
+
 # ----------------------------------------------------- versioned-source dispatch
 
 def test_versioned_source_dispatches_to_delta(spark, tmp_path):
@@ -910,6 +990,25 @@ def test_multipart_checkpoint_replay(spark, delta_table):
     assert glob.glob(os.path.join(log, "*.checkpoint.*.parquet"))
     assert _ids(read_delta_snapshot(spark, delta_table, 2)) \
         == [1, 2, 3, 6, 7, 8]
+
+    # a newer checkpoint with one of its two parts missing is no
+    # checkpoint: with no _last_checkpoint pointer, replay starts from the
+    # complete one at v1 and applies v2 from its JSON file
+    rep = replay_log(spark, delta_table, 2)
+    write_checkpoint(spark, delta_table, 2,
+                     [{"protocol": rep.protocol}, {"metaData": rep.metadata},
+                      {"add": next(iter(rep.files.values()))}])
+    shutil.move(os.path.join(log, f"{2:020d}.checkpoint.parquet"),
+                os.path.join(log, f"{2:020d}.checkpoint.{1:010d}.{2:010d}.parquet"))
+    os.remove(os.path.join(log, "_last_checkpoint"))
+    assert _ids(read_delta_snapshot(spark, delta_table)) == [1, 2, 3, 6, 7, 8]
+    from databricks_import_pyspark_scripts_spark.sources.delta_stream_datasource import (
+        register_delta_stream_source,
+    )
+
+    register_delta_stream_source(spark)
+    assert _ids(spark.read.format("delta_jarless")
+                .option("path", delta_table).load()) == [1, 2, 3, 6, 7, 8]
 
 
 # ---------------------------------------------------------------------------

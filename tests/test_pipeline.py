@@ -340,3 +340,21 @@ def test_sidecars_on_file_uri(spark, merged_root, tmp_path, scheme):
     assert json.loads(spark.read.text(f"{scheme}{local}/meta").first().value) \
         == {"event_count": report["rows"],
             "partition_count": report["partitions"]}
+
+
+def test_incremental_unload_across_a_delta_checkpoint(spark, tmp_path):
+    """An incremental EVENT unload whose window crosses a checkpoint of
+    the source Delta table exports every row the window inserted, not
+    only those committed after the checkpoint."""
+    from delta_fixture import make_checkpointed_cdf_table
+
+    src = tmp_path / "src"
+    make_checkpointed_cdf_table(spark, str(src / "tbl"))
+    out = str(tmp_path / "out")
+    report = run_unload(spark, UnloadJob(
+        source_root=str(src), table_versions={"tbl": [1, 5]},
+        sql="SELECT id FROM tbl", output_path=out, data_type="EVENT",
+        fmt="parquet"))
+    assert report["table_results"]["tbl"]["finalStartVersion"] == 1
+    assert sorted(r.id for r in spark.read.parquet(f"{out}/part-*")
+                  .collect()) == list(range(20, 60))
